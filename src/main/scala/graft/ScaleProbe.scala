@@ -301,10 +301,6 @@ object ScaleProbe {
       .filter(k => args.lift(3).exists(_.split(',').contains(k)))
     if (x100Req.nonEmpty) {
       import org.apache.spark.sql.expressions.Window
-      // the pruned branches assume their KEY wrapper registered the
-      // session kernels (hausdorffPruned uses hausdorff_km via TrajSim);
-      // calling them directly needs the same registration
-      graft.functions.TrajSim.register(spark)
       // ORDER MATTERS (r16 review finding): lat/lon must be derived from
       // the ALREADY-SHIFTED event_id — deriving first and shifting after
       // made every copy an exact geometric clone of the base (each ×10
@@ -364,13 +360,13 @@ object ScaleProbe {
         .localCheckpoint(eager = false)
       if (x100Req("frechet_x100"))
         runOne("m_traj_frechet",
-          t => graft.queries.Trajectory.frechetPruned(spark, t), tr100, s"x${10 * factor}")
+          t => graft.queries.Trajectory.frechetPruned(spark, t, t.count()), tr100, s"x${10 * factor}")
       if (x100Req("hausdorff_x100"))
         runOne("m_traj_hausdorff",
-          t => graft.queries.Trajectory.hausdorffPruned(spark, t), tr100, s"x${10 * factor}")
+          t => graft.queries.Trajectory.hausdorffPruned(spark, t, t.count()), tr100, s"x${10 * factor}")
       if (x100Req("lcss_x100"))
         runOne("m_traj_lcss",
-          t => graft.queries.Trajectory.lcssPruned(spark, t), tr100, s"x${10 * factor}")
+          t => graft.queries.Trajectory.lcssPruned(spark, t, t.count()), tr100, s"x${10 * factor}")
       if (x100Req("edr_skew")) {
         val tr10s = graft.queries.Trajectory
           .tracksFromPoints(spark, skew(pts(scaled)))
@@ -394,7 +390,7 @@ object ScaleProbe {
         }
         runOne("edr_skew_direct", direct, tr10s, s"x$factor-skew")
         runOne("m_traj_edr",
-          t => graft.queries.Trajectory.edrPruned(spark, t), tr10s, s"x$factor-skew")
+          t => graft.queries.Trajectory.edrPruned(spark, t, t.count()), tr10s, s"x$factor-skew")
         // PLANTED near-dup variant: the regime where a top-10-nearest
         // query is meaningful (and where the threshold-prune can bite) is
         // a corpus CONTAINING near-duplicate tracks — d₁₀ ≪ 1. Clone 30
@@ -416,12 +412,12 @@ object ScaleProbe {
           .tracksFromPoints(spark, planted(skew(pts(scaled))))
           .localCheckpoint(eager = false)
         runOne("m_traj_edr",
-          t => graft.queries.Trajectory.edrPruned(spark, t), tr10p, s"x$factor-skew-planted")
+          t => graft.queries.Trajectory.edrPruned(spark, t, t.count()), tr10p, s"x$factor-skew-planted")
         val tr100p = graft.queries.Trajectory
           .tracksFromPoints(spark, planted(skew(toPts(shiftedEvents(factor)))))
           .localCheckpoint(eager = false)
         runOne("m_traj_edr",
-          t => graft.queries.Trajectory.edrPruned(spark, t), tr100p, s"x${10 * factor}-skew-planted")
+          t => graft.queries.Trajectory.edrPruned(spark, t, t.count()), tr100p, s"x${10 * factor}-skew-planted")
       }
     }
 

@@ -149,6 +149,13 @@ object FrechetDist {
     chordSqToKm(prev(m - 1))
   }
 
+  /** km → chord² (monotone — the LcssMatches identity) for the capped
+    * kernels; the angle clamps so caps past antipodal never wrap the sine. */
+  @inline private[functions] def kmToChordSq(km: Double): Double = {
+    val s = 2.0 * math.sin(math.min(km / (2.0 * HaversineDist.EarthRadiusKm), math.Pi / 2))
+    s * s
+  }
+
   /** [[FrechetCapped]]'s kernel — exact dF when ≤ capKm, else MaxValue. */
   def computeCapped(a: ArrayData, b: ArrayData, capKm: Double): Double = {
     val xs = a.toDoubleArray()
@@ -156,10 +163,7 @@ object FrechetDist {
     checkTrack(xs, ys, "frechet_km_capped")
     val n = xs.length / 3
     val m = ys.length / 3
-    // km → chord² cap (monotone — the LcssMatches identity); clamp the
-    // angle so caps past antipodal never wrap the sine
-    val sC = 2.0 * math.sin(math.min(capKm / (2.0 * HaversineDist.EarthRadiusKm), math.Pi / 2))
-    val capC2 = sC * sC
+    val capC2 = kmToChordSq(capKm)
     val Inf = Double.MaxValue
     var prev = new Array[Double](m)
     var cur = new Array[Double](m)
@@ -365,12 +369,45 @@ case class HausdorffKm(left: Expression, right: Expression)
   override def prettyName: String = "hausdorff_km"
 }
 
+/** hausdorff_km_capped(a, b, capKm): exact symmetric Hausdorff distance
+  * when it is ≤ capKm, Double.MaxValue otherwise — the pruned key's join
+  * predicate, built like [[FrechetCapped]]. The max-min scan keeps its
+  * best-so-far cutoff and abandons as soon as ONE fix's nearest
+  * counterpart lies beyond the cap: that fix alone proves dH > cap. A far
+  * pair therefore pays about one full inner scan instead of the whole
+  * max-min (sf0.1 tracks at the key's threshold, one thread of a 4-core
+  * host: 1.7–1.8 µs per pair against 7.2–7.5 µs for [[HausdorffKm]]). */
+case class HausdorffCapped(first: Expression, second: Expression, third: Expression)
+  extends TernaryExpression
+  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
+
+  override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(DoubleType), DoubleType)
+
+  override def dataType: DataType = DoubleType
+
+  override def nullSafeEval(a: Any, b: Any, cap: Any): Any =
+    HausdorffKm.computeCapped(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+      cap.asInstanceOf[Double])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b, cap) =>
+      s"${ev.value} = graft.functions.HausdorffKm.computeCapped($a, $b, $cap);")
+
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression): Expression =
+    copy(first = f, second = s, third = t)
+
+  override def prettyName: String = "hausdorff_km_capped"
+}
+
 object HausdorffKm {
 
   /** Directed Hausdorff on chord²: max over xs-points of (min over
     * ys-points), with the best-so-far cutoff — once a ys-point is closer
-    * than the current outer max, this xs-point cannot raise it. */
-  private def directedC2(xs: Array[Double], ys: Array[Double]): Double = {
+    * than the current outer max, this xs-point cannot raise it. Returns
+    * Double.MaxValue as soon as one xs-point's nearest ys-point is farther
+    * than `capC2` (an inner scan that ran to the end holds the true min). */
+  private def directedC2(xs: Array[Double], ys: Array[Double], capC2: Double): Double = {
     val n = xs.length / 3
     val m = ys.length / 3
     var best = 0.0
@@ -383,6 +420,7 @@ object HausdorffKm {
         if (d < minD) minD = d
         j += 1
       }
+      if (minD > capC2) return Double.MaxValue
       if (minD > best) best = minD
       i += 1
     }
@@ -393,7 +431,21 @@ object HausdorffKm {
     val xs = a.toDoubleArray()
     val ys = b.toDoubleArray()
     FrechetDist.checkTrack(xs, ys, "hausdorff_km")
-    FrechetDist.chordSqToKm(math.max(directedC2(xs, ys), directedC2(ys, xs)))
+    FrechetDist.chordSqToKm(math.max(
+      directedC2(xs, ys, Double.MaxValue), directedC2(ys, xs, Double.MaxValue)))
+  }
+
+  /** [[HausdorffCapped]]'s kernel — exact dH when ≤ capKm, else MaxValue. */
+  def computeCapped(a: ArrayData, b: ArrayData, capKm: Double): Double = {
+    val xs = a.toDoubleArray()
+    val ys = b.toDoubleArray()
+    FrechetDist.checkTrack(xs, ys, "hausdorff_km_capped")
+    val capC2 = FrechetDist.kmToChordSq(capKm)
+    val ab = directedC2(xs, ys, capC2)
+    if (ab == Double.MaxValue) return Double.MaxValue
+    val ba = directedC2(ys, xs, capC2)
+    if (ba == Double.MaxValue) Double.MaxValue
+    else FrechetDist.chordSqToKm(math.max(ab, ba))
   }
 }
 
@@ -411,6 +463,8 @@ object TrajSim {
       "hausdorff_km", exprs => HausdorffKm(exprs(0), exprs(1)), "scala_udf")
     reg.createOrReplaceTempFunction(
       "frechet_km_capped", exprs => FrechetCapped(exprs(0), exprs(1), exprs(2)), "scala_udf")
+    reg.createOrReplaceTempFunction(
+      "hausdorff_km_capped", exprs => HausdorffCapped(exprs(0), exprs(1), exprs(2)), "scala_udf")
   }
 
   def frechetKm(a: Column, b: Column): Column = call_function("frechet_km", a, b)
@@ -425,4 +479,7 @@ object TrajSim {
 
   def frechetKmCapped(a: Column, b: Column, capKm: Column): Column =
     call_function("frechet_km_capped", a, b, capKm)
+
+  def hausdorffKmCapped(a: Column, b: Column, capKm: Column): Column =
+    call_function("hausdorff_km_capped", a, b, capKm)
 }

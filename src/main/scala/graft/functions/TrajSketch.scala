@@ -5,12 +5,12 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 /** Cell-sketch kernels that make the track-DP family scale past the U²·cap²
   * wall (SURVEY §2.10, round-15): per-fix 2.5° lattice cells turn the LCSS
-  * and EDR DPs into EXACT sparse-match algorithms, and give Hausdorff (and
-  * through it Fréchet) a cheap EXACT lower bound for threshold pruning.
+  * and EDR DPs into EXACT sparse-match algorithms, give their prune tiers
+  * an exact near-count bound, and seed the Hausdorff threshold.
   *
   * WHY NOT THE DOCUMENTED MinHash-LSH TIER: round-15 measured the premise
   * and the fixture refutes it. The visited-cell Jaccard of the true top-10
@@ -67,15 +67,13 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType,
   *    EDR = min over chains of Σ max-gap, a DP over the sparse match set
   *    (O(P²), falling back to the full-matrix kernel when P is dense —
   *    both paths exact, the fallback merely faster at high match density).
-  *  - Hausdorff lower bound: dH ≥ max over cells of one track of the
-  *    min cell-bound to the other's cells — exact because every fix lies
-  *    in its cell and the cell bound under-estimates every point pair.
-  *    The threshold form ([[TrajSketch.hausLbExceeds]]) needs only
-  *    "lb > thr?", so the scan exits at the FIRST cell proving it —
-  *    ~|cells| table lookups for a far pair, not |cells|². Fréchet
-  *    inherits the bound (every coupling matches each fix of A to some
-  *    fix of B, so dF ≥ directed Hausdorff both ways), though on this
-  *    fixture the endpoint bound dominates and stays the Fréchet pruner. */
+  *  - Hausdorff takes no cell bound: [[TrajSketch.cellOverlap]] only
+  *    picks the seed pairs whose exact distances set the threshold, and
+  *    the capped exact kernel ([[graft.functions.HausdorffCapped]])
+  *    prunes the pair scan itself. On sf0.1 at the key's threshold (one
+  *    thread of a 4-core host) a cell-rectangle lower bound cost
+  *    2.5–3.2 µs per pair and kept 16,595 of 1,124,250 pairs; the capped
+  *    kernel costs 1.7–1.8 µs, keeps 974, and its survivors are exact. */
 object TrajSketch {
 
   private[graft] val CellDeg = 2.5
@@ -103,18 +101,6 @@ object TrajSketch {
     val hi = lo + CellDeg
     math.cos(math.toRadians(math.max(math.abs(lo), math.abs(hi))))
   }
-
-  /** Haversine-sq lower bound between two cells (monotone in distance). */
-  @inline private def cellHavLb(c1: Int, c2: Int): Double = {
-    val r1 = c1 >>> 8; val r2 = c2 >>> 8
-    val dr = math.abs(r1 - r2)
-    var dc = math.abs((c1 & 0xff) - (c2 & 0xff))
-    if (dc > NLon / 2) dc = NLon - dc
-    rowGapHav(dr) + cosEdge(r1) * cosEdge(r2) * colGapHav(dc)
-  }
-
-  private def havSqToKm(h: Double): Double =
-    2.0 * R * math.asin(math.min(1.0, math.sqrt(h)))
 
   @inline private def kmToHavSq(km: Double): Double = {
     val s = math.sin(km / (2.0 * R))
@@ -166,8 +152,6 @@ object TrajSketch {
     // inside the search loops (measured 3-10× per-pair at the ×10 probe)
     val pbufA = new Array[Long](64)
     val pbufB = new Array[Long](64)
-    val cbufA = new Array[Int](64)
-    val cbufB = new Array[Int](64)
   }
   private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch)
 
@@ -258,14 +242,6 @@ object TrajSketch {
     val out = if (n > buf.length) new Array[Long](n) else buf
     var i = 0
     while (i < n) { out(i) = src.getLong(i); i += 1 }
-    out
-  }
-
-  @inline private def copyInts(src: ArrayData, buf: Array[Int]): Array[Int] = {
-    val n = src.numElements()
-    val out = if (n > buf.length) new Array[Int](n) else buf
-    var i = 0
-    while (i < n) { out(i) = src.getInt(i); i += 1 }
     out
   }
 
@@ -370,75 +346,6 @@ object TrajSketch {
     best
   }
 
-  /** Exact lower bound on the symmetric Hausdorff distance (km) from the
-    * two DISTINCT SORTED cell arrays (a `tracks()` column). Max-min in
-    * the monotone haversine-sq domain with the classic cutoff. Used by
-    * TrajectorySpec's bound axiom; the pruned key uses the cheaper
-    * threshold form [[hausLbExceeds]]. */
-  def hausLbKm(ca: ArrayData, cb: ArrayData): Double = {
-    val nA = ca.numElements()
-    val nB = cb.numElements()
-    if (nA == 0 || nB == 0)
-      throw new IllegalArgumentException("haus_lb_km: empty cell array")
-    val sc = scratch.get()
-    val a = copyInts(ca, sc.cbufA)
-    val b = copyInts(cb, sc.cbufB)
-    math.max(directedLb(a, nA, b, nB), directedLb(b, nB, a, nA))
-  }
-
-  private def directedLb(p: Array[Int], np: Int, q: Array[Int], nq: Int): Double = {
-    var best = 0.0
-    var i = 0
-    while (i < np) {
-      var minH = Double.MaxValue
-      var j = 0
-      val ci = p(i)
-      while (j < nq && minH > best) {
-        val h = cellHavLb(ci, q(j))
-        if (h < minH) minH = h
-        j += 1
-      }
-      if (minH > best) best = minH
-      i += 1
-    }
-    havSqToKm(best)
-  }
-
-  /** TRUE iff the exact Hausdorff lower bound exceeds `thrKm` — i.e. the
-    * pair is provably NOT within the threshold and the pruned key may
-    * drop it without running the kernel. Early-exit both ways: one cell
-    * of either track with no counterpart cell within thr proves it, so a
-    * far pair costs ~|cells| table lookups (the stage-1 scan is the ×10
-    * wall — this form is what keeps it ns-scale per pair). */
-  def hausLbExceeds(ca: ArrayData, cb: ArrayData, thrKm: Double): Boolean = {
-    val nA = ca.numElements()
-    val nB = cb.numElements()
-    if (nA == 0 || nB == 0)
-      throw new IllegalArgumentException("haus_lb_exceeds: empty cell array")
-    val thrHav = kmToHavSq(math.min(thrKm, math.Pi * R))
-    val sc = scratch.get()
-    val a = copyInts(ca, sc.cbufA)
-    val b = copyInts(cb, sc.cbufB)
-    directedExceeds(a, nA, b, nB, thrHav) || directedExceeds(b, nB, a, nA, thrHav)
-  }
-
-  private def directedExceeds(p: Array[Int], np: Int, q: Array[Int], nq: Int,
-                              thrHav: Double): Boolean = {
-    var i = 0
-    while (i < np) {
-      val ci = p(i)
-      var ok = false
-      var j = 0
-      while (j < nq && !ok) {
-        if (cellHavLb(ci, q(j)) <= thrHav) ok = true
-        j += 1
-      }
-      if (!ok) return true // this cell alone proves lb > thr
-      i += 1
-    }
-    false
-  }
-
   /** Shared-cell count of two DISTINCT SORTED cell arrays — the cheap
     * (one merge pass) closeness PROXY the pruned keys use to SEED their
     * threshold: any ≥10-pair subset gives a valid (≥ d₁₀) threshold, so
@@ -528,7 +435,7 @@ object TrajSketch {
     *    n_edits ≥ max(|nA−nB|, nA−nearA, nB−nearB).
     * Both bounds are EXACT (never wrong-side), so threshold pruning on
     * them preserves the true top-10 — same proof shape as the endpoint
-    * and Hausdorff-cell bounds. Cost: ONE bitmap word test per fix. */
+    * bound. Cost: ONE bitmap word test per fix. */
   def nearCounts(pa: ArrayData, dilB: ArrayData, pb: ArrayData, dilA: ArrayData): Long =
     (nearCount(pa, dilB).toLong << 32) | nearCount(pb, dilA).toLong
 
@@ -603,50 +510,6 @@ case class EdrSparseExpr(first: Expression, second: Expression,
     copy(first = f, second = s, third = t, fourth = q)
 
   override def prettyName: String = "edr_sparse"
-}
-
-case class HausLbKmExpr(left: Expression, right: Expression)
-  extends BinaryExpression
-  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(IntegerType), ArrayType(IntegerType))
-
-  override def dataType: DataType = DoubleType
-
-  override def nullSafeEval(fa: Any, fb: Any): Any =
-    TrajSketch.hausLbKm(fa.asInstanceOf[ArrayData], fb.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (fa, fb) =>
-      s"${ev.value} = graft.functions.TrajSketch.hausLbKm($fa, $fb);")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-
-  override def prettyName: String = "haus_lb_km"
-}
-
-case class HausLbExceedsExpr(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression
-  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(ArrayType(IntegerType), ArrayType(IntegerType), DoubleType)
-
-  override def dataType: DataType = BooleanType
-
-  override def nullSafeEval(fa: Any, fb: Any, thr: Any): Any =
-    TrajSketch.hausLbExceeds(fa.asInstanceOf[ArrayData], fb.asInstanceOf[ArrayData],
-      thr.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (fa, fb, thr) =>
-      s"${ev.value} = graft.functions.TrajSketch.hausLbExceeds($fa, $fb, $thr);")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-
-  override def prettyName: String = "haus_lb_exceeds"
 }
 
 case class NearCountsExpr(first: Expression, second: Expression,
@@ -750,10 +613,6 @@ object TrajSketchFns {
       exprs => LcssSparseExpr(exprs(0), exprs(1), exprs(2), exprs(3), epsKm), "scala_udf")
     reg.createOrReplaceTempFunction("edr_sparse",
       exprs => EdrSparseExpr(exprs(0), exprs(1), exprs(2), exprs(3), epsKm), "scala_udf")
-    reg.createOrReplaceTempFunction("haus_lb_km",
-      exprs => HausLbKmExpr(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("haus_lb_exceeds",
-      exprs => HausLbExceedsExpr(exprs(0), exprs(1), exprs(2)), "scala_udf")
     reg.createOrReplaceTempFunction("cell_overlap",
       exprs => CellOverlapExpr(exprs(0), exprs(1)), "scala_udf")
     reg.createOrReplaceTempFunction("traj_near_counts",
@@ -769,11 +628,6 @@ object TrajSketchFns {
 
   def edrSparse(pa: Column, a: Column, pb: Column, b: Column): Column =
     call_function("edr_sparse", pa, a, pb, b)
-
-  def hausLbKm(ca: Column, cb: Column): Column = call_function("haus_lb_km", ca, cb)
-
-  def hausLbExceeds(ca: Column, cb: Column, thrKm: Column): Column =
-    call_function("haus_lb_exceeds", ca, cb, thrKm)
 
   def cellOverlap(ca: Column, cb: Column): Column =
     call_function("cell_overlap", ca, cb)

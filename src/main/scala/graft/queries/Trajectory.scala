@@ -35,13 +35,16 @@ import Q._
   *       strongest exact bound (max(n,m) − ub) keeps 96% of ×10 pairs
   *       at the true threshold, so a prune tier costs more than it
   *       saves on uniform tracks (the key scaladoc has the numbers).
-  *     - Fréchet and Hausdorff keep the full-matrix kernels but, above
-  *       the same gate, pay them only on pairs surviving an EXACT
-  *       lower-bound threshold prune ([[frechetPruned]] /
-  *       [[hausdorffPruned]]): endpoint chord for Fréchet, the
-  *       cell-rectangle Hausdorff bound for Hausdorff (sf0.01 measured:
-  *       1% survivors at the true top-10 threshold). Output provably
-  *       identical to the all-pairs scan in both cases.
+  *     - Fréchet, above the same gate, pays its DP only on pairs
+  *       surviving the EXACT endpoint-chord lower bound and then the
+  *       capped DP ([[frechetPruned]]).
+  *     - Hausdorff has ONE path at every pair count
+  *       ([[hausdorffPruned]]): a cell-overlap seed sets a threshold
+  *       ≥ d₁₀, and the capped exact kernel in the join condition
+  *       abandons each far pair at its first fix with no counterpart
+  *       within the threshold (sf0.1, 4-core host: 974 of 1,124,250
+  *       pairs survive, key task CPU 9.3 s → 3.4 s).
+  *     Output provably identical to the all-pairs scan in every case.
   *     All four main passes are SINGLE-SCAN: tracks and sketches ride
   *     the one broadcast pair join, bounds filter inline, survivors pay
   *     the kernel in the same stage — the ×10 probe measured re-attach
@@ -57,8 +60,8 @@ import Q._
   * on random and adversarial tracks, the Eiter-Mannila axioms (identity,
   * symmetry, endpoint lower bound), planted parallel/reversed corridors,
   * LCSS one-wild-fix robustness, forced-prune-branch ≡ direct-branch
-  * equality for BOTH pruned keys, and key-level top-10 equality vs an
-  * exact all-pairs driver DP at fixture scale. */
+  * equality for the gated keys, capped-kernel exactness, and key-level
+  * top-10 equality vs an exact all-pairs driver DP at fixture scale. */
 object Trajectory extends QueryGroup {
 
   /** Downsample cap: per-pair exact DP ≤ 64² = 4096 cells. (graft-wide
@@ -124,9 +127,9 @@ object Trajectory extends QueryGroup {
     * smallest-lb candidates — any ≥10-pair subset's 10th-smallest exact
     * is ≥ the global d₁₀, so pruning lb > thr + 1e-4 can never drop a
     * true top-10 pair, and the 1e-4 margin keeps excluded pairs strictly
-    * after every kept row even at round(4). Survivors re-attach tracks
-    * via broadcast equi-joins and pay the cap² DP. Output provably ≡ the
-    * all-pairs scan. */
+    * after every kept row even at round(4). Endpoint-bound survivors pay
+    * the capped DP inside the same join condition, and only pairs within
+    * thr are rounded. Output provably ≡ the all-pairs scan. */
   /** Prune telemetry for the ×10 probe: candidate pair count by key
     * (survivors placeholder -1 — the ACTUAL survivor count is an
     * `observe("prune", ...)` metric on the main pass, read from the
@@ -134,7 +137,8 @@ object Trajectory extends QueryGroup {
     * cost a full extra pair pass per key). */
   @volatile private[graft] var lastPrune: Map[String, (Long, Long)] = Map.empty
 
-  private[graft] def frechetPruned(s: SparkSession, tr: DataFrame): DataFrame = {
+  private[graft] def frechetPruned(s: SparkSession, tr: DataFrame,
+                                   nUsers: Long): DataFrame = {
     import s.implicits._
     TrajSim.register(s)
     // The light (u1, u2, lb) scan is CHEAP (12 doubles per user) but at
@@ -176,7 +180,6 @@ object Trajectory extends QueryGroup {
       .agg(max($"d").as("t"))
       .select(coalesce($"t", lit(Double.MaxValue)))
       .as[Double].head()
-    val nUsers = tr.count()
     lastPrune += "m_traj_frechet" -> (nUsers * (nUsers - 1) / 2, -1L)
     // Main pass is SINGLE-SCAN (round-15 probe finding: re-attaching the
     // 1.5 KB tracks to 3.6×10⁷ survivors through two broadcast joins
@@ -188,58 +191,57 @@ object Trajectory extends QueryGroup {
       .repartition(s.sparkContext.defaultParallelism)
     val rhs = tr.select(($"user_id".as("u2") +: $"n_fixes".as("n_b") +:
         $"track".as("tb") +: epCols(2)): _*)
-    // the bound rides the join condition with the CHEAP predicate first
-    // (a pushed filter lands before u1<u2 and doubles the bound's 225M
-    // evaluations); survivors' count is an observe() metric (no extra
-    // scan); the survivor kernel is the CAPPED DP — exact for anything
-    // that can reach the top-10, early-abandoning the far pairs that an
-    // endpoint bound cannot exclude
-    lhs.join(broadcast(rhs), $"u1" < $"u2" && lbScalar <= thr + 1e-4)
+    // the bounds ride the join condition cheapest first (a pushed filter
+    // lands before u1<u2 and doubles the bound's 225M evaluations): the
+    // endpoint bound, then the CAPPED DP — exact for anything that can
+    // reach the top-10, early-abandoning the far pairs the endpoint bound
+    // cannot exclude. Only survivors are rounded: Spark's Round goes
+    // through BigDecimal, and rounding every abandoned pair's MaxValue
+    // costs more than the DP saved. Survivors' count is an observe()
+    // metric (no extra scan).
+    lhs.join(broadcast(rhs), $"u1" < $"u2" && lbScalar <= thr + 1e-4 &&
+        TrajSim.frechetKmCapped($"ta", $"tb", lit(thr + 1e-4)) <= thr + 1e-4)
       .observe("prune", count(lit(1)).as("survivors"))
-      .withColumn("frechet_km",
-        round(TrajSim.frechetKmCapped($"ta", $"tb", lit(thr + 1e-4)), 4))
+      .withColumn("frechet_km", round(TrajSim.frechetKm($"ta", $"tb"), 4))
       .select($"u1", $"u2", $"n_a", $"n_b", $"frechet_km")
       .orderBy($"frechet_km", $"u1", $"u2")
       .limit(10)
   }
 
-  /** m_traj_hausdorff's large-U path — the same two-scan threshold-prune
-    * shape as [[frechetPruned]], with the EXACT cell-rectangle Hausdorff
-    * lower bound ([[graft.functions.TrajSketch.hausLbKm]]) as the stage-1
-    * scan: dH ≥ max-min over the two fix-cell sets of the per-cell-pair
-    * distance bound, so pruning lb > thr + 1e-4 can never drop a true
-    * top-10 pair (thr = the 10th-smallest EXACT distance among the 50
-    * smallest-lb candidates — any ≥10-pair subset's 10th-smallest exact
-    * is ≥ the global d₁₀). Stage 1 moves only the ≤cap int cell arrays
-    * per user, never the 1.5 KB tracks; measured at sf0.01 the bound
-    * keeps 1% of pairs at the true threshold. */
-  /** The stage-1 scan is a two-pass design tuned by the ×10 probe (the
-    * first cut computed the full max-min bound per pair and the 112M-pair
-    * scan cost 171 µs/pair — slower than the kernel it was saving):
+  /** m_traj_hausdorff's only path — the two-scan threshold-prune shape of
+    * [[frechetPruned]], with the CAPPED exact kernel
+    * ([[graft.functions.HausdorffCapped]]) as the pruner:
     *  - SEED pass: the threshold only needs the 10th-smallest EXACT
     *    distance of ANY ≥10-pair subset (every such value ≥ the global
-    *    d₁₀), so the seed candidates are picked by the cheap shared-cell
-    *    OVERLAP proxy (one merge pass per pair) — proxy quality affects
-    *    prune tightness, never correctness.
-    *  - FILTER pass: `haus_lb_exceeds(cells, cells, thr)` — the bound is
-    *    only ever COMPARED to thr, so the scan exits at the first cell
-    *    proving lb > thr (~|cells| lookups on far pairs, the common
-    *    case) instead of completing the max-min. */
-  private[graft] def hausdorffPruned(s: SparkSession, tr: DataFrame): DataFrame = {
+    *    d₁₀), so the 2000 seed candidates are picked by the cheap
+    *    shared-cell OVERLAP proxy (one merge pass per pair, cell arrays
+    *    only) — proxy quality affects prune tightness, never correctness.
+    *  - MAIN pass: `hausdorff_km_capped(ta, tb, thr + 1e-4) <= thr + 1e-4`
+    *    in the broadcast pair join's condition, AFTER `u1 < u2`. The
+    *    kernel is exact whenever dH ≤ cap and abandons a far pair at the
+    *    first fix whose nearest counterpart lies beyond the cap, so no
+    *    true top-10 pair is dropped and excluded pairs sort strictly after
+    *    every kept row even at round(4). Only survivors pay
+    *    `round(hausdorff_km, 4)`: Spark's `Round` goes through BigDecimal
+    *    on a finite double, and rounding every abandoned pair's MaxValue
+    *    cost about 2.2 s at 1.1M pairs.
+    * Measured at sf0.1 on a 4-core host (1,500 users, 1,124,250 pairs):
+    * seed threshold 2,861 km against a true d₁₀ of 2,511 km; the capped
+    * kernel costs 1.7–1.8 µs per pair on one thread against 7.2–7.5 µs
+    * for the full kernel and keeps 974 pairs; the key's traced task CPU
+    * fell from 9.3 s to 3.4 s. */
+  private[graft] def hausdorffPruned(s: SparkSession, tr: DataFrame,
+                                     nUsers: Long): DataFrame = {
     import s.implicits._
+    TrajSim.register(s)
     TrajSketchFns.register(s, MatchEpsKm)
-    def lightPairs = {
-      val lhs = tr.select($"user_id".as("u1"), $"cells".as("ca"))
-        .repartition(s.sparkContext.defaultParallelism)
-      val rhs = tr.select($"user_id".as("u2"), $"cells".as("cb"))
-      lhs.join(broadcast(rhs), $"u1" < $"u2")
-    }
     def attach(df: DataFrame) = df
-      .join(broadcast(tr.select($"user_id".as("u1"),
-        $"n_fixes".as("n_a"), $"track".as("ta"))), Seq("u1"))
-      .join(broadcast(tr.select($"user_id".as("u2"),
-        $"n_fixes".as("n_b"), $"track".as("tb"))), Seq("u2"))
-    val thr = attach(lightPairs
+      .join(broadcast(tr.select($"user_id".as("u1"), $"track".as("ta"))), Seq("u1"))
+      .join(broadcast(tr.select($"user_id".as("u2"), $"track".as("tb"))), Seq("u2"))
+    val cLhs = tr.select($"user_id".as("u1"), $"cells".as("ca"))
+      .repartition(s.sparkContext.defaultParallelism)
+    val cRhs = tr.select($"user_id".as("u2"), $"cells".as("cb"))
+    val thr = attach(cLhs.join(broadcast(cRhs), $"u1" < $"u2")
         .select($"u1", $"u2", TrajSketchFns.cellOverlap($"ca", $"cb").as("ov"))
         .orderBy($"ov".desc, $"u1", $"u2").limit(2000)
         .select($"u1", $"u2"))
@@ -248,18 +250,15 @@ object Trajectory extends QueryGroup {
       .agg(max($"d").as("t"))
       .select(coalesce($"t", lit(Double.MaxValue)))
       .as[Double].head()
-    val nUsers = tr.count()
     lastPrune += "m_traj_hausdorff" -> (nUsers * (nUsers - 1) / 2, -1L)
-    // Single-scan main pass (the frechetPruned discipline): tracks AND
-    // cells ride the one pair scan, the early-exit exceeds check prunes,
-    // survivors pay the kernel in the same codegen stage — no re-attach.
-    val lhs = tr.select($"user_id".as("u1"), $"n_fixes".as("n_a"),
-        $"track".as("ta"), $"cells".as("ca"))
+    // Single-scan main pass. The capped kernel rides the join condition
+    // AFTER u1 < u2: a withColumn(kernel).filter(...) form gets pushed into
+    // the condition ahead of u1 < u2 and doubles the kernel calls.
+    val lhs = tr.select($"user_id".as("u1"), $"n_fixes".as("n_a"), $"track".as("ta"))
       .repartition(s.sparkContext.defaultParallelism)
-    val rhs = tr.select($"user_id".as("u2"), $"n_fixes".as("n_b"),
-        $"track".as("tb"), $"cells".as("cb"))
-    lhs.join(broadcast(rhs),
-        $"u1" < $"u2" && !TrajSketchFns.hausLbExceeds($"ca", $"cb", lit(thr + 1e-4)))
+    val rhs = tr.select($"user_id".as("u2"), $"n_fixes".as("n_b"), $"track".as("tb"))
+    lhs.join(broadcast(rhs), $"u1" < $"u2" &&
+        TrajSim.hausdorffKmCapped($"ta", $"tb", lit(thr + 1e-4)) <= thr + 1e-4)
       .observe("prune", count(lit(1)).as("survivors"))
       .withColumn("hausdorff_km", round(TrajSim.hausdorffKm($"ta", $"tb"), 4))
       .select($"u1", $"u2", $"n_a", $"n_b", $"hausdorff_km")
@@ -276,7 +275,8 @@ object Trajectory extends QueryGroup {
     * ub_norm ≥ thr − 1e-4 can never drop a true top-10 pair, and
     * excluded pairs sort strictly after kept ones even at round(4)).
     * Single-pass main scan (the frechetPruned discipline). */
-  private[graft] def lcssPruned(s: SparkSession, tr: DataFrame): DataFrame = {
+  private[graft] def lcssPruned(s: SparkSession, tr: DataFrame,
+                                nUsers: Long): DataFrame = {
     import s.implicits._
     TrajSim.register(s)
     TrajSketchFns.register(s, MatchEpsKm)
@@ -304,7 +304,6 @@ object Trajectory extends QueryGroup {
       .agg(min($"v").as("t"))
       .select(coalesce($"t", lit(-1.0)))
       .as[Double].head()
-    val nUsers = tr.count()
     lastPrune += "m_traj_lcss" -> (nUsers * (nUsers - 1) / 2, -1L)
     val lhs = tr.select($"user_id".as("u1"), $"n_fixes".as("n_a"),
         $"track".as("ta"), $"pb".as("sa"), $"dil".as("da"))
@@ -347,7 +346,8 @@ object Trajectory extends QueryGroup {
     * forced-prune ≡ direct). The d₁₀ ≈ 1 100×-U wall has no exact escape
     * (declared in the key scaladoc); the threshold/corridor query form
     * rides [[graft.operators.TrajLsh.edrThresholdPairs]] instead. */
-  private[graft] def edrPruned(s: SparkSession, tr: DataFrame): DataFrame = {
+  private[graft] def edrPruned(s: SparkSession, tr: DataFrame,
+                               nUsers: Long): DataFrame = {
     import s.implicits._
     TrajSketchFns.register(s, MatchEpsKm)
     // normalized length-difference lower bound on edr, from the two
@@ -391,7 +391,6 @@ object Trajectory extends QueryGroup {
       .agg(max($"v").as("t"))
       .select(coalesce($"t", lit(Double.MaxValue)))
       .as[Double].head()
-    val nUsers = tr.count()
     lastPrune += "m_traj_edr" -> (nUsers * (nUsers - 1) / 2, -1L)
     lhs.join(broadcast(rhs), $"u1" < $"u2" && lbEdr <= thr + 1e-4)
       .observe("prune", count(lit(1)).as("survivors"))
@@ -558,7 +557,7 @@ object Trajectory extends QueryGroup {
           .select($"u1", $"u2", $"n_a", $"n_b", $"frechet_km")
           .orderBy($"frechet_km", $"u1", $"u2")
           .limit(10)
-      else frechetPruned(s, tr)
+      else frechetPruned(s, tr, nUsers)
     }),
 
     // EDR — Edit Distance on Real sequence (Chen, Özsu & Oria, SIGMOD
@@ -610,7 +609,7 @@ object Trajectory extends QueryGroup {
           .select($"u1", $"u2", $"n_a", $"n_b", $"n_edits", $"edr")
           .orderBy($"edr", $"u1", $"u2")
           .limit(10)
-      else edrPruned(s, tr)
+      else edrPruned(s, tr, nUsers)
     }),
 
     // TRACLUS partition-and-group (Lee, Han & Whang, SIGMOD 2007): MDL-
@@ -658,22 +657,13 @@ object Trajectory extends QueryGroup {
     // axiom, reversed-corridor-reads-0, and key top-10 vs an exact
     // all-pairs driver recomputation.
     "m_traj_hausdorff" -> ((s, dir) => {
-      import s.implicits._
-      // Same adaptive gate as the Fréchet key: below ~5M pairs the direct
-      // exact scan beats the prune's extra jobs; above it the exact
-      // cell-bound threshold prune ([[hausdorffPruned]]) pays the kernel
-      // on the measured ~1% of pairs the bound cannot exclude.
-      TrajSim.register(s)
+      // One path at every pair count: the capped-kernel threshold prune
+      // ([[hausdorffPruned]]) pays the full kernel only on the ~1,000 of
+      // sf0.1's 1.1M pairs the cap cannot abandon.
       val tr = tracks(s, dir)
       val nUsers = tr.count()
       exactPairsGate(s.sparkContext.defaultParallelism, "m_traj_hausdorff", nUsers)
-      if (nUsers * (nUsers - 1) / 2 <= 5_000_000L)
-        pairedTracks(s, dir)
-          .withColumn("hausdorff_km", round(TrajSim.hausdorffKm($"ta", $"tb"), 4))
-          .select($"u1", $"u2", $"n_a", $"n_b", $"hausdorff_km")
-          .orderBy($"hausdorff_km", $"u1", $"u2")
-          .limit(10)
-      else hausdorffPruned(s, tr)
+      hausdorffPruned(s, tr, nUsers)
     }),
 
     // HMM map-matching (Newson & Krumm, VLDB 2009 shape) — snap each
@@ -736,7 +726,7 @@ object Trajectory extends QueryGroup {
           .select($"u1", $"u2", $"n_a", $"n_b", $"n_match", $"lcss")
           .orderBy($"lcss".desc, $"u1", $"u2")
           .limit(10)
-      else lcssPruned(s, tr)
+      else lcssPruned(s, tr, nUsers)
     })
   )
 

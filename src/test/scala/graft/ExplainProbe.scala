@@ -16,16 +16,17 @@ object ExplainProbe {
     graft.functions.TrajSketchFns.register(spark, 500.0)
     graft.functions.TrajSim.register(spark)
     val tr = graft.queries.Trajectory.tracks(spark, "/root/testdata/sf0.001")
+    val nUsers = tr.count()
     val lhs = tr.select($"user_id".as("u1"), $"track".as("ta"), $"pb".as("sa"))
       .repartition(4)
     val rhs = tr.select($"user_id".as("u2"), $"track".as("tb"), $"pb".as("sb"))
-    val qq = graft.queries.Trajectory.hausdorffPruned(spark, tr)
+    val qq = graft.queries.Trajectory.hausdorffPruned(spark, tr, nUsers)
     qq.collect()
     println("observed: " + qq.queryExecution.observedMetrics)
-    val q = graft.queries.Trajectory.frechetPruned(spark, tr)
+    val q = graft.queries.Trajectory.frechetPruned(spark, tr, nUsers)
     q.collect()
     println(q.queryExecution.executedPlan.toString.linesIterator.take(30).mkString("\n"))
-    val q2 = graft.queries.Trajectory.lcssPruned(spark, tr)
+    val q2 = graft.queries.Trajectory.lcssPruned(spark, tr, nUsers)
     q2.collect()
     println("==== lcss ====")
     println(q2.queryExecution.executedPlan.toString.linesIterator.take(30).mkString("\n"))

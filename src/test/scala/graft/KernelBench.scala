@@ -43,9 +43,9 @@ object KernelBench {
       val (ta, _, _) = tracks(i % 256); val (tb, _, _) = tracks((i + 1) % 256)
       graft.functions.LcssMatches.compute(ta, tb, 500.0)
     }
-    bench("haus_lb_exceeds 3000", I) { i =>
-      val (_, _, ca) = tracks(i % 256); val (_, _, cb) = tracks((i + 1) % 256)
-      if (graft.functions.TrajSketch.hausLbExceeds(ca, cb, 3000.0)) 1L else 0L
+    bench("hausdorff capped 3000", I) { i =>
+      val (ta, _, _) = tracks(i % 256); val (tb, _, _) = tracks((i + 1) % 256)
+      if (graft.functions.HausdorffKm.computeCapped(ta, tb, 3000.0) == Double.MaxValue) 0L else 1L
     }
     bench("hausdorff kernel", I) { i =>
       val (ta, _, _) = tracks(i % 256); val (tb, _, _) = tracks((i + 1) % 256)

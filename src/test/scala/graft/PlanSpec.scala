@@ -1354,10 +1354,9 @@ class PlanSpec extends BaseSpec {
     assert(ds.contains("BroadcastHashJoin") && !ds.contains("SortMergeJoin"),
       s"q_text_dsir: model join must broadcast:\n$ds")
 
-    // m_traj_hausdorff rides the SAME pairedTracks scan as the DP trio:
-    // the u1 < u2 pair scan against the broadcast signature frame IS the
-    // declared BroadcastNestedLoopJoin (a theta join moves no data twice);
-    // anything heavier (cartesian, SMJ) is a regression.
+    // m_traj_hausdorff's u1 < u2 pair scan against the broadcast track
+    // frame IS the declared BroadcastNestedLoopJoin (a theta join moves no
+    // data twice); anything heavier (cartesian, SMJ) is a regression.
     val hd = SparkEntry.queries("m_traj_hausdorff")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(hd.contains("BroadcastNestedLoopJoin") &&
@@ -1447,8 +1446,8 @@ class PlanSpec extends BaseSpec {
     // (a pushed filter evaluating before u1<u2 doubles the bound's
     // evaluations — the r15 probe lesson), kernel in a projection above,
     // no re-attach joins (exactly one join in the whole plan)
-    val fp = graft.queries.Trajectory
-      .frechetPruned(spark, graft.queries.Trajectory.tracks(spark, sf))
+    val trk = graft.queries.Trajectory.tracks(spark, sf)
+    val fp = graft.queries.Trajectory.frechetPruned(spark, trk, trk.count())
     fp.collect()
     val fpP = finalSection(fp.queryExecution.executedPlan.toString)
     assert(fpP.contains("BroadcastNestedLoopJoin"),
@@ -1461,5 +1460,21 @@ class PlanSpec extends BaseSpec {
       s"frechetPruned: cheap predicate must precede the bound in the join condition:\n$cond")
     assert(fpP.contains("frechet_km_capped"),
       s"frechetPruned: survivors must pay the capped DP:\n$fpP")
+
+    // m_traj_hausdorff (its only path is hausdorffPruned): the same pin —
+    // one broadcast pair join, u1 < u2 BEFORE the capped kernel in its
+    // condition (a pushed withColumn+filter form lands the kernel first
+    // and doubles its calls)
+    val hp = SparkEntry.queries("m_traj_hausdorff")(spark, sf)
+    hp.collect()
+    val hpP = finalSection(hp.queryExecution.executedPlan.toString)
+    assert("BroadcastNestedLoopJoin".r.findAllIn(hpP).size == 1,
+      s"m_traj_hausdorff: main pass must be exactly one pair join:\n$hpP")
+    assert(hpP.linesIterator.count(_.contains("Join")) == 1,
+      s"m_traj_hausdorff: main pass must be single-join (no re-attach):\n$hpP")
+    val hCond = hpP.linesIterator.find(_.contains("BroadcastNestedLoopJoin")).get
+    assert(hCond.indexOf("u1") >= 0 && hCond.indexOf("hausdorff_km_capped") >= 0 &&
+           hCond.indexOf("u1") < hCond.indexOf("hausdorff_km_capped"),
+      s"m_traj_hausdorff: u1 < u2 must precede the capped kernel in the join condition:\n$hCond")
   }
 }

@@ -37,13 +37,6 @@ object TrajJoinProbe {
       pairs.select(graft.functions.TrajSketchFns.cellOverlap($"ca", $"cb").as("x"))
         .agg(sum($"x")).head(); 0L
     }
-    timed("+ haus_lb_exceeds(3000)") {
-      pairs.filter(!graft.functions.TrajSketchFns.hausLbExceeds($"ca", $"cb", lit(3000.0))).count()
-    }
-    timed("+ haus_lb_km full") {
-      pairs.select(graft.functions.TrajSketchFns.hausLbKm($"ca", $"cb").as("x"))
-        .agg(sum($"x")).head(); 0L
-    }
     timed("+ lcss_sparse") {
       pairs.select(graft.functions.TrajSketchFns.lcssSparse($"sa", $"ta", $"sb", $"tb").as("x"))
         .agg(sum($"x")).head(); 0L
