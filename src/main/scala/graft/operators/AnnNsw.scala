@@ -135,23 +135,20 @@ object AnnNsw {
   def topKFrom(spark: SparkSession, vecs: DataFrame, adjacency: DataFrame,
                seeds: DataFrame, probeIds: Seq[Long], k: Int, ef: Int,
                rounds: Int,
-               pred: Option[org.apache.spark.sql.Column] = None,
-               localThreshold: Long = 1L << 20): DataFrame = {
+               pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     import spark.implicits._
     graft.functions.VectorOps.register(spark)
 
-    // Hybrid endgame ([[PageRank]] round-18 discipline): the beam walk is
-    // probe-shaped — each of its `rounds` is a broadcast join + window +
-    // checkpoint whose cost is fixed job overhead on a small graph — so
-    // below the budget the SAME walk runs over driver maps. Scoring goes
+    // [[Endgame]]: the beam walk is probe-shaped — each of its `rounds` is
+    // a broadcast join + window + checkpoint whose cost is fixed job
+    // overhead on a small graph — so below the budget the SAME walk runs
+    // over driver maps. Scoring goes
     // through [[graft.functions.CosineSim.compute]] (the one batch/stream
     // scorer), ranking uses the same (cos desc, vec_id) tie rule, and the
     // predicate's matching id set is still computed by a distributed
     // filter over `vecs`, so a filtered search stays predicate-exact.
-    // AnnIndexSpec pins local ≡ distributed; 0 forces the distributed
-    // walk. At 100 TB the vector table exceeds the budget and nothing
-    // changes.
-    if (vecs.count() <= localThreshold && adjacency.count() <= localThreshold) {
+    // MlSpec pins local ≡ distributed.
+    if (Endgame.local(vecs.count()) && Endgame.local(adjacency.count())) {
       val vArr = vecs.select($"vec_id", $"v").as[(Long, Seq[Double])]
         .collect().map { case (id, v) => (id, v.toArray) }.toMap
       val out = scala.collection.mutable.LongMap.empty[List[Long]]

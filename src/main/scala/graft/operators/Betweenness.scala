@@ -45,21 +45,19 @@ object Betweenness {
     *         (each undirected pair is counted from both endpoints when
     *         both are sources — the standard undirected convention) */
   def run(spark: SparkSession, edges: DataFrame, k: Int = 16,
-          maxDepth: Int = 16, checkEvery: Int = 2,
-          localThreshold: Long = 1L << 20): DataFrame = {
+          maxDepth: Int = 16, checkEvery: Int = 2): DataFrame = {
     import spark.implicits._
     val sym = edges.select($"u1".as("src"), $"u2".as("dst"))
       .unionAll(edges.select($"u2".as("src"), $"u1".as("dst")))
       .localCheckpoint(eager = true)
 
-    // Hybrid endgame ([[PageRank]] round-18 discipline): textbook Brandes
-    // per sampled source over a driver adjacency map below the edge
-    // budget. σ stays Long-exact; every δ group sum goes through the SAME
-    // Decimal(38,18) HALF_UP route as the distributed aggregate (decimal
-    // sums are order-independent), so the local path is BIT-IDENTICAL to
-    // the distributed one, not merely close (BetweennessSpec pins both
-    // paths and the across-runs determinism). 0 forces distributed.
-    if (sym.count() <= localThreshold) {
+    // The local path is textbook Brandes per sampled source over a driver
+    // adjacency map. σ stays Long-exact; every δ group sum goes through the
+    // SAME Decimal(38,18) HALF_UP route as the distributed aggregate
+    // (decimal sums are order-independent), so the local path is
+    // BIT-IDENTICAL to the distributed one, not merely close
+    // (BetweennessSpec pins both paths and the across-runs determinism).
+    val (out, rounds, complete) = if (Endgame.local(sym.count())) {
       val es = sym.as[(Long, Long)].collect()
       val adj = es.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
       val sources = adj.keys.toArray.sorted.take(k)
@@ -68,12 +66,15 @@ object Betweenness {
           .setScale(18, java.math.RoundingMode.HALF_UP)
       val bcAcc = scala.collection.mutable.LongMap.empty[java.math.BigDecimal]
       var globalMax = 0
-      sources.foreach { s =>
+      var complete = true
+      val srcIt = sources.iterator
+      while (complete && srcIt.hasNext) {
+        val s = srcIt.next()
         val dist = scala.collection.mutable.LongMap[Int](s -> 0)
         val sigma = scala.collection.mutable.LongMap[Long](s -> 1L)
         var frontier = Array(s)
         var d = 0
-        while (frontier.nonEmpty) {
+        while (complete && frontier.nonEmpty) {
           d += 1
           val cand = scala.collection.mutable.LongMap.empty[Long]
           frontier.foreach { v =>
@@ -82,10 +83,7 @@ object Betweenness {
                 cand(w) = cand.getOrElse(w, 0L) + sigma(v)
             }
           }
-          if (cand.nonEmpty && d > maxDepth)
-            throw new IllegalStateException(
-              s"Brandes BFS still had undiscovered vertices after $maxDepth " +
-                "rounds — scores would be truncated; raise maxDepth")
+          complete = cand.isEmpty || d <= maxDepth
           cand.foreach { case (w, sg) => dist(w) = d; sigma(w) = sg }
           frontier = cand.keys.toArray.sorted
         }
@@ -117,87 +115,90 @@ object Betweenness {
           }
         }
       }
-      lastIterations = globalMax
       val out = bcAcc.toSeq.sortBy(_._1)
         .map { case (v, acc) => (v, acc.doubleValue / 2.0) }
-      return spark.createDataset(out).toDF("id", "bc")
-    }
+      (spark.createDataset(out).toDF("id", "bc"), globalMax, complete)
+    } else {
+      val sources = sym.select($"src".as("id")).distinct()
+        .orderBy($"id").limit(k)
 
-    val sources = sym.select($"src".as("id")).distinct()
-      .orderBy($"id").limit(k)
-
-    // forward: (s, v, dist, sigma)
-    var reached = sources
-      .select($"id".as("s"), $"id".as("v"), lit(0).as("dist"),
-              lit(1L).as("sigma"))
-      .localCheckpoint(eager = true)
-    var frontier = reached
-    var d = 0
-    var exhausted = false
-    while (d < maxDepth && !exhausted) {
-      d += 1
-      val cadence = d % checkEvery == 0 || d == maxDepth
-      val next = frontier.join(sym, frontier("v") === sym("src"))
-        .select($"s", $"dst".as("v"), $"sigma")
-        .groupBy($"s", $"v").agg(sum($"sigma").as("sigma"))
-        .join(reached.select($"s", $"v"), Seq("s", "v"), "left_anti")
-        .select($"s", $"v", lit(d).as("dist"), $"sigma")
-        .localCheckpoint(eager = cadence)
-      if (cadence && next.isEmpty) {
-        exhausted = true
-      } else {
-        reached = reached.unionAll(next).localCheckpoint(eager = false)
-        frontier = next
+      // forward: (s, v, dist, sigma)
+      var reached = sources
+        .select($"id".as("s"), $"id".as("v"), lit(0).as("dist"),
+                lit(1L).as("sigma"))
+        .localCheckpoint(eager = true)
+      var frontier = reached
+      var d = 0
+      var exhausted = false
+      while (d < maxDepth && !exhausted) {
+        d += 1
+        val cadence = d % checkEvery == 0 || d == maxDepth
+        val next = frontier.join(sym, frontier("v") === sym("src"))
+          .select($"s", $"dst".as("v"), $"sigma")
+          .groupBy($"s", $"v").agg(sum($"sigma").as("sigma"))
+          .join(reached.select($"s", $"v"), Seq("s", "v"), "left_anti")
+          .select($"s", $"v", lit(d).as("dist"), $"sigma")
+          .localCheckpoint(eager = cadence)
+        if (cadence && next.isEmpty) {
+          exhausted = true
+        } else {
+          reached = reached.unionAll(next).localCheckpoint(eager = false)
+          frontier = next
+        }
       }
-    }
-    if (!exhausted) {
       // the loop ran out of rounds with a live frontier: scores are
       // truncated ONLY if another round would still discover vertices —
       // completing exactly at maxDepth is legitimate, so probe once
-      val more = frontier.join(sym, frontier("v") === sym("src"))
-        .select($"s", $"dst".as("v")).distinct()
-        .join(reached.select($"s", $"v"), Seq("s", "v"), "left_anti")
-      if (!more.isEmpty)
-        throw new IllegalStateException(
-          s"Brandes BFS still had undiscovered vertices after $maxDepth " +
-            "rounds — scores would be truncated; raise maxDepth")
+      val complete = exhausted ||
+        frontier.join(sym, frontier("v") === sym("src"))
+          .select($"s", $"dst".as("v")).distinct()
+          .join(reached.select($"s", $"v"), Seq("s", "v"), "left_anti")
+          .isEmpty
+      if (!complete) (spark.emptyDataFrame, d, false)
+      else {
+        reached = reached.localCheckpoint(eager = true)
+        // true deepest discovered level from the data — the cadence-deferred
+        // emptiness check can overshoot by up to checkEvery-1 no-op rounds,
+        // so neither `d` nor a derived counter is the eccentricity
+        val maxLevel = reached.agg(max($"dist")).as[Int].head()
+
+        // backward: dependency accumulation, deepest level first. delta
+        // holds (s, v, delta) for levels > l; vertices without an entry
+        // have δ = 0. Level 0 is never computed: the only level-0 vertex
+        // is the source itself, whose own-BFS δ is excluded from bc by
+        // definition (it still accumulates bc as an INTERMEDIATE of other
+        // sources' BFS trees).
+        var delta = reached.filter(lit(false))
+          .select($"s", $"v", lit(0.0).as("delta"))
+        var l = maxLevel - 1
+        while (l >= 1) {
+          val wSlice = reached.filter($"dist" === l + 1)
+            .join(delta, Seq("s", "v"), "left")
+            .select($"s", $"v".as("w"), $"sigma".as("sw"),
+                    coalesce($"delta", lit(0.0)).as("dw"))
+          val dl = reached.filter($"dist" === l)
+            .select($"s", $"v", $"sigma".as("sv"))
+            .join(sym, $"v" === sym("src"))
+            .select($"s", $"v", $"sv", $"dst".as("w"))
+            .join(wSlice, Seq("s", "w"))
+            .groupBy($"s", $"v")
+            .agg(sum(($"sv".cast("double") / $"sw" * (lit(1.0) + $"dw"))
+              .cast(DecimalType(38, 18))).cast("double").as("delta"))
+          delta = delta.unionAll(dl).localCheckpoint(eager = l % checkEvery == 0)
+          l -= 1
+        }
+
+        (delta
+          .groupBy($"v".as("id"))
+          .agg((sum($"delta".cast(DecimalType(38, 18))).cast("double") / 2.0)
+            .as("bc")), maxLevel, true)
+      }
     }
-
-    reached = reached.localCheckpoint(eager = true)
-    // true deepest discovered level from the data — the cadence-deferred
-    // emptiness check can overshoot by up to checkEvery-1 no-op rounds,
-    // so neither `d` nor a derived counter is the eccentricity
-    val maxLevel = reached.agg(max($"dist")).as[Int].head()
-    lastIterations = maxLevel
-
-    // backward: dependency accumulation, deepest level first. delta holds
-    // (s, v, delta) for levels > l; vertices without an entry have δ = 0.
-    // Level 0 is never computed: the only level-0 vertex is the source
-    // itself, whose own-BFS δ is excluded from bc by definition (it still
-    // accumulates bc as an INTERMEDIATE of other sources' BFS trees).
-    var delta = reached.filter(lit(false))
-      .select($"s", $"v", lit(0.0).as("delta"))
-    var l = maxLevel - 1
-    while (l >= 1) {
-      val wSlice = reached.filter($"dist" === l + 1)
-        .join(delta, Seq("s", "v"), "left")
-        .select($"s", $"v".as("w"), $"sigma".as("sw"),
-                coalesce($"delta", lit(0.0)).as("dw"))
-      val dl = reached.filter($"dist" === l)
-        .select($"s", $"v", $"sigma".as("sv"))
-        .join(sym, $"v" === sym("src"))
-        .select($"s", $"v", $"sv", $"dst".as("w"))
-        .join(wSlice, Seq("s", "w"))
-        .groupBy($"s", $"v")
-        .agg(sum(($"sv".cast("double") / $"sw" * (lit(1.0) + $"dw"))
-          .cast(DecimalType(38, 18))).cast("double").as("delta"))
-      delta = delta.unionAll(dl).localCheckpoint(eager = l % checkEvery == 0)
-      l -= 1
-    }
-
-    delta
-      .groupBy($"v".as("id"))
-      .agg((sum($"delta".cast(DecimalType(38, 18))).cast("double") / 2.0)
-        .as("bc"))
+    lastIterations = rounds
+    if (!complete)
+      throw new IllegalStateException(
+        s"Brandes BFS still had undiscovered vertices after $maxDepth " +
+          "rounds — scores would be truncated; raise maxDepth")
+    out
   }
 }

@@ -27,17 +27,20 @@ import org.apache.spark.sql.functions._
 object Bfs {
   @volatile var lastIterations: Int = 0
 
-  /** Driver-local frontier loop — the [[ConnectedComponents]] hybrid
-    * endgame applied to BFS (round 18): below `localThreshold` edges the
-    * distributed rounds are pure fixed job overhead (each round ≈ 4 tiny
-    * AQE-materialized exchanges whatever the data size), so the same
-    * layer-synchronous expansion runs over a driver adjacency map. Same
-    * cadence-deferred exit, same lastIterations, identical output set
-    * (integer hop distances have no fp noise; BfsSpec pins set equality
-    * on both paths). */
+  /** Both directions of the undirected (u1, u2) list as (sv, dst), cached. */
+  private def symmetric(edges: DataFrame): DataFrame =
+    edges.select(col("u1").as("sv"), col("u2").as("dst"))
+      .unionAll(edges.select(col("u2").as("sv"), col("u1").as("dst")))
+      .localCheckpoint(eager = true)
+
   private def buildAdj(sym: Array[(Long, Long)]): Map[Long, Array[Long]] =
     sym.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
 
+  /** Driver-local frontier loop — the [[Endgame]] kernel: the same
+    * layer-synchronous expansion over a driver adjacency map, same
+    * cadence-deferred exit, same round count, identical output set
+    * (integer hop distances have no fp noise; BfsSpec pins set equality
+    * on both paths). */
   private def runLocal(adj: Map[Long, Array[Long]], seedIds: Array[Long],
                        maxHops: Int, checkEvery: Int): (Seq[(Long, Int)], Int) = {
     val visited = scala.collection.mutable.LongMap.empty[Int]
@@ -58,49 +61,52 @@ object Bfs {
     (visited.toSeq.sortBy(_._1), d)
   }
 
-  /** @param edges  undirected pair list (u1, u2), each pair once
-    * @param seeds  (id) — distance-0 vertex set
-    * @param localThreshold run the driver-local endgame when the
-    *        symmetrized edge list (and the seed set) is at most this many
-    *        rows; 0 forces distributed rounds (the spec pin)
-    * @return (id, dist) for every vertex within `maxHops` of a seed */
-  def run(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
-          maxHops: Int = 8, checkEvery: Int = 2,
-          localThreshold: Long = 1L << 20): DataFrame = {
-    import spark.implicits._
-    val sym = edges.select($"u1".as("src"), $"u2".as("dst"))
-      .unionAll(edges.select($"u2".as("src"), $"u1".as("dst")))
-      .localCheckpoint(eager = true)
-
-    // Both gates are DISTRIBUTED counts taken before any collect: the seed
-    // frame must prove it is under budget before it is allowed on the driver.
-    if (sym.count() <= localThreshold && seeds.count() <= localThreshold) {
-      val seedIds = seeds.select($"id".cast("long")).as[Long].collect()
-      val (out, d) = runLocal(buildAdj(sym.as[(Long, Long)].collect()),
-        seedIds, maxHops, checkEvery)
-      lastIterations = d
-      return spark.createDataset(out).toDF("id", "dist")
-    }
-
-    var visited = seeds.select($"id", lit(0).as("dist"))
-      .localCheckpoint(eager = true)
-    var frontier = visited.select($"id")
+  /** The distributed frontier loop of [[run]] and [[runFromEach]]: `start`
+    * holds (keys…, id, dist = 0), and each vertex is reached once per
+    * value of `keys`. */
+  private def runDistributed(sym: DataFrame, start: DataFrame,
+                             keys: Seq[String], maxHops: Int,
+                             checkEvery: Int): (DataFrame, Int) = {
+    val reachedKey = (keys :+ "id").map(col)
+    var visited = start.localCheckpoint(eager = true)
+    var frontier = visited.select(reachedKey: _*)
     var d = 0
     var done = false
     while (d < maxHops && !done) {
       d += 1
       val cadence = d % checkEvery == 0 || d == maxHops
-      val next = frontier.join(sym, frontier("id") === sym("src"))
-        .select(sym("dst").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .select($"id", lit(d).as("dist"))
+      val next = frontier.join(sym, frontier("id") === sym("sv"))
+        .select(keys.map(col) :+ sym("dst").as("id"): _*).distinct()
+        .join(visited, keys :+ "id", "left_anti")
+        .select(reachedKey :+ lit(d).as("dist"): _*)
         .localCheckpoint(eager = cadence)
       visited = visited.unionAll(next).localCheckpoint(eager = false)
-      frontier = next.select($"id")
+      frontier = next.select(reachedKey: _*)
       if (cadence && d < maxHops) done = next.isEmpty
     }
-    lastIterations = d
-    visited
+    (visited, d)
+  }
+
+  /** @param edges  undirected pair list (u1, u2), each pair once
+    * @param seeds  (id) — distance-0 vertex set
+    * @return (id, dist) for every vertex within `maxHops` of a seed */
+  def run(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
+          maxHops: Int = 8, checkEvery: Int = 2): DataFrame = {
+    import spark.implicits._
+    val sym = symmetric(edges)
+    // The seed frame passes its own count gate before it may reach the
+    // driver.
+    val (out, rounds) =
+      if (Endgame.local(sym.count()) && Endgame.local(seeds.count())) {
+        val seedIds = seeds.select($"id".cast("long")).as[Long].collect()
+        val (one, d) = runLocal(buildAdj(sym.as[(Long, Long)].collect()),
+          seedIds, maxHops, checkEvery)
+        (spark.createDataset(one).toDF("id", "dist"), d)
+      } else
+        runDistributed(sym, seeds.select($"id", lit(0).as("dist")), Nil,
+          maxHops, checkEvery)
+    lastIterations = rounds
+    out
   }
 
   /** Per-source BFS: hop distances from EVERY vertex of `sources` to every
@@ -115,50 +121,28 @@ object Bfs {
     *
     * @return (src, id, dist) with dist = 0 at each source itself */
   def runFromEach(spark: SparkSession, edges: DataFrame, sources: DataFrame,
-                  maxHops: Int = 8, checkEvery: Int = 2,
-                  localThreshold: Long = 1L << 20): DataFrame = {
+                  maxHops: Int = 8, checkEvery: Int = 2): DataFrame = {
     import spark.implicits._
-    val sym = edges.select($"u1".as("sv"), $"u2".as("dst"))
-      .unionAll(edges.select($"u2".as("sv"), $"u1".as("dst")))
-      .localCheckpoint(eager = true)
-
-    // Hybrid endgame (see [[run]]): per-source BFS over the same driver
-    // adjacency map — Σ reachable pairs is |sources|·|V|-bounded, the same
-    // budget class as the distributed state it replaces.
-    // Distributed source count gates the collect (same discipline as [[run]]);
-    // the adjacency map is built ONCE and shared across the per-source loops.
-    if (sym.count() <= localThreshold &&
-        sources.count() * 4 <= localThreshold) {
-      val srcIds = sources.select($"id".cast("long")).as[Long].collect()
-      val adj = buildAdj(sym.as[(Long, Long)].collect())
-      var maxD = 0
-      val out = srcIds.distinct.sorted.flatMap { s =>
-        val (one, d) = runLocal(adj, Array(s), maxHops, checkEvery)
-        maxD = math.max(maxD, d)
-        one.map { case (v, dist) => (s, v, dist) }
-      }
-      lastIterations = maxD
-      return spark.createDataset(out.toSeq).toDF("src", "id", "dist")
-    }
-
-    var visited = sources.select($"id".as("src"), $"id", lit(0).as("dist"))
-      .localCheckpoint(eager = true)
-    var frontier = visited.select($"src", $"id")
-    var d = 0
-    var done = false
-    while (d < maxHops && !done) {
-      d += 1
-      val cadence = d % checkEvery == 0 || d == maxHops
-      val next = frontier.join(sym, frontier("id") === sym("sv"))
-        .select($"src", sym("dst").as("id")).distinct()
-        .join(visited, Seq("src", "id"), "left_anti")
-        .select($"src", $"id", lit(d).as("dist"))
-        .localCheckpoint(eager = cadence)
-      visited = visited.unionAll(next).localCheckpoint(eager = false)
-      frontier = next.select($"src", $"id")
-      if (cadence && d < maxHops) done = next.isEmpty
-    }
-    lastIterations = d
-    visited
+    val sym = symmetric(edges)
+    // Per-source BFS over one driver adjacency map, built ONCE and shared
+    // across the per-source loops — Σ reachable pairs is |sources|·|V|-
+    // bounded, the same budget class as the distributed state it replaces.
+    val (out, rounds) =
+      if (Endgame.local(sym.count()) && Endgame.local(sources.count() * 4)) {
+        val srcIds = sources.select($"id".cast("long")).as[Long].collect()
+        val adj = buildAdj(sym.as[(Long, Long)].collect())
+        var maxD = 0
+        val rows = srcIds.distinct.sorted.flatMap { s =>
+          val (one, d) = runLocal(adj, Array(s), maxHops, checkEvery)
+          maxD = math.max(maxD, d)
+          one.map { case (v, dist) => (s, v, dist) }
+        }
+        (spark.createDataset(rows.toSeq).toDF("src", "id", "dist"), maxD)
+      } else
+        runDistributed(sym,
+          sources.select($"id".as("src"), $"id", lit(0).as("dist")),
+          Seq("src"), maxHops, checkEvery)
+    lastIterations = rounds
+    out
   }
 }

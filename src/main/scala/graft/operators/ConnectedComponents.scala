@@ -24,11 +24,11 @@ import org.apache.spark.sql.functions._
   * Both preserve connectivity and never change a component's minimum; the
   * unique common fixpoint is the star forest rooted at component minima.
   *
-  * Distributed rounds run only while the edge set exceeds `localThreshold`;
-  * below it an exact driver-local union-find finishes the job (bounded
-  * memory, explicit parameter) — contraction shrinks the edge set every
-  * round, so at any scale the tail of the computation is small and the
-  * fixed per-round job overhead, not data volume, would dominate it.
+  * Distributed rounds run only while the edge set exceeds the [[Endgame]]
+  * budget; below it an exact driver-local union-find finishes the job —
+  * contraction shrinks the edge set every round, so at any scale the tail
+  * of the computation is small and the fixed per-round job overhead, not
+  * data volume, would dominate it.
   */
 object ConnectedComponents {
 
@@ -58,15 +58,9 @@ object ConnectedComponents {
 
   /** @param vertices single `id` column
     * @param edges `src`,`dst` (each undirected edge once is enough)
-    * @param localThreshold finish with an exact driver-local union-find once
-    *        the contracted edge set has at most this many edges. Driver cost
-    *        is two 8 B/edge primitive arrays retained plus the transient
-    *        `Row[]` of the collect (~60 B/edge until the next GC), so the
-    *        1M default peaks well under 100 MB of driver heap; 0 forces pure
-    *        distributed rounds
     * @return (id, comp) — comp is the min vertex id reachable */
   def run(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
-          maxIter: Int = 50, localThreshold: Long = 1L << 20): DataFrame = {
+          maxIter: Int = 50): DataFrame = {
     import spark.implicits._
     val selfLabels = vertices.select($"id", $"id".as("comp"))
     // Eager checkpoint: materialize the normalized edge set ONCE and cut its
@@ -80,9 +74,9 @@ object ConnectedComponents {
       .distinct()
       .localCheckpoint(eager = true)
 
-    // Hybrid endgame: below localThreshold the remaining O(log n) star
-    // rounds would each pay a fixed multi-stage job on a tiny edge list, so
-    // finish with an exact union-find on the driver instead — the standard
+    // Endgame: below the budget the remaining O(log n) star rounds would
+    // each pay a fixed multi-stage job on a tiny edge list, so finish with
+    // an exact union-find on the driver instead — the standard
     // local-completion step for contraction CC. Union-to-min preserves the
     // invariant label = component minimum; output is the same star forest
     // the distributed fixpoint would reach, so downstream code is
@@ -146,7 +140,7 @@ object ConnectedComponents {
     if (cnt > 0) {
       var verified = false
       var i = 0
-      while (!verified && cnt > localThreshold && i < maxIter) {
+      while (!verified && !Endgame.local(cnt) && i < maxIter) {
         val next = smallStar(largeStar(e)).localCheckpoint(eager = true)
         val prevCnt = cnt
         cnt = next.count()
@@ -154,7 +148,7 @@ object ConnectedComponents {
         e = next
         i += 1
       }
-      if (!verified && cnt <= localThreshold) {
+      if (!verified && Endgame.local(cnt)) {
         e = localStarForest(e)
         verified = true
       }

@@ -31,17 +31,14 @@ object Coreness {
   /** @param edges undirected pair list (u1, u2), each pair once
     * @return (id, coreness) for every vertex with ≥ 1 edge */
   def run(spark: SparkSession, edges: DataFrame,
-          maxIter: Int = 50, checkEvery: Int = 2,
-          localThreshold: Long = 1L << 20): DataFrame = {
+          maxIter: Int = 50, checkEvery: Int = 2): DataFrame = {
     import spark.implicits._
     val sym = edges.select($"u1".as("u"), $"u2".as("v"))
       .unionAll(edges.select($"u2".as("u"), $"u1".as("v")))
       .localCheckpoint(eager = true)
-    // Hybrid endgame ([[PageRank]] round-18 discipline): the identical
-    // h-index iteration over a driver adjacency map below the edge budget
-    // — integer labels, so local ≡ distributed exactly (CorenessSpec pins
-    // both paths). Cadence/throw semantics mirrored; 0 forces distributed.
-    if (sym.count() <= localThreshold) {
+    // Both paths run the identical h-index iteration and cadence — integer
+    // labels, so local ≡ distributed exactly (CorenessSpec pins both).
+    val (out, rounds, done) = if (Endgame.local(sym.count())) {
       val es = sym.as[(Long, Long)].collect()
       val adj = es.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
       var labL = adj.view.mapValues(_.length.toLong).toMap
@@ -63,42 +60,39 @@ object Coreness {
         if (cadence) done = next.forall { case (u, c) => c == labL(u) }
         labL = next
       }
-      lastIterations = i
-      if (!done)
-        throw new IllegalStateException(
-          s"h-index coreness did not reach its fixpoint in $maxIter rounds — " +
-            "labels may still over-report core numbers; raise maxIter")
-      return spark.createDataset(labL.toSeq.sortBy(_._1)).toDF("id", "coreness")
-    }
-    var lab = sym.groupBy($"u").agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = true)
-    var i = 0
-    var done = false
-    while (i < maxIter && !done) {
-      i += 1
-      val cadence = i % checkEvery == 0 || i == maxIter
-      // neighbor labels: (u, c(v)) for every edge u→v, then per-u h-index:
-      // sort neighbor labels desc, h = max rank r with label_r ≥ r
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"u").orderBy($"cn".desc)
-      val next = sym
-        .join(lab.select($"u".as("v"), $"c".as("cn")), Seq("v"))
-        .withColumn("rn", row_number().over(w))
-        .groupBy($"u")
-        .agg(max(when($"cn" >= $"rn", $"rn").otherwise(0L)).as("c"))
-        .localCheckpoint(eager = cadence)
-      if (cadence) {
-        val changed = next.join(lab.select($"u", $"c".as("pc")), Seq("u"))
-          .filter($"c" =!= $"pc").count()
-        done = changed == 0L
+      (spark.createDataset(labL.toSeq.sortBy(_._1)).toDF("id", "coreness"), i, done)
+    } else {
+      var lab = sym.groupBy($"u").agg(count(lit(1)).as("c"))
+        .localCheckpoint(eager = true)
+      var i = 0
+      var done = false
+      while (i < maxIter && !done) {
+        i += 1
+        val cadence = i % checkEvery == 0 || i == maxIter
+        // neighbor labels: (u, c(v)) for every edge u→v, then per-u h-index:
+        // sort neighbor labels desc, h = max rank r with label_r ≥ r
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy($"u").orderBy($"cn".desc)
+        val next = sym
+          .join(lab.select($"u".as("v"), $"c".as("cn")), Seq("v"))
+          .withColumn("rn", row_number().over(w))
+          .groupBy($"u")
+          .agg(max(when($"cn" >= $"rn", $"rn").otherwise(0L)).as("c"))
+          .localCheckpoint(eager = cadence)
+        if (cadence) {
+          val changed = next.join(lab.select($"u", $"c".as("pc")), Seq("u"))
+            .filter($"c" =!= $"pc").count()
+          done = changed == 0L
+        }
+        lab = next
       }
-      lab = next
+      (lab.select($"u".as("id"), $"c".as("coreness")), i, done)
     }
-    lastIterations = i
+    lastIterations = rounds
     if (!done)
       throw new IllegalStateException(
         s"h-index coreness did not reach its fixpoint in $maxIter rounds — " +
           "labels may still over-report core numbers; raise maxIter")
-    lab.select($"u".as("id"), $"c".as("coreness"))
+    out
   }
 }

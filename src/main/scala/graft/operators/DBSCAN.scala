@@ -45,25 +45,70 @@ import org.apache.spark.sql.functions._
   */
 object DBSCAN {
 
-  /** @param pts DataFrame with (id: Long, x: Double, y: Double)
-    * @param hotCellPositions contracted-position count per ε-cell above
-    *        which the sub-grid split engages
-    * @return (id, role ∈ {core,border,noise}, cluster: Long — -1 for noise)
-    */
-  /** Driver-local role assignment from the collected ε-pair list — the
-    * [[ConnectedComponents]] hybrid-endgame discipline applied to the whole
-    * degrees → core → CC → border → noise tail (round 18): below
-    * `localThreshold` pairs those five frames are each a multi-stage job
-    * over a list that fits in a few MB, so one collect + primitive-map work
-    * replaces ~10 tiny shuffles. Semantics identical by construction:
-    * weighted degrees over the SAME pair list, core = deg ≥ minPts,
-    * cluster = min core pid via union-to-min (the CC label), border = min
-    * neighbouring cluster, noise = the rest (DbscanSpec pins both paths).
-    * Returns (pid, role, cluster) for every position. */
-  private[operators] def rolesLocal(spark: SparkSession,
-                                    pairRows: Array[(Long, Long, Long)],
-                                    posPids: Array[Long],
-                                    minPts: Int): DataFrame = {
+  /** Role of every contracted position, (pid, role, cluster), from the
+    * ordered ε-pair list (pid, pid2, w2) — the degrees → core → CC →
+    * border → noise tail shared with [[StDbscan]]. Below the [[Endgame]]
+    * budget those five frames are each a multi-stage job over a list that
+    * fits in a few MB, so one collect + primitive-map work ([[rolesLocal]])
+    * replaces ~10 tiny shuffles. The pair count gates both collects:
+    * every position carries its self-pair, so positions never outnumber
+    * pairs. */
+  private[operators] def roles(spark: SparkSession, pairs: DataFrame,
+                               positions: DataFrame, minPts: Int): DataFrame = {
+    import spark.implicits._
+    if (Endgame.local(pairs.count())) {
+      val pairRows = pairs.as[(Long, Long, Long)].collect()
+      val posPids = positions.select($"pid").as[Long].collect()
+      if (Endgame.local(posPids.length))
+        return rolesLocal(spark, pairRows, posPids, minPts)
+    }
+
+    // Weighted degree: each point at position pid has |N_ε| = Σ w2 over the
+    // ε-reachable positions (the self-pair contributes the colocated count).
+    val degrees = pairs.groupBy($"pid").agg(sum($"w2").as("deg"))
+    val core = degrees.filter($"deg" >= minPts).select($"pid".as("core_pid"))
+      .localCheckpoint(eager = false)
+
+    val coreEdges = pairs
+      .join(core, pairs("pid") === core("core_pid")).drop("core_pid")
+      .join(core, pairs("pid2") === core("core_pid")).drop("core_pid")
+      .filter($"pid" < $"pid2")
+
+    // CC labels every core component with its min pid — and pid is the min
+    // point id at its position, so the label IS the min core point id.
+    val cc = ConnectedComponents.run(spark,
+        core.select($"core_pid".as("id")),
+        coreEdges.select($"pid".as("src"), $"pid2".as("dst")))
+      .withColumnRenamed("comp", "cluster")
+      .localCheckpoint(eager = false)
+
+    val corePos = cc.select($"id".as("pid"), lit("core").as("role"), $"cluster")
+
+    // Border: non-core position within ε of ≥1 core position → minimum
+    // neighboring cluster id for determinism. Anti-join, not EXCEPT: pids
+    // are unique, and anti-join skips EXCEPT's distinct.
+    val nonCorePos = positions.select($"pid")
+      .join(core.select($"core_pid".as("pid")), Seq("pid"), "left_anti")
+    val borderPos = pairs.join(nonCorePos, Seq("pid"))
+      .join(cc.select($"id".as("pid2"), $"cluster"), Seq("pid2"))
+      .groupBy($"pid").agg(min($"cluster").as("cluster"))
+      .select($"pid", lit("border").as("role"), $"cluster")
+
+    val assignedPos = corePos.unionAll(borderPos).localCheckpoint(eager = false)
+    val noisePos = positions.select($"pid")
+      .join(assignedPos.select($"pid"), Seq("pid"), "left_anti")
+      .select($"pid", lit("noise").as("role"), lit(-1L).as("cluster"))
+    assignedPos.unionAll(noisePos)
+  }
+
+  /** The driver-local [[roles]] kernel. Semantics identical by
+    * construction: weighted degrees over the SAME pair list, core = deg ≥
+    * minPts, cluster = min core pid via union-to-min (the CC label),
+    * border = min neighbouring cluster, noise = the rest (DbscanSpec pins
+    * both paths). */
+  private def rolesLocal(spark: SparkSession,
+                         pairRows: Array[(Long, Long, Long)],
+                         posPids: Array[Long], minPts: Int): DataFrame = {
     val deg = scala.collection.mutable.LongMap.empty[Long]
     pairRows.foreach { case (pid, _, w2) => deg(pid) = deg.getOrElse(pid, 0L) + w2 }
     val core = scala.collection.mutable.LongMap.empty[Boolean]
@@ -102,9 +147,13 @@ object DBSCAN {
     spark.createDataset(out.toSeq).toDF("pid", "role", "cluster")
   }
 
+  /** @param pts DataFrame with (id: Long, x: Double, y: Double)
+    * @param hotCellPositions contracted-position count per ε-cell above
+    *        which the sub-grid split engages
+    * @return (id, role ∈ {core,border,noise}, cluster: Long — -1 for noise)
+    */
   def run(spark: SparkSession, pts: DataFrame, eps: Double, minPts: Int,
-          hotCellPositions: Long = 100000L,
-          localThreshold: Long = 1L << 20): DataFrame = {
+          hotCellPositions: Long = 100000L): DataFrame = {
     import spark.implicits._
     val p = pts.select($"id".cast("long"), $"x".cast("double"), $"y".cast("double"))
 
@@ -176,61 +225,9 @@ object DBSCAN {
     val pairs = coldPairs.unionAll(hotPairs)
       .localCheckpoint(eager = false)
 
-    // Hybrid endgame: the whole role-assignment tail goes driver-local
-    // below the pair budget (see [[rolesLocal]]); the data-sized stages —
-    // contraction, pair generation, and the final point expansion — stay
-    // distributed at every scale.
-    if (pairs.count() <= localThreshold) {
-      val pairRows = pairs.as[(Long, Long, Long)].collect()
-      val posPids = positions.select($"pid").as[Long].collect()
-      if (posPids.length <= localThreshold) {
-        val roles = rolesLocal(spark, pairRows, posPids, minPts)
-        return p.join(positions.select($"x", $"y", $"pid"), Seq("x", "y"))
-          .join(roles, Seq("pid"))
-          .select($"id", $"role", $"cluster")
-      }
-    }
-
-    // Weighted degree: each point at position pid has |N_ε| = Σ w2 over the
-    // ε-reachable positions (the self-pair contributes the colocated count).
-    val degrees = pairs.groupBy($"pid").agg(sum($"w2").as("deg"))
-    val core = degrees.filter($"deg" >= minPts).select($"pid".as("core_pid"))
-      .localCheckpoint(eager = false)
-
-    val coreEdges = pairs
-      .join(core, pairs("pid") === core("core_pid")).drop("core_pid")
-      .join(core, pairs("pid2") === core("core_pid")).drop("core_pid")
-      .filter($"pid" < $"pid2")
-
-    // CC labels every core component with its min pid — and pid is the min
-    // point id at its position, so the label IS the min core point id.
-    val cc = ConnectedComponents.run(spark,
-        core.select($"core_pid".as("id")),
-        coreEdges.select($"pid".as("src"), $"pid2".as("dst")))
-      .withColumnRenamed("comp", "cluster")
-      .localCheckpoint(eager = false)
-
-    val corePos = cc.select($"id".as("pid"), lit("core").as("role"), $"cluster")
-
-    // Border: non-core position within ε of ≥1 core position → minimum
-    // neighboring cluster id for determinism. Anti-join, not EXCEPT: pids
-    // are unique, and anti-join skips EXCEPT's distinct.
-    val nonCorePos = positions.select($"pid")
-      .join(core.select($"core_pid".as("pid")), Seq("pid"), "left_anti")
-    val borderPos = pairs.join(nonCorePos, Seq("pid"))
-      .join(cc.select($"id".as("pid2"), $"cluster"), Seq("pid2"))
-      .groupBy($"pid").agg(min($"cluster").as("cluster"))
-      .select($"pid", lit("border").as("role"), $"cluster")
-
-    val assignedPos = corePos.unionAll(borderPos).localCheckpoint(eager = false)
-    val noisePos = positions.select($"pid")
-      .join(assignedPos.select($"pid"), Seq("pid"), "left_anti")
-      .select($"pid", lit("noise").as("role"), lit(-1L).as("cluster"))
-
     // Expand position roles back to every point through the (x, y) key.
-    val roles = assignedPos.unionAll(noisePos)
     p.join(positions.select($"x", $"y", $"pid"), Seq("x", "y"))
-      .join(roles, Seq("pid"))
+      .join(roles(spark, pairs, positions, minPts), Seq("pid"))
       .select($"id", $"role", $"cluster")
   }
 }

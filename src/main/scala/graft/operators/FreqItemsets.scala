@@ -27,11 +27,11 @@ object FreqItemsets {
     * basket frame (column `items`: array of distinct item ids, one row
     * per basket).
     *
-    * The budget is proven by DISTRIBUTED aggregates before anything is
-    * collected: total item occurrences ≤ `localThreshold` AND total
-    * per-basket pair work Σ C(|b|,2) ≤ 8·`localThreshold` (a few huge
-    * baskets can hide quadratic work behind a small occurrence count).
-    * `localThreshold = 0` forces the distributed PFP — the spec pin.
+    * The [[Endgame]] gate is one distributed aggregate taken before
+    * anything is collected: total item occurrences ≤ Budget AND total
+    * per-basket pair work Σ C(|b|,2) ≤ 8·Budget (a few huge baskets can
+    * hide quadratic work behind a small occurrence count). The same
+    * aggregate counts the baskets.
     *
     * minCount derives from minSupport with MLlib's own rule
     * (`math.ceil(minSupport * n).toLong`, same double math) so the two
@@ -41,17 +41,16 @@ object FreqItemsets {
     *         sizes ≥ 2 — callers that also want singletons (MLlib emits
     *         them) must use the distributed path; the declared query
     *         filters to sizes ≥ 2 on both paths. */
-  def run(spark: SparkSession, baskets: DataFrame, minSupport: Double,
-          localThreshold: Long = 1L << 20): DataFrame = {
+  def run(spark: SparkSession, baskets: DataFrame,
+          minSupport: Double): DataFrame = {
     import spark.implicits._
-    val budget = baskets
+    val (occ, pairs, n) = baskets
       .select(size($"items").cast("long").as("sz"))
       .agg(coalesce(sum($"sz"), lit(0L)).as("occ"),
-           coalesce(sum(expr("sz * (sz - 1L) div 2L")), lit(0L)).as("pairs"))
-      .as[(Long, Long)].head()
-    if (localThreshold > 0 && budget._1 <= localThreshold &&
-        budget._2 <= 8L * localThreshold) {
-      val n = baskets.count()
+           coalesce(sum(expr("sz * (sz - 1L) div 2L")), lit(0L)).as("pairs"),
+           count(lit(1)).as("n"))
+      .as[(Long, Long, Long)].head()
+    if (Endgame.local(occ) && pairs <= 8L * Endgame.Budget) {
       val minCount = math.ceil(minSupport * n).toLong
       val collected = baskets.select($"items".cast("array<long>"))
         .as[Array[Long]].collect()
@@ -92,7 +91,8 @@ object FreqItemsets {
     // has no such failure mode
     var nPairs = 0L
     bs.foreach { b => nPairs += b.length.toLong * (b.length - 1) / 2 }
-    val allPairs = new Array[Long](nPairs.toInt)
+    // run() gates pair work at 8·Budget, far below Int.MaxValue
+    val allPairs = new Array[Long](Math.toIntExact(nPairs))
     var w = 0
     bs.foreach { b =>
       var i = 0

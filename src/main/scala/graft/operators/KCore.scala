@@ -31,22 +31,20 @@ object KCore {
     * @throws IllegalStateException if the peeling fixpoint is not reached
     *         within `maxIter` rounds (raise `maxIter` for deep graphs) */
   def coreMembers(spark: SparkSession, edges: DataFrame, k: Int,
-                  maxIter: Int = 50, checkEvery: Int = 2,
-                  localThreshold: Long = 1L << 20): DataFrame = {
+                  maxIter: Int = 50, checkEvery: Int = 2): DataFrame = {
     import spark.implicits._
-    var e = edges.select($"u1".as("src"), $"u2".as("dst"))
+    val e = edges.select($"u1".as("src"), $"u2".as("dst"))
       .unionAll(edges.select($"u2".as("src"), $"u1".as("dst")))
       .localCheckpoint(eager = true)
     var prevEdges = e.count()
-    // Hybrid endgame ([[PageRank]] round-18 discipline): the identical
-    // peeling rounds over driver arrays below the edge budget — integer
-    // degrees, local ≡ distributed exactly (KCoreSpec pins both paths).
-    // Cadence/throw semantics mirrored; 0 forces distributed rounds.
-    if (prevEdges <= localThreshold) {
+    // Both paths run the identical peeling rounds and cadence — integer
+    // degrees, so local ≡ distributed exactly (KCoreSpec pins both).
+    // Non-cadence rounds leave prevEdges stale on purpose: the next
+    // cadence count compares against it.
+    val (out, rounds, done) = if (Endgame.local(prevEdges)) {
       var es = e.as[(Long, Long)].collect()
-      var prevN = es.length.toLong
       var i = 0
-      var done = prevN == 0
+      var done = prevEdges == 0
       while (i < maxIter && !done) {
         i += 1
         val cadence = i % checkEvery == 0 || i == maxIter
@@ -56,44 +54,39 @@ object KCore {
         es = es.filter { case (s, d) => keep.contains(s) && keep.contains(d) }
         if (cadence) {
           val n = es.length.toLong
-          done = n == prevN || n == 0
-          prevN = n
+          done = n == prevEdges || n == 0
+          prevEdges = n
         }
-        // non-cadence rounds: prevN intentionally stays stale, exactly like
-        // the distributed loop (the next cadence count compares against it)
       }
-      lastIterations = i
-      if (!done)
-        throw new IllegalStateException(
-          s"k-core peeling did not reach its fixpoint in $maxIter rounds " +
-            s"($prevN directed edges still shrinking) — the partial edge " +
-            s"set is a superset of the $k-core; raise maxIter")
-      return spark.createDataset(es.map(_._1).distinct.sorted.toSeq).toDF("id")
-    }
-    var i = 0
-    var done = prevEdges == 0
-    while (i < maxIter && !done) {
-      i += 1
-      val cadence = i % checkEvery == 0 || i == maxIter
-      val keep = e.groupBy($"src".as("id")).agg(count(lit(1)).as("deg"))
-        .filter($"deg" >= k).select($"id")
-      val next = e
-        .join(keep.select($"id".as("src")), Seq("src"), "left_semi")
-        .join(keep.select($"id".as("dst")), Seq("dst"), "left_semi")
-        .localCheckpoint(eager = cadence)
-      if (cadence) {
-        val n = next.count()
-        done = n == prevEdges || n == 0
-        prevEdges = n
+      (spark.createDataset(es.map(_._1).distinct.sorted.toSeq).toDF("id"), i, done)
+    } else {
+      var cur = e
+      var i = 0
+      var done = prevEdges == 0
+      while (i < maxIter && !done) {
+        i += 1
+        val cadence = i % checkEvery == 0 || i == maxIter
+        val keep = cur.groupBy($"src".as("id")).agg(count(lit(1)).as("deg"))
+          .filter($"deg" >= k).select($"id")
+        val next = cur
+          .join(keep.select($"id".as("src")), Seq("src"), "left_semi")
+          .join(keep.select($"id".as("dst")), Seq("dst"), "left_semi")
+          .localCheckpoint(eager = cadence)
+        if (cadence) {
+          val n = next.count()
+          done = n == prevEdges || n == 0
+          prevEdges = n
+        }
+        cur = next
       }
-      e = next
+      (cur.select($"src".as("id")).distinct(), i, done)
     }
-    lastIterations = i
+    lastIterations = rounds
     if (!done)
       throw new IllegalStateException(
         s"k-core peeling did not reach its fixpoint in $maxIter rounds " +
           s"($prevEdges directed edges still shrinking) — the partial edge " +
           s"set is a superset of the $k-core; raise maxIter")
-    e.select($"src".as("id")).distinct()
+    out
   }
 }

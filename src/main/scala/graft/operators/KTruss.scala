@@ -36,30 +36,26 @@ object KTruss {
 
   /** @param edges undirected (u1, u2) pair list, each pair once
     * @param k     truss order ≥ 3 (k−2 triangles required per edge)
-    * @param localThreshold run the driver-local peel when the canonical
-    *        edge list is at most this many rows (round 19 — the
-    *        [[ConnectedComponents]]/[[PageRank]] hybrid-endgame
-    *        discipline: below the budget each distributed peel round is
-    *        ~4 tiny AQE-materialized exchanges of pure job overhead);
-    *        0 forces distributed rounds (the spec pin)
     * @return the k-truss edge set as canonical (u1 < u2) rows */
   def run(spark: SparkSession, edges: DataFrame, k: Int,
-          maxIter: Int = 50, checkEvery: Int = 2,
-          localThreshold: Long = 1L << 20): DataFrame = {
+          maxIter: Int = 50, checkEvery: Int = 2): DataFrame = {
     import spark.implicits._
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    var e = edges
+    val e = edges
       .select(least($"u1", $"u2").as("u1"), greatest($"u1", $"u2").as("u2"))
       .filter($"u1" < $"u2").distinct()
       .localCheckpoint(eager = true)
+    val nE = e.count()
 
-    // Driver-local endgame: the IDENTICAL peel (same oriented a<b<c
-    // triangle enumeration, same cadence-deferred fixpoint probe, same
-    // round counting and non-convergence throw) over collected canonical
-    // edges — integer support counts, so local ≡ distributed exactly
-    // (KTrussSpec pins both paths). The count gate runs on the
-    // already-materialized checkpoint BEFORE any collect.
-    if (e.count() <= localThreshold && localThreshold > 0) {
+    // Both paths run the identical peel — same oriented a<b<c triangle
+    // enumeration, same cadence, same round counting — with integer
+    // support counts, so local ≡ distributed exactly (KTrussSpec pins
+    // both). A peel whose last shrinking round lands exactly on maxIter is
+    // not necessarily truncated: the final drop may already be the
+    // fixpoint, with no budget left for the confirming no-op round (the
+    // Betweenness maxDepth-probe discipline), so one extra support recount
+    // decides and only a further drop throws.
+    val (out, rounds, converged) = if (Endgame.local(nE)) {
       var es: Array[(Long, Long)] = e.as[(Long, Long)].collect().sorted
       def peelLocal(cur: Array[(Long, Long)]): Array[(Long, Long)] = {
         // oriented adjacency: u1 -> sorted larger neighbours
@@ -97,58 +93,49 @@ object KTruss {
           prev = es.length
         }
       }
-      lastIterations = i
       if (!converged) converged = peelLocal(es).length == prev
-      if (!converged)
-        throw new IllegalStateException(
-          s"k-truss peeling did not reach its fixpoint in $maxIter rounds — " +
-            "the current edge set may be a strict superset; raise maxIter")
-      return spark.createDataset(es.toSeq).toDF("u1", "u2")
-    }
-    // One support-recount round: survivors of `cur` under the k−2 bar.
-    def peelOnce(cur: DataFrame): DataFrame = {
-      val paths = cur.as("ab").join(cur.as("bc"), col("ab.u2") === col("bc.u1"))
-        .select(col("ab.u1").as("a"), col("ab.u2").as("b"), col("bc.u2").as("c"))
-      val tri = paths.join(cur.as("ac"),
-          col("a") === col("ac.u1") && col("c") === col("ac.u2"))
-        .select($"a", $"b", $"c")
-      val support = tri
-        .select(explode(array(
-          struct($"a".as("u1"), $"b".as("u2")),
-          struct($"b".as("u1"), $"c".as("u2")),
-          struct($"a".as("u1"), $"c".as("u2")))).as("ed"))
-        .groupBy($"ed.u1".as("u1"), $"ed.u2".as("u2"))
-        .agg(count(lit(1)).as("sup"))
-      cur.join(support.filter($"sup" >= (k - 2).toLong),
-          Seq("u1", "u2"), "left_semi")
-    }
-    var prevCount = e.count()
-    var i = 0
-    var converged = false
-    while (i < maxIter && !converged) {
-      i += 1
-      val cadence = i % checkEvery == 0 || i == maxIter
-      val next = peelOnce(e).localCheckpoint(eager = cadence)
-      if (cadence) {
-        val n = next.count()
-        converged = n == prevCount
-        prevCount = n
+      (spark.createDataset(es.toSeq).toDF("u1", "u2"), i, converged)
+    } else {
+      // One support-recount round: survivors of `cur` under the k−2 bar.
+      def peelOnce(cur: DataFrame): DataFrame = {
+        val paths = cur.as("ab").join(cur.as("bc"), col("ab.u2") === col("bc.u1"))
+          .select(col("ab.u1").as("a"), col("ab.u2").as("b"), col("bc.u2").as("c"))
+        val tri = paths.join(cur.as("ac"),
+            col("a") === col("ac.u1") && col("c") === col("ac.u2"))
+          .select($"a", $"b", $"c")
+        val support = tri
+          .select(explode(array(
+            struct($"a".as("u1"), $"b".as("u2")),
+            struct($"b".as("u1"), $"c".as("u2")),
+            struct($"a".as("u1"), $"c".as("u2")))).as("ed"))
+          .groupBy($"ed.u1".as("u1"), $"ed.u2".as("u2"))
+          .agg(count(lit(1)).as("sup"))
+        cur.join(support.filter($"sup" >= (k - 2).toLong),
+            Seq("u1", "u2"), "left_semi")
       }
-      e = next
+      var cur = e
+      var prevCount = nE
+      var i = 0
+      var converged = false
+      while (i < maxIter && !converged) {
+        i += 1
+        val cadence = i % checkEvery == 0 || i == maxIter
+        val next = peelOnce(cur).localCheckpoint(eager = cadence)
+        if (cadence) {
+          val n = next.count()
+          converged = n == prevCount
+          prevCount = n
+        }
+        cur = next
+      }
+      if (!converged) converged = peelOnce(cur).count() == prevCount
+      (cur, i, converged)
     }
-    lastIterations = i
-    if (!converged) {
-      // A peel whose LAST shrinking round lands exactly on maxIter is not
-      // necessarily truncated: the final drop may already be the fixpoint,
-      // with no budget left for the confirming no-op round (the Betweenness
-      // maxDepth-probe discipline). One extra support recount decides:
-      // only throw if it would still drop edges.
-      converged = peelOnce(e).count() == prevCount
-    }
+    lastIterations = rounds
     if (!converged)
       throw new IllegalStateException(
         s"k-truss peeling did not reach its fixpoint in $maxIter rounds — " +
           "the current edge set may be a strict superset; raise maxIter")
-    e
+    out
   }
 }

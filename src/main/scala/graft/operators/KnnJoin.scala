@@ -57,8 +57,8 @@ object KnnJoin {
     *         (dist_km, rId) */
   def knn(left: DataFrame, lId: String, lLat: String, lLon: String,
           right: DataFrame, rId: String, rLat: String, rLon: String,
-          k: Int, cellDeg: Double = 10.0, rings: Seq[Int] = Seq(1, 2, 4, 8),
-          localThreshold: Long = 1L << 20): DataFrame = {
+          k: Int, cellDeg: Double = 10.0,
+          rings: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
     require(math.abs(360.0 / cellDeg - math.round(360.0 / cellDeg)) < 1e-9,
       f"cellDeg=$cellDeg%.2f does not divide 360° — the modular longitude " +
         "ring would have a narrow seam cell; pick a divisor of 360")
@@ -143,31 +143,26 @@ object KnnJoin {
       .select(col(lId), col(lLat).as("__llat"), col(lLon).as("__llon"))
       .localCheckpoint(eager = true)
 
-    // Driver-local endgame (round 19 — the [[PageRank]]/[[SemDedup]]
-    // hybrid discipline, with a TIGHTER work gate): the local kernel is a
+    // [[Endgame]] with a TIGHTER work gate: the local kernel is a
     // single-threaded |L|·|R| brute force, so unlike the loop endgames —
     // where distributed rounds are pure fixed overhead — it only wins
     // when the PAIR WORK is trivial. Measured at sf0.1 (1500×1485 ≈ 2.2M
     // pairs): local 3.0-3.2 s vs distributed rings 1.7-2.3 s warm — the
     // grid pruning + 32-way parallelism beat the driver, so the gate is
-    // the pair product ≤ localThreshold/4 (≈ 262k pairs ≈ a quarter
-    // second), proven by counts on the checkpointed frames BEFORE any
-    // collect. Below it the exact kNN runs on the driver with the SAME
+    // the pair product ≤ Budget/4 (≈ 262k pairs ≈ a quarter second).
+    // Below it the exact kNN runs on the driver with the SAME
     // [[HaversineDist.km]] kernel and (round(km, 3), rId) rank order —
     // the oracle's own semantics, which the ring certificate provably
     // reproduces. `lastRingPlans` is left untouched (it documents the
-    // last DISTRIBUTED run; the spec's ring-plan pins run with
-    // localThreshold = 0). At 100 TB the sides exceed every budget and
-    // the ring machinery runs unchanged.
+    // last DISTRIBUTED run, which the spec's ring-plan pins force).
     // Left pre-gate: |L| <= sqrt(pair budget) — the driver loop can only
     // win when the left side is already tiny, and pruning here means the
     // bench-scale shape never pays the right-side count job (measured
     // +0.13 s of pure gate overhead across three full runs without it).
-    val nL = if (localThreshold > 0) remaining.count() else Long.MaxValue
-    if (localThreshold > 0 &&
-        nL <= math.sqrt(localThreshold.toDouble / 4).toLong) {
+    val nL = if (Endgame.local()) remaining.count() else Long.MaxValue
+    if (nL <= math.sqrt(Endgame.Budget.toDouble / 4).toLong) {
       val nR = r.count()
-      if (nR <= localThreshold && nL * nR <= localThreshold / 4) {
+      if (Endgame.local(nR) && nL * nR <= Endgame.Budget / 4) {
         val ls = remaining.select(col(lId).cast("long"),
             col("__llat").cast("double"), col("__llon").cast("double"))
           .as[(Long, Double, Double)].collect()

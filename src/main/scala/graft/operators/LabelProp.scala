@@ -43,23 +43,20 @@ object LabelProp {
     * @return (id, label) for every vertex in `edges`; vertices sharing a
     *         label are one community */
   def run(spark: SparkSession, edges: DataFrame, iterations: Int = 10,
-          checkEvery: Int = 3, localThreshold: Long = 1L << 20): DataFrame =
-    runCounted(spark, edges, iterations, checkEvery, localThreshold)._1
+          checkEvery: Int = 3): DataFrame =
+    runCounted(spark, edges, iterations, checkEvery)._1
 
   /** As [[run]], also returning the number of rounds actually executed
     * (< `iterations` when the labelling reached a fixpoint early). */
   def runCounted(spark: SparkSession, edges: DataFrame,
-                 iterations: Int = 10, checkEvery: Int = 3,
-                 localThreshold: Long = 1L << 20): (DataFrame, Int) = {
+                 iterations: Int = 10, checkEvery: Int = 3): (DataFrame, Int) = {
     import spark.implicits._
     val e = edges.select($"src".cast("long"), $"dst".cast("long"))
       .localCheckpoint(eager = true)
-    // Hybrid endgame ([[PageRank]] round-18 discipline): the identical
-    // synchronous plurality rounds over driver maps below the edge budget
-    // — integer labels with the same min-label tie rule, so local ≡
-    // distributed exactly (LabelPropSpec pins both paths). Cadence exit
-    // mirrored; 0 forces distributed rounds.
-    if (e.count() <= localThreshold) {
+    // Both paths run the identical synchronous plurality rounds — integer
+    // labels with the same min-label tie rule and cadence exit, so local ≡
+    // distributed exactly (LabelPropSpec pins both).
+    val (labels, rounds) = if (Endgame.local(e.count())) {
       val es = e.as[(Long, Long)].collect()
       val inNbrs = es.groupBy(_._2).view.mapValues(_.map(_._1)).toMap
       val ids = es.iterator.flatMap(p => Iterator(p._1, p._2)).toArray.distinct.sorted
@@ -87,36 +84,36 @@ object LabelProp {
         if (cadence && i < iterations) stable = !changed
         labL = next
       }
-      lastIterations = i
-      return (spark.createDataset(ids.toSeq.map(v => (v, labL(v))))
-        .toDF("id", "label"), i)
-    }
-    val verts = e.select($"src".as("id")).unionAll(e.select($"dst".as("id")))
-      .distinct().localCheckpoint(eager = true)
+      (spark.createDataset(ids.toSeq.map(v => (v, labL(v)))).toDF("id", "label"), i)
+    } else {
+      val verts = e.select($"src".as("id")).unionAll(e.select($"dst".as("id")))
+        .distinct().localCheckpoint(eager = true)
 
-    var labels = verts.withColumn("label", $"id")
-    var i = 0
-    var stable = false
-    while (i < iterations && !stable) {
-      val votes = labels.select($"id".as("src"), $"label")
-        .join(e, Seq("src"))
-        .groupBy($"dst".as("id"), $"label")
-        .agg(count(lit(1)).as("cnt"))
-      // plurality with min-label ties: max over (cnt, −label)
-      val winner = votes.groupBy($"id")
-        .agg(max(struct($"cnt", (-$"label").as("neg"))).as("w"))
-        .select($"id", (-$"w.neg").as("new_label"))
-      i += 1
-      val cadence = i % checkEvery == 0 || i == iterations
-      val next = labels.join(winner, Seq("id"), "left")
-        .select($"id", coalesce($"new_label", $"label").as("label"),
-                ($"label" =!= coalesce($"new_label", $"label")).as("changed"))
-        .localCheckpoint(eager = cadence)
-      if (cadence && i < iterations)
-        stable = next.filter($"changed").isEmpty
-      labels = next.drop("changed")
+      var labels = verts.withColumn("label", $"id")
+      var i = 0
+      var stable = false
+      while (i < iterations && !stable) {
+        val votes = labels.select($"id".as("src"), $"label")
+          .join(e, Seq("src"))
+          .groupBy($"dst".as("id"), $"label")
+          .agg(count(lit(1)).as("cnt"))
+        // plurality with min-label ties: max over (cnt, −label)
+        val winner = votes.groupBy($"id")
+          .agg(max(struct($"cnt", (-$"label").as("neg"))).as("w"))
+          .select($"id", (-$"w.neg").as("new_label"))
+        i += 1
+        val cadence = i % checkEvery == 0 || i == iterations
+        val next = labels.join(winner, Seq("id"), "left")
+          .select($"id", coalesce($"new_label", $"label").as("label"),
+                  ($"label" =!= coalesce($"new_label", $"label")).as("changed"))
+          .localCheckpoint(eager = cadence)
+        if (cadence && i < iterations)
+          stable = next.filter($"changed").isEmpty
+        labels = next.drop("changed")
+      }
+      (labels, i)
     }
-    lastIterations = i
-    (labels, i)
+    lastIterations = rounds
+    (labels, rounds)
   }
 }

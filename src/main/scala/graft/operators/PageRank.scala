@@ -45,19 +45,6 @@ object PageRank {
     *        across its out-edges ∝ w/Σw (the classic weighted PageRank)
     *        instead of uniformly — the unweighted path is exactly the
     *        weighted one with w ≡ 1, and PageRankSpec pins that identity.
-    * @param localThreshold finish DRIVER-LOCAL when the materialized edge
-    *        list has at most this many rows — the [[ConnectedComponents]]
-    *        hybrid-endgame discipline applied to the power iteration
-    *        (round 18, guide §1.2: on a contracted graph the loop cost is
-    *        fixed per-round job overhead, not data volume; each distributed
-    *        round is ~6 tiny AQE-materialized exchanges regardless of
-    *        size). The local kernel runs the SAME update equations over
-    *        primitive arrays (PageRankSpec pins node-wise 1e-9 equality on
-    *        both paths), edges sorted (src, dst, w) first so summation
-    *        order — hence the output — is run-deterministic. Driver cost:
-    *        three 8 B/edge arrays + the transient collected rows, well
-    *        under 100 MB at the 1M default; 0 forces pure distributed
-    *        rounds (the spec pin for the cadence/job-count properties).
     * @param tol L1 convergence tolerance, checked every `checkEvery`
     *        rounds: the loop ends once Σ|rankᵢ − rankᵢ₋₁| < tol (an agg
     *        over the just-checkpointed per-vertex frame — near-free next
@@ -76,15 +63,15 @@ object PageRank {
     * @return (id, rank) for every vertex appearing in `edges`, Σrank = 1 */
   def run(spark: SparkSession, edges: DataFrame, damping: Double = 0.85,
           iterations: Int = 15, tol: Double = 1e-7,
-          checkEvery: Int = 3, weighted: Boolean = false,
-          localThreshold: Long = 1L << 20): DataFrame =
-    runCounted(spark, edges, damping, iterations, tol, checkEvery, weighted,
-      localThreshold)._1
+          checkEvery: Int = 3, weighted: Boolean = false): DataFrame =
+    runCounted(spark, edges, damping, iterations, tol, checkEvery, weighted)._1
 
-  /** Driver-local power iteration over primitive arrays — the hybrid
-    * endgame kernel. Mirrors the distributed semantics exactly: same
-    * update equations, same dangling redistribution, same cadence L1
-    * early-exit (checked at i % checkEvery == 0, i < cap). */
+  /** Driver-local power iteration over primitive arrays — the [[Endgame]]
+    * kernel. Mirrors the distributed semantics exactly: same update
+    * equations, same dangling redistribution, same cadence L1 early-exit
+    * (checked at i % checkEvery == 0, i < cap), so PageRankSpec pins
+    * node-wise 1e-9 equality on both paths. Edges are sorted (src, dst, w)
+    * first so summation order — hence the output — is run-deterministic. */
   private def runLocal(spark: SparkSession, rows: Array[(Long, Long, Double)],
                        damping: Double, iterations: Int, tol: Double,
                        checkEvery: Int): (DataFrame, Int) = {
@@ -132,76 +119,76 @@ object PageRank {
     * (< `iterations` when the L1 certificate ended the loop early). */
   def runCounted(spark: SparkSession, edges: DataFrame, damping: Double = 0.85,
                  iterations: Int = 15, tol: Double = 1e-7,
-                 checkEvery: Int = 3, weighted: Boolean = false,
-                 localThreshold: Long = 1L << 20): (DataFrame, Int) = {
+                 checkEvery: Int = 3, weighted: Boolean = false): (DataFrame, Int) = {
     import spark.implicits._
     val e = (if (weighted)
         edges.select($"src".cast("long"), $"dst".cast("long"), $"w".cast("double"))
       else
         edges.select($"src".cast("long"), $"dst".cast("long"), lit(1.0).as("w")))
       .localCheckpoint(eager = true)
-    // Hybrid endgame (see `localThreshold` scaladoc): the edge count is a
-    // count over just-cached blocks — the frame every downstream branch
-    // needs materialized anyway.
-    if (e.count() <= localThreshold) {
-      val rows = e.as[(Long, Long, Double)].collect()
-      val (out, it) = runLocal(spark, rows, damping, iterations, tol, checkEvery)
-      lastIterations = it
-      return (out, it)
-    }
-    val verts = e.select($"src".as("id")).unionAll(e.select($"dst".as("id")))
-      .distinct().localCheckpoint(eager = true)
-    val n = verts.count().toDouble
-    // out-"degree" = Σw per src — with w ≡ 1 this IS the edge count, so
-    // the unweighted semantics are unchanged bit-for-bit in structure
-    // (sum of 1.0s is exact in doubles up to 2^53 edges per vertex)
-    val outDeg = e.groupBy($"src".as("id")).agg(sum($"w").as("deg"))
+    // The edge count is a count over just-cached blocks — the frame every
+    // downstream branch needs materialized anyway.
+    val (ranks, rounds) = if (Endgame.local(e.count())) {
+      runLocal(spark, e.as[(Long, Long, Double)].collect(), damping,
+        iterations, tol, checkEvery)
+    } else {
+      val verts = e.select($"src".as("id")).unionAll(e.select($"dst".as("id")))
+        .distinct().localCheckpoint(eager = true)
+      val n = verts.count().toDouble
+      // out-"degree" = Σw per src — with w ≡ 1 this IS the edge count, so
+      // the unweighted semantics are unchanged bit-for-bit in structure
+      // (sum of 1.0s is exact in doubles up to 2^53 edges per vertex)
+      val outDeg = e.groupBy($"src".as("id")).agg(sum($"w").as("deg"))
 
-    // Dangling vertex SET is iteration-invariant — compute it once. The
-    // common undirected case (co-travel graph: every vertex has out-edges)
-    // has none, and then NO driver action runs outside cadence rounds;
-    // only a true dangling set pays the per-round mass aggregation (the
-    // head() also materializes that round's pending lazy checkpoint, so
-    // dangling graphs simply degrade to one action per round, never two).
-    val danglingVerts = verts.join(outDeg, Seq("id"), "left_anti")
-      .localCheckpoint(eager = true)
-    val hasDangling = !danglingVerts.isEmpty
+      // Dangling vertex SET is iteration-invariant — compute it once. The
+      // common undirected case (co-travel graph: every vertex has
+      // out-edges) has none, and then NO driver action runs outside
+      // cadence rounds; only a true dangling set pays the per-round mass
+      // aggregation (the head() also materializes that round's pending
+      // lazy checkpoint, so dangling graphs simply degrade to one action
+      // per round, never two).
+      val danglingVerts = verts.join(outDeg, Seq("id"), "left_anti")
+        .localCheckpoint(eager = true)
+      val hasDangling = !danglingVerts.isEmpty
 
-    var ranks = verts.withColumn("rank", lit(1.0 / n))
-    var i = 0
-    var converged = false
-    while (i < iterations && !converged) {
-      val danglingMass =
-        if (hasDangling)
-          ranks.join(danglingVerts, Seq("id"), "left_semi")
-            .agg(coalesce(sum($"rank"), lit(0.0))).as[Double].head()
-        else 0.0
-      val contribs = ranks.join(outDeg, Seq("id"))
-        .select($"id".as("src"), ($"rank" / $"deg").as("c"))
-        .join(e, Seq("src"))
-        .groupBy($"dst".as("id")).agg(sum($"c" * $"w").as("in_mass"))
-      val base = (1.0 - damping) / n + damping * danglingMass / n
-      i += 1
-      val cadence = i % checkEvery == 0 || i == iterations
-      // prev rides INSIDE the update plan (the id-keyed joins co-partition),
-      // so the cadence L1-delta check is an agg over the already-cached
-      // per-vertex frame — near-free — instead of a separate keyed-join job.
-      // Non-cadence rounds checkpoint LAZILY: lineage is cut and the block
-      // persists on first materialization (the next cadence job), so the
-      // double reference to `ranks` below (contribs + prev) reads one
-      // cached copy, never recomputes the chain.
-      val next = verts.join(contribs, Seq("id"), "left")
-        .join(ranks.select($"id", $"rank".as("prev")), Seq("id"))
-        .select($"id",
-          (lit(base) + lit(damping) * coalesce($"in_mass", lit(0.0))).as("rank"),
-          $"prev")
-        .localCheckpoint(eager = cadence)
-      if (tol > 0 && cadence && i < iterations)
-        converged = next.agg(coalesce(sum(abs($"rank" - $"prev")), lit(0.0)))
-          .as[Double].head() < tol
-      ranks = next.drop("prev")
+      var ranks = verts.withColumn("rank", lit(1.0 / n))
+      var i = 0
+      var converged = false
+      while (i < iterations && !converged) {
+        val danglingMass =
+          if (hasDangling)
+            ranks.join(danglingVerts, Seq("id"), "left_semi")
+              .agg(coalesce(sum($"rank"), lit(0.0))).as[Double].head()
+          else 0.0
+        val contribs = ranks.join(outDeg, Seq("id"))
+          .select($"id".as("src"), ($"rank" / $"deg").as("c"))
+          .join(e, Seq("src"))
+          .groupBy($"dst".as("id")).agg(sum($"c" * $"w").as("in_mass"))
+        val base = (1.0 - damping) / n + damping * danglingMass / n
+        i += 1
+        val cadence = i % checkEvery == 0 || i == iterations
+        // prev rides INSIDE the update plan (the id-keyed joins
+        // co-partition), so the cadence L1-delta check is an agg over the
+        // already-cached per-vertex frame — near-free — instead of a
+        // separate keyed-join job. Non-cadence rounds checkpoint LAZILY:
+        // lineage is cut and the block persists on first materialization
+        // (the next cadence job), so the double reference to `ranks` below
+        // (contribs + prev) reads one cached copy, never recomputes the
+        // chain.
+        val next = verts.join(contribs, Seq("id"), "left")
+          .join(ranks.select($"id", $"rank".as("prev")), Seq("id"))
+          .select($"id",
+            (lit(base) + lit(damping) * coalesce($"in_mass", lit(0.0))).as("rank"),
+            $"prev")
+          .localCheckpoint(eager = cadence)
+        if (tol > 0 && cadence && i < iterations)
+          converged = next.agg(coalesce(sum(abs($"rank" - $"prev")), lit(0.0)))
+            .as[Double].head() < tol
+        ranks = next.drop("prev")
+      }
+      (ranks, i)
     }
-    lastIterations = i
-    (ranks, i)
+    lastIterations = rounds
+    (ranks, rounds)
   }
 }

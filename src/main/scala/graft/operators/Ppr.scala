@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
 object Ppr {
   @volatile var lastIterations: Int = -1
 
-  /** Driver-local restart iteration — the [[PageRank]] hybrid-endgame
-    * kernel with the seed teleport vector. Same update equations, same
+  /** Driver-local restart iteration — the [[PageRank]] [[Endgame]]
+    * kernel with the seed teleport vector; the seed set collects too (it
+    * is probe-sized by contract). Same update equations, same
     * dangling reinjection-to-seeds, same cadence L1 early exit. */
   private def runLocal(spark: SparkSession, rows: Array[(Long, Long)],
                        seedIds: Array[Long], damping: Double, iterations: Int,
@@ -68,75 +69,69 @@ object Ppr {
 
   /** @param edges DIRECTED (src, dst); pass both directions for undirected
     * @param seeds (id) restart set; must be non-empty
-    * @param localThreshold finish DRIVER-LOCAL when the materialized edge
-    *        list has at most this many rows — the [[PageRank]] hybrid
-    *        endgame (same kernel discipline, seed teleport vector); the
-    *        seed set collects too (it is probe-sized by contract). 0
-    *        forces pure distributed rounds (the spec pin).
     * @return (id, rank) for every vertex in `edges`, Σrank = 1 */
   def run(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
           damping: Double = 0.85, iterations: Int = 15, tol: Double = 1e-7,
-          checkEvery: Int = 3, localThreshold: Long = 1L << 20): DataFrame = {
+          checkEvery: Int = 3): DataFrame = {
     import spark.implicits._
     val e = edges.select($"src".cast("long"), $"dst".cast("long"))
       .localCheckpoint(eager = true)
-    if (e.count() <= localThreshold) {
+    val (ranks, rounds) = if (Endgame.local(e.count())) {
       val rows = e.as[(Long, Long)].collect()
       val seedIds = seeds.select($"id".cast("long")).distinct()
         .as[Long].collect()
-      val (out, it) = runLocal(spark, rows, seedIds, damping, iterations,
-        tol, checkEvery)
-      lastIterations = it
-      return out
-    }
-    val verts = e.select($"src".as("id")).unionAll(e.select($"dst".as("id")))
-      .distinct().localCheckpoint(eager = true)
-    val seedSet = seeds.select($"id".cast("long"))
-      .join(verts, Seq("id"), "left_semi").distinct()
-      .localCheckpoint(eager = true)
-    val nSeeds = seedSet.count().toDouble
-    require(nSeeds > 0, "PPR needs at least one seed present in the graph")
-    val flagged = verts.join(seedSet.withColumn("is_seed", lit(true)),
-      Seq("id"), "left")
-      .select($"id", coalesce($"is_seed", lit(false)).as("is_seed"))
-      .localCheckpoint(eager = true)
-    val outDeg = e.groupBy($"src".as("id")).agg(count(lit(1)).as("deg"))
-    val danglingVerts = verts.join(outDeg, Seq("id"), "left_anti")
-      .localCheckpoint(eager = true)
-    val hasDangling = !danglingVerts.isEmpty
+      runLocal(spark, rows, seedIds, damping, iterations, tol, checkEvery)
+    } else {
+      val verts = e.select($"src".as("id")).unionAll(e.select($"dst".as("id")))
+        .distinct().localCheckpoint(eager = true)
+      val seedSet = seeds.select($"id".cast("long"))
+        .join(verts, Seq("id"), "left_semi").distinct()
+        .localCheckpoint(eager = true)
+      val nSeeds = seedSet.count().toDouble
+      require(nSeeds > 0, "PPR needs at least one seed present in the graph")
+      val flagged = verts.join(seedSet.withColumn("is_seed", lit(true)),
+        Seq("id"), "left")
+        .select($"id", coalesce($"is_seed", lit(false)).as("is_seed"))
+        .localCheckpoint(eager = true)
+      val outDeg = e.groupBy($"src".as("id")).agg(count(lit(1)).as("deg"))
+      val danglingVerts = verts.join(outDeg, Seq("id"), "left_anti")
+        .localCheckpoint(eager = true)
+      val hasDangling = !danglingVerts.isEmpty
 
-    var ranks = flagged.withColumn("rank",
-      when($"is_seed", lit(1.0 / nSeeds)).otherwise(lit(0.0)))
-      .select($"id", $"rank")
-    var i = 0
-    var converged = false
-    while (i < iterations && !converged) {
-      val danglingMass =
-        if (hasDangling)
-          ranks.join(danglingVerts, Seq("id"), "left_semi")
-            .agg(coalesce(sum($"rank"), lit(0.0))).as[Double].head()
-        else 0.0
-      val contribs = ranks.join(outDeg, Seq("id"))
-        .select($"id".as("src"), ($"rank" / $"deg").as("c"))
-        .join(e, Seq("src"))
-        .groupBy($"dst".as("id")).agg(sum($"c").as("in_mass"))
-      // restart mass (teleport + dangling reinjection) goes ONLY to seeds
-      val base = (1.0 - damping + damping * danglingMass) / nSeeds
-      i += 1
-      val cadence = i % checkEvery == 0 || i == iterations
-      val next = flagged.join(contribs, Seq("id"), "left")
-        .join(ranks.select($"id", $"rank".as("prev")), Seq("id"))
-        .select($"id",
-          (when($"is_seed", lit(base)).otherwise(lit(0.0)) +
-            lit(damping) * coalesce($"in_mass", lit(0.0))).as("rank"),
-          $"prev")
-        .localCheckpoint(eager = cadence)
-      if (tol > 0 && cadence && i < iterations)
-        converged = next.agg(coalesce(sum(abs($"rank" - $"prev")), lit(0.0)))
-          .as[Double].head() < tol
-      ranks = next.drop("prev")
+      var ranks = flagged.withColumn("rank",
+        when($"is_seed", lit(1.0 / nSeeds)).otherwise(lit(0.0)))
+        .select($"id", $"rank")
+      var i = 0
+      var converged = false
+      while (i < iterations && !converged) {
+        val danglingMass =
+          if (hasDangling)
+            ranks.join(danglingVerts, Seq("id"), "left_semi")
+              .agg(coalesce(sum($"rank"), lit(0.0))).as[Double].head()
+          else 0.0
+        val contribs = ranks.join(outDeg, Seq("id"))
+          .select($"id".as("src"), ($"rank" / $"deg").as("c"))
+          .join(e, Seq("src"))
+          .groupBy($"dst".as("id")).agg(sum($"c").as("in_mass"))
+        // restart mass (teleport + dangling reinjection) goes ONLY to seeds
+        val base = (1.0 - damping + damping * danglingMass) / nSeeds
+        i += 1
+        val cadence = i % checkEvery == 0 || i == iterations
+        val next = flagged.join(contribs, Seq("id"), "left")
+          .join(ranks.select($"id", $"rank".as("prev")), Seq("id"))
+          .select($"id",
+            (when($"is_seed", lit(base)).otherwise(lit(0.0)) +
+              lit(damping) * coalesce($"in_mass", lit(0.0))).as("rank"),
+            $"prev")
+          .localCheckpoint(eager = cadence)
+        if (tol > 0 && cadence && i < iterations)
+          converged = next.agg(coalesce(sum(abs($"rank" - $"prev")), lit(0.0)))
+            .as[Double].head() < tol
+        ranks = next.drop("prev")
+      }
+      (ranks, i)
     }
-    lastIterations = i
+    lastIterations = rounds
     ranks
   }
 }

@@ -36,6 +36,10 @@ import org.apache.spark.sql.functions._
 object Scc {
   @volatile var lastIterations: Int = -1
 
+  /** Largest matrix universe the driver-local closure takes: its bitset
+    * squaring is |V|³/64 word-ops per round, ~1.2e8 at 2000 vertices. */
+  private val LocalVertexCap = 2000
+
   /** @param vertices single `id` (LONG) column — every vertex, including
     *                 isolated ones (they come back as singleton SCCs)
     * @param edges    directed (src, dst) LONG pairs; self-loops ignored
@@ -45,9 +49,7 @@ object Scc {
     * @throws IllegalStateException if the closure fixpoint is not reached
     *         within `maxIter` doubling rounds, or |V| > `maxVertices` */
   def run(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
-          maxIter: Int = 20, maxVertices: Long = 10000L,
-          localThreshold: Long = 2000L): DataFrame = {
-    import spark.implicits._
+          maxIter: Int = 20, maxVertices: Long = 10000L): DataFrame = {
     val nV = vertices.count()
     if (nV > maxVertices)
       throw new IllegalStateException(
@@ -55,76 +57,86 @@ object Scc {
           s"$maxVertices — this operator is declared for lattice-bounded " +
           "universes; decompose data-sized graphs with Forward-Backward instead")
 
-    // Hybrid endgame ([[PageRank]] round-18 discipline), gated on |V| (the
-    // closure is |V|²-bounded, and the bitset squaring is |V|³/64 work —
-    // ~1.2e8 word-ops at the 2000 default): the IDENTICAL path-doubling
-    // rounds over driver bitsets, same count-equality fixpoint, same
-    // maxIter throw, mutual = closure ∧ transpose, label = min mutual
-    // partner. Integer-exact, so local ≡ distributed (SccSpec pins both
-    // paths); 0 forces distributed rounds.
-    if (nV <= localThreshold) {
-      val vset = vertices.select($"id".cast("long")).as[Long].collect()
-      val es = edges.select($"src".cast("long"), $"dst".cast("long"))
-        .as[(Long, Long)].collect()
-        .filter { case (s, d) => s != d }
-        .distinct
-      // The matrix universe is vertices ∪ edge endpoints: an endpoint
-      // outside `vertices` still carries reachability between vertices
-      // (and can be the min mutual partner), exactly as in the
-      // distributed closure.
-      val vs = (vset ++ es.flatMap(p => Seq(p._1, p._2))).distinct.sorted
-      if (vs.length > localThreshold)
-        return runDistributed(spark, vertices, edges, maxIter)
-      val idx = scala.collection.mutable.LongMap.empty[Int]
-      vs.zipWithIndex.foreach { case (v, i) => idx(v) = i }
-      val n = vs.length
-      val reach = Array.fill(n)(new java.util.BitSet(n))
-      es.foreach { case (s, d) => reach(idx(s)).set(idx(d)) }
-      var prev = es.length.toLong
-      var i = 0
-      var done = prev == 0L
-      while (i < maxIter && !done) {
-        i += 1
-        // R ∪ (R ∘ R): for every u, fold in the rows of its reachable set
-        val next = Array.tabulate(n) { u =>
-          val row = reach(u).clone().asInstanceOf[java.util.BitSet]
-          var v = reach(u).nextSetBit(0)
-          while (v >= 0) {
-            row.or(reach(v)); v = reach(u).nextSetBit(v + 1)
-          }
-          row.clear(u) // src =!= dst filter
-          row
-        }
-        var cnt = 0L
-        next.foreach(cnt += _.cardinality())
-        done = cnt == prev
-        prev = cnt
-        var u = 0
-        while (u < n) { reach(u) = next(u); u += 1 }
-      }
-      lastIterations = i
-      if (!done)
-        throw new IllegalStateException(
-          s"SCC path-doubling closure did not reach its fixpoint in $maxIter " +
-            "rounds — the mutual-pair set may be incomplete; raise maxIter")
-      val out = vset.sorted.map { v =>
-        val u = idx(v)
-        var mm = v
-        var w = reach(u).nextSetBit(0)
-        while (w >= 0) {
-          if (reach(w).get(u) && vs(w) < mm) mm = vs(w)
-          w = reach(u).nextSetBit(w + 1)
-        }
-        (v, math.min(v, mm))
-      }
-      return spark.createDataset(out.toSeq).toDF("id", "scc_id")
-    }
-
-    runDistributed(spark, vertices, edges, maxIter)
+    // |V| bounds neither the edge list (it may repeat pairs) nor the matrix
+    // universe (endpoints may lie outside `vertices`), so the edges pass
+    // their own count gate before the collect, and the local kernel falls
+    // back to the distributed closure when the universe exceeds the cap.
+    val viaLocal =
+      if (nV <= LocalVertexCap && Endgame.local(edges.count()))
+        closeLocal(spark, vertices, edges, maxIter)
+      else None
+    val (out, rounds, done) =
+      viaLocal.getOrElse(closeDistributed(spark, vertices, edges, maxIter))
+    lastIterations = rounds
+    if (!done)
+      throw new IllegalStateException(
+        s"SCC path-doubling closure did not reach its fixpoint in $maxIter " +
+          "rounds — the mutual-pair set may be incomplete; raise maxIter")
+    out
   }
 
-  private def runDistributed(spark: SparkSession, vertices: DataFrame,
-                             edges: DataFrame, maxIter: Int): DataFrame = {
+  /** The IDENTICAL path-doubling rounds over driver bitsets: same
+    * count-equality fixpoint, mutual = closure ∧ transpose, label = min
+    * mutual partner. Integer-exact, so local ≡ distributed (SccSpec pins
+    * both paths). None when the matrix universe exceeds the cap. */
+  private def closeLocal(spark: SparkSession, vertices: DataFrame,
+                         edges: DataFrame, maxIter: Int)
+      : Option[(DataFrame, Int, Boolean)] = {
+    import spark.implicits._
+    val vset = vertices.select($"id".cast("long")).as[Long].collect()
+    val es = edges.select($"src".cast("long"), $"dst".cast("long"))
+      .as[(Long, Long)].collect()
+      .filter { case (s, d) => s != d }
+      .distinct
+    // The matrix universe is vertices ∪ edge endpoints: an endpoint
+    // outside `vertices` still carries reachability between vertices
+    // (and can be the min mutual partner), exactly as in the
+    // distributed closure.
+    val vs = (vset ++ es.flatMap(p => Seq(p._1, p._2))).distinct.sorted
+    if (vs.length > LocalVertexCap) return None
+    val idx = scala.collection.mutable.LongMap.empty[Int]
+    vs.zipWithIndex.foreach { case (v, i) => idx(v) = i }
+    val n = vs.length
+    val reach = Array.fill(n)(new java.util.BitSet(n))
+    es.foreach { case (s, d) => reach(idx(s)).set(idx(d)) }
+    var prev = es.length.toLong
+    var i = 0
+    var done = prev == 0L
+    while (i < maxIter && !done) {
+      i += 1
+      // R ∪ (R ∘ R): for every u, fold in the rows of its reachable set
+      val next = Array.tabulate(n) { u =>
+        val row = reach(u).clone().asInstanceOf[java.util.BitSet]
+        var v = reach(u).nextSetBit(0)
+        while (v >= 0) {
+          row.or(reach(v)); v = reach(u).nextSetBit(v + 1)
+        }
+        row.clear(u) // src =!= dst filter
+        row
+      }
+      var cnt = 0L
+      next.foreach(cnt += _.cardinality())
+      done = cnt == prev
+      prev = cnt
+      var u = 0
+      while (u < n) { reach(u) = next(u); u += 1 }
+    }
+    val out = vset.sorted.map { v =>
+      val u = idx(v)
+      var mm = v
+      var w = reach(u).nextSetBit(0)
+      while (w >= 0) {
+        if (reach(w).get(u) && vs(w) < mm) mm = vs(w)
+        w = reach(u).nextSetBit(w + 1)
+      }
+      (v, math.min(v, mm))
+    }
+    Some((spark.createDataset(out.toSeq).toDF("id", "scc_id"), i, done))
+  }
+
+  private def closeDistributed(spark: SparkSession, vertices: DataFrame,
+                               edges: DataFrame, maxIter: Int)
+      : (DataFrame, Int, Boolean) = {
     import spark.implicits._
     var r = edges.select($"src", $"dst")
       .filter($"src" =!= $"dst").distinct()
@@ -146,11 +158,6 @@ object Scc {
       prev = n
       r = next
     }
-    lastIterations = i
-    if (!done)
-      throw new IllegalStateException(
-        s"SCC path-doubling closure did not reach its fixpoint in $maxIter " +
-          "rounds — the mutual-pair set may be incomplete; raise maxIter")
 
     // closure ∩ transpose = mutual reachability; label = min mutual partner
     // (or the vertex itself — singleton SCCs never appear in `mutual`)
@@ -158,8 +165,8 @@ object Scc {
       .join(r.as("b"),
         col("f.src") === col("b.dst") && col("f.dst") === col("b.src"))
       .select(col("f.src").as("id"), col("f.dst").as("m"))
-    vertices
+    (vertices
       .join(mutual.groupBy($"id").agg(min($"m").as("mm")), Seq("id"), "left")
-      .select($"id", least($"id", coalesce($"mm", $"id")).as("scc_id"))
+      .select($"id", least($"id", coalesce($"mm", $"id")).as("scc_id")), i, done)
   }
 }

@@ -35,21 +35,18 @@ object SemDedup {
   /** @param assigned  (vec_id, v, cell) — [[AnnIVF.assignments]]._1
     * @param centroids (cell, cv) — [[AnnIVF.assignments]]._2
     * @param tauCos    duplicate threshold on exact cosine
-    * @param localThreshold run the driver-local endgame when the
-    *        assignment frame AND its cell-local pair work Σ C(|cell|, 2)
-    *        fit the budget (both proven by distributed aggregates before
-    *        any collect — the round-18 rolesLocal discipline); 0 forces
-    *        the distributed path (the spec pin)
     * @return one row per vector: (vec_id, cell, comp, ccos, keep) — comp
     *         is the duplicate-group id (min vec_id, singleton = itself),
     *         ccos the centroid cosine, keep the SemDeDup survivorship */
   def run(spark: SparkSession, assigned: DataFrame, centroids: DataFrame,
-          tauCos: Double, localThreshold: Long = 1L << 20): DataFrame = {
+          tauCos: Double): DataFrame = {
     import spark.implicits._
     VectorOps.register(spark)
     val a = assigned.select($"vec_id", $"v", $"cell")
 
-    // Driver-local endgame (round 19): below the budget the whole tail —
+    // [[Endgame]]: when the assignment frame fits the budget and its
+    // cell-local pair work Σ C(|cell|, 2) fits 8·Budget (one distributed
+    // aggregate proves both before any collect) the whole tail —
     // cell-local pair scan, union-to-min CC, centroid cosines, the keep
     // rule — runs on the driver over the collected assignment frame. The
     // k-means fit producing `assigned` stays the memoized distributed
@@ -58,12 +55,11 @@ object SemDedup {
     // distributed bit-identically (SemDedupSpec pins both paths). At
     // 100 TB the assignment frame exceeds the budget and the distributed
     // path runs unchanged.
-    val budget = a.groupBy($"cell").agg(count(lit(1)).as("n"))
+    val (rowCount, pairWork) = a.groupBy($"cell").agg(count(lit(1)).as("n"))
       .agg(coalesce(sum($"n"), lit(0L)),
            coalesce(sum(expr("n * (n - 1L) div 2L")), lit(0L)))
       .as[(Long, Long)].head()
-    if (localThreshold > 0 && budget._1 <= localThreshold &&
-        budget._2 <= 8L * localThreshold) {
+    if (Endgame.local(rowCount) && pairWork <= 8L * Endgame.Budget) {
       val rows = a.select($"vec_id", $"v".cast("array<double>"), $"cell")
         .as[(Long, Array[Double], Long)].collect()
       val cents = centroids.select($"cell", $"cv".cast("array<double>"))

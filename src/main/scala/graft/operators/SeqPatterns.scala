@@ -24,24 +24,24 @@ object SeqPatterns {
     * over a sequence frame (column `sequence`: array&lt;array&lt;string&gt;&gt;, one
     * row per sequence).
     *
-    * Budget: total item occurrences ≤ `localThreshold` AND every itemset
+    * [[Endgame]] gate: total item occurrences ≤ Budget AND every itemset
     * a singleton — both proven by one distributed aggregate before any
-    * collect. `localThreshold = 0` forces distributed MLlib (the spec
-    * pin). minCount derives from minSupport with MLlib's own rule
-    * (`math.ceil(minSupport * n).toLong`, same double math).
+    * collect, which also counts the sequences. minCount derives from
+    * minSupport with MLlib's own rule (`math.ceil(minSupport * n).toLong`,
+    * same double math).
     *
     * @return (sequence: array&lt;array&lt;string&gt;&gt;, freq: long) */
   def run(spark: SparkSession, seqs: DataFrame, minSupport: Double,
-          maxLen: Int, localThreshold: Long = 1L << 20): DataFrame = {
+          maxLen: Int): DataFrame = {
     import spark.implicits._
-    val budget = seqs
+    val (occ, maxItemset, n) = seqs
       .select(expr("aggregate(sequence, 0L, (a, x) -> a + size(x))").as("occ"),
               coalesce(expr("array_max(transform(sequence, x -> size(x)))"),
                 lit(0)).as("mx"))
-      .agg(coalesce(sum($"occ"), lit(0L)), coalesce(max($"mx"), lit(0)))
-      .as[(Long, Int)].head()
-    if (localThreshold > 0 && budget._1 <= localThreshold && budget._2 <= 1) {
-      val n = seqs.count()
+      .agg(coalesce(sum($"occ"), lit(0L)), coalesce(max($"mx"), lit(0)),
+           count(lit(1)))
+      .as[(Long, Int, Long)].head()
+    if (Endgame.local(occ) && maxItemset <= 1) {
       val minCount = math.ceil(minSupport * n).toLong
       val collected = seqs
         .select(expr("transform(sequence, x -> x[0])").cast("array<string>"))

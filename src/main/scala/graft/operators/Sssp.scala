@@ -39,19 +39,15 @@ object Sssp {
     * @throws IllegalStateException if relaxation has not reached its
     *         fixpoint within `maxIter` rounds (raise it for deep graphs) */
   def run(spark: SparkSession, edges: DataFrame, source: Long,
-          maxIter: Int = 20, checkEvery: Int = 2,
-          localThreshold: Long = 1L << 20): DataFrame = {
+          maxIter: Int = 20, checkEvery: Int = 2): DataFrame = {
     import spark.implicits._
     val e = edges.select($"src".cast("long"), $"dst".cast("long"),
         $"w".cast("double"))
       .localCheckpoint(eager = true)
-    // Hybrid endgame ([[PageRank]] round-18 discipline): the same
-    // Bellman-Ford rounds over a driver adjacency map when the edge list
-    // is small — min-relaxation over doubles is order-independent, so the
-    // local path is bit-identical to the distributed one (SsspSpec pins
-    // both). Cadence/throw semantics mirrored exactly; 0 forces
-    // distributed rounds.
-    if (e.count() <= localThreshold) {
+    // Both paths run the same Bellman-Ford rounds and cadence —
+    // min-relaxation over doubles is order-independent, so the local path
+    // is bit-identical to the distributed one (SsspSpec pins both).
+    val (out, rounds, converged) = if (Endgame.local(e.count())) {
       val es = e.as[(Long, Long, Double)].collect()
       val adj = es.groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3))).toMap
       val dist = scala.collection.mutable.LongMap[Double](source -> 0.0)
@@ -80,38 +76,35 @@ object Sssp {
         next.foreach { case (v, d2) => dist(v) = d2 }
         // (assignment above keeps `dist` = round-i tentative distances)
       }
-      lastIterations = i
-      if (!converged)
-        throw new IllegalStateException(
-          s"SSSP relaxation did not reach its fixpoint in $maxIter rounds — " +
-            "tentative distances may still decrease; raise maxIter")
-      return spark.createDataset(dist.toSeq.sortBy(_._1)).toDF("id", "d")
-    }
-    var dist = Seq((source, 0.0)).toDF("id", "d")
-    var i = 0
-    var converged = false
-    while (i < maxIter && !converged) {
-      i += 1
-      val cadence = i % checkEvery == 0 || i == maxIter
-      val cand = dist.join(e, $"id" === $"src")
-        .select($"dst".as("id"), ($"d" + $"w").as("d"))
-      val next = dist.unionAll(cand)
-        .groupBy($"id").agg(min($"d").as("d"))
-        .join(dist.select($"id", $"d".as("prev")), Seq("id"), "left")
-        .localCheckpoint(eager = cadence)
-      if (cadence) {
-        val improved = next
-          .agg(coalesce(sum(when($"prev".isNull || $"d" < $"prev", 1L)
-            .otherwise(0L)), lit(0L))).as[Long].head()
-        converged = improved == 0L
+      (spark.createDataset(dist.toSeq.sortBy(_._1)).toDF("id", "d"), i, converged)
+    } else {
+      var dist = Seq((source, 0.0)).toDF("id", "d")
+      var i = 0
+      var converged = false
+      while (i < maxIter && !converged) {
+        i += 1
+        val cadence = i % checkEvery == 0 || i == maxIter
+        val cand = dist.join(e, $"id" === $"src")
+          .select($"dst".as("id"), ($"d" + $"w").as("d"))
+        val next = dist.unionAll(cand)
+          .groupBy($"id").agg(min($"d").as("d"))
+          .join(dist.select($"id", $"d".as("prev")), Seq("id"), "left")
+          .localCheckpoint(eager = cadence)
+        if (cadence) {
+          val improved = next
+            .agg(coalesce(sum(when($"prev".isNull || $"d" < $"prev", 1L)
+              .otherwise(0L)), lit(0L))).as[Long].head()
+          converged = improved == 0L
+        }
+        dist = next.drop("prev")
       }
-      dist = next.drop("prev")
+      (dist, i, converged)
     }
-    lastIterations = i
+    lastIterations = rounds
     if (!converged)
       throw new IllegalStateException(
         s"SSSP relaxation did not reach its fixpoint in $maxIter rounds — " +
           "tentative distances may still decrease; raise maxIter")
-    dist
+    out
   }
 }

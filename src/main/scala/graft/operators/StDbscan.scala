@@ -42,8 +42,7 @@ object StDbscan {
     * @return (id, role ∈ {core,border,noise}, cluster: Long — -1 for noise)
     */
   def run(spark: SparkSession, pts: DataFrame,
-          eps: Double, epsT: Double, minPts: Int,
-          localThreshold: Long = 1L << 20): DataFrame = {
+          eps: Double, epsT: Double, minPts: Int): DataFrame = {
     import spark.implicits._
     val p = pts.select($"id".cast("long"), $"x".cast("double"),
       $"y".cast("double"), $"t".cast("double"))
@@ -83,55 +82,12 @@ object StDbscan {
       .select($"pid", $"pid2", $"w2")
       .localCheckpoint(eager = false)
 
-    // Hybrid endgame — the identical role-assignment tail shared with
-    // [[DBSCAN.rolesLocal]] goes driver-local below the pair budget
-    // (round 18); contraction, the 3-D cell pair join, and the final
+    // The role tail (driver-local below the pair budget) is shared with
+    // [[DBSCAN.roles]]; contraction, the 3-D cell pair join, and the final
     // point expansion stay distributed at every scale. StDbscanSpec pins
     // both paths node-wise.
-    if (pairs.count() <= localThreshold) {
-      val pairRows = pairs.as[(Long, Long, Long)].collect()
-      val posPids = positions.select($"pid").as[Long].collect()
-      if (posPids.length <= localThreshold) {
-        val roles = DBSCAN.rolesLocal(spark, pairRows, posPids, minPts)
-        return p.join(positions.select($"x", $"y", $"t", $"pid"),
-            Seq("x", "y", "t"))
-          .join(roles, Seq("pid"))
-          .select($"id", $"role", $"cluster")
-      }
-    }
-
-    val degrees = pairs.groupBy($"pid").agg(sum($"w2").as("deg"))
-    val core = degrees.filter($"deg" >= minPts).select($"pid".as("core_pid"))
-      .localCheckpoint(eager = false)
-
-    val coreEdges = pairs
-      .join(core, pairs("pid") === core("core_pid")).drop("core_pid")
-      .join(core, pairs("pid2") === core("core_pid")).drop("core_pid")
-      .filter($"pid" < $"pid2")
-
-    val cc = ConnectedComponents.run(spark,
-        core.select($"core_pid".as("id")),
-        coreEdges.select($"pid".as("src"), $"pid2".as("dst")))
-      .withColumnRenamed("comp", "cluster")
-      .localCheckpoint(eager = false)
-
-    val corePos = cc.select($"id".as("pid"), lit("core").as("role"), $"cluster")
-
-    val nonCorePos = positions.select($"pid")
-      .join(core.select($"core_pid".as("pid")), Seq("pid"), "left_anti")
-    val borderPos = pairs.join(nonCorePos, Seq("pid"))
-      .join(cc.select($"id".as("pid2"), $"cluster"), Seq("pid2"))
-      .groupBy($"pid").agg(min($"cluster").as("cluster"))
-      .select($"pid", lit("border").as("role"), $"cluster")
-
-    val assignedPos = corePos.unionAll(borderPos).localCheckpoint(eager = false)
-    val noisePos = positions.select($"pid")
-      .join(assignedPos.select($"pid"), Seq("pid"), "left_anti")
-      .select($"pid", lit("noise").as("role"), lit(-1L).as("cluster"))
-
-    val roles = assignedPos.unionAll(noisePos)
     p.join(positions.select($"x", $"y", $"t", $"pid"), Seq("x", "y", "t"))
-      .join(roles, Seq("pid"))
+      .join(DBSCAN.roles(spark, pairs, positions, minPts), Seq("pid"))
       .select($"id", $"role", $"cluster")
   }
 }

@@ -102,8 +102,7 @@ object Traclus {
     * @return (sid, user_id, role ∈ {core,border,noise,transit},
     *         cluster — -1 for noise/transit) */
   def run(spark: SparkSession, segs: DataFrame, epsKm: Double, minLns: Int,
-          minUsers: Int = 1, maxSegKm: Double = Double.MaxValue,
-          localThreshold: Long = 1L << 20): DataFrame = {
+          minUsers: Int = 1, maxSegKm: Double = Double.MaxValue): DataFrame = {
     import spark.implicits._
     TraclusFns.register(spark)
     val cell = 5.0 * epsKm // the ε√5 + cell/2 < cell cover bound (scaladoc)
@@ -158,17 +157,16 @@ object Traclus {
       .select($"sid1", $"sid2").distinct()
       .localCheckpoint(eager = false)
 
-    // Hybrid endgame ([[DBSCAN.rolesLocal]] discipline, round 18): the
-    // whole density-grouping tail — degrees, core set, CC, border, the
-    // §4.2 trajectory-cardinality filter, noise — runs driver-local below
-    // the pair budget; MDL partitioning, the grid pair join and the exact
-    // ε-filter stay distributed at every scale. TraclusSpec pins both
-    // paths against the brute-force reference.
-    // Both budgets are proven by DISTRIBUTED counts before anything is
-    // collected: ε-pairs are canonical sid1<sid2, so a sparse input can have
-    // few pairs yet arbitrarily many segments — the segment frame must pass
-    // its own count gate before the (sid, user) list comes to the driver.
-    if (pairs.count() <= localThreshold && s.count() <= localThreshold) {
+    // [[Endgame]] ([[DBSCAN.roles]] discipline): the whole density-grouping
+    // tail — degrees, core set, CC, border, the §4.2 trajectory-cardinality
+    // filter, noise — runs driver-local below the pair budget; MDL
+    // partitioning, the grid pair join and the exact ε-filter stay
+    // distributed at every scale. TraclusSpec pins both paths against the
+    // brute-force reference. ε-pairs are canonical sid1<sid2, so a sparse
+    // input can have few pairs yet arbitrarily many segments — the segment
+    // frame must pass its own count gate before the (sid, user) list comes
+    // to the driver.
+    if (Endgame.local(pairs.count()) && Endgame.local(s.count())) {
       val pr = pairs.as[(Long, Long)].collect()
       val sids = s.select($"sid", $"user_id").as[(Long, Long)].collect()
       val nbrs = scala.collection.mutable.LongMap.empty[Long] // deg-1

@@ -13,4 +13,12 @@ trait BaseSpec extends AnyFunSuite {
     .getOrCreate()
 
   val sf = "/root/testdata/sf0.001"
+
+  /** Both paths of a hybrid operator, for dual-path specs: `false` keeps
+    * the size-gated default (the driver-local kernel on spec inputs),
+    * `true` forces the distributed rounds. */
+  val bothPaths: Seq[Boolean] = Seq(false, true)
+
+  def onPath[T](distributed: Boolean)(body: => T): T =
+    if (distributed) operators.Endgame.distributed(body) else body
 }

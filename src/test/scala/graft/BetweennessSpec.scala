@@ -11,9 +11,10 @@ class BetweennessSpec extends BaseSpec {
   import spark.implicits._
 
   private def run(es: Seq[(Long, Long)], k: Int = 16,
-                  thr: Long = 1L << 20): Map[Long, Double] =
-    Betweenness.run(spark, es.toDF("u1", "u2"), k = k, localThreshold = thr)
+                  dist: Boolean = false): Map[Long, Double] = onPath(dist) {
+    Betweenness.run(spark, es.toDF("u1", "u2"), k = k)
       .as[(Long, Double)].collect().toMap
+  }
 
   /** Textbook Brandes over an adjacency map, restricted to `sources`;
     * undirected convention: Σ δ / 2. */
@@ -89,9 +90,9 @@ class BetweennessSpec extends BaseSpec {
         .filter(e => e._1 != e._2).distinct
         .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct
       val verts = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-      // both the driver-local endgame and the distributed rounds (thr = 0)
-      for (thr <- Seq(1L << 20, 0L))
-        assertAgree(run(es, thr = thr), brandes(es, verts))
+      // both the driver-local endgame and the distributed rounds
+      for (dist <- bothPaths)
+        assertAgree(run(es, dist = dist), brandes(es, verts))
     }
   }
 

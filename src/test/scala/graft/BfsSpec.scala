@@ -9,10 +9,11 @@ class BfsSpec extends BaseSpec {
   import spark.implicits._
 
   private def dists(es: Seq[(Long, Long)], seeds: Seq[Long],
-                    maxHops: Int = 8, thr: Long = 1L << 20): Map[Long, Int] =
-    Bfs.run(spark, es.toDF("u1", "u2"), seeds.toDF("id"), maxHops,
-        localThreshold = thr)
-      .as[(Long, Int)].collect().toMap
+                    maxHops: Int = 8, dist: Boolean = false): Map[Long, Int] =
+    onPath(dist) {
+      Bfs.run(spark, es.toDF("u1", "u2"), seeds.toDF("id"), maxHops)
+        .as[(Long, Int)].collect().toMap
+    }
 
   /** Queue BFS reference over the symmetric adjacency. */
   private def reference(es: Seq[(Long, Long)], seeds: Seq[Long],
@@ -38,11 +39,11 @@ class BfsSpec extends BaseSpec {
         .filter { case (a, b) => a != b }.distinct
       val seeds = Seq.fill(3)(rnd.nextInt(n).toLong).distinct
       val exp = reference(es, seeds, 8)
-      // both the driver-local endgame (default threshold) and the
-      // distributed rounds (thr = 0) must match the reference exactly
-      for (thr <- Seq(1L << 20, 0L)) {
-        val got = dists(es, seeds, thr = thr)
-        assert(got == exp, s"trial $trial thr=$thr: $got vs $exp")
+      // both the driver-local endgame and the distributed rounds must
+      // match the reference exactly
+      for (dist <- bothPaths) {
+        val got = dists(es, seeds, dist = dist)
+        assert(got == exp, s"trial $trial dist=$dist: $got vs $exp")
       }
     }
   }
@@ -77,20 +78,23 @@ class BfsSpec extends BaseSpec {
       val es = Seq.fill(70)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }.distinct
       val verts = (es.map(_._1) ++ es.map(_._2)).distinct
-      val got = Bfs
-        .runFromEach(spark, es.toDF("u1", "u2"), verts.toDF("id"), maxHops = 8)
-        .as[(Long, Long, Int)].collect()
-        .groupBy(_._1).map { case (s, rs) => s -> rs.map(r => r._2 -> r._3).toMap }
-      assert(got.keySet == verts.toSet, s"trial $trial: a source is missing")
-      verts.foreach { src =>
-        assert(got(src) == reference(es, Seq(src), 8), s"trial $trial src $src")
+      for (dist <- bothPaths) {
+        val got = onPath(dist) {
+          Bfs.runFromEach(spark, es.toDF("u1", "u2"), verts.toDF("id"), maxHops = 8)
+            .as[(Long, Long, Int)].collect()
+        }.groupBy(_._1).map { case (s, rs) => s -> rs.map(r => r._2 -> r._3).toMap }
+        assert(got.keySet == verts.toSet, s"trial $trial dist=$dist: a source is missing")
+        verts.foreach { src =>
+          assert(got(src) == reference(es, Seq(src), 8),
+            s"trial $trial dist=$dist src $src")
+        }
+        // min over any seed set must reproduce the multi-source operator
+        val seeds = verts.take(3)
+        val multi = dists(es, seeds, dist = dist)
+        val fromEach = got.filterKeys(seeds.contains).values
+          .flatten.groupBy(_._1).map { case (id, ds) => id -> ds.map(_._2).min }
+        assert(fromEach.toMap == multi, s"trial $trial dist=$dist")
       }
-      // min over any seed set must reproduce the multi-source operator
-      val seeds = verts.take(3)
-      val multi = dists(es, seeds)
-      val fromEach = got.filterKeys(seeds.contains).values
-        .flatten.groupBy(_._1).map { case (id, ds) => id -> ds.map(_._2).min }
-      assert(fromEach.toMap == multi)
     }
   }
 

@@ -8,38 +8,40 @@ import graft.operators.ConnectedComponents
 class CcSpec extends BaseSpec {
   import spark.implicits._
 
-  // localThreshold = 0 forces the distributed star rounds; the default
-  // takes the driver-local union-find endgame. Both must agree everywhere.
+  // The forced distributed scope runs the star rounds; the default takes
+  // the driver-local union-find endgame. Both must agree everywhere.
   private def labels(vs: Seq[Long], es: Seq[(Long, Long)],
-                     localThreshold: Long): Map[Long, Long] =
-    ConnectedComponents.run(spark,
-        vs.toDF("id"), es.toDF("src", "dst"), localThreshold = localThreshold)
+                     dist: Boolean): Map[Long, Long] = onPath(dist) {
+    ConnectedComponents.run(spark, vs.toDF("id"), es.toDF("src", "dst"))
       .as[(Long, Long)].collect().toMap
+  }
 
-  for ((mode, thr) <- Seq("distributed rounds" -> 0L, "local endgame" -> (1L << 22)))
+  private val modes = Seq("distributed rounds" -> true, "local endgame" -> false)
+
+  for ((mode, dist) <- modes)
   test(s"chain, star, two components, singleton, empty — $mode") {
     // 100-vertex path graph: worst-case diameter for min-propagation.
-    val chain = labels(0L until 100L, (0L until 99L).map(i => (i, i + 1)), thr)
+    val chain = labels(0L until 100L, (0L until 99L).map(i => (i, i + 1)), dist)
     assert(chain.size == 100 && chain.values.forall(_ == 0L))
 
     // Already a star; plus a separate triangle with reversed/duplicate edges.
     val star = labels(Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 42L),
-      Seq((1L, 2L), (1L, 3L), (1L, 4L), (11L, 10L), (12L, 10L), (10L, 12L)), thr)
+      Seq((1L, 2L), (1L, 3L), (1L, 4L), (11L, 10L), (12L, 10L), (10L, 12L)), dist)
     assert(Seq(1L, 2L, 3L, 4L).forall(star(_) == 1L))
     assert(Seq(10L, 11L, 12L).forall(star(_) == 10L))
     assert(star(42L) == 42L) // isolated vertex labels itself
 
-    assert(labels(Seq(7L), Seq.empty, thr) == Map(7L -> 7L))
-    assert(labels(Seq.empty, Seq.empty, thr).isEmpty)
+    assert(labels(Seq(7L), Seq.empty, dist) == Map(7L -> 7L))
+    assert(labels(Seq.empty, Seq.empty, dist).isEmpty)
   }
 
-  for ((mode, thr) <- Seq("distributed rounds" -> 0L, "local endgame" -> (1L << 22)))
+  for ((mode, dist) <- modes)
   test(s"labels are component minima on a random graph — $mode") {
     val rnd = new scala.util.Random(13L)
     val n = 200
     val es = Seq.fill(150)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       .filter { case (a, b) => a != b }
-    val got = labels(0L until n.toLong, es, thr)
+    val got = labels(0L until n.toLong, es, dist)
     // union-find reference
     val parent = Array.tabulate(n)(identity)
     def find(x: Int): Int = { if (parent(x) != x) parent(x) = find(parent(x)); parent(x) }

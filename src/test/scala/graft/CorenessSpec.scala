@@ -30,9 +30,8 @@ class CorenessSpec extends BaseSpec {
   }
 
   private def runOp(edges: Seq[(Long, Long)],
-                    thr: Long = 1L << 20): Map[Long, Long] = {
-    val e = edges.toDF("u1", "u2")
-    graft.operators.Coreness.run(spark, e, localThreshold = thr)
+                    dist: Boolean = false): Map[Long, Long] = onPath(dist) {
+    graft.operators.Coreness.run(spark, edges.toDF("u1", "u2"))
       .as[(Long, Long)].collect().toMap
   }
 
@@ -46,11 +45,11 @@ class CorenessSpec extends BaseSpec {
     // K4 and K3 sharing vertex 4: K4 side 3, K3 side 2, the shared vertex 3
     val shared = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (4L, 5L), (4L, 6L), (5L, 6L))
-    // both the driver-local endgame and the distributed rounds (thr = 0)
-    for (thr <- Seq(1L << 20, 0L)) {
-      val got = runOp(shared, thr)
-      assert(got == peel(shared), s"thr=$thr")
-      assert(got(4L) == 3L && got(5L) == 2L && got(6L) == 2L, s"thr=$thr")
+    // both the driver-local endgame and the distributed rounds
+    for (dist <- bothPaths) {
+      val got = runOp(shared, dist)
+      assert(got == peel(shared), s"dist=$dist")
+      assert(got(4L) == 3L && got(5L) == 2L && got(6L) == 2L, s"dist=$dist")
     }
   }
 

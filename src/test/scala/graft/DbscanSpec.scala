@@ -56,19 +56,20 @@ class DbscanSpec extends BaseSpec {
   }
 
   test("distributed DBSCAN equals in-memory reference exactly") {
-    // localThreshold default = the driver-local role tail, 0 = the fully
-    // distributed tail: both must equal the reference exactly
-    for (seed <- Seq(1L, 42L); thr <- Seq(1L << 20, 0L)) {
+    // the default driver-local role tail and the forced fully distributed
+    // tail must both equal the reference exactly
+    for (seed <- Seq(1L, 42L); dist <- bothPaths) {
       val pts = genPoints(300, seed)
       val df = pts.toDF("id", "x", "y")
-      val got = DBSCAN.run(spark, df, eps = 0.5, minPts = 4,
-          localThreshold = thr)
-        .as[(Long, String, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+      val got = onPath(dist) {
+        DBSCAN.run(spark, df, eps = 0.5, minPts = 4)
+          .as[(Long, String, Long)].collect()
+      }.map(r => r._1 -> (r._2, r._3)).toMap
       val expected = brute(pts, 0.5, 4)
       assert(got.size == expected.size)
       val diffs = expected.keys.filter(k => got(k) != expected(k)).take(5)
       assert(diffs.isEmpty,
-        s"seed=$seed thr=$thr mismatches: ${diffs.map(k => s"$k got=${got(k)} exp=${expected(k)}")}")
+        s"seed=$seed dist=$dist mismatches: ${diffs.map(k => s"$k got=${got(k)} exp=${expected(k)}")}")
     }
   }
 

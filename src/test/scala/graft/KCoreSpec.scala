@@ -9,9 +9,9 @@ class KCoreSpec extends BaseSpec {
   import spark.implicits._
 
   private def core(es: Seq[(Long, Long)], k: Int,
-                   thr: Long = 1L << 20): Set[Long] =
-    KCore.coreMembers(spark, es.toDF("u1", "u2"), k, localThreshold = thr)
-      .as[Long].collect().toSet
+                   dist: Boolean = false): Set[Long] = onPath(dist) {
+    KCore.coreMembers(spark, es.toDF("u1", "u2"), k).as[Long].collect().toSet
+  }
 
   private def reference(es: Seq[(Long, Long)], k: Int): Set[Long] = {
     var edges = es.flatMap(e => Seq(e, e.swap)).distinct
@@ -35,9 +35,9 @@ class KCoreSpec extends BaseSpec {
       val es = Seq.fill(110)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
         .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
-      // both the driver-local endgame and the distributed rounds (thr = 0)
-      for (thr <- Seq(1L << 20, 0L))
-        assert(core(es, k, thr) == reference(es, k), s"trial $trial k=$k thr=$thr")
+      // both the driver-local endgame and the distributed rounds
+      for (dist <- bothPaths)
+        assert(core(es, k, dist) == reference(es, k), s"trial $trial k=$k dist=$dist")
     }
   }
 

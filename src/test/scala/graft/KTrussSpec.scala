@@ -10,13 +10,13 @@ import graft.operators.KTruss
 class KTrussSpec extends BaseSpec {
   import spark.implicits._
 
-  /** Runs BOTH paths — the driver-local endgame (default threshold) and
-    * the distributed peel (thr = 0) — and pins their exact set equality
-    * before returning, so every test in this spec covers both. */
+  /** Runs BOTH paths — the driver-local endgame and the forced
+    * distributed peel — and pins their exact set equality before
+    * returning, so every test in this spec covers both. */
   private def run(es: Seq[(Long, Long)], k: Int): Set[(Long, Long)] = {
-    val Seq(local, dist) = Seq(1L << 20, 0L).map { thr =>
-      KTruss.run(spark, es.toDF("u1", "u2"), k, localThreshold = thr)
-        .as[(Long, Long)].collect().toSet
+    val Seq(local, dist) = bothPaths.map { d =>
+      onPath(d)(KTruss.run(spark, es.toDF("u1", "u2"), k)
+        .as[(Long, Long)].collect().toSet)
     }
     assert(local == dist,
       s"local/distributed k-truss diverge: localOnly=${(local -- dist).take(3)} " +

@@ -24,18 +24,18 @@ class KnnJoinSpec extends BaseSpec {
         .map { case ((l, r, d), i) => (l, r, d, (i + 1).toLong) }
     }.toList.sortBy(t => (t._1, t._4))
 
-  /** Runs BOTH paths — the driver-local endgame (default threshold) and
-    * the distributed ring machinery (thr = 0, run LAST so lastRingPlans
-    * reflects it for the plan assertions) — and pins exact equality. */
+  /** Runs BOTH paths — the driver-local endgame and the forced
+    * distributed ring machinery (run LAST so lastRingPlans reflects it for
+    * the plan assertions) — and pins exact equality. */
   private def run(left: Seq[(Long, Double, Double)],
                   right: Seq[(Long, Double, Double)],
                   k: Int): List[(Long, Long, Double, Long)] = {
-    val Seq(local, dist) = Seq(1L << 20, 0L).map { thr =>
-      KnnJoin.knn(
+    val Seq(local, dist) = bothPaths.map { d =>
+      onPath(d)(KnnJoin.knn(
           left.toDF("id", "lat", "lon"), "id", "lat", "lon",
           right.toDF("rid", "lat", "lon"), "rid", "lat", "lon",
-          k = k, cellDeg = 10.0, localThreshold = thr)
-        .as[(Long, Long, Double, Long)].collect().toList.sortBy(t => (t._1, t._4))
+          k = k, cellDeg = 10.0)
+        .as[(Long, Long, Double, Long)].collect().toList.sortBy(t => (t._1, t._4)))
     }
     assert(local == dist,
       s"local/distributed kNN join diverge:\n local=$local\n  dist=$dist")

@@ -31,11 +31,10 @@ class LabelPropSpec extends BaseSpec {
   }
 
   private def sparkLp(edges: Seq[(Long, Long)], iterations: Int = 10,
-                      thr: Long = 1L << 20) = {
+                      dist: Boolean = false) = onPath(dist) {
     import spark.implicits._
     val sym = edges ++ edges.map { case (a, b) => (b, a) }
-    LabelProp.run(spark, sym.toDF("src", "dst"), iterations,
-        localThreshold = thr)
+    LabelProp.run(spark, sym.toDF("src", "dst"), iterations)
       .as[(Long, Long)].collect().toMap
   }
 
@@ -60,11 +59,11 @@ class LabelPropSpec extends BaseSpec {
     val cross = for (_ <- 1 to 5) yield (rnd.nextInt(20).toLong, 50L + rnd.nextInt(20))
     val edges = (intra ++ cross).filter { case (a, b) => a != b }
     val ref = refLp(edges, 10)
-    // both the driver-local endgame and the distributed rounds (thr = 0)
-    for (thr <- Seq(1L << 20, 0L)) {
-      val got = sparkLp(edges, 10, thr)
+    // both the driver-local endgame and the distributed rounds
+    for (dist <- bothPaths) {
+      val got = sparkLp(edges, 10, dist)
       assert(got == ref,
-        s"thr=$thr diff=${(got.toSet -- ref.toSet).take(5)} / ${(ref.toSet -- got.toSet).take(5)}")
+        s"dist=$dist diff=${(got.toSet -- ref.toSet).take(5)} / ${(ref.toSet -- got.toSet).take(5)}")
     }
   }
 

@@ -60,17 +60,17 @@ class MiningSpec extends BaseSpec {
   }
 
   test("FreqItemsets: local Eclat == distributed PFP, exact itemset multiset") {
-    // thr = default takes the driver-local Eclat DFS; thr = 0 forces the
-    // MLlib PFP path — the two must agree on every (itemset, freq), all
+    // the default takes the driver-local Eclat DFS; the forced distributed
+    // scope runs the MLlib PFP path — the two must agree on every (itemset, freq), all
     // sizes >= 2 (the operator's declared output)
     val baskets = Tables(spark, sf, "lineitem")
       .select($"l_orderkey", $"l_partkey").distinct()
       .groupBy($"l_orderkey").agg(collect_set($"l_partkey").as("items"))
       .localCheckpoint(eager = true)
     val n = baskets.count()
-    val both = Seq(1L << 20, 0L).map { thr =>
-      operators.FreqItemsets.run(spark, baskets, 2.0 / n, thr)
-        .select($"items", $"freq").as[(Seq[Long], Long)].collect()
+    val both = bothPaths.map { dist =>
+      onPath(dist)(operators.FreqItemsets.run(spark, baskets, 2.0 / n)
+        .select($"items", $"freq").as[(Seq[Long], Long)].collect())
         .filter(_._1.size >= 2)
         .map { case (is, f) => (is.sorted, f) }.toSet
     }
@@ -89,10 +89,10 @@ class MiningSpec extends BaseSpec {
           org.apache.spark.sql.functions.struct($"ts", $"event_id", $"event_type"))).as("evs"))
       .select(expr("transform(evs, e -> array(e.event_type))").as("sequence"))
       .localCheckpoint(eager = true)
-    val both = Seq(1L << 20, 0L).map { thr =>
-      operators.SeqPatterns.run(spark, seqs, 0.05, 3, thr)
+    val both = bothPaths.map { dist =>
+      onPath(dist)(operators.SeqPatterns.run(spark, seqs, 0.05, 3)
         .select(expr("transform(sequence, x -> x[0])"), $"freq")
-        .as[(Seq[String], Long)].collect()
+        .as[(Seq[String], Long)].collect())
         .map { case (p, f) => (p.toVector, f) }.toSet
     }
     assert(both(0).nonEmpty)
@@ -100,11 +100,11 @@ class MiningSpec extends BaseSpec {
       s"local-only=${(both(0) -- both(1)).take(3)} " +
         s"mllib-only=${(both(1) -- both(0)).take(3)}")
     // multi-item itemsets must refuse the local path (routed to MLlib):
-    // a two-item itemset input on the local-threshold path still returns
+    // a two-item itemset input under the default gate still returns
     // MLlib's answer
     val multi = Seq(Seq(Seq("a", "b"), Seq("a")), Seq(Seq("a", "b")))
       .toDF("sequence")
-    val viaOp = operators.SeqPatterns.run(spark, multi, 0.5, 2, 1L << 20)
+    val viaOp = operators.SeqPatterns.run(spark, multi, 0.5, 2)
       .select(expr("to_json(sequence)"), $"freq")
       .as[(String, Long)].collect().toSet
     val viaMl = {

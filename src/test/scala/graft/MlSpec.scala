@@ -381,7 +381,7 @@ class MlSpec extends BaseSpec {
   test("NSW local walk == distributed walk, filtered and unfiltered") {
     // The round-18 driver-local beam endgame must return the EXACT rows
     // the distributed walk returns (same scorer, same tie rule, same
-    // visited-pool semantics under a predicate); thr = 0 pins the
+    // visited-pool semantics under a predicate) as the forced
     // distributed path.
     import graft.operators.AnnNsw
     val (vecs, adjacency, seeds) = AnnNsw.buildGraph(spark, emb, 8, 16)
@@ -392,9 +392,8 @@ class MlSpec extends BaseSpec {
     preds.foreach { p =>
       val loc = AnnNsw.topKFrom(spark, vecs, adjacency, seeds,
         0L until 10L, k = 5, ef = 32, rounds = 4, pred = p)
-      val dist = AnnNsw.topKFrom(spark, vecs, adjacency, seeds,
-        0L until 10L, k = 5, ef = 32, rounds = 4, pred = p,
-        localThreshold = 0L)
+      val dist = onPath(true)(AnnNsw.topKFrom(spark, vecs, adjacency, seeds,
+        0L until 10L, k = 5, ef = 32, rounds = 4, pred = p))
       assert(rows(loc) == rows(dist), s"pred=${p.isDefined}")
     }
   }

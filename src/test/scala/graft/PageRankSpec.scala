@@ -26,23 +26,21 @@ class PageRankSpec extends BaseSpec {
 
   test("both paths' ranks equal the reference on a graph with dangling nodes") {
     // star (1 -> 2,3,4), a chain into it, a 2-cycle, and dangling sink 9.
-    // Run the SAME graph through the local endgame (default threshold) and
-    // the pure distributed rounds (localThreshold = 0): both must match the
-    // reference node-wise — the hybrid cannot change what the key computes.
+    // Run the SAME graph through the local endgame and the forced
+    // distributed rounds: both must match the reference node-wise — the hybrid cannot change what the key computes.
     val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (5L, 1L), (6L, 5L),
                     (7L, 8L), (8L, 7L), (4L, 9L))
     val want = reference(edges, 0.85, 15)
-    for (thr <- Seq(1L << 20, 0L)) {
-      val got = PageRank.run(spark, edges.toDF("src", "dst"),
-          localThreshold = thr)
-        .as[(Long, Double)].collect().toMap
+    for (dist <- bothPaths) {
+      val got = onPath(dist)(PageRank.run(spark, edges.toDF("src", "dst"))
+        .as[(Long, Double)].collect().toMap)
       assert(got.keySet == want.keySet)
       got.foreach { case (v, r) =>
         assert(math.abs(r - want(v)) < 1e-9,
-          s"thr=$thr node $v: got $r want ${want(v)}")
+          s"dist=$dist node $v: got $r want ${want(v)}")
       }
       assert(math.abs(got.values.sum - 1.0) < 1e-9,
-        s"thr=$thr sum=${got.values.sum}")
+        s"dist=$dist sum=${got.values.sum}")
     }
   }
 
@@ -70,17 +68,17 @@ class PageRankSpec extends BaseSpec {
     val edges = Seq((1L, 2L, 9.0), (1L, 3L, 1.0), (2L, 1L, 2.0),
                     (3L, 1L, 0.5), (2L, 4L, 1.0))
     val want = referenceW(edges, 0.85, 15)
-    for (thr <- Seq(1L << 20, 0L)) {
-      val got = PageRank.run(spark, edges.toDF("src", "dst", "w"),
-          weighted = true, localThreshold = thr)
-        .as[(Long, Double)].collect().toMap
+    for (dist <- bothPaths) {
+      val got = onPath(dist)(PageRank.run(spark,
+          edges.toDF("src", "dst", "w"), weighted = true)
+        .as[(Long, Double)].collect().toMap)
       assert(got.keySet == want.keySet)
       got.foreach { case (v, r) =>
         assert(math.abs(r - want(v)) < 1e-9,
-          s"thr=$thr node $v: got $r want ${want(v)}")
+          s"dist=$dist node $v: got $r want ${want(v)}")
       }
       assert(math.abs(got.values.sum - 1.0) < 1e-9,
-        s"thr=$thr sum=${got.values.sum}")
+        s"dist=$dist sum=${got.values.sum}")
       assert(got(2L) > got(3L),
         s"the weight-9 neighbor must outrank the weight-1: $got")
     }
@@ -157,11 +155,11 @@ class PageRankSpec extends BaseSpec {
     }
     def measure(checkEvery: Int): Int = {
       jobs.set(0)
-      // localThreshold = 0 pins the DISTRIBUTED rounds — the cadence
-      // amortization is a distributed-path property; the default-threshold
-      // local endgame would trivialize both sides of the comparison.
-      val (df, iters) = PageRank.runCounted(spark, edges, iterations = 9,
-        tol = 0, checkEvery = checkEvery, localThreshold = 0L)
+      // The forced scope pins the DISTRIBUTED rounds — the cadence
+      // amortization is a distributed-path property; the default local
+      // endgame would trivialize both sides of the comparison.
+      val (df, iters) = onPath(true)(PageRank.runCounted(spark, edges,
+        iterations = 9, tol = 0, checkEvery = checkEvery))
       df.count() // materialize the final (already-checkpointed) frame
       assert(iters == 9)
       settled()

@@ -1190,7 +1190,7 @@ class PlanSpec extends BaseSpec {
     // (the exact-fallback round, a declared cross join, is excluded there
     // and must not be needed on the fixture). Round 19: the declared key
     // takes the driver-local endgame at spec SF, so the ring rounds are
-    // driven explicitly with localThreshold = 0 over an equivalent
+    // driven explicitly in the forced distributed scope over an equivalent
     // left/right pair — the distributed path's plan property stays
     // pinned (KnnJoinSpec pins the dual-path row equality).
     val df = SparkEntry.queries("q_geo_knn_join")(spark, sf)
@@ -1201,9 +1201,8 @@ class PlanSpec extends BaseSpec {
     val rightF = (1 to 40).map(i =>
         (i.toLong, (i * 7 % 170) / 2.0 - 42.0, (i * 13 % 360) - 180.0))
       .toDF("rid", "lat", "lon")
-    graft.operators.KnnJoin.knn(leftF, "id", "lat", "lon",
-      rightF, "rid", "lat", "lon", k = 3, cellDeg = 10.0,
-      localThreshold = 0L).count()
+    onPath(true)(graft.operators.KnnJoin.knn(leftF, "id", "lat", "lon",
+      rightF, "rid", "lat", "lon", k = 3, cellDeg = 10.0).count())
     val plans = graft.operators.KnnJoin.lastRingPlans
     assert(plans.nonEmpty, "at least one ring round must have run")
     plans.foreach { p =>

@@ -28,25 +28,26 @@ class PprSpec extends BaseSpec {
 
   private def run(edges: Seq[(Long, Long)], seeds: Seq[Long],
                   iters: Int = 15, tol: Double = 0.0,
-                  thr: Long = 1L << 20): Map[Long, Double] =
+                  dist: Boolean = false): Map[Long, Double] = onPath(dist) {
     Ppr.run(spark, edges.toDF("src", "dst"), seeds.toDF("id"),
-        iterations = iters, tol = tol, localThreshold = thr)
+        iterations = iters, tol = tol)
       .as[(Long, Double)].collect().toMap
+  }
 
   test("both paths' PPR equals the reference node-wise, mass sums to 1") {
-    // localThreshold 1<<20 = the local endgame, 0 = pure distributed
-    // rounds: the hybrid cannot change what the operator computes.
+    // the local endgame and the forced distributed rounds: the hybrid
+    // cannot change what the operator computes.
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
                     (5L, 4L), (6L, 1L), (2L, 6L), (4L, 7L)) // 7 dangles
     val exp = reference(edges, Set(1L, 6L), 0.85, 15)
-    for (thr <- Seq(1L << 20, 0L)) {
-      val got = run(edges, Seq(1L, 6L), thr = thr)
+    for (dist <- bothPaths) {
+      val got = run(edges, Seq(1L, 6L), dist = dist)
       assert(got.keySet == exp.keySet)
       got.foreach { case (v, r) =>
-        assert(math.abs(r - exp(v)) < 1e-9, s"thr=$thr node $v: $r vs ${exp(v)}")
+        assert(math.abs(r - exp(v)) < 1e-9, s"dist=$dist node $v: $r vs ${exp(v)}")
       }
       assert(math.abs(got.values.sum - 1.0) < 1e-9,
-        s"thr=$thr Σrank = ${got.values.sum}")
+        s"dist=$dist Σrank = ${got.values.sum}")
     }
   }
 

@@ -57,11 +57,10 @@ class SccSpec extends BaseSpec {
   }
 
   private def runScc(edges: Seq[(Long, Long)],
-                     thr: Long = 2000L): Map[Long, Long] = {
+                     dist: Boolean = false): Map[Long, Long] = onPath(dist) {
     val e = edges.toDF("src", "dst")
     val v = e.select($"src".as("id")).unionAll(e.select($"dst".as("id"))).distinct()
-    graft.operators.Scc.run(spark, v, e, localThreshold = thr)
-      .as[(Long, Long)].collect().toMap
+    graft.operators.Scc.run(spark, v, e).as[(Long, Long)].collect().toMap
   }
 
   test("planted shapes: two cycles bridged one-way, a DAG, nested cycles") {
@@ -70,10 +69,10 @@ class SccSpec extends BaseSpec {
     val bridged = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 10L),
       (10L, 11L), (11L, 12L), (12L, 10L))
     // both the driver-local bitset closure and the distributed rounds
-    for (thr <- Seq(2000L, 0L)) {
-      assert(runScc(bridged, thr) == tarjan(bridged, Set(1L, 2L, 3L, 10L, 11L, 12L)),
-        s"thr=$thr")
-      assert(runScc(bridged, thr).values.toSet.size == 2, s"thr=$thr")
+    for (dist <- bothPaths) {
+      assert(runScc(bridged, dist) == tarjan(bridged, Set(1L, 2L, 3L, 10L, 11L, 12L)),
+        s"dist=$dist")
+      assert(runScc(bridged, dist).values.toSet.size == 2, s"dist=$dist")
     }
     // a pure DAG: every vertex its own singleton SCC
     val dag = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L))
@@ -110,6 +109,31 @@ class SccSpec extends BaseSpec {
     // cells inside one SCC are mutually reachable by construction of the
     // fixture's formula-derived hops; at least one multi-cell SCC exists
     assert(wantHist.keys.max >= 2L, s"degenerate fixture graph: $wantHist")
+  }
+
+  test("an edge list over the budget takes the distributed closure, whatever |V|") {
+    // Six vertices pass the local vertex cap, but repeating the bridged
+    // cycles' seven edges pushes the list one row past the budget: the
+    // edges must pass their own count gate before any collect.
+    val base = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 10L),
+      (10L, 11L), (11L, 12L), (12L, 10L))
+    def pick(xs: Seq[Long]) =
+      element_at(typedLit(xs), ($"id" % base.size.toLong + 1L).cast("int"))
+    val e = spark.range(graft.operators.Endgame.Budget + 1)
+      .select(pick(base.map(_._1)).as("src"), pick(base.map(_._2)).as("dst"))
+    val verts = base.flatMap(p => Seq(p._1, p._2)).toSet
+    val v = verts.toSeq.toDF("id")
+    val gated = graft.operators.Scc.run(spark, v, e)
+    // the driver-local kernel returns a LocalRelation; the distributed
+    // closure reads its checkpointed pair frame
+    assert(gated.queryExecution.analyzed.collectLeaves()
+        .exists(!_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
+      "an over-budget edge list was collected to the driver")
+    val got = gated.as[(Long, Long)].collect().toMap
+    val forced = onPath(true)(graft.operators.Scc.run(spark, v, e)
+      .as[(Long, Long)].collect().toMap)
+    assert(got == forced)
+    assert(got == tarjan(base, verts))
   }
 
   test("the |V| closure bound fails loudly, not with an executor OOM") {

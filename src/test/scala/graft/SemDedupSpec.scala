@@ -43,13 +43,13 @@ class SemDedupSpec extends BaseSpec {
     assert(out == List((1L, 1L, true), (2L, 2L, true)), out.toString)
   }
 
-  test("local endgame == distributed path, exact rows (thr in {default, 0})") {
+  test("local endgame == distributed path, exact rows") {
     val (assignedDf, centsDf) =
       AnnIVF.assignments(spark, Tables(spark, sf, "embeddings"), nlist = 16)
-    val both = Seq(1L << 20, 0L).map { thr =>
-      SemDedup.run(spark, assignedDf, centsDf, tauCos = 0.4, localThreshold = thr)
+    val both = bothPaths.map { dist =>
+      onPath(dist)(SemDedup.run(spark, assignedDf, centsDf, tauCos = 0.4)
         .select($"vec_id", $"cell", $"comp", $"ccos", $"keep")
-        .as[(Long, Int, Long, Double, Boolean)].collect().sortBy(_._1).toList
+        .as[(Long, Int, Long, Double, Boolean)].collect()).sortBy(_._1).toList
     }
     assert(both(0).nonEmpty)
     // ccos routes through the one shared CosineSim.compute kernel on both

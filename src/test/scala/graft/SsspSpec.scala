@@ -9,11 +9,11 @@ class SsspSpec extends BaseSpec {
   import spark.implicits._
 
   private def run(es: Seq[(Long, Long, Double)], source: Long,
-                  maxIter: Int = 20, thr: Long = 1L << 20): Map[Long, Double] =
-    Sssp.run(spark,
-        es.toDF("src", "dst", "w"), source, maxIter = maxIter,
-        localThreshold = thr)
-      .as[(Long, Double)].collect().toMap
+                  maxIter: Int = 20, dist: Boolean = false): Map[Long, Double] =
+    onPath(dist) {
+      Sssp.run(spark, es.toDF("src", "dst", "w"), source, maxIter = maxIter)
+        .as[(Long, Double)].collect().toMap
+    }
 
   /** Textbook Dijkstra over an adjacency map. */
   private def dijkstra(es: Seq[(Long, Long, Double)], source: Long): Map[Long, Double] = {
@@ -44,16 +44,16 @@ class SsspSpec extends BaseSpec {
          (rnd.nextInt(9) + 1) / 4.0)
       }.filter { case (a, b, _) => a != b }
       val want = dijkstra(es, 0L)
-      // both the driver-local endgame and the distributed rounds (thr = 0)
-      for (thr <- Seq(1L << 20, 0L)) {
-        val got = run(es, 0L, thr = thr)
+      // both the driver-local endgame and the distributed rounds
+      for (dist <- bothPaths) {
+        val got = run(es, 0L, dist = dist)
         assert(got.keySet == want.keySet,
-          s"trial $trial thr=$thr reachable sets differ: " +
+          s"trial $trial dist=$dist reachable sets differ: " +
             s"extra=${got.keySet -- want.keySet} " +
             s"missing=${want.keySet -- got.keySet}")
         for ((v, d) <- want)
           assert(math.abs(got(v) - d) < 1e-12,
-            s"trial $trial thr=$thr vertex $v: ${got(v)} vs $d")
+            s"trial $trial dist=$dist vertex $v: ${got(v)} vs $d")
       }
     }
   }

@@ -60,19 +60,20 @@ class StDbscanSpec extends BaseSpec {
   }
 
   test("distributed ST-DBSCAN equals in-memory reference exactly") {
-    // both the driver-local role tail (default) and the fully
-    // distributed tail (thr = 0) must equal the reference exactly
-    for (seed <- Seq(1L, 42L); thr <- Seq(1L << 20, 0L)) {
+    // both the driver-local role tail (default) and the forced fully
+    // distributed tail must equal the reference exactly
+    for (seed <- Seq(1L, 42L); dist <- bothPaths) {
       val pts = genPoints(300, seed)
       val df = pts.toDF("id", "x", "y", "t")
-      val got = StDbscan.run(spark, df, eps = 0.5, epsT = 10.0, minPts = 4,
-          localThreshold = thr)
-        .as[(Long, String, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+      val got = onPath(dist) {
+        StDbscan.run(spark, df, eps = 0.5, epsT = 10.0, minPts = 4)
+          .as[(Long, String, Long)].collect()
+      }.map(r => r._1 -> (r._2, r._3)).toMap
       val expected = brute(pts, 0.5, 10.0, 4)
       assert(got.size == expected.size)
       val diffs = expected.keys.filter(k => got(k) != expected(k)).take(5)
       assert(diffs.isEmpty,
-        s"seed=$seed thr=$thr mismatches: ${diffs.map(k => s"$k got=${got(k)} exp=${expected(k)}")}")
+        s"seed=$seed dist=$dist mismatches: ${diffs.map(k => s"$k got=${got(k)} exp=${expected(k)}")}")
     }
   }
 

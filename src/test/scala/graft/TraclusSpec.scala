@@ -169,15 +169,15 @@ class TraclusSpec extends BaseSpec {
     val want = refCluster(segs, eps, minLns = 3, minUsers = 1)
 
     val df = segs.map(s => (s._1, s._2, s._3.toSeq)).toDF("sid", "user_id", "seg")
-    // both the driver-local role tail (default threshold) and the fully
-    // distributed tail (thr = 0) must equal the reference exactly
-    for (thr <- Seq(1L << 20, 0L)) {
-      val got = graft.operators.Traclus.run(spark, df, eps, minLns = 3,
-          localThreshold = thr)
-        .select($"sid", $"role", $"cluster").as[(Long, String, Long)].collect()
-        .map(r => r._1 -> (r._2, r._3)).toMap
+    // both the driver-local role tail (default) and the forced fully
+    // distributed tail must equal the reference exactly
+    for (dist <- bothPaths) {
+      val got = onPath(dist) {
+        graft.operators.Traclus.run(spark, df, eps, minLns = 3)
+          .select($"sid", $"role", $"cluster").as[(Long, String, Long)].collect()
+      }.map(r => r._1 -> (r._2, r._3)).toMap
       assert(got == want,
-        s"thr=$thr pipeline != reference; diff = ${(got.toSet diff want.toSet).take(5)}")
+        s"dist=$dist pipeline != reference; diff = ${(got.toSet diff want.toSet).take(5)}")
     }
   }
 
