@@ -1,35 +1,21 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Canonical installation entry point (SURVEY §2.12 / §4): start any
   * session with `spark.sql.extensions=graft.GraftExtensions` and the
-  * library's Catalyst surface is present without per-query `register`
-  * calls — the custom scalar expressions resolve from SQL text and the
-  * geo-radius bbox rewrite runs in the optimizer.
+  * library's Catalyst surface is present — every [[functions.Sql]] name
+  * resolves from SQL text and the geo-radius bbox and Levenshtein banding
+  * rewrites run in the optimizer.
   *
-  * (The per-query `register`/`install` helpers stay: the driver contract
-  * hands us an already-built session, where runtime injection via
-  * `functionRegistry` / `experimental.extraOptimizations` is the only
-  * hook. Both paths register the same objects, so they compose.) */
+  * Scala callers need neither: the Column helpers build their expressions
+  * directly. A session built without the extension gets the same SQL names
+  * from [[functions.Sql.install]] and the rewrites from the rules'
+  * `install` helpers. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, clazz: Class[_]) =
-    new ExpressionInfo(clazz.getCanonicalName, name)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.HaversineRadiusPruning)
     ext.injectOptimizerRule(_ => graft.plans.LevenshteinBanding)
-    ext.injectFunction((FunctionIdentifier("haversine_km"),
-      info("haversine_km", classOf[functions.HaversineDist]),
-      exprs => functions.HaversineDist(exprs(0), exprs(1), exprs(2), exprs(3))))
-    ext.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", classOf[functions.CosineSim]),
-      exprs => functions.CosineSim(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("euclidean_dist"),
-      info("euclidean_dist", classOf[functions.EuclideanDist]),
-      exprs => functions.EuclideanDist(exprs(0), exprs(1))))
+    functions.Sql.descriptions.foreach(ext.injectFunction)
   }
 }

@@ -381,7 +381,8 @@ object ScaleProbe {
               col("track").as("tb"), col("pb").as("sb"))
           lhs.join(broadcast(rhs), col("u1") < col("u2"))
             .withColumn("n_edits",
-              graft.functions.TrajSketchFns.edrSparse(col("sa"), col("ta"), col("sb"), col("tb")))
+              graft.functions.TrajSketchFns.edrSparse(col("sa"), col("ta"), col("sb"), col("tb"),
+                graft.queries.Trajectory.MatchEpsKm))
             .withColumn("edr", round(col("n_edits") * lit(3.0) /
               greatest(size(col("ta")), size(col("tb"))), 4))
             .select(col("u1"), col("u2"), col("n_a"), col("n_b"), col("n_edits"), col("edr"))

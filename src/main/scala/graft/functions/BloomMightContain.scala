@@ -2,8 +2,10 @@ package graft.functions
 
 import java.io.ByteArrayInputStream
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -52,17 +54,12 @@ case class BloomMightContainLong(child: Expression, bloomBytes: Array[Byte])
 }
 
 object BloomMightContainLong {
-  /** Register a probe function for THIS filter (the bytes are an operator
-    * constant baked in at registration, same pattern as [[ProjectionLSH]]'s
-    * parameterized registrations); `name` lets several filters coexist in
-    * one session. */
-  def register(spark: org.apache.spark.sql.SparkSession, bloom: BloomFilter,
-               name: String): Unit = {
+  /** The probe predicate for THIS filter (the bytes are an operator
+    * constant, same pattern as [[ProjectionLSH]]'s parameters), so several
+    * filters coexist in one plan. */
+  def mightContain(key: Column, bloom: BloomFilter): Column = {
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
-    val bytes = bos.toByteArray
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => BloomMightContainLong(exprs(0), bytes), "scala_udf")
+    column(BloomMightContainLong(expression(key), bos.toByteArray))
   }
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Convex hull statistics of a point set (SURVEY §2.10 extension,
@@ -118,12 +118,5 @@ object HullStats {
     new GenericArrayData(Array(h.toDouble, math.abs(area2) / 2.0, perim))
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "hull_stats", exprs => HullStats(exprs(0)), "scala_udf")
-  }
-
-  def hullStats(points: Column): Column = call_function("hull_stats", points)
+  def hullStats(points: Column): Column = column(HullStats(expression(points)))
 }

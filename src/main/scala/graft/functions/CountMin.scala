@@ -2,11 +2,12 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.types._
 
@@ -29,7 +30,7 @@ import org.apache.spark.sql.types._
   * the classical bounds true ≤ est ≤ true + εN (ε = e/width with
   * probability 1−(1/e)^depth per query; Cormode & Muthukrishnan 2005).
   *
-  * The query-term list is baked at registration (the `k` pattern of
+  * The query-term list is a constructor argument (the `k` pattern of
   * `mg_top_terms`/`topk_pairs`): eval emits one (term, est, n) row per
   * query term, n = the exact stream size the sketch absorbed, so every
   * estimate ships beside the N its error bound is relative to.
@@ -137,12 +138,8 @@ final class CmsBuffer(depth: Int, width: Int) {
 }
 
 object CmsCounts {
-  /** Register `cms_counts(term)` with the sketch shape and query-term list
-    * baked in at registration (same pattern as `mg_top_terms`). */
-  def register(spark: SparkSession, depth: Int, width: Int,
-               queryTerms: Seq[String]): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "cms_counts", exprs => CmsCounts(exprs(0), depth, width, queryTerms),
-        "scala_udf")
+  /** `cms_counts(term)` with the sketch shape and query-term list as
+    * operator constants (same pattern as `mg_top_terms`). */
+  def cmsCounts(term: Column, depth: Int, width: Int, queryTerms: Seq[String]): Column =
+    column(CmsCounts(expression(term), depth, width, queryTerms))
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Great-circle distance in km as a native Catalyst expression
@@ -61,16 +61,9 @@ object HaversineDist {
     2.0 * EarthRadiusKm * math.asin(math.sqrt(math.min(a, 1.0)))
   }
 
-  /** Register in the session's function registry, then call as a Column. */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "haversine_km",
-        exprs => HaversineDist(exprs(0), exprs(1), exprs(2), exprs(3)),
-        "scala_udf")
-
   def haversineKm(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
-    call_function("haversine_km", lat1, lon1, lat2, lon2)
+    column(HaversineDist(expression(lat1), expression(lon1),
+      expression(lat2), expression(lon2)))
 
   /** The identical formula as DuckDB SQL text (oracle side). */
   def oracleSql(lat1: String, lon1: String, lat2: String, lon2: String): String =

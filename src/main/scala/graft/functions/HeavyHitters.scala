@@ -4,11 +4,12 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.types._
 
@@ -147,10 +148,8 @@ final class MgBuffer(k: Int) {
 }
 
 object MgTopTerms {
-  /** Register `mg_top_terms(term)` for a fixed k (operator constant baked
-    * in at registration, same pattern as `topk_pairs`). */
-  def register(spark: SparkSession, k: Int): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "mg_top_terms", exprs => MgTopTerms(exprs(0), k), "scala_udf")
+  /** `mg_top_terms(term)` for a fixed k (an operator constant, same
+    * pattern as `topk_pairs`). */
+  def mgTopTerms(term: Column, k: Int): Column =
+    column(MgTopTerms(expression(term), k))
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -106,14 +106,6 @@ object JaroWinklerSim {
     } else jaro
   }
 
-  /** Register in the session's function registry, then call as a Column. */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "jaro_winkler",
-        exprs => JaroWinklerSim(exprs(0), exprs(1)),
-        "scala_udf")
-
   def jaroWinkler(a: Column, b: Column): Column =
-    call_function("jaro_winkler", a, b)
+    column(JaroWinklerSim(expression(a), expression(b)))
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** HMM map-matching of a noisy fix sequence onto the 0.1° lattice road
@@ -139,13 +140,6 @@ object MapMatchExpr {
     new GenericArrayData(out)
   }
 
-  def register(spark: SparkSession, sigmaKm: Double, betaKm: Double): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "map_match", exprs => MapMatchExpr(exprs(0), sigmaKm, betaKm), "scala_udf")
-  }
-
-  def mapMatch(track: Column): Column =
-    org.apache.spark.sql.functions.call_function("map_match", track)
+  def mapMatch(track: Column, sigmaKm: Double, betaKm: Double): Column =
+    column(MapMatchExpr(expression(track), sigmaKm, betaKm))
 }

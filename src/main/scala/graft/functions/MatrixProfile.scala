@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Matrix profile of a time series (SURVEY §2.11b extension,
@@ -215,21 +216,12 @@ object MatrixProfileExpr {
     new GenericArrayData(out)
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "matrix_profile", exprs => MatrixProfileExpr(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "matrix_profile_block",
-      exprs => MatrixProfileBlockExpr(exprs(0), exprs(1), exprs(2), exprs(3)), "scala_udf")
-  }
-
   def matrixProfile(series: Column, m: Column): Column =
-    org.apache.spark.sql.functions.call_function("matrix_profile", series, m)
+    column(MatrixProfileExpr(expression(series), expression(m)))
 
   def matrixProfileBlock(series: Column, m: Column, k0: Column, k1: Column): Column =
-    org.apache.spark.sql.functions.call_function("matrix_profile_block", series, m, k0, k1)
+    column(MatrixProfileBlockExpr(expression(series), expression(m),
+      expression(k0), expression(k1)))
 }
 
 /** Diagonal-block partial matrix profile — the DISTRIBUTED exact tier the

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Exact euclidean distance of two ARRAY<DOUBLE> columns — the verification
@@ -101,20 +101,11 @@ object BrpBuckets {
 }
 
 object ProjectionLSH {
-  /** Registry names carry the LSH parameters baked in at registration time
-    * (they are operator constants, not per-row data). `name` lets callers
-    * register several parameterizations side by side in one session. */
-  def register(spark: SparkSession, numTables: Int, bucketLen: Double,
-               seed: Long, name: String = "brp_buckets"): Unit = {
-    val ss = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    ss.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BrpBuckets(exprs(0), numTables, bucketLen, seed),
-      "scala_udf")
-    ss.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "euclidean_dist", exprs => EuclideanDist(exprs(0), exprs(1)), "scala_udf")
-  }
+  /** The LSH parameters are operator constants, not per-row data, so they
+    * ride the expression: several parameterizations coexist in one plan. */
+  def brpBuckets(v: Column, numTables: Int, bucketLen: Double, seed: Long): Column =
+    column(BrpBuckets(expression(v), numTables, bucketLen, seed))
 
-  def brpBuckets(v: Column): Column = call_function("brp_buckets", v)
   def euclideanDist(a: Column, b: Column): Column =
-    call_function("euclidean_dist", a, b)
+    column(EuclideanDist(expression(a), expression(b)))
 }

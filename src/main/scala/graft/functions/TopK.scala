@@ -2,11 +2,12 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Bounded-heap grouped top-k as a `TypedImperativeAggregate` — the
@@ -128,10 +129,8 @@ final class TopKBuffer(k: Int) {
 }
 
 object TopKPairs {
-  /** Register `topk_pairs(score, id)` for a fixed k (an operator constant,
-    * baked in at registration like the ProjectionLSH parameters). */
-  def register(spark: SparkSession, k: Int): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "topk_pairs", exprs => TopKPairs(exprs(0), exprs(1), k), "scala_udf")
+  /** `topk_pairs(score, id)` for a fixed k (an operator constant, passed
+    * like the ProjectionLSH parameters). */
+  def topKPairs(score: Column, id: Column, k: Int): Column =
+    column(TopKPairs(expression(score), expression(id), k))
 }

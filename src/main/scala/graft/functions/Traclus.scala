@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** TRACLUS kernels (SURVEY §2.10 extension, `m_traj_traclus`): the two
@@ -338,21 +338,12 @@ object TraclusRep {
 }
 
 object TraclusFns {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "traclus_partition", exprs => TraclusPartition(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "traclus_dist", exprs => TraclusDist(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "traclus_rep", exprs => TraclusRep(exprs(0), exprs(1), exprs(2)), "scala_udf")
-  }
+  def traclusPartition(track: Column): Column =
+    column(TraclusPartition(expression(track)))
 
-  def traclusPartition(track: Column): Column = call_function("traclus_partition", track)
-
-  def traclusDist(a: Column, b: Column): Column = call_function("traclus_dist", a, b)
+  def traclusDist(a: Column, b: Column): Column =
+    column(TraclusDist(expression(a), expression(b)))
 
   def traclusRep(segs: Column, minLns: Column, gammaKm: Column): Column =
-    call_function("traclus_rep", segs, minLns, gammaKm)
+    column(TraclusRep(expression(segs), expression(minLns), expression(gammaKm)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Track-level trajectory similarity kernels (SURVEY §2.10 extension,
@@ -450,36 +450,21 @@ object HausdorffKm {
 }
 
 object TrajSim {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "frechet_km", exprs => FrechetDist(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "lcss_matches", exprs => LcssMatches(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "edr_dist", exprs => EdrDist(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "hausdorff_km", exprs => HausdorffKm(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "frechet_km_capped", exprs => FrechetCapped(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "hausdorff_km_capped", exprs => HausdorffCapped(exprs(0), exprs(1), exprs(2)), "scala_udf")
-  }
-
-  def frechetKm(a: Column, b: Column): Column = call_function("frechet_km", a, b)
+  def frechetKm(a: Column, b: Column): Column =
+    column(FrechetDist(expression(a), expression(b)))
 
   def lcssMatches(a: Column, b: Column, epsKm: Column): Column =
-    call_function("lcss_matches", a, b, epsKm)
+    column(LcssMatches(expression(a), expression(b), expression(epsKm)))
 
   def edrDist(a: Column, b: Column, epsKm: Column): Column =
-    call_function("edr_dist", a, b, epsKm)
+    column(EdrDist(expression(a), expression(b), expression(epsKm)))
 
-  def hausdorffKm(a: Column, b: Column): Column = call_function("hausdorff_km", a, b)
+  def hausdorffKm(a: Column, b: Column): Column =
+    column(HausdorffKm(expression(a), expression(b)))
 
   def frechetKmCapped(a: Column, b: Column, capKm: Column): Column =
-    call_function("frechet_km_capped", a, b, capKm)
+    column(FrechetCapped(expression(a), expression(b), expression(capKm)))
 
   def hausdorffKmCapped(a: Column, b: Column, capKm: Column): Column =
-    call_function("hausdorff_km_capped", a, b, capKm)
+    column(HausdorffCapped(expression(a), expression(b), expression(capKm)))
 }

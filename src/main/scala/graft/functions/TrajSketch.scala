@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 /** Cell-sketch kernels that make the track-DP family scale past the U²·cap²
@@ -459,9 +459,9 @@ object TrajSketch {
   }
 }
 
-/** lcss_sparse(pbA, trackA, pbB, trackB) with the per-key eps baked by the
+/** lcss_sparse(pbA, trackA, pbB, trackB) with the per-key eps passed by the
   * caller via [[TrajSketchFns]] (the eps is a key-level constant, so it
-  * rides the registered closure instead of a fifth child). */
+  * rides as a constructor argument instead of a fifth child). */
 case class LcssSparseExpr(first: Expression, second: Expression,
                           third: Expression, fourth: Expression, epsKm: Double)
   extends QuaternaryExpression
@@ -604,39 +604,21 @@ case class CellOverlapExpr(left: Expression, right: Expression)
 }
 
 object TrajSketchFns {
-  /** eps-binding registration: the sparse names carry their key's eps
-    * constant (the function registry passes only column expressions). */
-  def register(spark: SparkSession, epsKm: Double): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("lcss_sparse",
-      exprs => LcssSparseExpr(exprs(0), exprs(1), exprs(2), exprs(3), epsKm), "scala_udf")
-    reg.createOrReplaceTempFunction("edr_sparse",
-      exprs => EdrSparseExpr(exprs(0), exprs(1), exprs(2), exprs(3), epsKm), "scala_udf")
-    reg.createOrReplaceTempFunction("cell_overlap",
-      exprs => CellOverlapExpr(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("traj_near_counts",
-      exprs => NearCountsExpr(exprs(0), exprs(1), exprs(2), exprs(3)), "scala_udf")
-    reg.createOrReplaceTempFunction("dilate_cells",
-      exprs => DilateCellsExpr(exprs(0), epsKm), "scala_udf")
-    reg.createOrReplaceTempFunction("lcss_ub",
-      exprs => LcssUbExpr(exprs(0), exprs(1), exprs(2), exprs(3)), "scala_udf")
-  }
+  def lcssSparse(pa: Column, a: Column, pb: Column, b: Column, epsKm: Double): Column =
+    column(LcssSparseExpr(expression(pa), expression(a), expression(pb), expression(b), epsKm))
 
-  def lcssSparse(pa: Column, a: Column, pb: Column, b: Column): Column =
-    call_function("lcss_sparse", pa, a, pb, b)
-
-  def edrSparse(pa: Column, a: Column, pb: Column, b: Column): Column =
-    call_function("edr_sparse", pa, a, pb, b)
+  def edrSparse(pa: Column, a: Column, pb: Column, b: Column, epsKm: Double): Column =
+    column(EdrSparseExpr(expression(pa), expression(a), expression(pb), expression(b), epsKm))
 
   def cellOverlap(ca: Column, cb: Column): Column =
-    call_function("cell_overlap", ca, cb)
+    column(CellOverlapExpr(expression(ca), expression(cb)))
 
   def nearCounts(pa: Column, dilB: Column, pb: Column, dilA: Column): Column =
-    call_function("traj_near_counts", pa, dilB, pb, dilA)
+    column(NearCountsExpr(expression(pa), expression(dilB), expression(pb), expression(dilA)))
 
-  def dilateCells(cells: Column): Column = call_function("dilate_cells", cells)
+  def dilateCells(cells: Column, epsKm: Double): Column =
+    column(DilateCellsExpr(expression(cells), epsKm))
 
   def lcssUb(pa: Column, dilB: Column, pb: Column, dilA: Column): Column =
-    call_function("lcss_ub", pa, dilB, pb, dilA)
+    column(LcssUbExpr(expression(pa), expression(dilB), expression(pb), expression(dilA)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Cosine similarity of two ARRAY<DOUBLE> columns as a native expression.
@@ -71,10 +71,6 @@ object CosineSim {
 }
 
 object VectorOps {
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
-
-  def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
+  def cosineSim(a: Column, b: Column): Column =
+    column(CosineSim(expression(a), expression(b)))
 }

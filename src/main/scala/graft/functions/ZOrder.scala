@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Z-order (Morton) key as a native Catalyst expression (SURVEY §2.12
@@ -60,12 +60,6 @@ object ZOrderKey {
   def interleave(a: Long, b: Long): Long =
     spread(a) | (spread(b) << 1)
 
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "zorder_key",
-        exprs => ZOrderKey(exprs(0), exprs(1)),
-        "scala_udf")
-
-  def zorderKey(a: Column, b: Column): Column = call_function("zorder_key", a, b)
+  def zorderKey(a: Column, b: Column): Column =
+    column(ZOrderKey(expression(a), expression(b)))
 }

@@ -18,8 +18,6 @@ import org.apache.spark.sql.functions._
   * for recall against the exact brute-force top-k (`q_sim_knn_vec`). */
 object AnnIVF {
 
-  private def cosExpr(a: String, b: String): String = s"cosine_sim($a, $b)"
-
   /** Coarse quantizer memo, keyed on the MEMOIZED table plan (graft.Tables
     * returns one DataFrame object per (session, sfDir, table), so object
     * identity is the right key — a re-created embeddings DataFrame misses
@@ -49,7 +47,6 @@ object AnnIVF {
   def assignments(spark: SparkSession, embeddings: DataFrame, nlist: Int)
       : (DataFrame, DataFrame) = {
     import spark.implicits._
-    graft.functions.VectorOps.register(spark)
     kmMemo.getOrCompute(spark, (embeddings, nlist)) {
       val emb = embeddings
         .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
@@ -99,14 +96,13 @@ object AnnIVF {
                          centroids: DataFrame, probeIds: Seq[Long],
                          nprobe: Int): DataFrame = {
     import spark.implicits._
-    graft.functions.VectorOps.register(spark)
     val probes = assigned.filter($"vec_id".isin(probeIds: _*))
       .select($"vec_id".as("probe_id"), $"v".as("pv"))
 
     // nprobe closest cells per probe (tiny: |probes| × nlist).
     val wc = Window.partitionBy($"probe_id").orderBy($"cdist".desc, $"cell")
     probes.crossJoin(broadcast(centroids))
-      .withColumn("cdist", expr(cosExpr("pv", "cv")))
+      .withColumn("cdist", graft.functions.VectorOps.cosineSim($"pv", $"cv"))
       .withColumn("rn", row_number().over(wc)).filter($"rn" <= nprobe)
       .select($"probe_id", $"pv", $"cell")
   }
@@ -153,7 +149,7 @@ object AnnIVF {
     val wk = Window.partitionBy($"probe_id").orderBy($"cos".desc, $"vec_id")
     probed.join(db, Seq("cell"))
       .filter($"vec_id" =!= $"probe_id")
-      .withColumn("cos", round(expr(cosExpr("pv", "v")), 4))
+      .withColumn("cos", round(graft.functions.VectorOps.cosineSim($"pv", $"v"), 4))
       .withColumn("rank", row_number().over(wk).cast("long"))
       .filter($"rank" <= k)
       .select($"probe_id", $"rank", $"vec_id", $"cos")

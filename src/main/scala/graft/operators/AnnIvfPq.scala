@@ -185,7 +185,6 @@ object AnnIvfPq {
                probeIds: Seq[Long], k: Int, nprobe: Int, rerank: Int,
                pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     import spark.implicits._
-    graft.functions.VectorOps.register(spark)
     val m = books.length
     val sub = books(0)(0).length
 
@@ -241,7 +240,7 @@ object AnnIvfPq {
     val wk = Window.partitionBy($"probe_id").orderBy($"cos".desc, $"vec_id")
     cands.join(codes.select($"vec_id", $"v"), Seq("vec_id"))
       .join(broadcast(probes), Seq("probe_id"))
-      .withColumn("cos", expr("cosine_sim(v, pv)"))
+      .withColumn("cos", graft.functions.VectorOps.cosineSim($"v", $"pv"))
       .withColumn("rn", row_number().over(wk)).filter($"rn" <= k)
       .select($"probe_id", $"vec_id", round($"cos", 6).as("cos"))
       .orderBy($"probe_id", $"rn")

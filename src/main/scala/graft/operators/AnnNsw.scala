@@ -44,8 +44,6 @@ object AnnNsw {
   private val graphMemo =
     new graft.SessionMemo[(DataFrame, Int, Int), (DataFrame, DataFrame, DataFrame)]
 
-  private def cosExpr(a: String, b: String): String = s"cosine_sim($a, $b)"
-
   /** Squared euclidean between two double arrays (codegen HOF — only used
     * against the nlist-row broadcast centroid frame). */
   private def eDistSq(a: String, b: String): String =
@@ -57,7 +55,6 @@ object AnnNsw {
   def buildGraph(spark: SparkSession, embeddings: DataFrame, m: Int,
                  nlist: Int): (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
-    graft.functions.VectorOps.register(spark)
     graphMemo.getOrCompute(spark, (embeddings, m, nlist)) {
       val emb = embeddings
         .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
@@ -88,7 +85,7 @@ object AnnNsw {
       val wn = Window.partitionBy($"src").orderBy($"cos".desc, $"dst")
       val adjacency = a.join(b, Seq("cell"))
         .filter($"src" =!= $"dst")
-        .select($"src", $"dst", expr(cosExpr("sv", "dv")).as("cos"))
+        .select($"src", $"dst", graft.functions.VectorOps.cosineSim($"sv", $"dv").as("cos"))
         .distinct()
         .withColumn("rn", row_number().over(wn))
         .filter($"rn" <= m)
@@ -137,8 +134,6 @@ object AnnNsw {
                rounds: Int,
                pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     import spark.implicits._
-    graft.functions.VectorOps.register(spark)
-
     // [[Endgame]]: the beam walk is probe-shaped — each of its `rounds` is
     // a broadcast join + window + checkpoint whose cost is fixed job
     // overhead on a small graph — so below the budget the SAME walk runs
@@ -234,7 +229,7 @@ object AnnNsw {
     cands
       .join(vecs, Seq("vec_id"))
       .join(broadcast(probes), Seq("probe_id"))
-      .withColumn("cos", expr(cosExpr("pv", "v")))
+      .withColumn("cos", graft.functions.VectorOps.cosineSim($"pv", $"v"))
       .withColumn("rn", row_number().over(wb))
       .filter($"rn" <= width)
       .select($"probe_id", $"vec_id", $"cos")
@@ -252,7 +247,6 @@ object AnnNsw {
                                   trackVisited: Boolean)
       : (DataFrame, DataFrame) = {
     import spark.implicits._
-    graft.functions.VectorOps.register(spark)
     // Round 0: every probe scores all cell medoids (full-coverage entry).
     val seedCands = probes.select($"probe_id").crossJoin(broadcast(seeds))
     var beam = scoreTop(vecs, probes, seedCands, ef)

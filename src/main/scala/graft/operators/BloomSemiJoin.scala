@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -31,55 +31,40 @@ import org.apache.spark.util.sketch.BloomFilter
   * rebuild the same logical build side (a fresh `.filter(...)` chain per
   * invocation — how q_join_bloom and the bench's min-of-two call it) still
   * hit, because canonicalized plans compare structurally, not by object
-  * identity. The temp-function registration happens once inside the same
-  * memo compute, so repeated calls neither re-run the build aggregate nor
-  * leak a fresh `bloom_mc_N` registration per call.
+  * identity, so repeated calls never re-run the build aggregate.
   */
 object BloomSemiJoin {
 
   private val filterMemo =
-    new graft.SessionMemo[(LogicalPlan, String, Double), (BloomFilter, String)]
-  private val nameCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Bloom over `build(buildKey)` (long-typed) plus its registered
-    * `bloom_mc_N` temp-function name, `expectedItems` sized by a count of
-    * the build side — two driver actions over the SMALL side only, paid
-    * once per distinct (build plan, key, fpp) per session. */
-  private def filterAndFn(spark: SparkSession, build: DataFrame, buildKey: String,
-                          fpp: Double): (BloomFilter, String) =
-    filterMemo.getOrCompute(spark,
-        (build.queryExecution.analyzed.canonicalized, buildKey, fpp)) {
-      val n = math.max(build.count(), 1L)
-      val bloom = build.stat.bloomFilter(buildKey, n, fpp)
-      val fn = s"bloom_mc_${nameCounter.incrementAndGet()}"
-      graft.functions.BloomMightContainLong.register(spark, bloom, fn)
-      (bloom, fn)
-    }
+    new graft.SessionMemo[(LogicalPlan, String, Double), BloomFilter]
 
   /** Visible for tests: live memo entries for one session — pins that
     * value-equal build plans share ONE entry across fresh constructions. */
   private[graft] def memoSizeFor(spark: SparkSession): Int =
     filterMemo.sizeFor(spark)
 
-  /** The memoized Bloom filter alone (for fpp measurements in tests). */
+  /** Bloom over `build(buildKey)` (long-typed), `expectedItems` sized by a
+    * count of the build side — two driver actions over the SMALL side only,
+    * paid once per distinct (build plan, key, fpp) per session. */
   def buildFilter(spark: SparkSession, build: DataFrame, buildKey: String,
                   fpp: Double): BloomFilter =
-    filterAndFn(spark, build, buildKey, fpp)._1
+    filterMemo.getOrCompute(spark,
+        (build.queryExecution.analyzed.canonicalized, buildKey, fpp)) {
+      val n = math.max(build.count(), 1L)
+      build.stat.bloomFilter(buildKey, n, fpp)
+    }
 
   /** `probe` rows whose `probeKey` appears in `build(buildKey)` — exact
     * left-semi semantics, bloom-accelerated. */
   def semi(spark: SparkSession, probe: DataFrame, probeKey: String,
-           build: DataFrame, buildKey: String, fpp: Double = 0.01): DataFrame = {
-    val (_, fn) = filterAndFn(spark, build, buildKey, fpp)
-    val pruned = probe.filter(call_function(fn, col(probeKey)))
-    pruned.join(build.select(col(buildKey).as(probeKey)), Seq(probeKey), "left_semi")
-  }
+           build: DataFrame, buildKey: String, fpp: Double = 0.01): DataFrame =
+    probeOnly(spark, probe, probeKey, build, buildKey, fpp)
+      .join(build.select(col(buildKey).as(probeKey)), Seq(probeKey), "left_semi")
 
   /** The bloom predicate alone (no verifying join) — for tests that measure
     * fpp and for consumers that tolerate false positives. */
   def probeOnly(spark: SparkSession, probe: DataFrame, probeKey: String,
-                build: DataFrame, buildKey: String, fpp: Double = 0.01): DataFrame = {
-    val (_, fn) = filterAndFn(spark, build, buildKey, fpp)
-    probe.filter(call_function(fn, col(probeKey)))
-  }
+                build: DataFrame, buildKey: String, fpp: Double = 0.01): DataFrame =
+    probe.filter(graft.functions.BloomMightContainLong.mightContain(
+      col(probeKey), buildFilter(spark, build, buildKey, fpp)))
 }

@@ -61,8 +61,6 @@ object DistanceJoin {
         "ring would have one narrow seam cell and pairs crossing it could " +
         "be silently missed; pick a divisor of 360 (e.g. 2, 4, 5, 6, 10)")
     val nLonCells = math.round(360.0 / cellDeg)
-    graft.functions.HaversineDist.register(left.sparkSession)
-
     def latCell(c: Column): Column = floor(c / cellDeg).cast("long")
     def lonCell(c: Column): Column =
       pmod(floor((c + 180.0) / cellDeg).cast("long"), lit(nLonCells))
@@ -113,8 +111,6 @@ object DistanceJoin {
       f"cellDeg=$cellDeg%.2f does not divide 360° — pick a divisor of 360")
     require(tauUs > 0, "tauUs must be positive")
     val nLonCells = math.round(360.0 / cellDeg)
-    graft.functions.HaversineDist.register(left.sparkSession)
-
     def latCell(c: Column): Column = floor(c / cellDeg).cast("long")
     def lonCell(c: Column): Column =
       pmod(floor((c + 180.0) / cellDeg).cast("long"), lit(nLonCells))

@@ -95,8 +95,6 @@ object GridKnn {
     *         `maxRing` when the fallback FULL scan produced the result) */
   def topK(points: DataFrame, pLat: Double, pLon: Double, cellDeg: Double,
            k: Int, maxRing: Int = 20): (DataFrame, Int) = {
-    HaversineDist.register(points.sparkSession)
-
     def box(ring: Int): Box = Box(
       (math.floor(pLat / cellDeg) - ring) * cellDeg,
       (math.floor(pLat / cellDeg) + ring + 1) * cellDeg,

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Isolation forest (Liu, Ting & Zhou, ICDM 2008): unsupervised anomaly
@@ -174,15 +175,11 @@ object IsolationForest {
     fit(rows, numTrees, sampleSize)
   }
 
-  /** Register `name`(features ARRAY<DOUBLE>) → DOUBLE anomaly score for
-    * THIS model (the BloomMightContain per-constant registration shape). */
-  def register(spark: SparkSession, model: Model, name: String): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => IForestScore(exprs(0), model), "scala_udf")
-
-  def scoreCol(name: String, features: Column): Column =
-    org.apache.spark.sql.functions.call_function(name, features)
+  /** features ARRAY<DOUBLE> → DOUBLE anomaly score for THIS model (the
+    * forest rides the expression, the BloomMightContain per-constant
+    * shape). */
+  def scoreCol(model: Model, features: Column): Column =
+    column(IForestScore(expression(features), model))
 }
 
 /** Ensemble-walk scoring expression: the forest rides `addReferenceObj`

@@ -64,7 +64,6 @@ object KnnJoin {
         "ring would have a narrow seam cell; pick a divisor of 360")
     val nLon = math.round(360.0 / cellDeg)
     val spark = left.sparkSession
-    HaversineDist.register(spark)
     import spark.implicits._
 
     def latCell(c: Column): Column = floor(c / cellDeg).cast("long")

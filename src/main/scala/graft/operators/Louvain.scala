@@ -115,21 +115,19 @@ object Louvain {
 
   /** Full multi-level Louvain: local moves, contract, repeat.
     *
+    * [[Endgame]]: once the (contracted) directed edge set fits the
+    * budget, the remaining levels run driver-local with the IDENTICAL
+    * update rule — contraction shrinks the graph by orders of magnitude
+    * per level, and below the budget each distributed round is pure fixed
+    * job overhead. LouvainSpec pins driver ≡ distributed node-wise on the
+    * same graphs.
+    *
     * @param pairs as in [[run]]
-    * @param driverEdgeLimit once the (contracted) directed edge set fits
-    *        under this bound, the remaining levels run driver-local with
-    *        the IDENTICAL update rule — the [[ConnectedComponents]]
-    *        <1M-edge endgame discipline: contraction shrinks the graph by
-    *        orders of magnitude per level, and below the bound each
-    *        distributed round is pure fixed job overhead. LouvainSpec
-    *        pins driver ≡ distributed (`driverEdgeLimit = 0`) node-wise
-    *        on the same graphs.
     * @return (id, c) mapping every ORIGINAL vertex to its final
     *         community (community ids are original vertex ids) */
   def runMultiLevel(spark: SparkSession, pairs: DataFrame,
                     maxLevels: Int = 5, iterations: Int = 10,
-                    checkEvery: Int = 2,
-                    driverEdgeLimit: Long = 1000000L): DataFrame = {
+                    checkEvery: Int = 2): DataFrame = {
     import spark.implicits._
     val p = pairs.select($"u1".cast("long"), $"u2".cast("long"))
     var edges = p.select($"u1".as("src"), $"u2".as("dst"))
@@ -141,7 +139,7 @@ object Louvain {
     var done = false
     var itersTotal = 0
     while (level < maxLevels && !done) {
-      if (edges.count() <= driverEdgeLimit) {
+      if (Endgame.local(edges.count())) {
         // driver endgame: finish every remaining level locally
         val rows = edges.select($"src", $"dst", $"w")
           .as[(Long, Long, Long)].collect()

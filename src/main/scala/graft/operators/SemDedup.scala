@@ -41,7 +41,6 @@ object SemDedup {
   def run(spark: SparkSession, assigned: DataFrame, centroids: DataFrame,
           tauCos: Double): DataFrame = {
     import spark.implicits._
-    VectorOps.register(spark)
     val a = assigned.select($"vec_id", $"v", $"cell")
 
     // [[Endgame]]: when the assignment frame fits the budget and its

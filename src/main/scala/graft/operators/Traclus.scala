@@ -58,13 +58,12 @@ object Traclus {
     *         dense unique id (user-major, stable) */
   def partition(spark: SparkSession, tracks: DataFrame): DataFrame = {
     import spark.implicits._
-    TraclusFns.register(spark)
     val r = HaversineDist.EarthRadiusKm
     // Characteristic-point indices, then consecutive CP pairs → segments.
     // Bracket indexing is 0-based in Spark SQL; tracks with a single fix
     // yield cps=[0] and an empty segment array (the explode drops them).
     tracks
-      .withColumn("cps", expr("traclus_partition(track)"))
+      .withColumn("cps", TraclusFns.traclusPartition($"track"))
       .select($"user_id", posexplode(when(size($"cps") >= 2,
         expr(
           s"""transform(sequence(0, size(cps) - 2), k -> array(
@@ -104,7 +103,6 @@ object Traclus {
   def run(spark: SparkSession, segs: DataFrame, epsKm: Double, minLns: Int,
           minUsers: Int = 1, maxSegKm: Double = Double.MaxValue): DataFrame = {
     import spark.implicits._
-    TraclusFns.register(spark)
     val cell = 5.0 * epsKm // the ε√5 + cell/2 < cell cover bound (scaladoc)
     val lenExpr = expr(
       """sqrt(pow(seg[3] - seg[0], 2) + pow(seg[4] - seg[1], 2) +
@@ -153,7 +151,7 @@ object Traclus {
     // join output → distinct on the tiny post-filter id pairs. Only
     // ε-pairs ever reach a shuffle.
     val pairs = build.join(probe, Seq("cx", "cy", "cz"))
-      .filter($"sid1" < $"sid2" && expr(s"traclus_dist(seg1, seg2) <= $epsKm"))
+      .filter($"sid1" < $"sid2" && TraclusFns.traclusDist($"seg1", $"seg2") <= epsKm)
       .select($"sid1", $"sid2").distinct()
       .localCheckpoint(eager = false)
 

@@ -165,7 +165,6 @@ object TrajLsh {
   def frechetThresholdPairs(spark: SparkSession, tracks: DataFrame,
                             maxKm: Double, minJaccard: Double = 0.5,
                             bandRows: Int = 2, numBands: Int = 24): DataFrame = {
-    graft.functions.TrajSim.register(spark)
     thresholdJoin(spark, tracks, Seq("track"), minJaccard, bandRows, numBands)(
       graft.functions.TrajSim
         .frechetKmCapped(col("track1"), col("track2"), lit(maxKm)),
@@ -184,7 +183,6 @@ object TrajLsh {
   def hausdorffThresholdPairs(spark: SparkSession, tracks: DataFrame,
                               maxKm: Double, minJaccard: Double = 0.5,
                               bandRows: Int = 2, numBands: Int = 24): DataFrame = {
-    graft.functions.TrajSim.register(spark)
     thresholdJoin(spark, tracks, Seq("track"), minJaccard, bandRows, numBands)(
       graft.functions.TrajSim.hausdorffKm(col("track1"), col("track2")),
       _ <= maxKm, "hausdorff_km")
@@ -210,13 +208,12 @@ object TrajLsh {
                          epsKm: Double = graft.queries.Trajectory.MatchEpsKm,
                          minJaccard: Double = 0.5,
                          bandRows: Int = 2, numBands: Int = 24): DataFrame = {
-    graft.functions.TrajSketchFns.register(spark, epsKm)
     val cap = graft.queries.Trajectory.TrackCap.toLong
     // the sparse-match kernel appears in the metric (all candidates) and
     // in the n_match output column (SURVIVORS only — the re-evaluation is
     // bounded by the output size, not the candidate count)
     def nMatch = graft.functions.TrajSketchFns.lcssSparse(
-      col("pb1"), col("track1"), col("pb2"), col("track2"))
+      col("pb1"), col("track1"), col("pb2"), col("track2"), epsKm)
     thresholdJoin(spark, tracks,
       Seq("track", "pb", "n_fixes"), minJaccard, bandRows, numBands)(
       nMatch * lit(1.0) /
@@ -230,7 +227,7 @@ object TrajLsh {
     * within normalized EDR ≤ `maxEdr` among users sharing a route, found
     * as LSH candidates (J ≥ `minJaccard`, the regime where the S-curve
     * is measured sound) and verified by the EXACT sparse-EDR kernel —
-    * the same kernel as the m_traj_edr key, via the same registration.
+    * the same kernel as the m_traj_edr key, at the same ε.
     *
     * Contract, stated precisely: precision 1.0 (every output pair's edr
     * is exact and ≤ maxEdr); recall = the LSH S-curve over cell-Jaccard
@@ -252,11 +249,10 @@ object TrajLsh {
                         epsKm: Double = graft.queries.Trajectory.MatchEpsKm,
                         minJaccard: Double = 0.5,
                         bandRows: Int = 2, numBands: Int = 24): DataFrame = {
-    graft.functions.TrajSketchFns.register(spark, epsKm)
     // same normalization as the m_traj_edr key: edits over the longer
     // downsampled track
     def nEdits = graft.functions.TrajSketchFns.edrSparse(
-      col("pb1"), col("track1"), col("pb2"), col("track2"))
+      col("pb1"), col("track1"), col("pb2"), col("track2"), epsKm)
     thresholdJoin(spark, tracks, Seq("track", "pb"),
       minJaccard, bandRows, numBands)(
       nEdits * lit(3.0) /

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.ProjectionLSH.{brpBuckets, euclideanDist}
 
 /** Approximate vector-similarity join via bucketed random projections
   * (SURVEY §2.11 `m_sim_lsh`) — the euclidean LSH scale path for the
@@ -21,7 +22,10 @@ object VectorLSH {
 
   val DefaultTables = 4
   val DefaultBucketLen = 2.0
-  private val seed = 42L
+  /** The projection family's seed: one matrix for the batch candidate
+    * joins, the probe path and the streaming semantic dedup
+    * ([[graft.streaming.StreamOps.semDedupStreamSeeded]]). */
+  private[graft] val Seed = 42L
 
   /** Verified-candidate memo: q_sim_cosine, q_dedup_embcos, and the MlSpec
     * recall properties all want the SAME (cut, tables) candidate set over
@@ -56,26 +60,11 @@ object VectorLSH {
         numTables, bucketLen).localCheckpoint(eager = false)
     }
 
-  /** Register (idempotently) the projection family at (numTables,
-    * bucketLen) and return its SQL function name — the SINGLE bucket
-    * derivation shared by the batch candidate joins, the probe path, and
-    * the streaming semantic dedup ([[graft.streaming.StreamOps
-    * .semDedupStreamSeeded]]): one projection matrix, every consumer.
-    * The name is parameter-specific so two widths in one session never
-    * overwrite each other's registration before lazy analysis runs. */
-  def registerBuckets(spark: SparkSession, numTables: Int = DefaultTables,
-                      bucketLen: Double = DefaultBucketLen): String = {
-    val fn = s"brp_buckets_${numTables}_${(bucketLen * 100).toInt}"
-    graft.functions.ProjectionLSH.register(spark, numTables, bucketLen, seed, fn)
-    fn
-  }
-
   private def buildCandidatesWithVecs(spark: SparkSession, embeddings: DataFrame,
                                       maxEuclideanDistance: Double,
                                       numTables: Int,
                                       bucketLen: Double): DataFrame = {
     import spark.implicits._
-    val fn = registerBuckets(spark, numTables, bucketLen)
 
     // Vectors as ARRAY<DOUBLE>, materialized once: the bucket explode and
     // both sides of the verify join reuse them.
@@ -84,7 +73,7 @@ object VectorLSH {
       .localCheckpoint(eager = false)
 
     val buckets = vecs.select($"vec_id",
-      posexplode(expr(s"$fn(v)")).as(Seq("tbl", "bkt")))
+      posexplode(brpBuckets($"v", numTables, bucketLen, Seed)).as(Seq("tbl", "bkt")))
 
     val cand = buckets.as("a").join(buckets.as("b"), Seq("tbl", "bkt"))
       .filter(col("a.vec_id") < col("b.vec_id"))
@@ -95,7 +84,7 @@ object VectorLSH {
       .join(vecs.select($"vec_id".as("va"), $"v".as("v1")), Seq("va"))
       .join(vecs.select($"vec_id".as("vb"), $"v".as("v2")), Seq("vb"))
       // Threshold on the UNROUNDED distance; round only in output columns.
-      .withColumn("edist_exact", expr("euclidean_dist(v1, v2)"))
+      .withColumn("edist_exact", euclideanDist($"v1", $"v2"))
       .filter($"edist_exact" <= maxEuclideanDistance)
   }
 
@@ -109,11 +98,10 @@ object VectorLSH {
                         numTables: Int = DefaultTables,
                         bucketLen: Double = DefaultBucketLen): DataFrame = {
     import spark.implicits._
-    val fn = registerBuckets(spark, numTables, bucketLen)
     val vecs = embeddings
       .select($"vec_id", expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
     val buckets = vecs.select($"vec_id",
-      posexplode(expr(s"$fn(v)")).as(Seq("tbl", "bkt")))
+      posexplode(brpBuckets($"v", numTables, bucketLen, Seed)).as(Seq("tbl", "bkt")))
     val pb = buckets.filter($"vec_id".isin(probeIds: _*))
       .select($"vec_id".as("probe_id"), $"tbl", $"bkt")
     broadcast(pb).join(buckets, Seq("tbl", "bkt"))

@@ -129,7 +129,6 @@ object Geo extends QueryGroup {
        |END""".stripMargin
 
   private[graft] def pts(s: SparkSession, dir: String): DataFrame = {
-    HaversineDist.register(s)
     withGeo(t(s, dir, "events")).withColumn("ts_us", unix_micros(col("ts")))
   }
 
@@ -1134,7 +1133,6 @@ object Geo extends QueryGroup {
     // discipline), kernel O(n log n) per group inside codegen.
     "m_geo_hull" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.HullStats.register(s)
       pts(s, dir)
         .groupBy($"user_id")
         .agg(sort_array(collect_list(struct($"lat", $"lon"))).as("a"),
@@ -1166,13 +1164,11 @@ object Geo extends QueryGroup {
         .groupBy($"user_id")
         .agg(sort_array(collect_list(
           struct($"ts_us", $"event_id", $"lat", $"lon"))).as("a"))
-        .withColumn("n_kept", expr(
-          """CAST(aggregate(
-            |  slice(a, 2, size(a) - 1),
-            |  array(a[0].lat, a[0].lon, CAST(1.0 AS DOUBLE)),
-            |  (acc, p) -> IF(haversine_km(acc[0], acc[1], p.lat, p.lon) > 2000.0D,
-            |              array(p.lat, p.lon, acc[2] + 1.0D), acc))[2] AS BIGINT)"""
-            .stripMargin))
+        .withColumn("n_kept", aggregate(
+          slice($"a", lit(2), size($"a") - 1),
+          array($"a"(0)("lat"), $"a"(0)("lon"), lit(1.0)),
+          (acc, p) => when(hv(acc(0), acc(1), p("lat"), p("lon")) > 2000.0,
+            array(p("lat"), p("lon"), acc(2) + 1.0)).otherwise(acc))(2).cast("long"))
         .select($"user_id", size($"a").cast("long").as("n_points"), $"n_kept",
                 round($"n_kept".cast("double") / size($"a"), 4).as("keep_ratio"))
         .orderBy($"user_id")

@@ -373,12 +373,11 @@ object Mining extends QueryGroup {
     // relation — the fact table is scanned exactly once per relation.
     "q_audit_skew" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.TopKPairs.register(s, 10)
       def skew(name: String, df: org.apache.spark.sql.DataFrame, key: String) = {
         df.groupBy(col(key).as("k")).agg(count(lit(1)).as("c"))
           .agg(sum($"c").as("n"), count(lit(1)).as("n_keys"),
                max($"c").as("max_cnt"),
-               expr("topk_pairs(CAST(c AS DOUBLE), k)").as("top"),
+               graft.functions.TopKPairs.topKPairs($"c".cast("double"), $"k", 10).as("top"),
                sum(($"c".cast("double") * round(log($"c".cast("double")), 6))
                  .cast(org.apache.spark.sql.types.DecimalType(28, 12))).as("s"))
           .withColumn("top10_cnt",

@@ -450,8 +450,7 @@ object Ml extends QueryGroup {
       val model = iforestMemo.getOrCompute(s, dir) {
         IsolationForest.fitFromFrame(d, "event_id", "f")
       }
-      IsolationForest.register(s, model, "iforest_score")
-      d.withColumn("score", IsolationForest.scoreCol("iforest_score", $"f"))
+      d.withColumn("score", IsolationForest.scoreCol(model, $"f"))
         .orderBy($"score".desc, $"event_id")
         .limit(10)
         .select($"event_id", $"value", round($"score", 4).as("score"))

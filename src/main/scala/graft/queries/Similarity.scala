@@ -21,7 +21,6 @@ object Similarity extends QueryGroup {
     * expression — JIT'd loops, sequential accumulation). */
   private def vecs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    VectorOps.register(s)
     t(s, dir, "embeddings")
       .select($"vec_id", $"label",
               expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -77,7 +76,6 @@ object Similarity extends QueryGroup {
     // broadcast self-join survives anywhere in the repo.
     "q_sim_cosine" -> ((s, dir) => {
       import s.implicits._
-      VectorOps.register(s)
       graft.operators.VectorLSH
         .candidatesWithVecs(s, t(s, dir, "embeddings"), 1.2, numTables = 12)
         .withColumn("cos", r4(VectorOps.cosineSim($"v1", $"v2")))
@@ -98,7 +96,6 @@ object Similarity extends QueryGroup {
     // Oracle unchanged: the brute-force SQL.
     "q_sim_knn_vec" -> ((s, dir) => {
       import s.implicits._
-      VectorOps.register(s)
       val emb = t(s, dir, "embeddings")
       val probeIds = 0L until 10L
       val cand = graft.operators.VectorLSH
@@ -129,7 +126,6 @@ object Similarity extends QueryGroup {
     // brute-force oracle while the plan shuffles only bucket-local pairs.
     "q_dedup_embcos" -> ((s, dir) => {
       import s.implicits._
-      VectorOps.register(s)
       graft.operators.VectorLSH
         .candidatesWithVecs(s, t(s, dir, "embeddings"), 1.2, numTables = 12)
         .withColumn("cos", r4(VectorOps.cosineSim($"v1", $"v2")))

@@ -49,10 +49,9 @@ object SortsSets extends QueryGroup {
     // — proving the bounded-heap path is result-identical.
     "q_topk_heap" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.TopKPairs.register(s, 3)
       t(s, dir, "orders")
         .groupBy($"o_custkey")
-        .agg(call_function("topk_pairs", $"o_totalprice", $"o_orderkey").as("top"))
+        .agg(graft.functions.TopKPairs.topKPairs($"o_totalprice", $"o_orderkey", 3).as("top"))
         .select($"o_custkey", posexplode($"top").as(Seq("pos", "p")))
         .select($"o_custkey", ($"pos" + 1).cast("long").as("rn"),
                 $"p.id".as("o_orderkey"), $"p.score".as("o_totalprice"))

@@ -202,9 +202,8 @@ object TextPipeline extends QueryGroup {
     // design (DuckDB has no MG) → rows-only check + property tests.
     "m_text_heavyhitters" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.MgTopTerms.register(s, 32)
       tokens(s, dir)
-        .agg(call_function("mg_top_terms", $"term").as("sk"))
+        .agg(graft.functions.MgTopTerms.mgTopTerms($"term", 32).as("sk"))
         .select(explode($"sk").as("e"))
         .select($"e.term", $"e.est", $"e.max_err")
         .orderBy($"est".desc, $"term")
@@ -215,16 +214,15 @@ object TextPipeline extends QueryGroup {
     // m_text_heavyhitters — MG brackets true counts from below, CMS from
     // above (true ≤ est ≤ true + εN w.h.p.), both with FIXED per-group
     // state through partial aggregation. The query-term list is the fixed
-    // vocabulary the corpus keys already probe (BM25/quality terms), baked
-    // at registration; est is order-independent (increment + element-wise
+    // vocabulary the corpus keys already probe (BM25/quality terms), an
+    // operator constant; est is order-independent (increment + element-wise
     // sum are commutative), so the output is bit-stable under ANY
     // partitioning — FunctionsSpec pins that plus the bounds vs exact.
     "m_text_countmin" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.CmsCounts.register(s, depth = 4, width = 512,
-        queryTerms = cmsQueryTerms)
       tokens(s, dir)
-        .agg(call_function("cms_counts", $"term").as("sk"))
+        .agg(graft.functions.CmsCounts.cmsCounts($"term", depth = 4, width = 512,
+          queryTerms = cmsQueryTerms).as("sk"))
         .select(explode($"sk").as("e"))
         .select($"e.term", $"e.est", $"e.n")
         .orderBy($"term")
@@ -995,7 +993,6 @@ object TextPipeline extends QueryGroup {
     // threshold so last-ulp arithmetic differences cannot flip a pair.
     "q_dedup_jaro" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.JaroWinklerSim.register(s)
       val d = t(s, dir, "documents")
         .select($"doc_id", substring(lower(trim($"text")), 1, 80).as("t"))
         .withColumn("p", substring($"t", 1, 8))

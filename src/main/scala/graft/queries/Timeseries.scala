@@ -62,7 +62,6 @@ object Timeseries extends QueryGroup {
   private[graft] def mpKey(s: org.apache.spark.sql.SparkSession, dir: String,
                              tiledGate: Int): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    graft.functions.MatrixProfileExpr.register(s)
     val m = 24
     val hc = t(s, dir, "events")
       .groupBy($"event_type", expr("unix_millis(ts) div 3600000").as("hr"))

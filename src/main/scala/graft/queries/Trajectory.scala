@@ -140,7 +140,6 @@ object Trajectory extends QueryGroup {
   private[graft] def frechetPruned(s: SparkSession, tr: DataFrame,
                                    nUsers: Long): DataFrame = {
     import s.implicits._
-    TrajSim.register(s)
     // The light (u1, u2, lb) scan is CHEAP (12 doubles per user) but at
     // 10⁸ pairs its materialization is not: r14 localCheckpoint'd it and
     // the 2.7 GB block write dominated the ×10 probe. Build it lazily and
@@ -233,8 +232,6 @@ object Trajectory extends QueryGroup {
   private[graft] def hausdorffPruned(s: SparkSession, tr: DataFrame,
                                      nUsers: Long): DataFrame = {
     import s.implicits._
-    TrajSim.register(s)
-    TrajSketchFns.register(s, MatchEpsKm)
     def attach(df: DataFrame) = df
       .join(broadcast(tr.select($"user_id".as("u1"), $"track".as("ta"))), Seq("u1"))
       .join(broadcast(tr.select($"user_id".as("u2"), $"track".as("tb"))), Seq("u2"))
@@ -278,8 +275,6 @@ object Trajectory extends QueryGroup {
   private[graft] def lcssPruned(s: SparkSession, tr: DataFrame,
                                 nUsers: Long): DataFrame = {
     import s.implicits._
-    TrajSim.register(s)
-    TrajSketchFns.register(s, MatchEpsKm)
     def lightPairs = {
       val lhs = tr.select($"user_id".as("u1"), $"pb".as("sa"), $"dil".as("da"),
           $"n_fixes".as("n_a"))
@@ -298,7 +293,7 @@ object Trajectory extends QueryGroup {
         $"pb".as("sb2"), $"n_fixes".as("nb2"))), Seq("u2"))
     val thr = attach(lightPairs.orderBy($"ubn".desc, $"u1", $"u2").limit(2000)
         .select($"u1", $"u2"))
-      .select((TrajSketchFns.lcssSparse($"sa2", $"ta", $"sb2", $"tb") /
+      .select((TrajSketchFns.lcssSparse($"sa2", $"ta", $"sb2", $"tb", MatchEpsKm) /
         least(least($"na2", $"nb2"), lit(TrackCap.toLong))).as("v"))
       .orderBy($"v".desc).limit(10)
       .agg(min($"v").as("t"))
@@ -314,7 +309,7 @@ object Trajectory extends QueryGroup {
         TrajSketchFns.lcssUb($"sa", $"db", $"sb", $"da") /
           least(least($"n_a", $"n_b"), lit(TrackCap.toLong)) >= thr - 1e-4)
       .observe("prune", count(lit(1)).as("survivors"))
-      .withColumn("n_match", TrajSketchFns.lcssSparse($"sa", $"ta", $"sb", $"tb"))
+      .withColumn("n_match", TrajSketchFns.lcssSparse($"sa", $"ta", $"sb", $"tb", MatchEpsKm))
       .withColumn("lcss", round($"n_match" * lit(1.0) /
         least(least($"n_a", $"n_b"), lit(TrackCap.toLong)), 4))
       .select($"u1", $"u2", $"n_a", $"n_b", $"n_match", $"lcss")
@@ -349,12 +344,11 @@ object Trajectory extends QueryGroup {
   private[graft] def edrPruned(s: SparkSession, tr: DataFrame,
                                nUsers: Long): DataFrame = {
     import s.implicits._
-    TrajSketchFns.register(s, MatchEpsKm)
     // normalized length-difference lower bound on edr, from the two
     // DOWNSAMPLED track sizes (scalar ints — the join-condition currency)
     def lbEdr = abs(size($"ta") - size($"tb")).cast("double") /
       greatest(size($"ta"), size($"tb"))
-    def edrCol = TrajSketchFns.edrSparse($"sa", $"ta", $"sb", $"tb") *
+    def edrCol = TrajSketchFns.edrSparse($"sa", $"ta", $"sb", $"tb", MatchEpsKm) *
       lit(3.0) / greatest(size($"ta"), size($"tb"))
     val lhs = tr.select($"user_id".as("u1"), $"n_fixes".as("n_a"),
         $"track".as("ta"), $"pb".as("sa"))
@@ -395,7 +389,7 @@ object Trajectory extends QueryGroup {
     lhs.join(broadcast(rhs), $"u1" < $"u2" && lbEdr <= thr + 1e-4)
       .observe("prune", count(lit(1)).as("survivors"))
       .withColumn("n_edits",
-        TrajSketchFns.edrSparse($"sa", $"ta", $"sb", $"tb"))
+        TrajSketchFns.edrSparse($"sa", $"ta", $"sb", $"tb", MatchEpsKm))
       .withColumn("edr", round($"n_edits" * lit(3.0) /
         greatest(size($"ta"), size($"tb")), 4))
       .select($"u1", $"u2", $"n_a", $"n_b", $"n_edits", $"edr")
@@ -427,7 +421,6 @@ object Trajectory extends QueryGroup {
     * SAME expressions as the contract keys, not a twin. */
   private[graft] def tracksFromPoints(s: SparkSession, pts: DataFrame): DataFrame = {
     import s.implicits._
-    TrajSketchFns.register(s, MatchEpsKm)
     val wOrd = Window.partitionBy($"user_id").orderBy($"ts_us", $"event_id")
     val wAll = Window.partitionBy($"user_id")
     pts
@@ -474,7 +467,7 @@ object Trajectory extends QueryGroup {
       // the ε-dilation bitmap (162 longs): the LCSS/EDR prune tiers' near
       // test becomes ONE bit lookup per fix at pair time (the per-pair
       // band-search form measured 10 µs/pair — TrajSketch scaladoc)
-      .withColumn("dil", TrajSketchFns.dilateCells($"cells"))
+      .withColumn("dil", TrajSketchFns.dilateCells($"cells", MatchEpsKm))
       // scalar endpoint coordinates: the fréchet endpoint bound pushed
       // into the pair-join condition must be pure scalar arithmetic —
       // the slice()-based form instantiated 12 array slices per ordered
@@ -506,8 +499,6 @@ object Trajectory extends QueryGroup {
     * balances the pair scan regardless of user-id distribution. */
   private def pairedTracks(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    TrajSim.register(s)
-    TrajSketchFns.register(s, MatchEpsKm)
     val tr = tracks(s, dir)
     val lhs = tr.select($"user_id".as("u1"), $"n_fixes".as("n_a"),
         $"track".as("ta"), $"pb".as("sa"))
@@ -541,7 +532,6 @@ object Trajectory extends QueryGroup {
     // large-U branch) on top of the key-level ≡ driver-DP test.
     "m_traj_frechet" -> ((s, dir) => {
       import s.implicits._
-      TrajSim.register(s)
       val tr = tracks(s, dir)
       // Adaptive gate, DECLARED: below ~5M pairs the direct exact scan is
       // cheaper than the prune's extra jobs (one count on the memoized
@@ -600,7 +590,7 @@ object Trajectory extends QueryGroup {
       if (nUsers * (nUsers - 1) / 2 <= 5_000_000L)
         pairedTracks(s, dir)
           .withColumn("n_edits",
-            TrajSketchFns.edrSparse($"sa", $"ta", $"sb", $"tb"))
+            TrajSketchFns.edrSparse($"sa", $"ta", $"sb", $"tb", MatchEpsKm))
           // normalize by the longer DOWNSAMPLED track (its exact point
           // count is size(track)/3 — stride rounding makes it ≤ cap but
           // not always min(n, cap))
@@ -684,14 +674,13 @@ object Trajectory extends QueryGroup {
     // planted-walk recovery, and the gross-outlier correction.
     "m_traj_mapmatch" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.MapMatchExpr.register(s, sigmaKm = 3.0, betaKm = 30.0)
       tracks(s, dir)
         .withColumn("noisy", expr(
           """flatten(transform(sequence(0, size(ll) div 2 - 1), i -> array(
             |  ll[2*i]   + (pmod(xxhash64(user_id, i), 91) - 45) / 1000.0d,
             |  ll[2*i+1] + (pmod(xxhash64(user_id, i, 7), 91) - 45) / 1000.0d)))"""
             .stripMargin))
-        .withColumn("snap", graft.functions.MapMatchExpr.mapMatch($"noisy"))
+        .withColumn("snap", graft.functions.MapMatchExpr.mapMatch($"noisy", sigmaKm = 3.0, betaKm = 30.0))
         .withColumn("n_pts", size($"ll") / 2)
         .withColumn("n_rec", expr(
           """aggregate(sequence(0, size(ll) div 2 - 1), 0L, (acc, i) ->
@@ -720,7 +709,7 @@ object Trajectory extends QueryGroup {
       if (nUsers * (nUsers - 1) / 2 <= 5_000_000L)
         pairedTracks(s, dir)
           .withColumn("n_match",
-            TrajSketchFns.lcssSparse($"sa", $"ta", $"sb", $"tb"))
+            TrajSketchFns.lcssSparse($"sa", $"ta", $"sb", $"tb", MatchEpsKm))
           .withColumn("lcss", round($"n_match" * lit(1.0) /
             least(least($"n_a", $"n_b"), lit(TrackCap.toLong)), 4))
           .select($"u1", $"u2", $"n_a", $"n_b", $"n_match", $"lcss")

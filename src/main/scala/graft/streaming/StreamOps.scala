@@ -1347,18 +1347,17 @@ object StreamOps {
   }
 
   /** The vector→bucket derivation shared by the streaming input AND the
-    * batch-corpus seed — [[graft.operators.VectorLSH]]'s OWN registered
-    * projection family (one matrix: batch candidate join, probe path,
-    * stream), doubled-cast exactly like the batch verify sides. */
+    * batch-corpus seed — [[graft.operators.VectorLSH]]'s OWN projection
+    * family (one matrix: batch candidate join, probe path, stream),
+    * doubled-cast exactly like the batch verify sides. */
   private def embBanded(docs: DataFrame, numTables: Int,
                         bucketLen: Double): Dataset[EmbBanded] = {
     import docs.sparkSession.implicits._
-    val fn = graft.operators.VectorLSH
-      .registerBuckets(docs.sparkSession, numTables, bucketLen)
     docs
       .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
       .select(col("doc_id"), col("v"),
-        posexplode(expr(s"$fn(v)")).as(Seq("tbl", "bkt")))
+        posexplode(graft.functions.ProjectionLSH.brpBuckets(col("v"),
+          numTables, bucketLen, graft.operators.VectorLSH.Seed)).as(Seq("tbl", "bkt")))
       .select(expr("xxhash64(tbl, bkt)").as("bkey"), col("doc_id"), col("v"))
       .as[EmbBanded]
   }
@@ -1370,7 +1369,7 @@ object StreamOps {
     * SimHash and only the vector path stops it at ingest. Each arriving
     * (doc_id, embedding) explodes to its `numTables` random-projection
     * buckets (the batch [[graft.operators.VectorLSH]] derivation — same
-    * registered projection matrix) and exact-cosine-verifies against the
+    * projection matrix) and exact-cosine-verifies against the
     * entries accumulated per bucket; output rows are (d1, d2, cos ≥
     * minCos) verified pairs, d1 < d2, each cosine computed by the SAME
     * static kernel as the batch `q_dedup_embcos` key. `numTables`

@@ -13,8 +13,6 @@ object ExplainProbe {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    graft.functions.TrajSketchFns.register(spark, 500.0)
-    graft.functions.TrajSim.register(spark)
     val tr = graft.queries.Trajectory.tracks(spark, "/root/testdata/sf0.001")
     val nUsers = tr.count()
     val lhs = tr.select($"user_id".as("u1"), $"track".as("ta"), $"pb".as("sa"))

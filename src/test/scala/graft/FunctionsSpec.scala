@@ -9,7 +9,6 @@ class FunctionsSpec extends BaseSpec {
   import spark.implicits._
 
   test("haversine_km expression: known distances") {
-    HaversineDist.register(spark)
     // Paris ↔ London ≈ 343–344 km
     val d = Seq((48.8566, 2.3522, 51.5074, -0.1278)).toDF("a", "b", "c", "d")
       .select(HaversineDist.haversineKm($"a", $"b", $"c", $"d").as("km"))
@@ -25,7 +24,7 @@ class FunctionsSpec extends BaseSpec {
   }
 
   test("haversine_km registered for SQL") {
-    HaversineDist.register(spark)
+    graft.functions.Sql.install(spark)
     val d = spark.sql("SELECT haversine_km(0D, 0D, 0D, 90D) AS km").as[Double].head()
     // quarter of the equator circumference
     assert(math.abs(d - 2.0 * math.Pi * 6371.0 / 4.0) < 0.5)
@@ -52,6 +51,37 @@ class FunctionsSpec extends BaseSpec {
     other.foreach(buf.offer)
     assert(buf.sortedDesc.toList == List((7.0, 2L), (7.0, 9L), (5.0, 5L)),
       s"after merge: ${buf.sortedDesc.toList}")
+  }
+
+  test("two parameterizations of one expression in one plan equal their single runs") {
+    import graft.functions.{TopKPairs, TrajSketchFns}
+    // TopK at k = 3 and k = 10 side by side in one aggregate
+    val scores = (1 to 40).map(i => (i % 4, ((i * 37) % 101).toDouble, i.toLong))
+      .toDF("g", "score", "id")
+    def topK(k: Int) = TopKPairs.topKPairs($"score", $"id", k)
+    def pairs(r: org.apache.spark.sql.Row, i: Int) =
+      r.getSeq[org.apache.spark.sql.Row](i).map(p => (p.getDouble(0), p.getLong(1)))
+    def single(k: Int) = scores.groupBy($"g").agg(topK(k).as("t")).orderBy($"g")
+      .collect().map(pairs(_, 1)).toSeq
+    val both = scores.groupBy($"g").agg(topK(3).as("t3"), topK(10).as("t10"))
+      .orderBy($"g").collect()
+    assert(both.map(pairs(_, 1)).toSeq == single(3))
+    assert(both.map(pairs(_, 2)).toSeq == single(10))
+    assert(both.forall(r => pairs(r, 1).size == 3 && pairs(r, 2).size == 10))
+    // sparse LCSS at two match radii side by side in one projection
+    val tr = graft.queries.Trajectory.tracks(spark, sf)
+    val pairFrame = tr.select($"user_id".as("u1"), $"track".as("ta"), $"pb".as("sa"))
+      .join(tr.select($"user_id".as("u2"), $"track".as("tb"), $"pb".as("sb")), $"u1" < $"u2")
+    def lcss(eps: Double) = TrajSketchFns.lcssSparse($"sa", $"ta", $"sb", $"tb", eps)
+    def singleLcss(eps: Double) = pairFrame.select($"u1", $"u2", lcss(eps))
+      .orderBy($"u1", $"u2").collect().map(_.getLong(2)).toSeq
+    val lcssBoth = pairFrame.select($"u1", $"u2", lcss(100.0), lcss(500.0))
+      .orderBy($"u1", $"u2").collect()
+    assert(lcssBoth.nonEmpty)
+    assert(lcssBoth.map(_.getLong(2)).toSeq == singleLcss(100.0))
+    assert(lcssBoth.map(_.getLong(3)).toSeq == singleLcss(500.0))
+    assert(lcssBoth.exists(r => r.getLong(2) != r.getLong(3)),
+      "the two radii must read different match counts on some pair")
   }
 
   test("zorder interleave matches a bit-by-bit reference and preserves tile order") {
@@ -162,12 +192,11 @@ class FunctionsSpec extends BaseSpec {
         s"$t: est=$est true=$true_ outside the eps*N envelope")
     }
     // order-independence: a different partitioning yields identical estimates
-    graft.functions.CmsCounts.register(spark, 4, 512,
-      graft.queries.TextPipeline.cmsQueryTerms)
     val re = Tables(spark, sf, "documents")
       .select(explode(split($"text", " ")).as("term"))
       .repartition(17, $"term")
-      .agg(call_function("cms_counts", $"term").as("sk"))
+      .agg(graft.functions.CmsCounts.cmsCounts($"term", 4, 512,
+        graft.queries.TextPipeline.cmsQueryTerms).as("sk"))
       .select(explode($"sk").as("e"))
       .select($"e.term", $"e.est", $"e.n")
       .as[(String, Long, Long)].collect()
@@ -216,7 +245,7 @@ class FunctionsSpec extends BaseSpec {
 
   test("jaro_winkler registered for SQL and codegen path ≡ interpreted") {
     import graft.functions.JaroWinklerSim
-    JaroWinklerSim.register(spark)
+    graft.functions.Sql.install(spark)
     val got = spark.sql(
       "SELECT round(jaro_winkler('MARTHA', 'MARHTA'), 6) AS jw").as[Double].head()
     assert(got == 0.961111, s"sql path got $got")

@@ -72,7 +72,6 @@ class GeoSpec extends BaseSpec {
     // search, the full-scan TRUTH is computed here (same derivation as the
     // oracle SQL) rather than borrowed from a declared key.
     import org.apache.spark.sql.functions._
-    graft.functions.HaversineDist.register(spark)
     val full = Tables(spark, sf, "events")
       .withColumn("lat", (col("event_id") * 37L % 1700L) / 10.0 - 85.0)
       .withColumn("lon", (col("event_id") * 131L % 3600L) / 10.0 - 180.0)

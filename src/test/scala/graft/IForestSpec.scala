@@ -59,9 +59,8 @@ class IForestSpec extends BaseSpec {
   test("codegen scoring path equals driver scoring on the fixture frame") {
     val d = graft.queries.Ml.iforestFrame(spark, sf)
     val model = IsolationForest.fitFromFrame(d, "event_id", "f")
-    IsolationForest.register(spark, model, "iforest_spec_score")
     val got = d
-      .withColumn("s", IsolationForest.scoreCol("iforest_spec_score", $"f"))
+      .withColumn("s", IsolationForest.scoreCol(model, $"f"))
       .select($"event_id", $"s").as[(Long, Double)].collect().toMap
     val want = d.select($"event_id", $"f").as[(Long, Seq[Double])].collect()
       .map { case (id, f) => id -> model.score(f.toArray) }.toMap

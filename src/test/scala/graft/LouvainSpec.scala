@@ -168,10 +168,9 @@ class LouvainSpec extends BaseSpec {
       .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
       .filter { case (a, b) => a != b }.distinct
     val df = edges.toDF("u1", "u2")
-    val viaDriver = Louvain.runMultiLevel(spark, df)
-      .as[(Long, Long)].collect().toMap
-    val viaDist = Louvain.runMultiLevel(spark, df, driverEdgeLimit = 0L)
-      .as[(Long, Long)].collect().toMap
+    val Seq(viaDriver, viaDist) = bothPaths.map(dist => onPath(dist) {
+      Louvain.runMultiLevel(spark, df).as[(Long, Long)].collect().toMap
+    })
     assert(viaDriver == viaDist,
       "the driver endgame must reproduce the distributed levels node-wise")
     assert(viaDriver == refLouvainMulti(edges), "and both must match the mirror")

@@ -127,10 +127,7 @@ class PlanSpec extends BaseSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     graft.plans.HaversineRadiusPruning.install(spark)
-    graft.functions.HaversineDist.register(spark)
-    val hv = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
-              c: org.apache.spark.sql.Column, d: org.apache.spark.sql.Column) =>
-      call_function("haversine_km", a, b, c, d)
+    val hv = graft.functions.HaversineDist.haversineKm _
     val df = SparkEntry.queries("q_geo_radius")(spark, sf)
     val opt = df.queryExecution.optimizedPlan.toString
     // lat/lon are collapsed into inline arithmetic by the time the rule
@@ -162,7 +159,7 @@ class PlanSpec extends BaseSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     graft.plans.HaversineRadiusPruning.install(spark)
-    graft.functions.HaversineDist.register(spark)
+    graft.functions.Sql.install(spark)
     Tables(spark, sf, "events")
       .withColumn("lat", (($"event_id" * 37) % 1700).cast("double") / 10.0 - 85.0)
       .withColumn("lon", (($"event_id" * 131) % 3600).cast("double") / 10.0 - 180.0)
@@ -186,7 +183,6 @@ class PlanSpec extends BaseSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     graft.plans.HaversineRadiusPruning.install(spark)
-    graft.functions.HaversineDist.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_geo").toString
     Tables(spark, sf, "events")
       .withColumn("lat", (($"event_id" * 37) % 1700).cast("double") / 10.0 - 85.0)
@@ -198,7 +194,7 @@ class PlanSpec extends BaseSpec {
     // in the plan string — widen it for the assertion only.
     withSQLConf("spark.sql.maxMetadataStringLength" -> "2000") {
       val q = pts.filter(
-        call_function("haversine_km", $"lat", $"lon", lit(48.85), lit(2.35)) < lit(500.0))
+        graft.functions.HaversineDist.haversineKm($"lat", $"lon", lit(48.85), lit(2.35)) < lit(500.0))
       val p = q.queryExecution.executedPlan.toString
       val pushed = p.linesIterator.find(_.contains("PushedFilters")).getOrElse("")
       for (want <- Seq("GreaterThanOrEqual(lat", "LessThanOrEqual(lat",
@@ -945,7 +941,6 @@ class PlanSpec extends BaseSpec {
     // must beat reading everything. AQE off so the scan node is reachable.
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.ZOrderKey.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
     // 40k deterministic points (same derivation as the events grid), laid
     // out as 64 range-partitioned files per ordering — each file's footer

@@ -30,10 +30,19 @@ class QueriesSpec extends BaseSpec {
       .getLines().filter(_.nonEmpty).map { line =>
         val Array(k, v) = line.split(" "); k -> v.toLong
       }.toMap
+    // One fresh session (same SparkContext and builder conf): after every
+    // key has run, its function registry must still hold only built-ins —
+    // the query surface builds its expressions as Columns and writes no
+    // session function.
+    val s = spark.newSession()
     val failures = golden.flatMap { case (name, expected) =>
-      val got = SparkEntry.queries(name)(spark, sf).count()
+      val got = SparkEntry.queries(name)(s, sf).count()
       if (got != expected) Some(s"$name: got $got expected $expected") else None
     }
     assert(failures.isEmpty, failures.mkString("; "))
+    val added = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry.listFunction().toSet --
+      org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin.listFunction()
+    assert(added.isEmpty, s"queries wrote session functions: ${added.map(_.funcName).toSeq.sorted}")
   }
 }

@@ -15,8 +15,6 @@ object TrajJoinProbe {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    graft.functions.TrajSketchFns.register(spark, 500.0)
-    graft.functions.TrajSim.register(spark)
     val tr = graft.queries.Trajectory.tracks(spark, dir)
     tr.count() // materialize the memoized substrate outside the timings
     def timed(label: String)(f: => Long): Unit = {
@@ -38,11 +36,11 @@ object TrajJoinProbe {
         .agg(sum($"x")).head(); 0L
     }
     timed("+ lcss_sparse") {
-      pairs.select(graft.functions.TrajSketchFns.lcssSparse($"sa", $"ta", $"sb", $"tb").as("x"))
+      pairs.select(graft.functions.TrajSketchFns.lcssSparse($"sa", $"ta", $"sb", $"tb", 500.0).as("x"))
         .agg(sum($"x")).head(); 0L
     }
     timed("+ edr_sparse") {
-      pairs.select(graft.functions.TrajSketchFns.edrSparse($"sa", $"ta", $"sb", $"tb").as("x"))
+      pairs.select(graft.functions.TrajSketchFns.edrSparse($"sa", $"ta", $"sb", $"tb", 500.0).as("x"))
         .agg(sum($"x")).head(); 0L
     }
     timed("+ lcss full DP") {

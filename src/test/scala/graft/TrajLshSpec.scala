@@ -111,7 +111,6 @@ class TrajLshSpec extends BaseSpec {
     // truth: all-pairs exact kernel (UNCAPPED — a different code path than
     // the operator's early-abandoning capped kernel) filtered to the
     // declared contract: cell-Jaccard >= 0.5 AND dF <= maxKm
-    graft.functions.TrajSim.register(spark)
     val lhs = tracks.select($"user_id".as("u1"), $"track".as("ta"), $"cells".as("c1"))
     val rhs = tracks.select($"user_id".as("u2"), $"track".as("tb"), $"cells".as("c2"))
     val truth = lhs.join(rhs, $"u1" < $"u2")
@@ -140,7 +139,6 @@ class TrajLshSpec extends BaseSpec {
     val got = TrajLsh.hausdorffThresholdPairs(spark, tracks, maxKm = 100.0)
       .select($"u1", $"u2", $"hausdorff_km")
       .as[(Long, Long, Double)].collect().toSeq
-    graft.functions.TrajSim.register(spark)
     val lhs = tracks.select($"user_id".as("u1"), $"track".as("ta"), $"cells".as("c1"))
     val rhs = tracks.select($"user_id".as("u2"), $"track".as("tb"), $"cells".as("c2"))
     val truth = lhs.join(rhs, $"u1" < $"u2")
@@ -170,7 +168,6 @@ class TrajLshSpec extends BaseSpec {
       .as[(Long, Long, Long, Double)].collect().toSeq
     // truth: all-pairs exact kernel + the contract key's own normalization,
     // filtered to cell-Jaccard >= 0.5 AND sim >= 0.7
-    graft.functions.TrajSketchFns.register(spark, 500.0)
     val lhs = tracks.select($"user_id".as("u1"), $"track".as("ta"),
       $"pb".as("sa"), $"n_fixes".as("na"), $"cells".as("c1"))
     val rhs = tracks.select($"user_id".as("u2"), $"track".as("tb"),
@@ -179,7 +176,7 @@ class TrajLshSpec extends BaseSpec {
       .withColumn("j", size(array_intersect($"c1", $"c2")).cast("double") /
         size(array_union($"c1", $"c2")))
       .withColumn("m",
-        graft.functions.TrajSketchFns.lcssSparse($"sa", $"ta", $"sb", $"tb"))
+        graft.functions.TrajSketchFns.lcssSparse($"sa", $"ta", $"sb", $"tb", 500.0))
       .withColumn("sim", $"m" * lit(1.0) / least(least($"na", $"nb"), lit(64L)))
       .filter($"j" >= 0.5 && $"sim" >= 0.7)
       .select($"u1", $"u2", $"m", round($"sim", 4).as("sim"))
@@ -291,7 +288,6 @@ class TrajLshSpec extends BaseSpec {
     // truth: ALL-PAIRS exact sparse-EDR (same kernel) filtered to the
     // contract -- edr <= maxEdr AND exact cell-Jaccard >= minJaccard (the
     // declared regime; a low-EDR pair sharing few cells is out of contract)
-    graft.functions.TrajSketchFns.register(spark, 500.0)
     val lhs = tracks.select($"user_id".as("u1"), $"track".as("ta"),
       $"pb".as("sa"), $"cells".as("c1"))
     val rhs = tracks.select($"user_id".as("u2"), $"track".as("tb"),
@@ -300,7 +296,7 @@ class TrajLshSpec extends BaseSpec {
       .withColumn("j", size(array_intersect($"c1", $"c2")).cast("double") /
         size(array_union($"c1", $"c2")))
       .withColumn("n_edits",
-        graft.functions.TrajSketchFns.edrSparse($"sa", $"ta", $"sb", $"tb"))
+        graft.functions.TrajSketchFns.edrSparse($"sa", $"ta", $"sb", $"tb", 500.0))
       .withColumn("edr", $"n_edits" * lit(3.0) /
         greatest(size($"ta"), size($"tb")))
       .filter($"j" >= 0.5 && $"edr" <= 0.25)
