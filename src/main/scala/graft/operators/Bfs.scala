@@ -27,14 +27,34 @@ import org.apache.spark.sql.functions._
 object Bfs {
   @volatile var lastIterations: Int = 0
 
-  /** Both directions of the undirected (u1, u2) list as (sv, dst), cached. */
+  /** Both directions of the undirected (u1, u2) list as (sv, dst), cached
+    * — the distributed loop's edge view. */
   private def symmetric(edges: DataFrame): DataFrame =
     edges.select(col("u1").as("sv"), col("u2").as("dst"))
       .unionAll(edges.select(col("u2").as("sv"), col("u1").as("dst")))
       .localCheckpoint(eager = true)
 
-  private def buildAdj(sym: Array[(Long, Long)]): Map[Long, Array[Long]] =
-    sym.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+  /** Both directions of the undirected (u1, u2) list as driver pairs,
+    * when twice its row count fits the [[Endgame]] gate — the driver
+    * kernels' edge view (BFS and [[KCore]]). */
+  private[operators] def localSymmetric(spark: SparkSession,
+                                        edges: DataFrame): Option[Array[(Long, Long)]] = {
+    import spark.implicits._
+    Endgame.rows(edges.select($"u1".cast("long"), $"u2".cast("long")).as[(Long, Long)], 2)
+      .map(_.flatMap { case (a, b) => Array((a, b), (b, a)) })
+  }
+
+  private def localAdj(spark: SparkSession,
+                       edges: DataFrame): Option[Map[Long, Array[Long]]] =
+    localSymmetric(spark, edges)
+      .map(_.groupBy(_._1).view.mapValues(_.map(_._2)).toMap)
+
+  /** The (id) column of `ids` as longs, when `weight` × its count fits. */
+  private def localIds(spark: SparkSession, ids: DataFrame,
+                       weight: Long): Option[Array[Long]] = {
+    import spark.implicits._
+    Endgame.rows(ids.select($"id".cast("long")).as[Long], weight)
+  }
 
   /** Driver-local frontier loop — the [[Endgame]] kernel: the same
     * layer-synchronous expansion over a driver adjacency map, same
@@ -93,18 +113,17 @@ object Bfs {
   def run(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
           maxHops: Int = 8, checkEvery: Int = 2): DataFrame = {
     import spark.implicits._
-    val sym = symmetric(edges)
-    // The seed frame passes its own count gate before it may reach the
-    // driver.
+    // The seed frame passes its own gate first: the edge list reaches the
+    // driver only when both fit.
     val (out, rounds) =
-      if (Endgame.local(sym.count()) && Endgame.local(seeds.count())) {
-        val seedIds = seeds.select($"id".cast("long")).as[Long].collect()
-        val (one, d) = runLocal(buildAdj(sym.as[(Long, Long)].collect()),
-          seedIds, maxHops, checkEvery)
-        (spark.createDataset(one).toDF("id", "dist"), d)
-      } else
-        runDistributed(sym, seeds.select($"id", lit(0).as("dist")), Nil,
-          maxHops, checkEvery)
+      localIds(spark, seeds, 1).flatMap(ids => localAdj(spark, edges).map((_, ids))) match {
+        case Some((adj, seedIds)) =>
+          val (one, d) = runLocal(adj, seedIds, maxHops, checkEvery)
+          (spark.createDataset(one).toDF("id", "dist"), d)
+        case None =>
+          runDistributed(symmetric(edges), seeds.select($"id", lit(0).as("dist")),
+            Nil, maxHops, checkEvery)
+      }
     lastIterations = rounds
     out
   }
@@ -123,25 +142,24 @@ object Bfs {
   def runFromEach(spark: SparkSession, edges: DataFrame, sources: DataFrame,
                   maxHops: Int = 8, checkEvery: Int = 2): DataFrame = {
     import spark.implicits._
-    val sym = symmetric(edges)
     // Per-source BFS over one driver adjacency map, built ONCE and shared
     // across the per-source loops — Σ reachable pairs is |sources|·|V|-
     // bounded, the same budget class as the distributed state it replaces.
     val (out, rounds) =
-      if (Endgame.local(sym.count()) && Endgame.local(sources.count() * 4)) {
-        val srcIds = sources.select($"id".cast("long")).as[Long].collect()
-        val adj = buildAdj(sym.as[(Long, Long)].collect())
-        var maxD = 0
-        val rows = srcIds.distinct.sorted.flatMap { s =>
-          val (one, d) = runLocal(adj, Array(s), maxHops, checkEvery)
-          maxD = math.max(maxD, d)
-          one.map { case (v, dist) => (s, v, dist) }
-        }
-        (spark.createDataset(rows.toSeq).toDF("src", "id", "dist"), maxD)
-      } else
-        runDistributed(sym,
-          sources.select($"id".as("src"), $"id", lit(0).as("dist")),
-          Seq("src"), maxHops, checkEvery)
+      localIds(spark, sources, 4).flatMap(ids => localAdj(spark, edges).map((_, ids))) match {
+        case Some((adj, srcIds)) =>
+          var maxD = 0
+          val rows = srcIds.distinct.sorted.flatMap { s =>
+            val (one, d) = runLocal(adj, Array(s), maxHops, checkEvery)
+            maxD = math.max(maxD, d)
+            one.map { case (v, dist) => (s, v, dist) }
+          }
+          (spark.createDataset(rows.toSeq).toDF("src", "id", "dist"), maxD)
+        case None =>
+          runDistributed(symmetric(edges),
+            sources.select($"id".as("src"), $"id", lit(0).as("dist")),
+            Seq("src"), maxHops, checkEvery)
+      }
     lastIterations = rounds
     out
   }

@@ -33,16 +33,16 @@ object KCore {
   def coreMembers(spark: SparkSession, edges: DataFrame, k: Int,
                   maxIter: Int = 50, checkEvery: Int = 2): DataFrame = {
     import spark.implicits._
-    val e = edges.select($"u1".as("src"), $"u2".as("dst"))
-      .unionAll(edges.select($"u2".as("src"), $"u1".as("dst")))
-      .localCheckpoint(eager = true)
-    var prevEdges = e.count()
     // Both paths run the identical peeling rounds and cadence — integer
     // degrees, so local ≡ distributed exactly (KCoreSpec pins both).
     // Non-cadence rounds leave prevEdges stale on purpose: the next
-    // cadence count compares against it.
-    val (out, rounds, done) = if (Endgame.local(prevEdges)) {
-      var es = e.as[(Long, Long)].collect()
+    // cadence count compares against it. The driver kernel peels the
+    // fetched pairs in both directions (the BFS edge view); only the
+    // distributed rounds build the checkpointed symmetric frame and count it.
+    var prevEdges = 0L
+    val (out, rounds, done) = Bfs.localSymmetric(spark, edges).map { sym =>
+      var es = sym
+      prevEdges = es.length.toLong
       var i = 0
       var done = prevEdges == 0
       while (i < maxIter && !done) {
@@ -59,8 +59,11 @@ object KCore {
         }
       }
       (spark.createDataset(es.map(_._1).distinct.sorted.toSeq).toDF("id"), i, done)
-    } else {
-      var cur = e
+    }.getOrElse {
+      var cur = edges.select($"u1".as("src"), $"u2".as("dst"))
+        .unionAll(edges.select($"u2".as("src"), $"u1".as("dst")))
+        .localCheckpoint(eager = true)
+      prevEdges = cur.count()
       var i = 0
       var done = prevEdges == 0
       while (i < maxIter && !done) {

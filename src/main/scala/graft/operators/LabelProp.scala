@@ -51,13 +51,11 @@ object LabelProp {
   def runCounted(spark: SparkSession, edges: DataFrame,
                  iterations: Int = 10, checkEvery: Int = 3): (DataFrame, Int) = {
     import spark.implicits._
-    val e = edges.select($"src".cast("long"), $"dst".cast("long"))
-      .localCheckpoint(eager = true)
+    val typed = edges.select($"src".cast("long"), $"dst".cast("long"))
     // Both paths run the identical synchronous plurality rounds — integer
     // labels with the same min-label tie rule and cadence exit, so local ≡
     // distributed exactly (LabelPropSpec pins both).
-    val (labels, rounds) = if (Endgame.local(e.count())) {
-      val es = e.as[(Long, Long)].collect()
+    val (labels, rounds) = Endgame.rows(typed.as[(Long, Long)]).map { es =>
       val inNbrs = es.groupBy(_._2).view.mapValues(_.map(_._1)).toMap
       val ids = es.iterator.flatMap(p => Iterator(p._1, p._2)).toArray.distinct.sorted
       var labL = ids.map(v => v -> v).toMap
@@ -85,7 +83,8 @@ object LabelProp {
         labL = next
       }
       (spark.createDataset(ids.toSeq.map(v => (v, labL(v)))).toDF("id", "label"), i)
-    } else {
+    }.getOrElse {
+      val e = typed.localCheckpoint(eager = true)
       val verts = e.select($"src".as("id")).unionAll(e.select($"dst".as("id")))
         .distinct().localCheckpoint(eager = true)
 

@@ -121,17 +121,16 @@ object PageRank {
                  iterations: Int = 15, tol: Double = 1e-7,
                  checkEvery: Int = 3, weighted: Boolean = false): (DataFrame, Int) = {
     import spark.implicits._
-    val e = (if (weighted)
+    val typed =
+      if (weighted)
         edges.select($"src".cast("long"), $"dst".cast("long"), $"w".cast("double"))
       else
-        edges.select($"src".cast("long"), $"dst".cast("long"), lit(1.0).as("w")))
-      .localCheckpoint(eager = true)
-    // The edge count is a count over just-cached blocks — the frame every
-    // downstream branch needs materialized anyway.
-    val (ranks, rounds) = if (Endgame.local(e.count())) {
-      runLocal(spark, e.as[(Long, Long, Double)].collect(), damping,
-        iterations, tol, checkEvery)
-    } else {
+        edges.select($"src".cast("long"), $"dst".cast("long"), lit(1.0).as("w"))
+    val (ranks, rounds) = Endgame.rows(typed.as[(Long, Long, Double)]).map { rows =>
+      runLocal(spark, rows, damping, iterations, tol, checkEvery)
+    }.getOrElse {
+      // the frame every distributed round reads, cached once
+      val e = typed.localCheckpoint(eager = true)
       val verts = e.select($"src".as("id")).unionAll(e.select($"dst".as("id")))
         .distinct().localCheckpoint(eager = true)
       val n = verts.count().toDouble

@@ -74,14 +74,13 @@ object Ppr {
           damping: Double = 0.85, iterations: Int = 15, tol: Double = 1e-7,
           checkEvery: Int = 3): DataFrame = {
     import spark.implicits._
-    val e = edges.select($"src".cast("long"), $"dst".cast("long"))
-      .localCheckpoint(eager = true)
-    val (ranks, rounds) = if (Endgame.local(e.count())) {
-      val rows = e.as[(Long, Long)].collect()
+    val typed = edges.select($"src".cast("long"), $"dst".cast("long"))
+    val (ranks, rounds) = Endgame.rows(typed.as[(Long, Long)]).map { rows =>
       val seedIds = seeds.select($"id".cast("long")).distinct()
         .as[Long].collect()
       runLocal(spark, rows, seedIds, damping, iterations, tol, checkEvery)
-    } else {
+    }.getOrElse {
+      val e = typed.localCheckpoint(eager = true)
       val verts = e.select($"src".as("id")).unionAll(e.select($"dst".as("id")))
         .distinct().localCheckpoint(eager = true)
       val seedSet = seeds.select($"id".cast("long"))

@@ -51,9 +51,14 @@ object Geo extends QueryGroup {
 
   /** Co-traveler pair memo: m_graph_pagerank and q_graph_degree read the
     * SAME coTravelers(cell=20°, minHours=2) pair set — one bucket join per
-    * (session, sfDir, params) behind a lazy checkpoint instead of one per
-    * key ([[graft.SessionMemo]]; keyed by VALUE since each call site builds
-    * a fresh pts() plan, so DataFrame identity would never hit). */
+    * (session, sfDir, params) instead of one per key
+    * ([[graft.SessionMemo]]; keyed by VALUE since each call site builds a
+    * fresh pts() plan, so DataFrame identity would never hit). The value
+    * is pinned ([[graft.operators.Endgame.pin]]): a driver-resident
+    * `LocalRelation` while the pair set fits the budget (the graph
+    * operators then gate and fetch it without a job, and its exact
+    * statistics let the triangle joins broadcast), an eager checkpoint
+    * above it. */
   private val convoyMemo = new graft.SessionMemo[(String, Double, Int), DataFrame]
 
   // private[graft] so ScaleProbe's dist_loop probe can time the
@@ -61,26 +66,29 @@ object Geo extends QueryGroup {
   private[graft] def coTravelerPairs(s: SparkSession, dir: String,
                                      cellDeg: Double, minHours: Int): DataFrame =
     convoyMemo.getOrCompute(s, (dir, cellDeg, minHours)) {
-      graft.operators.Convoy.coTravelers(pts(s, dir), cellDeg, minHours)
-        .localCheckpoint(eager = false)
+      graft.operators.Endgame.pin(
+        graft.operators.Convoy.coTravelers(pts(s, dir), cellDeg, minHours))
     }
 
   /** LP community labels on the co-traveler graph — ONE iterative run per
     * (session, dir), shared by m_graph_lp and m_graph_modularity (the
-    * convoyMemo discipline applied to the label frame). */
+    * convoyMemo discipline applied to the label frame: the driver-local
+    * endgame's result is already a `LocalRelation` and is kept as is). */
   private val lpMemo = new graft.SessionMemo[String, DataFrame]
   private def lpLabels(s: SparkSession, dir: String): DataFrame =
     lpMemo.getOrCompute(s, dir) {
       val pairs = coTravelerPairs(s, dir, cellDeg = 20.0, minHours = 2)
       val edges = pairs.select(col("u1").as("src"), col("u2").as("dst"))
         .unionAll(pairs.select(col("u2").as("src"), col("u1").as("dst")))
-      graft.operators.LabelProp.run(s, edges).localCheckpoint(eager = false)
+      graft.operators.Endgame.pin(graft.operators.LabelProp.run(s, edges))
     }
 
   /** All-pairs ≤8-hop BFS distances over the co-traveler graph — ONE
     * iterative run per (session, dir), shared by q_graph_closeness and
-    * q_graph_diameter (the lpMemo discipline applied to the distance
-    * frame). */
+    * q_graph_diameter, behind a lazy checkpoint. Not pinned: its
+    * |sources| × reach rows are not bounded by the budget, and pinned
+    * they would sit on the driver heap for the memo's life and ship
+    * inside every consumer task. */
   private val apspMemo = new graft.SessionMemo[String, DataFrame]
   private def apspDists(s: SparkSession, dir: String): DataFrame =
     apspMemo.getOrCompute(s, dir) {

@@ -21,4 +21,32 @@ trait BaseSpec extends AnyFunSuite {
 
   def onPath[T](distributed: Boolean)(body: => T): T =
     if (distributed) operators.Endgame.distributed(body) else body
+
+  /** Spark jobs launched while `body` runs. Listener events are async, so
+    * the counter is polled to a plateau, before counting (events of
+    * earlier jobs) and after. */
+  def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def settled(): Int = {
+      var last = -1
+      var cur = jobs.get()
+      var spins = 0
+      while (cur != last && spins < 50) {
+        Thread.sleep(100); last = cur; cur = jobs.get(); spins += 1
+      }
+      cur
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      settled()
+      jobs.set(0)
+      body
+      settled()
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }

@@ -8,10 +8,15 @@ import graft.operators.Bfs
 class BfsSpec extends BaseSpec {
   import spark.implicits._
 
+  /** `partitions` > 0 hands the operator repartitioned frames instead of
+    * the driver-resident `toDF` ones, so the count-gated fetch runs. */
   private def dists(es: Seq[(Long, Long)], seeds: Seq[Long],
-                    maxHops: Int = 8, dist: Boolean = false): Map[Long, Int] =
+                    maxHops: Int = 8, dist: Boolean = false,
+                    partitions: Int = 0): Map[Long, Int] =
     onPath(dist) {
-      Bfs.run(spark, es.toDF("u1", "u2"), seeds.toDF("id"), maxHops)
+      def frame(df: org.apache.spark.sql.DataFrame) =
+        if (partitions > 0) df.repartition(partitions) else df
+      Bfs.run(spark, frame(es.toDF("u1", "u2")), frame(seeds.toDF("id")), maxHops)
         .as[(Long, Int)].collect().toMap
     }
 
@@ -39,11 +44,12 @@ class BfsSpec extends BaseSpec {
         .filter { case (a, b) => a != b }.distinct
       val seeds = Seq.fill(3)(rnd.nextInt(n).toLong).distinct
       val exp = reference(es, seeds, 8)
-      // both the driver-local endgame and the distributed rounds must
-      // match the reference exactly
-      for (dist <- bothPaths) {
-        val got = dists(es, seeds, dist = dist)
-        assert(got == exp, s"trial $trial dist=$dist: $got vs $exp")
+      // both the driver-local endgame and the distributed rounds, over
+      // driver-resident and repartitioned inputs, must match the
+      // reference exactly
+      for (dist <- bothPaths; parts <- Seq(0, 3)) {
+        val got = dists(es, seeds, dist = dist, partitions = parts)
+        assert(got == exp, s"trial $trial dist=$dist partitions=$parts: $got vs $exp")
       }
     }
   }

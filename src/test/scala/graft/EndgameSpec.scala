@@ -1,11 +1,19 @@
 package graft
 
 import graft.operators.Endgame
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** The one endgame gate: the budget boundary, and the forced distributed
-  * scope's nesting, exception safety and thread confinement. */
-class EndgameSpec extends AnyFunSuite {
+/** The one endgame gate: the budget boundary, the forced distributed
+  * scope's nesting, exception safety and thread confinement, and the
+  * gate-and-fetch / memo pinning over driver-resident frames. */
+class EndgameSpec extends BaseSpec {
+  import spark.implicits._
+
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  private def pairs(n: Int) = (1 to n).map(i => (i.toLong, i * 7L % 11L)).toDF("a", "b")
 
   test("local() admits sizes up to the budget, and Budget + 1 is distributed") {
     assert(Endgame.local())
@@ -45,5 +53,59 @@ class EndgameSpec extends AnyFunSuite {
       other.join()
     }
     assert(seen.contains(true), s"the other thread saw the forced scope: $seen")
+  }
+
+  test("rows over a driver-resident frame fetches it without a job") {
+    val df = pairs(5)
+    assert(isLocal(df))
+    var got: Option[Array[org.apache.spark.sql.Row]] = None
+    assert(jobsDuring { got = Endgame.rows(df) } == 0)
+    assert(got.map(_.toSeq) == Some(df.collect().toSeq))
+  }
+
+  test("rows over a distributed frame is count-gated and equals its collect()") {
+    val df = pairs(200).repartition(3)
+    assert(!isLocal(df))
+    val got = Endgame.rows(df).map(_.toSeq.map(r => (r.getLong(0), r.getLong(1))))
+    assert(got.map(_.sorted) ==
+      Some(df.as[(Long, Long)].collect().toSeq.sorted))
+  }
+
+  test("rows says distributed over budget by weight, and inside the forced scope") {
+    assert(Endgame.rows(pairs(2), weight = Endgame.Budget).isEmpty)
+    assert(Endgame.rows(pairs(2), weight = Endgame.Budget / 2).nonEmpty)
+    val df = pairs(50).repartition(3)
+    var got: Option[Array[org.apache.spark.sql.Row]] = Some(Array.empty)
+    // forced: no count, no collect
+    assert(jobsDuring { got = Endgame.distributed(Endgame.rows(df)) } == 0)
+    assert(got.isEmpty)
+    assert(Endgame.distributed(Endgame.rows(pairs(2))).isEmpty)
+  }
+
+  test("pin keeps a driver-resident frame as the same object") {
+    val df = pairs(4)
+    assert(Endgame.pin(df) eq df)
+  }
+
+  test("pin rebuilds a small distributed frame as a LocalRelation, same rows in order") {
+    // a descending sort over three range partitions: row order is the
+    // sort's, not the input's, so a reordering pin shows
+    val df = spark.range(0, 60, 1, 3).selectExpr("id", "id % 7 AS m")
+      .orderBy($"m".desc, $"id")
+    assert(!isLocal(df))
+    val pinned = Endgame.pin(df)
+    assert(isLocal(pinned))
+    assert(pinned.schema == df.schema)
+    assert(pinned.collect().toSeq == df.collect().toSeq)
+  }
+
+  test("pin inside the forced scope holds the checkpoint") {
+    val pinned = Endgame.distributed(Endgame.pin(pairs(30).repartition(3)))
+    assert(pinned.queryExecution.optimizedPlan.isInstanceOf[LogicalRDD])
+    assert(pinned.count() == 30)
+    // a driver-resident frame is kept only when the gate admits its length
+    val local = Endgame.distributed(Endgame.pin(pairs(30)))
+    assert(local.queryExecution.optimizedPlan.isInstanceOf[LogicalRDD])
+    assert(local.collect().toSeq == pairs(30).collect().toSeq)
   }
 }

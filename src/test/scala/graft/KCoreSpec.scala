@@ -8,9 +8,13 @@ import graft.operators.KCore
 class KCoreSpec extends BaseSpec {
   import spark.implicits._
 
-  private def core(es: Seq[(Long, Long)], k: Int,
-                   dist: Boolean = false): Set[Long] = onPath(dist) {
-    KCore.coreMembers(spark, es.toDF("u1", "u2"), k).as[Long].collect().toSet
+  /** `partitions` > 0 hands the operator a repartitioned frame instead of
+    * the driver-resident `toDF` one, so the count-gated fetch runs. */
+  private def core(es: Seq[(Long, Long)], k: Int, dist: Boolean = false,
+                   partitions: Int = 0): Set[Long] = onPath(dist) {
+    val df = es.toDF("u1", "u2")
+    KCore.coreMembers(spark, if (partitions > 0) df.repartition(partitions) else df, k)
+      .as[Long].collect().toSet
   }
 
   private def reference(es: Seq[(Long, Long)], k: Int): Set[Long] = {
@@ -35,9 +39,11 @@ class KCoreSpec extends BaseSpec {
       val es = Seq.fill(110)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
         .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
-      // both the driver-local endgame and the distributed rounds
-      for (dist <- bothPaths)
-        assert(core(es, k, dist) == reference(es, k), s"trial $trial k=$k dist=$dist")
+      // both the driver-local endgame and the distributed rounds, over a
+      // driver-resident and a repartitioned input
+      for (dist <- bothPaths; parts <- Seq(0, 3))
+        assert(core(es, k, dist, parts) == reference(es, k),
+          s"trial $trial k=$k dist=$dist partitions=$parts")
     }
   }
 

@@ -136,25 +136,9 @@ class PageRankSpec extends BaseSpec {
     // the same graph must launch measurably fewer jobs at checkEvery=3
     // than at checkEvery=1 (≡ the old every-round shape) — the 6 skipped
     // eager-checkpoint actions, give or take async-listener slack.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)) // 4-cycle
     val edges = (pairs ++ pairs.map(_.swap)).toDF("src", "dst")
-    def settled(): Int = { // listener events are async: poll to a plateau
-      var last = -1
-      var cur = jobs.get()
-      var spins = 0
-      while (cur != last && spins < 50) {
-        Thread.sleep(100); last = cur; cur = jobs.get(); spins += 1
-      }
-      cur
-    }
-    def measure(checkEvery: Int): Int = {
-      jobs.set(0)
+    def measure(checkEvery: Int): Int = jobsDuring {
       // The forced scope pins the DISTRIBUTED rounds — the cadence
       // amortization is a distributed-path property; the default local
       // endgame would trivialize both sides of the comparison.
@@ -162,16 +146,12 @@ class PageRankSpec extends BaseSpec {
         iterations = 9, tol = 0, checkEvery = checkEvery))
       df.count() // materialize the final (already-checkpointed) frame
       assert(iters == 9)
-      settled()
     }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val perRound = measure(1)
-      val cadenced = measure(3)
-      assert(cadenced <= perRound - 4,
-        s"cadence-3 run launched $cadenced jobs vs $perRound per-round — " +
-        "the amortization is not reducing blocking actions")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val perRound = measure(1)
+    val cadenced = measure(3)
+    assert(cadenced <= perRound - 4,
+      s"cadence-3 run launched $cadenced jobs vs $perRound per-round — " +
+      "the amortization is not reducing blocking actions")
   }
 
   test("m_graph_pagerank returns a full top-10 with positive normalized ranks") {

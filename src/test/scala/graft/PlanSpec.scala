@@ -728,8 +728,9 @@ class PlanSpec extends BaseSpec {
   }
 
   test("round-12 session-4 additions hold their pinned exchange budgets") {
-    def shape(key: String, allowedBnlj: Int = 0): (Int, Int, Boolean) = {
-      val plan = SparkEntry.queries(key)(spark, sf)
+    def shape(key: String, allowedBnlj: Int = 0,
+              session: org.apache.spark.sql.SparkSession = spark): (Int, Int, Boolean) = {
+      val plan = SparkEntry.queries(key)(session, sf)
         .queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"),
         s"$key: cartesian product leaked into the plan:\n$plan")
@@ -781,10 +782,18 @@ class PlanSpec extends BaseSpec {
     // wilcoxon: (hour) diff agg + tie agg; global rank window + 1-row
     // reduce are the bounded singles; 1-row tie cross is the BNLJ
     assert(shape("q_stat_wilcoxon", allowedBnlj = 1) == ((3, 2, false)))
-    // richclub: all seven exchanges are vertex/edge-bounded (degree agg,
-    // two endpoint joins, two k-sweep aggs, final join) — the pair-set
-    // build is the memoized checkpoint
-    assert(shape("q_graph_richclub") == ((7, 0, false)))
+    // richclub at scale: all seven exchanges are vertex/edge-bounded
+    // (degree agg, two endpoint joins, two k-sweep aggs, final join) — the
+    // pair-set build is the memoized checkpoint. A fresh session inside
+    // the forced scope builds that memo as it is above the budget.
+    assert(operators.Endgame.distributed(
+      shape("q_graph_richclub", session = spark.newSession())) == ((7, 0, false)))
+    // richclub below the budget: the pair set is the driver-resident memo,
+    // whose exact size keeps the degree and k frames' estimates small —
+    // every join broadcasts, and the five exchanges left are the
+    // vertex-bounded aggregates (the degree agg, reused across its three
+    // uses, and the two k-sweep aggs)
+    assert(shape("q_graph_richclub") == ((5, 0, true)))
     // every plan above reads the fact table at most once per declared scan
     Seq("q_events_attr" -> 0, "q_text_pmi" -> 1).foreach { case (k, n) =>
       val plan = SparkEntry.queries(k)(spark, sf)
@@ -1470,5 +1479,37 @@ class PlanSpec extends BaseSpec {
     assert(hCond.indexOf("u1") >= 0 && hCond.indexOf("hausdorff_km_capped") >= 0 &&
            hCond.indexOf("u1") < hCond.indexOf("hausdorff_km_capped"),
       s"m_traj_hausdorff: u1 < u2 must precede the capped kernel in the join condition:\n$hCond")
+  }
+
+  test("q_graph_triangles broadcasts the driver-resident pair set: no shuffle below its joins") {
+    // The memoized co-traveler pair set is pinned as a LocalRelation under
+    // the endgame budget, so its exact size statistics plan both triangle
+    // joins as broadcast joins straight over LocalTableScan. A memo held
+    // as a checkpoint (size unknown to the planner) plans them as shuffle
+    // joins and fails here.
+    import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case r: ReusedExchangeExec => nodes(r.child)
+      case _ => p.children.flatMap(nodes)
+    })
+    val df = SparkEntry.queries("q_graph_triangles")(spark, sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val joins = nodes(plan).collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 2, s"q_graph_triangles: expected two broadcast triangle joins:\n$plan")
+    for (j <- joins) {
+      val below = nodes(j).tail
+      assert(!below.exists(_.isInstanceOf[ShuffleExchangeLike]),
+        s"q_graph_triangles: shuffle below a triangle join:\n$plan")
+      val leaves = below.filter(n => n.children.isEmpty && !n.isInstanceOf[QueryStageExec] &&
+        !n.isInstanceOf[ReusedExchangeExec])
+      assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[LocalTableScanExec]),
+        s"q_graph_triangles: a triangle join reads other than LocalTableScan:\n$plan")
+    }
   }
 }
