@@ -31,6 +31,20 @@ object ScaleProbe {
     self + into
   }
 
+  private val trajTopKeys =
+    Set("m_traj_frechet", "m_traj_lcss", "m_traj_edr", "m_traj_hausdorff")
+
+  /** Prune telemetry of a track top-10 frame that has run: the pair count
+    * U(U−1)/2 of its tracks, and the survivors its threshold prune fed to
+    * the exact kernel (the executed frame's `observe("prune")` metric; a
+    * direct scan has none). */
+  private def pruneStats(df: DataFrame, tracks: DataFrame): String = {
+    val n = tracks.count()
+    val surv = df.queryExecution.observedMetrics.get("prune")
+      .map(m => s""","survivors":${m.getLong(0)}""").getOrElse("")
+    s""","pairs":${n * (n - 1) / 2}$surv"""
+  }
+
   def main(args: Array[String]): Unit = {
     val base = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val scaled = args.lift(1).getOrElse("/tmp/graft_x10")
@@ -291,9 +305,9 @@ object ScaleProbe {
     // ×10 POINT set (event_id shifts re-derive lat/lon, so copies are
     // distinct tracks, not clones), re-derived through the keys' own
     // tracksFromPoints — nothing extra lands on disk. Request one of
-    // "frechet_x100" / "hausdorff_x100" / "lcss_x100" (each runs its
-    // PRUNED branch on the ×100 tracks and reports sec / pairs /
-    // observe-survivors), or "edr_skew" (edrPruned's regime: per-user
+    // "frechet_x100" / "hausdorff_x100" / "lcss_x100" (each runs the
+    // key's one pruned path on the ×100 tracks and reports sec / pairs /
+    // observe-survivors), or "edr_skew" (the EDR prune's regime: per-user
     // length skew — ×10-skew pruned ≡ direct equality + speedup, then
     // the ×100-skew point; the ×100 UNIFORM edr wall is declared, not
     // run — its tier is a no-op there by design).
@@ -329,7 +343,7 @@ object ScaleProbe {
         .select(col("user_id"), col("event_id"), col("ts")))
       // per-user length skew: keep the first 4 + xxhash64(user)%60 fixes,
       // so downsampled tracks span 4..63 points — the session/partial-track
-      // shape edrPruned's length bound exists for
+      // shape the EDR prune's length bound exists for
       def skew(p: DataFrame): DataFrame = {
         val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
         p.withColumn("rn", row_number().over(w))
@@ -338,17 +352,12 @@ object ScaleProbe {
       }
       def runOne(key: String, fn: DataFrame => DataFrame, tr: DataFrame,
                  label: String): Unit = {
-        graft.queries.Trajectory.lastPrune -= key
         val t0 = System.nanoTime()
         try {
           val df = fn(tr)
           val rows = df.collect().length.toLong
           val sec = (System.nanoTime() - t0) / 1e9
-          val surv = df.queryExecution.observedMetrics.get("prune").map(_.getLong(0))
-          val pr = graft.queries.Trajectory.lastPrune.get(key)
-            .map { case (c, v) => s""","pairs":$c,"survivors":${surv.getOrElse(v)}""" }
-            .getOrElse("")
-          println(s"""{"metric":"scaleprobe","key":"$key","scale":"$label","sec":${r3(sec)},"rows":$rows$pr}""")
+          println(s"""{"metric":"scaleprobe","key":"$key","scale":"$label","sec":${r3(sec)},"rows":$rows${pruneStats(df, tr)}}""")
         } catch { case scala.util.control.NonFatal(e) =>
           val m = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"
             .replaceAll("[\\s\\p{Cntrl}\"\\\\]+", " ").trim.take(160)
@@ -360,38 +369,23 @@ object ScaleProbe {
         .localCheckpoint(eager = false)
       if (x100Req("frechet_x100"))
         runOne("m_traj_frechet",
-          t => graft.queries.Trajectory.frechetPruned(spark, t, t.count()), tr100, s"x${10 * factor}")
+          t => graft.queries.Trajectory.frechetPruned(spark, t), tr100, s"x${10 * factor}")
       if (x100Req("hausdorff_x100"))
         runOne("m_traj_hausdorff",
-          t => graft.queries.Trajectory.hausdorffPruned(spark, t, t.count()), tr100, s"x${10 * factor}")
+          t => graft.queries.Trajectory.hausdorffPruned(spark, t), tr100, s"x${10 * factor}")
       if (x100Req("lcss_x100"))
         runOne("m_traj_lcss",
-          t => graft.queries.Trajectory.lcssPruned(spark, t, t.count()), tr100, s"x${10 * factor}")
+          t => graft.queries.Trajectory.lcssPruned(spark, t), tr100, s"x${10 * factor}")
       if (x100Req("edr_skew")) {
         val tr10s = graft.queries.Trajectory
           .tracksFromPoints(spark, skew(pts(scaled)))
           .localCheckpoint(eager = false)
-        // direct (all-pairs kernel) reference at ×10-skew: the equality
-        // stands in TrajectorySpec; here the MEASURED speedup + survivors
-        val direct = (tr: DataFrame) => {
-          val lhs = tr.select(col("user_id").as("u1"), col("n_fixes").as("n_a"),
-              col("track").as("ta"), col("pb").as("sa"))
-            .repartition(spark.sparkContext.defaultParallelism)
-          val rhs = tr.select(col("user_id").as("u2"), col("n_fixes").as("n_b"),
-              col("track").as("tb"), col("pb").as("sb"))
-          lhs.join(broadcast(rhs), col("u1") < col("u2"))
-            .withColumn("n_edits",
-              graft.functions.TrajSketchFns.edrSparse(col("sa"), col("ta"), col("sb"), col("tb"),
-                graft.queries.Trajectory.MatchEpsKm))
-            .withColumn("edr", round(col("n_edits") * lit(3.0) /
-              greatest(size(col("ta")), size(col("tb"))), 4))
-            .select(col("u1"), col("u2"), col("n_a"), col("n_b"), col("n_edits"), col("edr"))
-            .orderBy(col("edr"), col("u1"), col("u2"))
-            .limit(10)
-        }
-        runOne("edr_skew_direct", direct, tr10s, s"x$factor-skew")
+        // the key's own direct scan at ×10-skew: the equality stands in
+        // TrajectorySpec; here the MEASURED speedup + survivors
+        runOne("edr_skew_direct",
+          t => graft.queries.Trajectory.edrTop(spark, t, prune = false), tr10s, s"x$factor-skew")
         runOne("m_traj_edr",
-          t => graft.queries.Trajectory.edrPruned(spark, t, t.count()), tr10s, s"x$factor-skew")
+          t => graft.queries.Trajectory.edrTop(spark, t, prune = true), tr10s, s"x$factor-skew")
         // PLANTED near-dup variant: the regime where a top-10-nearest
         // query is meaningful (and where the threshold-prune can bite) is
         // a corpus CONTAINING near-duplicate tracks — d₁₀ ≪ 1. Clone 30
@@ -413,12 +407,12 @@ object ScaleProbe {
           .tracksFromPoints(spark, planted(skew(pts(scaled))))
           .localCheckpoint(eager = false)
         runOne("m_traj_edr",
-          t => graft.queries.Trajectory.edrPruned(spark, t, t.count()), tr10p, s"x$factor-skew-planted")
+          t => graft.queries.Trajectory.edrTop(spark, t, prune = true), tr10p, s"x$factor-skew-planted")
         val tr100p = graft.queries.Trajectory
           .tracksFromPoints(spark, planted(skew(toPts(shiftedEvents(factor)))))
           .localCheckpoint(eager = false)
         runOne("m_traj_edr",
-          t => graft.queries.Trajectory.edrPruned(spark, t, t.count()), tr100p, s"x${10 * factor}-skew-planted")
+          t => graft.queries.Trajectory.edrTop(spark, t, prune = true), tr100p, s"x${10 * factor}-skew-planted")
       }
     }
 
@@ -619,32 +613,18 @@ object ScaleProbe {
     }
 
     for (key <- probeKeys; (label, dir) <- Seq("base" -> base, s"x$factor" -> scaled)) {
-      // lastPrune accumulates across the probe loop: stale entries from a
-      // pruned-branch run at one scale would otherwise match contains(key)
-      // on a later direct-branch run of the same key and print stale pair
-      // telemetry (survivors -1, no observe metric). Drop the key BEFORE
-      // invoking so the telemetry below only fires when THIS run's branch
-      // actually recorded it.
-      graft.queries.Trajectory.lastPrune -= key
       val t0 = System.nanoTime()
       try {
         val df = SparkEntry.queries(key)(spark, dir)
-        // pruned keys run via collect() so the observe("prune") metric
-        // lands on THIS frame's queryExecution (count() builds its own);
-        // their outputs are top-10 frames, so collect is free
-        val pruned = graft.queries.Trajectory.lastPrune.contains(key)
-        val rows = if (pruned) df.collect().length.toLong else df.count()
+        // the track top-10 keys run via collect() so the observe("prune")
+        // metric lands on THIS frame's queryExecution (count() builds its
+        // own); their outputs are top-10 frames, so collect is free
+        val trajTop = trajTopKeys(key)
+        val rows = if (trajTop) df.collect().length.toLong else df.count()
         val sec = (System.nanoTime() - t0) / 1e9
         val ex = countShuffles(df.queryExecution.executedPlan)
         val it = graft.operators.LastIterations.get(key).map(i => s""","rounds":$i""").getOrElse("")
-        // prune-tier telemetry (r15): candidate pair count (recorded by the
-        // pruned traj branches) + the survivors fed to the exact kernel
-        // (an observe() metric on the executed frame — no counting scan)
-        val surv = df.queryExecution.observedMetrics.get("prune")
-          .map(_.getLong(0))
-        val pr = graft.queries.Trajectory.lastPrune.get(key)
-          .map { case (c, v) =>
-            s""","pairs":$c,"survivors":${surv.getOrElse(v)}""" }.getOrElse("")
+        val pr = if (trajTop) pruneStats(df, graft.queries.Trajectory.tracks(spark, dir)) else ""
         println(s"""{"metric":"scaleprobe","key":"$key","scale":"$label","sec":${r3(sec)},"rows":$rows,"exchanges":$ex$it$pr}""")
       } catch { case scala.util.control.NonFatal(e) =>
         val m = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{TrajSim, TrajSketchFns}
@@ -21,37 +21,35 @@ import Q._
   *     user only widens the stride. Each kept fix converts once to a unit
   *     3-vector (codegen `transform`), making the DP inner cell pure
   *     arithmetic ([[graft.functions.FrechetDist]] scaladoc).
-  *  2. **EXACT scan/prune tiers, per metric** (round-15 — replacing the
-  *     r14-documented MinHash-LSH plan, which the fixture itself REFUTES:
-  *     the measured visited-cell Jaccard of true top-10 pairs is
-  *     indistinguishable from random pairs, one sf0.01 top-10 Fréchet
-  *     pair shares ZERO cells — see [[graft.functions.TrajSketch]]):
-  *     - LCSS and EDR run an exact SPARSE-MATCH algorithm
-  *       (Hunt-Szymanski LIS / sparse gap DP over the ε-match set found
-  *       by 2.5°-cell range lookup) — ≡ the full cap² DP on every input.
-  *       LCSS additionally threshold-prunes above the adaptive 5M-pair
-  *       gate with the exact match upper bound ub = min(nearA, nearB)
-  *       ([[lcssPruned]]); EDR does NOT — measured negative result: its
-  *       strongest exact bound (max(n,m) − ub) keeps 96% of ×10 pairs
-  *       at the true threshold, so a prune tier costs more than it
-  *       saves on uniform tracks (the key scaladoc has the numbers).
-  *     - Fréchet, above the same gate, pays its DP only on pairs
-  *       surviving the EXACT endpoint-chord lower bound and then the
-  *       capped DP ([[frechetPruned]]).
-  *     - Hausdorff has ONE path at every pair count
-  *       ([[hausdorffPruned]]): a cell-overlap seed sets a threshold
-  *       ≥ d₁₀, and the capped exact kernel in the join condition
-  *       abandons each far pair at its first fix with no counterpart
-  *       within the threshold (sf0.1, 4-core host: 974 of 1,124,250
-  *       pairs survive, key task CPU 9.3 s → 3.4 s).
-  *     Output provably identical to the all-pairs scan in every case.
-  *     All four main passes are SINGLE-SCAN: tracks and sketches ride
-  *     the one broadcast pair join, bounds filter inline, survivors pay
-  *     the kernel in the same stage — the ×10 probe measured re-attach
-  *     joins and per-pair copies as the real wall, not the DP cells.
-  *     The near-duplicate/corridor-fleet query form — where MinHash-LSH
-  *     IS sound (J ≥ ~0.5) — lives in [[graft.operators.TrajLsh]], a
-  *     library surface covered by TrajLshSpec.
+  *  2. **EXACT threshold prune, one path** ([[topPairs]]; round 15
+  *     replaced the r14-documented MinHash-LSH plan, which the fixture
+  *     itself REFUTES: the measured visited-cell Jaccard of true top-10
+  *     pairs is indistinguishable from random pairs, one sf0.01 top-10
+  *     Fréchet pair shares ZERO cells — see [[graft.functions.TrajSketch]]).
+  *     A cheap seed sets a threshold no better than the 10th-best exact
+  *     value, and the one broadcast pair join keeps only the pairs whose
+  *     bound can reach it; survivors pay the exact kernel in the same
+  *     stage. Per metric:
+  *     - Fréchet: the endpoint-chord lower bound, then the capped DP
+  *       ([[frechetPruned]]).
+  *     - Hausdorff: the capped exact kernel ([[hausdorffPruned]]; sf0.1,
+  *       4-core host: 974 of 1,124,250 pairs survive, key task CPU
+  *       9.3 s → 3.4 s).
+  *     - LCSS: the exact match upper bound ub = min(nearA, nearB)
+  *       ([[lcssPruned]]) over the exact SPARSE-MATCH kernel
+  *       (Hunt-Szymanski LIS over the ε-match set found by 2.5°-cell
+  *       range lookup, ≡ the full cap² DP on every input).
+  *     - EDR: the sparse gap DP (≡ the full DP) behind the free
+  *       length-difference bound, above 5M pairs only ([[edrTop]]): on
+  *       uniform tracks no EDR bound prunes, and the direct scan — the
+  *       same main pass with no bound — is 20–30% faster there.
+  *     Output provably identical to the all-pairs scan (the proof is
+  *     [[topPairs]]' scaladoc). Tracks and sketches ride the one pair
+  *     join — the ×10 probe measured re-attach joins and per-pair copies
+  *     as the real wall, not the kernel cells. The near-duplicate/
+  *     corridor-fleet query form — where MinHash-LSH IS sound (J ≥ ~0.5)
+  *     — lives in [[graft.operators.TrajLsh]], a library surface covered
+  *     by TrajLshSpec.
   *
   * No SQL oracle (a 2-D DP has no tractable SQL form — the m_time_dtw
   * precedent); TrajectorySpec pins kernel equality with an independent
@@ -59,9 +57,9 @@ import Q._
   * monotone-transform rewrite exact), sparse-kernel ≡ full-DP equality
   * on random and adversarial tracks, the Eiter-Mannila axioms (identity,
   * symmetry, endpoint lower bound), planted parallel/reversed corridors,
-  * LCSS one-wild-fix robustness, forced-prune-branch ≡ direct-branch
-  * equality for the gated keys, capped-kernel exactness, and key-level
-  * top-10 equality vs an exact all-pairs driver DP at fixture scale. */
+  * LCSS one-wild-fix robustness, EDR forced-prune ≡ direct-scan
+  * equality, capped-kernel exactness, and key-level top-10 equality vs an
+  * exact all-pairs scalar DP at fixture scale and on planted ties. */
 object Trajectory extends QueryGroup {
 
   /** Downsample cap: per-pair exact DP ≤ 64² = 4096 cells. (graft-wide
@@ -89,9 +87,9 @@ object Trajectory extends QueryGroup {
 
   /** Gate check for the four exact top-k keys. Throws (with the corridor
     * form named) when the U² pair count exceeds the declared per-core
-    * budget × available parallelism. */
+    * budget × available parallelism; returns the pair count otherwise. */
   private[graft] def exactPairsGate(parallelism: Int, key: String,
-                                    nUsers: Long): Unit = {
+                                    nUsers: Long): Long = {
     val pairs = nUsers * (nUsers - 1) / 2
     val gate = ExactPairsPerCore * parallelism
     require(pairs <= gate,
@@ -103,298 +101,216 @@ object Trajectory extends QueryGroup {
         "TrajLsh.frechetThresholdPairs / hausdorffThresholdPairs / " +
         "lcssThresholdPairs / edrThresholdPairs (or candidatePairs for " +
         "order-blind cell-set similarity).")
+    pairs
   }
 
-  /** Great-circle km between two unit vectors given as SCALAR columns —
-    * the endpoint-prune arithmetic (same chord → 2R·asin(√c²/2) identity
-    * as the DP kernels), allocation-free wherever the optimizer moves it. */
-  private def scalarChordKm(a: (org.apache.spark.sql.Column, org.apache.spark.sql.Column, org.apache.spark.sql.Column),
-                            b: (org.apache.spark.sql.Column, org.apache.spark.sql.Column, org.apache.spark.sql.Column)): org.apache.spark.sql.Column = {
-    val dx = a._1 - b._1
-    val dy = a._2 - b._2
-    val dz = a._3 - b._3
-    val c2 = dx * dx + dy * dy + dz * dz
+  /** The memoized tracks and their pair count, once [[exactPairsGate]]
+    * admits it (one count job on the memoized frame). */
+  private def gatedTracks(s: SparkSession, dir: String, key: String): (DataFrame, Long) = {
+    val tr = tracks(s, dir)
+    (tr, exactPairsGate(s.sparkContext.defaultParallelism, key, tr.count()))
+  }
+
+  /** Great-circle km between the two sides' `end` ("h" head or "t" tail)
+    * endpoints, read from the SCALAR endpoint columns (`hxa` … `tzb`) —
+    * the same chord → 2R·asin(√c²/2) identity as the DP kernels, pure
+    * arithmetic wherever the optimizer moves it. */
+  private def endChordKm(end: String): Column = {
+    def d(axis: String) = col(s"$end${axis}a") - col(s"$end${axis}b")
+    val c2 = d("x") * d("x") + d("y") * d("y") + d("z") * d("z")
     lit(2.0 * graft.functions.HaversineDist.EarthRadiusKm) *
       asin(least(sqrt(c2) / lit(2.0), lit(1.0)))
   }
 
-  /** m_traj_frechet's large-U path: endpoint-lower-bound prune, then the
-    * exact DP on survivors only. Stage 1 pair-scans ENDPOINTS (12 doubles
-    * per user, not the 1.5 KB tracks) into a light (u1, u2, lb) frame
-    * under a lazy local checkpoint; lb = max endpoint chord ≤ dF (every
-    * coupling pairs (0,0) and (end,end) — the axiom TrajectorySpec pins).
-    * The threshold is the 10th-smallest EXACT distance among the 50
-    * smallest-lb candidates — any ≥10-pair subset's 10th-smallest exact
-    * is ≥ the global d₁₀, so pruning lb > thr + 1e-4 can never drop a
-    * true top-10 pair, and the 1e-4 margin keeps excluded pairs strictly
-    * after every kept row even at round(4). Endpoint-bound survivors pay
-    * the capped DP inside the same join condition, and only pairs within
-    * thr are rounded. Output provably ≡ the all-pairs scan. */
-  /** Prune telemetry for the ×10 probe: candidate pair count by key
-    * (survivors placeholder -1 — the ACTUAL survivor count is an
-    * `observe("prune", ...)` metric on the main pass, read from the
-    * executed frame by ScaleProbe/specs; counting via a separate scan
-    * cost a full extra pair pass per key). */
-  @volatile private[graft] var lastPrune: Map[String, (Long, Long)] = Map.empty
-
-  private[graft] def frechetPruned(s: SparkSession, tr: DataFrame,
-                                   nUsers: Long): DataFrame = {
-    import s.implicits._
-    // The light (u1, u2, lb) scan is CHEAP (12 doubles per user) but at
-    // 10⁸ pairs its materialization is not: r14 localCheckpoint'd it and
-    // the 2.7 GB block write dominated the ×10 probe. Build it lazily and
-    // run it TWICE instead — a top-50 TakeOrdered pass for the threshold
-    // seed and a filter pass for the survivors; two cheap scans beat one
-    // data-sized cache at every scale.
-    // endpoint lower bound from the tracks() SCALAR endpoint columns —
-    // pure arithmetic whether it runs in a Project or gets pushed into
-    // the join condition (the slice()-based form was the 1054 s ×10
-    // regression: 12 array instantiations per ordered pair, no CSE in
-    // join conditions)
-    def lbScalar = greatest(
-      scalarChordKm(($"hx1", $"hy1", $"hz1"), ($"hx2", $"hy2", $"hz2")),
-      scalarChordKm(($"tx1", $"ty1", $"tz1"), ($"tx2", $"ty2", $"tz2")))
-    def epCols(side: Int) = Seq("hx", "hy", "hz", "tx", "ty", "tz")
-      .map(c => col(c).as(s"$c$side"))
-    def light = {
-      val eLhs = tr.select(($"user_id".as("u1") +: epCols(1)): _*)
-        .repartition(s.sparkContext.defaultParallelism)
-      val eRhs = tr.select(($"user_id".as("u2") +: epCols(2)): _*)
-      eLhs.join(broadcast(eRhs), $"u1" < $"u2")
-        .select($"u1", $"u2", lbScalar.as("lb_km"))
+  /** The one threshold-prune path of the exact top-10 track keys: the
+    * REPOSE (ICDE 2021) seed-threshold-then-prune design, written once.
+    * A metric supplies only its columns. `extra` names the main pass's
+    * per-side columns beyond `n_a`/`ta` (n_fixes and track), suffixed
+    * with the side "a" or "b". `seed` and `proxy` are the light seed
+    * scan's side columns and its ranking, smallest first. `exact` is the
+    * unrounded value over the main-pass columns, and `bound` the pair
+    * predicate at a margined threshold. `out` lists the output columns
+    * after (u1, u2, n_a, n_b); its last one ranks the result, ascending
+    * for distances and descending for similarities.
+    *
+    * Why the output equals the all-pairs scan's (written for ascending;
+    * descending mirrors it with min for max and the margin's sign
+    * flipped):
+    *  - SEED: one light pair scan keeps the 2000 pairs of smallest
+    *    `proxy`, and `thr` is the 10th-smallest EXACT value among them. Any
+    *    ≥10-pair subset's 10th-smallest is ≥ the global d₁₀, so the
+    *    proxy decides how tight thr is, never whether it is valid. 2000
+    *    kernel calls are noise next to one pair scan and bring thr near
+    *    d₁₀ (the r15 probe measured 50-pair seeds leaving 30–100× more
+    *    survivors). With fewer than 10 pairs the seed holds them all and
+    *    thr is their maximum; with none, `coalesce` leaves it unbounded.
+    *  - MAIN: one broadcast pair join whose condition is `u1 < u2` FIRST
+    *    and then `bound(thr + 1e-4)`, which must hold for every pair
+    *    whose exact value is ≤ thr + 1e-4. Ten seed pairs lie within
+    *    thr, so the 10th-smallest ROUNDED value R₁₀ is ≤ round(thr, 4). A
+    *    pair of the output has round(d, 4) ≤ R₁₀, so d ≤ thr + 1e-4 and
+    *    it survives. A dropped pair has d > thr + 1e-4, so
+    *    round(d, 4) > R₁₀ and it sorts strictly after every output row;
+    *    ties at the threshold all survive.
+    *  - Only survivors pay the exact kernel and `round(…, 4)`: Spark's
+    *    Round goes through BigDecimal, and rounding every abandoned pair's
+    *    MaxValue cost more than the kernel saved. Survivors are counted
+    *    by `observe("prune")` on the executed frame, not by a second scan.
+    *  - The bound rides the join condition after `u1 < u2`: a
+    *    withColumn + filter form gets pushed into the condition ahead of
+    *    it and doubles the bound's evaluations.
+    *  - The streamed side is repartitioned ROUND-ROBIN. The track frame is
+    *    tiny in bytes (U rows × ~1.5 KB), so AQE's small-shuffle
+    *    coalescing folds it to one partition and the U²·cap² kernel work
+    *    behind the join runs on one core (24 s → 3 s at sf0.1 from this
+    *    line alone). A user-specified repartition is exempt from
+    *    coalescing; a hash repartition on u1 would be removed as redundant
+    *    with the tracks' window exchange and then coalesced anyway.
+    * With `prune = false` the same main pass runs with no seed, no bound
+    * and no observe: the direct all-pairs scan. */
+  private def topPairs(s: SparkSession, tr: DataFrame, extra: String => Seq[Column],
+                       seed: String => Seq[Column], proxy: Column, exact: Column,
+                       bound: Double => Column, out: Seq[(String, Column)],
+                       ascending: Boolean, prune: Boolean = true): DataFrame = {
+    def side(ab: String, cols: String => Seq[Column]) =
+      tr.select((col("user_id").as(if (ab == "a") "u1" else "u2") +: cols(ab)): _*)
+    def pairs(cols: String => Seq[Column], cond: Option[Column]) =
+      side("a", cols).repartition(s.sparkContext.defaultParallelism)
+        .join(broadcast(side("b", cols)), cond.foldLeft(col("u1") < col("u2"))(_ && _))
+    def main(ab: String) =
+      col("n_fixes").as(s"n_$ab") +: col("track").as(s"t$ab") +: extra(ab)
+    def best(c: Column) = if (ascending) c.asc else c.desc
+    val cond = if (!prune) None else {
+      val thr = pairs(seed, None)
+        .select(col("u1"), col("u2"), proxy.as("px"))
+        .orderBy(col("px"), col("u1"), col("u2")).limit(2000)
+        .select("u1", "u2")
+        .join(broadcast(side("a", main)), Seq("u1"))
+        .join(broadcast(side("b", main)), Seq("u2"))
+        .select(exact.as("v"))
+        .orderBy(best(col("v"))).limit(10)
+        .agg((if (ascending) max(col("v")) else min(col("v"))).as("t"))
+        .select(coalesce(col("t"), lit(if (ascending) Double.MaxValue else -1.0)))
+        .head().getDouble(0)
+      Some(bound(if (ascending) thr + 1e-4 else thr - 1e-4))
     }
-    def attach(df: DataFrame) = df
-      .join(broadcast(tr.select($"user_id".as("u1"),
-        $"n_fixes".as("n_a"), $"track".as("ta"))), Seq("u1"))
-      .join(broadcast(tr.select($"user_id".as("u2"),
-        $"n_fixes".as("n_b"), $"track".as("tb"))), Seq("u2"))
-    // SEED = 2000 smallest-lb pairs (any >= 10-pair subset gives a valid
-    // threshold; 2000 exact kernel evals are noise next to one pair scan
-    // and buy a thr much closer to the true d10 — the r15 probe measured
-    // 50-pair seeds leaving 30-100x more survivors than necessary)
-    val thr = attach(light.orderBy($"lb_km", $"u1", $"u2").limit(2000)
-        .select($"u1", $"u2"))
-      .select(TrajSim.frechetKm($"ta", $"tb").as("d"))
-      .orderBy($"d").limit(10)
-      .agg(max($"d").as("t"))
-      .select(coalesce($"t", lit(Double.MaxValue)))
-      .as[Double].head()
-    lastPrune += "m_traj_frechet" -> (nUsers * (nUsers - 1) / 2, -1L)
-    // Main pass is SINGLE-SCAN (round-15 probe finding: re-attaching the
-    // 1.5 KB tracks to 3.6×10⁷ survivors through two broadcast joins
-    // dominated the ×10 time): the pair scan carries the tracks from the
-    // start, the lb filter computes the endpoint bound inline from track
-    // slices, and survivors pay the DP in the same codegen stage.
-    val lhs = tr.select(($"user_id".as("u1") +: $"n_fixes".as("n_a") +:
-        $"track".as("ta") +: epCols(1)): _*)
-      .repartition(s.sparkContext.defaultParallelism)
-    val rhs = tr.select(($"user_id".as("u2") +: $"n_fixes".as("n_b") +:
-        $"track".as("tb") +: epCols(2)): _*)
-    // the bounds ride the join condition cheapest first (a pushed filter
-    // lands before u1<u2 and doubles the bound's 225M evaluations): the
-    // endpoint bound, then the CAPPED DP — exact for anything that can
-    // reach the top-10, early-abandoning the far pairs the endpoint bound
-    // cannot exclude. Only survivors are rounded: Spark's Round goes
-    // through BigDecimal, and rounding every abandoned pair's MaxValue
-    // costs more than the DP saved. Survivors' count is an observe()
-    // metric (no extra scan).
-    lhs.join(broadcast(rhs), $"u1" < $"u2" && lbScalar <= thr + 1e-4 &&
-        TrajSim.frechetKmCapped($"ta", $"tb", lit(thr + 1e-4)) <= thr + 1e-4)
-      .observe("prune", count(lit(1)).as("survivors"))
-      .withColumn("frechet_km", round(TrajSim.frechetKm($"ta", $"tb"), 4))
-      .select($"u1", $"u2", $"n_a", $"n_b", $"frechet_km")
-      .orderBy($"frechet_km", $"u1", $"u2")
+    val scan = pairs(main, cond)
+    val kept = if (prune) scan.observe("prune", count(lit(1)).as("survivors")) else scan
+    out.foldLeft(kept) { case (df, (name, c)) => df.withColumn(name, c) }
+      .select((Seq("u1", "u2", "n_a", "n_b") ++ out.map(_._1)).map(col): _*)
+      .orderBy(best(col(out.last._1)), col("u1"), col("u2"))
       .limit(10)
   }
 
-  /** m_traj_hausdorff's only path — the two-scan threshold-prune shape of
-    * [[frechetPruned]], with the CAPPED exact kernel
-    * ([[graft.functions.HausdorffCapped]]) as the pruner:
-    *  - SEED pass: the threshold only needs the 10th-smallest EXACT
-    *    distance of ANY ≥10-pair subset (every such value ≥ the global
-    *    d₁₀), so the 2000 seed candidates are picked by the cheap
-    *    shared-cell OVERLAP proxy (one merge pass per pair, cell arrays
-    *    only) — proxy quality affects prune tightness, never correctness.
-    *  - MAIN pass: `hausdorff_km_capped(ta, tb, thr + 1e-4) <= thr + 1e-4`
-    *    in the broadcast pair join's condition, AFTER `u1 < u2`. The
-    *    kernel is exact whenever dH ≤ cap and abandons a far pair at the
-    *    first fix whose nearest counterpart lies beyond the cap, so no
-    *    true top-10 pair is dropped and excluded pairs sort strictly after
-    *    every kept row even at round(4). Only survivors pay
-    *    `round(hausdorff_km, 4)`: Spark's `Round` goes through BigDecimal
-    *    on a finite double, and rounding every abandoned pair's MaxValue
-    *    cost about 2.2 s at 1.1M pairs.
-    * Measured at sf0.1 on a 4-core host (1,500 users, 1,124,250 pairs):
-    * seed threshold 2,861 km against a true d₁₀ of 2,511 km; the capped
-    * kernel costs 1.7–1.8 µs per pair on one thread against 7.2–7.5 µs
-    * for the full kernel and keeps 974 pairs; the key's traced task CPU
-    * fell from 9.3 s to 3.4 s. */
-  private[graft] def hausdorffPruned(s: SparkSession, tr: DataFrame,
-                                     nUsers: Long): DataFrame = {
+  /** The cell-overlap seed of Hausdorff and EDR: shared distinct cells,
+    * one merge pass over two sorted ≤64-int arrays per pair. A low
+    * distance needs shared ε-neighbourhoods, so the most-overlapping
+    * pairs are good threshold candidates; the r15 lesson is never to
+    * carry track payloads through the seed's TakeOrdered heap. */
+  private def cellSeed(ab: String) = Seq(col("cells").as(s"c$ab"))
+  private def cellProxy = -TrajSketchFns.cellOverlap(col("ca"), col("cb"))
+
+  /** m_traj_frechet's only path. Seed and first bound: the endpoint chord
+    * lb = max(head chord, tail chord) ≤ dF, since every coupling pairs
+    * the two heads and the two tails (the axiom TrajectorySpec pins). It
+    * reads the tracks' SCALAR endpoint columns: a slice()-based bound in
+    * the join condition built 12 arrays per ordered pair (no CSE there)
+    * and cost the ×10 probe 300 µs per pair. Second bound: the CAPPED DP
+    * `frechet_km_capped`, exact whenever dF ≤ cap, which abandons the far
+    * pairs the endpoint bound cannot exclude. sf0.1 on a 4-core host
+    * (1,124,250 pairs): the direct all-pairs DP this replaced ran
+    * 41.6–47.0 task-CPU s, this path 3.9–6.4 s, with the same top-10. */
+  private[graft] def frechetPruned(s: SparkSession, tr: DataFrame): DataFrame = {
     import s.implicits._
-    def attach(df: DataFrame) = df
-      .join(broadcast(tr.select($"user_id".as("u1"), $"track".as("ta"))), Seq("u1"))
-      .join(broadcast(tr.select($"user_id".as("u2"), $"track".as("tb"))), Seq("u2"))
-    val cLhs = tr.select($"user_id".as("u1"), $"cells".as("ca"))
-      .repartition(s.sparkContext.defaultParallelism)
-    val cRhs = tr.select($"user_id".as("u2"), $"cells".as("cb"))
-    val thr = attach(cLhs.join(broadcast(cRhs), $"u1" < $"u2")
-        .select($"u1", $"u2", TrajSketchFns.cellOverlap($"ca", $"cb").as("ov"))
-        .orderBy($"ov".desc, $"u1", $"u2").limit(2000)
-        .select($"u1", $"u2"))
-      .select(TrajSim.hausdorffKm($"ta", $"tb").as("d"))
-      .orderBy($"d").limit(10)
-      .agg(max($"d").as("t"))
-      .select(coalesce($"t", lit(Double.MaxValue)))
-      .as[Double].head()
-    lastPrune += "m_traj_hausdorff" -> (nUsers * (nUsers - 1) / 2, -1L)
-    // Single-scan main pass. The capped kernel rides the join condition
-    // AFTER u1 < u2: a withColumn(kernel).filter(...) form gets pushed into
-    // the condition ahead of u1 < u2 and doubles the kernel calls.
-    val lhs = tr.select($"user_id".as("u1"), $"n_fixes".as("n_a"), $"track".as("ta"))
-      .repartition(s.sparkContext.defaultParallelism)
-    val rhs = tr.select($"user_id".as("u2"), $"n_fixes".as("n_b"), $"track".as("tb"))
-    lhs.join(broadcast(rhs), $"u1" < $"u2" &&
-        TrajSim.hausdorffKmCapped($"ta", $"tb", lit(thr + 1e-4)) <= thr + 1e-4)
-      .observe("prune", count(lit(1)).as("survivors"))
-      .withColumn("hausdorff_km", round(TrajSim.hausdorffKm($"ta", $"tb"), 4))
-      .select($"u1", $"u2", $"n_a", $"n_b", $"hausdorff_km")
-      .orderBy($"hausdorff_km", $"u1", $"u2")
-      .limit(10)
+    def ends(ab: String) =
+      Seq("hx", "hy", "hz", "tx", "ty", "tz").map(c => col(c).as(c + ab))
+    val lb = greatest(endChordKm("h"), endChordKm("t"))
+    topPairs(s, tr, extra = ends, seed = ends, proxy = lb,
+      exact = TrajSim.frechetKm($"ta", $"tb"),
+      bound = t => lb <= t && TrajSim.frechetKmCapped($"ta", $"tb", lit(t)) <= t,
+      out = Seq("frechet_km" -> round(TrajSim.frechetKm($"ta", $"tb"), 4)),
+      ascending = true)
   }
 
-  /** m_traj_lcss's large-U path: the shared near-count bound
-    * ([[graft.functions.TrajSketch.nearCounts]]) gives the EXACT match
-    * upper bound ub = min(nearA, nearB) ≥ n_match, so the usual
-    * threshold-prune applies to the MAXIMIZATION form: seed = the 50
-    * largest-ub pairs, thr = their 10th-best exact normalized LCSS (any
-    * ≥10-pair subset's 10th best is ≤ the global s₁₀, so keeping
-    * ub_norm ≥ thr − 1e-4 can never drop a true top-10 pair, and
-    * excluded pairs sort strictly after kept ones even at round(4)).
-    * Single-pass main scan (the frechetPruned discipline). */
-  private[graft] def lcssPruned(s: SparkSession, tr: DataFrame,
-                                nUsers: Long): DataFrame = {
+  /** m_traj_hausdorff's only path: the cell-overlap seed, and the CAPPED
+    * exact kernel ([[graft.functions.HausdorffCapped]]) as the bound. It
+    * is exact whenever dH ≤ cap and abandons a far pair at its first fix
+    * whose nearest counterpart lies beyond the cap. Measured at sf0.1 on
+    * a 4-core host (1,500 users, 1,124,250 pairs): seed threshold
+    * 2,861 km against a true d₁₀ of 2,511 km; the capped kernel costs
+    * 1.7–1.8 µs per pair on one thread against 7.2–7.5 µs for the full
+    * kernel and keeps 974 pairs; the key's traced task CPU fell from
+    * 9.3 s to 3.4 s. */
+  private[graft] def hausdorffPruned(s: SparkSession, tr: DataFrame): DataFrame = {
     import s.implicits._
-    def lightPairs = {
-      val lhs = tr.select($"user_id".as("u1"), $"pb".as("sa"), $"dil".as("da"),
-          $"n_fixes".as("n_a"))
-        .repartition(s.sparkContext.defaultParallelism)
-      val rhs = tr.select($"user_id".as("u2"), $"pb".as("sb"), $"dil".as("db"),
-          $"n_fixes".as("n_b"))
-      lhs.join(broadcast(rhs), $"u1" < $"u2")
-        .withColumn("ubn",
-          TrajSketchFns.lcssUb($"sa", $"db", $"sb", $"da") /
-            least(least($"n_a", $"n_b"), lit(TrackCap.toLong)))
-    }
-    def attach(df: DataFrame) = df
-      .join(broadcast(tr.select($"user_id".as("u1"), $"track".as("ta"),
-        $"pb".as("sa2"), $"n_fixes".as("na2"))), Seq("u1"))
-      .join(broadcast(tr.select($"user_id".as("u2"), $"track".as("tb"),
-        $"pb".as("sb2"), $"n_fixes".as("nb2"))), Seq("u2"))
-    val thr = attach(lightPairs.orderBy($"ubn".desc, $"u1", $"u2").limit(2000)
-        .select($"u1", $"u2"))
-      .select((TrajSketchFns.lcssSparse($"sa2", $"ta", $"sb2", $"tb", MatchEpsKm) /
-        least(least($"na2", $"nb2"), lit(TrackCap.toLong))).as("v"))
-      .orderBy($"v".desc).limit(10)
-      .agg(min($"v").as("t"))
-      .select(coalesce($"t", lit(-1.0)))
-      .as[Double].head()
-    lastPrune += "m_traj_lcss" -> (nUsers * (nUsers - 1) / 2, -1L)
-    val lhs = tr.select($"user_id".as("u1"), $"n_fixes".as("n_a"),
-        $"track".as("ta"), $"pb".as("sa"), $"dil".as("da"))
-      .repartition(s.sparkContext.defaultParallelism)
-    val rhs = tr.select($"user_id".as("u2"), $"n_fixes".as("n_b"),
-        $"track".as("tb"), $"pb".as("sb"), $"dil".as("db"))
-    lhs.join(broadcast(rhs), $"u1" < $"u2" &&
-        TrajSketchFns.lcssUb($"sa", $"db", $"sb", $"da") /
-          least(least($"n_a", $"n_b"), lit(TrackCap.toLong)) >= thr - 1e-4)
-      .observe("prune", count(lit(1)).as("survivors"))
-      .withColumn("n_match", TrajSketchFns.lcssSparse($"sa", $"ta", $"sb", $"tb", MatchEpsKm))
-      .withColumn("lcss", round($"n_match" * lit(1.0) /
-        least(least($"n_a", $"n_b"), lit(TrackCap.toLong)), 4))
-      .select($"u1", $"u2", $"n_a", $"n_b", $"n_match", $"lcss")
-      .orderBy($"lcss".desc, $"u1", $"u2")
-      .limit(10)
+    topPairs(s, tr, extra = _ => Nil, seed = cellSeed, proxy = cellProxy,
+      exact = TrajSim.hausdorffKm($"ta", $"tb"),
+      bound = t => TrajSim.hausdorffKmCapped($"ta", $"tb", lit(t)) <= t,
+      out = Seq("hausdorff_km" -> round(TrajSim.hausdorffKm($"ta", $"tb"), 4)),
+      ascending = true)
   }
 
-  /** m_traj_edr's large-U path (round 16 — the r15 verdict's last weak
-    * key). The r15 negative result stands for EXPENSIVE bounds: the match-UB
-    * bound (max(n,m) − min(nearA, nearB)) kept 96% of ×10 pairs at the true
-    * threshold on uniform tracks, so that tier was removed. What ships here
-    * is the bound family's FREE member: the LENGTH-DIFFERENCE bound
-    * n_edits ≥ |n − m| (every unmatched length unit costs an insert or
-    * delete — Chen, Özsu & Oria 2005's edit semantics directly), which in
-    * normalized form is lb = |size(ta) − size(tb)| / max(size(ta),
-    * size(tb)) — TWO int reads per pair, pure scalar in the join condition
-    * (the r15 CSE lesson: no arrays, one call). Its value is regime-
-    * dependent, MEASURED (PREFLIGHT_r16) and DECLARED: the bound bites
-    * exactly when d₁₀ ≪ 1 — a corpus that CONTAINS near-duplicate tracks,
-    * the regime where a top-10-nearest query is meaningful (planted
-    * near-dups at ×10-skew: thr collapses to ~1/n and the scan excludes
-    * every pair whose length ratio misses it). When even the closest
-    * pairs are ~random (d₁₀ ≈ 1 — this fixture, skewed or not: measured
-    * survivors 100% of 112.5M pairs), NO bound can prune and the tier
-    * honestly degrades to the direct scan plus one cheap seed pass.
-    * Same two-scan threshold-prune shape as [[frechetPruned]]
-    * (cell-overlap seed → valid threshold → single-scan survivors),
-    * output provably ≡ the all-pairs scan (TrajectorySpec pins
-    * forced-prune ≡ direct). The d₁₀ ≈ 1 100×-U wall has no exact escape
-    * (declared in the key scaladoc); the threshold/corridor query form
-    * rides [[graft.operators.TrajLsh.edrThresholdPairs]] instead. */
-  private[graft] def edrPruned(s: SparkSession, tr: DataFrame,
-                               nUsers: Long): DataFrame = {
+  /** m_traj_lcss's only path, a MAXIMIZATION: the shared near-count
+    * kernel ([[graft.functions.TrajSketch.nearCounts]]) gives the EXACT
+    * match upper bound ub = min(nearA, nearB) ≥ n_match, since a matched
+    * fix lies within ε and so inside the other track's dilated cells.
+    * Normalized like the output, ub ranks the seed (largest first) and
+    * is the bound. The exact value is the Hunt-Szymanski sparse-match
+    * kernel, ≡ the full cap² DP on every input. sf0.1 on a 4-core host:
+    * the direct scan this replaced ran 13.0–14.6 task-CPU s, this path
+    * 8.0–10.6 s, with the same top-10. */
+  private[graft] def lcssPruned(s: SparkSession, tr: DataFrame): DataFrame = {
     import s.implicits._
-    // normalized length-difference lower bound on edr, from the two
-    // DOWNSAMPLED track sizes (scalar ints — the join-condition currency)
-    def lbEdr = abs(size($"ta") - size($"tb")).cast("double") /
-      greatest(size($"ta"), size($"tb"))
-    def edrCol = TrajSketchFns.edrSparse($"sa", $"ta", $"sb", $"tb", MatchEpsKm) *
-      lit(3.0) / greatest(size($"ta"), size($"tb"))
-    val lhs = tr.select($"user_id".as("u1"), $"n_fixes".as("n_a"),
-        $"track".as("ta"), $"pb".as("sa"))
-      .repartition(s.sparkContext.defaultParallelism)
-    val rhs = tr.select($"user_id".as("u2"), $"n_fixes".as("n_b"),
-        $"track".as("tb"), $"pb".as("sb"))
-    // SEED: 2000 LARGEST-cell-overlap pairs (any ≥10-pair subset's
-    // 10th-smallest exact edr is ≥ the global d₁₀, so the threshold is
-    // valid however the seed is chosen — the proxy only affects how TIGHT
-    // the prune is). Shared-cell count is the right proxy for LOW edr
-    // (matches need shared ε-neighborhoods); the length bound itself is
-    // NOT (measured x10-skew: a smallest-length-diff seed put 2000 random
-    // equal-length pairs in the seed, thr ≈ 0.94, survivors 100%). The
-    // seed pair scan is LIGHT — the sorted distinct cell arrays, ≤ 64
-    // ints per side, one merge pass per pair (the hausdorffPruned stage-1
-    // shape; the r15 lesson: never carry track payloads through a
-    // TakeOrdered heap) — and only the 2000 winners re-attach tracks
-    // through broadcast equi-joins to pay the kernel.
-    val eLhs = tr.select($"user_id".as("u1"), $"cells".as("ca"))
-      .repartition(s.sparkContext.defaultParallelism)
-    val eRhs = tr.select($"user_id".as("u2"), $"cells".as("cb"))
-    val seed = eLhs.join(broadcast(eRhs), $"u1" < $"u2")
-      .select($"u1", $"u2",
-        TrajSketchFns.cellOverlap($"ca", $"cb").as("ov"))
-      .orderBy($"ov".desc, $"u1", $"u2").limit(2000)
-      .select($"u1", $"u2")
-    val thr = seed
-      .join(broadcast(tr.select($"user_id".as("u1"), $"track".as("ta"),
-        $"pb".as("sa"))), Seq("u1"))
-      .join(broadcast(tr.select($"user_id".as("u2"), $"track".as("tb"),
-        $"pb".as("sb"))), Seq("u2"))
-      .select(edrCol.as("v"))
-      .orderBy($"v").limit(10)
-      .agg(max($"v").as("t"))
-      .select(coalesce($"t", lit(Double.MaxValue)))
-      .as[Double].head()
-    lastPrune += "m_traj_edr" -> (nUsers * (nUsers - 1) / 2, -1L)
-    lhs.join(broadcast(rhs), $"u1" < $"u2" && lbEdr <= thr + 1e-4)
-      .observe("prune", count(lit(1)).as("survivors"))
-      .withColumn("n_edits",
-        TrajSketchFns.edrSparse($"sa", $"ta", $"sb", $"tb", MatchEpsKm))
-      .withColumn("edr", round($"n_edits" * lit(3.0) /
-        greatest(size($"ta"), size($"tb")), 4))
-      .select($"u1", $"u2", $"n_a", $"n_b", $"n_edits", $"edr")
-      .orderBy($"edr", $"u1", $"u2")
-      .limit(10)
+    def norm = least(least($"n_a", $"n_b"), lit(TrackCap.toLong))
+    val ub = TrajSketchFns.lcssUb($"sa", $"db", $"sb", $"da") / norm
+    topPairs(s, tr,
+      extra = ab => Seq($"pb".as(s"s$ab"), $"dil".as(s"d$ab")),
+      seed = ab => Seq($"pb".as(s"s$ab"), $"dil".as(s"d$ab"), $"n_fixes".as(s"n_$ab")),
+      proxy = -ub,
+      exact = TrajSketchFns.lcssSparse($"sa", $"ta", $"sb", $"tb", MatchEpsKm) / norm,
+      bound = t => ub >= t,
+      out = Seq(
+        "n_match" -> TrajSketchFns.lcssSparse($"sa", $"ta", $"sb", $"tb", MatchEpsKm),
+        "lcss" -> round($"n_match" * lit(1.0) / norm, 4)),
+      ascending = false)
+  }
+
+  /** m_traj_edr's two paths: with `prune` the cell-overlap seed and the
+    * FREE length-difference bound n_edits ≥ |n − m| (every unmatched
+    * length unit costs an insert or a delete; Chen, Özsu & Oria 2005),
+    * normalized |size(ta) − size(tb)| / max(size(ta), size(tb)): two int
+    * reads per pair, pure scalar in the join condition. Without it, the
+    * same main pass with no bound. Each path wins a regime, measured and
+    * declared:
+    *  - the bound bites when d₁₀ ≪ 1, a corpus that CONTAINS near-
+    *    duplicate tracks (planted near-dups at ×10 skew: thr collapses to
+    *    ~1/n and the scan excludes every pair whose length ratio misses
+    *    it; PREFLIGHT_r16);
+    *  - when even the closest pairs are ~random (d₁₀ ≈ 1, this fixture,
+    *    skewed or not: survivors 100% of 112.5M ×10 pairs) nothing can
+    *    prune, and the pruned path is 20–30% slower at sf0.1 than the
+    *    direct scan. The r15 negative result stands for the expensive
+    *    match-UB bound max(n, m) − min(nearA, nearB): it kept 96% of ×10
+    *    pairs at the true threshold, so it is not used.
+    * A shared-cell proxy seeds well because matches need shared
+    * ε-neighbourhoods; the length bound does not (measured ×10 skew: a
+    * smallest-length-difference seed filled the 2000 with random
+    * equal-length pairs, thr ≈ 0.94, survivors 100%). The d₁₀ ≈ 1 100×-U
+    * wall has no exact escape; the threshold/corridor query form rides
+    * [[graft.operators.TrajLsh.edrThresholdPairs]] instead. */
+  private[graft] def edrTop(s: SparkSession, tr: DataFrame, prune: Boolean): DataFrame = {
+    import s.implicits._
+    // normalize by the longer DOWNSAMPLED track: its exact point count is
+    // size(track)/3 (stride rounding makes it ≤ cap, not always min(n, cap))
+    def longer = greatest(size($"ta"), size($"tb"))
+    def edits = TrajSketchFns.edrSparse($"sa", $"ta", $"sb", $"tb", MatchEpsKm)
+    topPairs(s, tr, extra = ab => Seq($"pb".as(s"s$ab")),
+      seed = cellSeed, proxy = cellProxy,
+      exact = edits * lit(3.0) / longer,
+      bound = t => abs(size($"ta") - size($"tb")).cast("double") / longer <= t,
+      out = Seq("n_edits" -> edits,
+        "edr" -> round($"n_edits" * lit(3.0) / longer, 4)),
+      ascending = true, prune = prune)
   }
 
   /** One row per user: (user_id, n_fixes, track) where track is the
@@ -481,74 +397,20 @@ object Trajectory extends QueryGroup {
       .withColumn("tz", element_at($"track", -1))
   }
 
-  /** Every (u1 < u2) pair with both tracks attached: the q_traj_sim
-    * broadcast signature-scan shape — the right side (one TrackCap·3-double
-    * row per user) broadcasts, the scan never shuffles on a pair key.
-    *
-    * The streamed side is EXPLICITLY repartitioned: the signature frame is
-    * tiny in BYTES (U rows × ~1.5 KB), so AQE's small-shuffle coalescing
-    * folds it to one partition — and then the U²·cap² DP behind the join
-    * runs on ONE core (measured 24 s → 3 s at sf0.1 from this line alone).
-    * AQE cannot see compute-heavy-downstream, only bytes; a user-specified
-    * repartition is exempt from coalescing, which is exactly the tool for
-    * "cheap rows, expensive per-pair work". ROUND-ROBIN, not by u1: a hash
-    * repartition on u1 is partitioning-identical to the window exchange
-    * below it, so the optimizer removes it as redundant — and then AQE
-    * coalesces the remaining ENSURE_REQUIREMENTS exchange anyway.
-    * Round-robin is a different partitioning (survives removal) and
-    * balances the pair scan regardless of user-id distribution. */
-  private def pairedTracks(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tr = tracks(s, dir)
-    val lhs = tr.select($"user_id".as("u1"), $"n_fixes".as("n_a"),
-        $"track".as("ta"), $"pb".as("sa"))
-      .repartition(s.sparkContext.defaultParallelism)
-    val rhs = tr.select($"user_id".as("u2"), $"n_fixes".as("n_b"),
-        $"track".as("tb"), $"pb".as("sb"))
-    lhs.join(broadcast(rhs), $"u1" < $"u2")
-  }
-
   val queries: Map[String, QFn] = Map(
 
     // Discrete Fréchet distance (Eiter & Mannila 1994) between user tracks
     // — top-10 CLOSEST pairs. The shortest-leash measure: order-aware, so
     // a reversed corridor reads far where cell Jaccard reads identical.
     //
-    // EXACT two-stage prune (round-14 probe finding: the full cap² DP on
-    // every pair was the dominant ×10 cost — 139 s at 10× users, and the
-    // pair join itself materializes 3 KB of track payload per pair).
-    // Stage 1 pair-scans ENDPOINTS ONLY (12 doubles per user): the
-    // endpoint chord lower bound lb ≤ dF (every coupling pairs (0,0) and
-    // (end,end) — the axiom TrajectorySpec pins), kept as a light
-    // (u1, u2, lb) frame under a lazy local checkpoint. The threshold is
-    // the 10th-smallest EXACT distance among the 50 smallest-lb
-    // candidates — any ≥10-pair subset's 10th-smallest exact is ≥ the
-    // global d₁₀, so pruning lb > thr + 1e-4 can never drop a true
-    // top-10 pair, and the 1e-4 margin makes excluded pairs sort
-    // strictly after every kept row even at round(4). Survivors alone
-    // re-attach tracks via broadcast equi-joins and pay the cap² DP.
-    // Output provably ≡ the all-pairs scan — TrajectorySpec pins
-    // frechetPruned ≡ the direct path on the fixture (forcing the
-    // large-U branch) on top of the key-level ≡ driver-DP test.
-    "m_traj_frechet" -> ((s, dir) => {
-      import s.implicits._
-      val tr = tracks(s, dir)
-      // Adaptive gate, DECLARED: below ~5M pairs the direct exact scan is
-      // cheaper than the prune's extra jobs (one count on the memoized
-      // track frame decides); above it the two-stage prune pays for
-      // itself — and on production corridor-sharing fleets (d₁₀ ~ tens
-      // of km, not this fixture's ~5000 km random-walk floor) the
-      // threshold collapses and the DP tier touches almost nothing.
-      val nUsers = tr.count()
-      exactPairsGate(s.sparkContext.defaultParallelism, "m_traj_frechet", nUsers)
-      if (nUsers * (nUsers - 1) / 2 <= 5_000_000L)
-        pairedTracks(s, dir)
-          .withColumn("frechet_km", round(TrajSim.frechetKm($"ta", $"tb"), 4))
-          .select($"u1", $"u2", $"n_a", $"n_b", $"frechet_km")
-          .orderBy($"frechet_km", $"u1", $"u2")
-          .limit(10)
-      else frechetPruned(s, tr, nUsers)
-    }),
+    // One path at every pair count: the endpoint-bound and capped-DP
+    // threshold prune ([[frechetPruned]]). The full cap² DP on every pair
+    // was the dominant ×10 cost (139 s at 10× users, round 14); on
+    // production corridor-sharing fleets (d₁₀ ~ tens of km, not this
+    // fixture's ~5000 km random-walk floor) the threshold collapses and
+    // the DP touches almost nothing.
+    "m_traj_frechet" -> ((s, dir) =>
+      frechetPruned(s, gatedTracks(s, dir, "m_traj_frechet")._1)),
 
     // EDR — Edit Distance on Real sequence (Chen, Özsu & Oria, SIGMOD
     // 2005) over the same pair scan — the third canonical trajectory DP:
@@ -561,45 +423,18 @@ object Trajectory extends QueryGroup {
     // symmetry, the ≤1-edit wild-fix bound, the LCSS duality on planted
     // detours, and key top-10 equality vs an exact all-pairs driver DP.
     "m_traj_edr" -> ((s, dir) => {
-      import s.implicits._
       // exact sparse-match gap DP (functions/TrajSketch) ≡ the full cap²
-      // DP on every input. Scale story, fully declared (round 16):
-      //  - r15 measured negative result STANDS for expensive bounds: the
-      //    match-UB edit bound (max(n,m) − min(nearA, nearB)) keeps 96%
-      //    of ×10 pairs at the true threshold on uniform tracks — that
-      //    tier stays removed.
-      //  - above the same 5M-pair gate the siblings use, [[edrPruned]]
-      //    threshold-prunes with the FREE length-difference bound
-      //    (n_edits ≥ |n − m| — two scalar ints in the join condition):
-      //    measured regime-dependent (PREFLIGHT_r16) — it bites when the
-      //    corpus contains genuine near-dup tracks (d₁₀ ≪ 1, the regime
-      //    where a nearest-pairs query means anything: thr collapses to
-      //    ~1/n and mass-prunes), and degrades to the direct scan + one
-      //    cheap seed pass when even the closest pairs are ~random
-      //    (d₁₀ ≈ 1 — this fixture, skewed or not: survivors 100%; the
-      //    U²·kernel product is the honest wall there, the sparse
-      //    kernel its smallest constant). Forced-prune ≡ direct pinned
-      //    in TrajectorySpec.
-      //  - the threshold/corridor query form — "pairs within edr ≤ τ on
-      //    shared routes", the shape a 100-TB fleet query takes — rides
-      //    [[graft.operators.TrajLsh.edrThresholdPairs]] (J ≥ 0.5 regime,
-      //    measured-sound S-curve; EDR-threshold property in TrajLshSpec).
-      val tr = tracks(s, dir)
-      val nUsers = tr.count()
-      exactPairsGate(s.sparkContext.defaultParallelism, "m_traj_edr", nUsers)
-      if (nUsers * (nUsers - 1) / 2 <= 5_000_000L)
-        pairedTracks(s, dir)
-          .withColumn("n_edits",
-            TrajSketchFns.edrSparse($"sa", $"ta", $"sb", $"tb", MatchEpsKm))
-          // normalize by the longer DOWNSAMPLED track (its exact point
-          // count is size(track)/3 — stride rounding makes it ≤ cap but
-          // not always min(n, cap))
-          .withColumn("edr", round($"n_edits" * lit(3.0) /
-            greatest(size($"ta"), size($"tb")), 4))
-          .select($"u1", $"u2", $"n_a", $"n_b", $"n_edits", $"edr")
-          .orderBy($"edr", $"u1", $"u2")
-          .limit(10)
-      else edrPruned(s, tr, nUsers)
+      // DP on every input. Two paths, each winning a regime ([[edrTop]]):
+      // above 5M pairs the length-difference threshold prune, which bites
+      // on corpora with near-duplicate tracks; below it the direct scan,
+      // which is 20–30% faster at sf0.1, where no bound can prune.
+      // Forced-prune ≡ direct is pinned in TrajectorySpec. The
+      // threshold/corridor query form — "pairs within edr ≤ τ on shared
+      // routes", the shape a 100-TB fleet query takes — rides
+      // [[graft.operators.TrajLsh.edrThresholdPairs]] (J ≥ 0.5 regime,
+      // measured-sound S-curve; EDR-threshold property in TrajLshSpec).
+      val (tr, pairs) = gatedTracks(s, dir, "m_traj_edr")
+      edrTop(s, tr, prune = pairs > 5_000_000L)
     }),
 
     // TRACLUS partition-and-group (Lee, Han & Whang, SIGMOD 2007): MDL-
@@ -650,10 +485,7 @@ object Trajectory extends QueryGroup {
       // One path at every pair count: the capped-kernel threshold prune
       // ([[hausdorffPruned]]) pays the full kernel only on the ~1,000 of
       // sf0.1's 1.1M pairs the cap cannot abandon.
-      val tr = tracks(s, dir)
-      val nUsers = tr.count()
-      exactPairsGate(s.sparkContext.defaultParallelism, "m_traj_hausdorff", nUsers)
-      hausdorffPruned(s, tr, nUsers)
+      hausdorffPruned(s, gatedTracks(s, dir, "m_traj_hausdorff")._1)
     }),
 
     // HMM map-matching (Newson & Krumm, VLDB 2009 shape) — snap each
@@ -697,29 +529,13 @@ object Trajectory extends QueryGroup {
     // — matches within MatchEpsKm, normalized by the shorter track: the
     // outlier-robust twin (one wild fix caps Fréchet from below but costs
     // LCSS a single match). Top-10 MOST similar pairs.
-    "m_traj_lcss" -> ((s, dir) => {
-      import s.implicits._
-      // exact Hunt-Szymanski LIS over the sparse ε-match set ≡ the full
-      // cap² DP on every input (functions/TrajSketch + TrajectorySpec);
-      // above the 5M-pair gate the exact match upper bound prunes first
-      // ([[lcssPruned]])
-      val tr = tracks(s, dir)
-      val nUsers = tr.count()
-      exactPairsGate(s.sparkContext.defaultParallelism, "m_traj_lcss", nUsers)
-      if (nUsers * (nUsers - 1) / 2 <= 5_000_000L)
-        pairedTracks(s, dir)
-          .withColumn("n_match",
-            TrajSketchFns.lcssSparse($"sa", $"ta", $"sb", $"tb", MatchEpsKm))
-          .withColumn("lcss", round($"n_match" * lit(1.0) /
-            least(least($"n_a", $"n_b"), lit(TrackCap.toLong)), 4))
-          .select($"u1", $"u2", $"n_a", $"n_b", $"n_match", $"lcss")
-          .orderBy($"lcss".desc, $"u1", $"u2")
-          .limit(10)
-      else lcssPruned(s, tr, nUsers)
-    })
+    // One path at every pair count: the exact sparse-match kernel behind
+    // the match-upper-bound threshold prune ([[lcssPruned]]).
+    "m_traj_lcss" -> ((s, dir) =>
+      lcssPruned(s, gatedTracks(s, dir, "m_traj_lcss")._1))
   )
 
-  // 2-D DPs have no tractable SQL form (the m_time_dtw precedent) — both
+  // 2-D DPs have no tractable SQL form (the m_time_dtw precedent) — the
   // keys are property-tested in TrajectorySpec instead.
   val oracle: Map[String, String] = Map.empty
 }

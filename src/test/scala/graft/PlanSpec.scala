@@ -1444,25 +1444,37 @@ class PlanSpec extends BaseSpec {
     assert(mmP.contains("map_match"),
       s"m_traj_mapmatch: kernel projection missing:\n$mmP")
 
-    // the pruned tiers' main pass: ONE broadcast pair join whose
+    // the threshold prune's main pass: ONE broadcast pair join whose
     // condition carries the cheap predicate FIRST and the bound second
     // (a pushed filter evaluating before u1<u2 doubles the bound's
     // evaluations — the r15 probe lesson), kernel in a projection above,
     // no re-attach joins (exactly one join in the whole plan)
-    val trk = graft.queries.Trajectory.tracks(spark, sf)
-    val fp = graft.queries.Trajectory.frechetPruned(spark, trk, trk.count())
+    val fp = SparkEntry.queries("m_traj_frechet")(spark, sf)
     fp.collect()
     val fpP = finalSection(fp.queryExecution.executedPlan.toString)
     assert(fpP.contains("BroadcastNestedLoopJoin"),
-      s"frechetPruned: pair scan missing:\n$fpP")
+      s"m_traj_frechet: pair scan missing:\n$fpP")
     assert(fpP.linesIterator.count(_.contains("Join")) == 1,
-      s"frechetPruned: main pass must be single-join (no re-attach):\n$fpP")
+      s"m_traj_frechet: main pass must be single-join (no re-attach):\n$fpP")
     val cond = fpP.linesIterator.find(_.contains("BroadcastNestedLoopJoin")).get
     assert(cond.indexOf("u1") >= 0 && cond.indexOf("ASIN") >= 0 &&
            cond.indexOf("u1") < cond.indexOf("ASIN"),
-      s"frechetPruned: cheap predicate must precede the bound in the join condition:\n$cond")
+      s"m_traj_frechet: cheap predicate must precede the bound in the join condition:\n$cond")
     assert(fpP.contains("frechet_km_capped"),
-      s"frechetPruned: survivors must pay the capped DP:\n$fpP")
+      s"m_traj_frechet: survivors must pay the capped DP:\n$fpP")
+
+    // m_traj_lcss: the same pin, with the match upper bound as the bound
+    val lp = SparkEntry.queries("m_traj_lcss")(spark, sf)
+    lp.collect()
+    val lpP = finalSection(lp.queryExecution.executedPlan.toString)
+    assert("BroadcastNestedLoopJoin".r.findAllIn(lpP).size == 1,
+      s"m_traj_lcss: main pass must be exactly one pair join:\n$lpP")
+    assert(lpP.linesIterator.count(_.contains("Join")) == 1,
+      s"m_traj_lcss: main pass must be single-join (no re-attach):\n$lpP")
+    val lCond = lpP.linesIterator.find(_.contains("BroadcastNestedLoopJoin")).get
+    assert(lCond.indexOf("u1") >= 0 && lCond.indexOf("lcss_ub") >= 0 &&
+           lCond.indexOf("u1") < lCond.indexOf("lcss_ub"),
+      s"m_traj_lcss: u1 < u2 must precede the match bound in the join condition:\n$lCond")
 
     // m_traj_hausdorff (its only path is hausdorffPruned): the same pin —
     // one broadcast pair join, u1 < u2 BEFORE the capped kernel in its

@@ -262,53 +262,13 @@ class TrajectorySpec extends BaseSpec {
     check(west, east, 500.0)
   }
 
-  test("forced prune branches == direct all-pairs top-10 at fixture scale (hausdorff/lcss/edr)") {
-    val tr = queries.Trajectory.tracks(spark, sf)
-    val nUsers = tr.count()
-    // m_traj_hausdorff has no direct branch: the key IS the capped-kernel
-    // prune, and its exactness reference is the driver all-pairs test
-    // below. Here: the survivors count is an observe() metric on the
-    // EXECUTED dataset (each as[]/select creates its own queryExecution —
-    // read the one that ran)
-    val prunedHDs = queries.Trajectory.hausdorffPruned(spark, tr, nUsers)
-      .as[(Long, Long, Long, Long, Double)]
-    val prunedH = prunedHDs.collect().toSeq
-    assert(prunedH.size == 10, s"pruned hausdorff top-10: $prunedH")
-    val survH = prunedHDs.queryExecution.observedMetrics.get("prune")
-      .map(_.getLong(0))
-    assert(survH.exists(v => v >= 10 && v <= 105), s"observe survivors $survH")
-    val directL = SparkEntry.queries("m_traj_lcss")(spark, sf)
-      .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
-    val prunedL = queries.Trajectory.lcssPruned(spark, tr, nUsers)
-      .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
-    assert(prunedL == directL, s"pruned lcss top-10:\n got=$prunedL\nwant=$directL")
-    // EDR's round-16 tier: the free length-difference bound (the r15
-    // negative result stands for the EXPENSIVE match-UB bound only). On
-    // this uniform fixture the bound prunes nothing — the equality below
-    // pins the no-op case is still exact; the skew case is probed in
-    // PREFLIGHT_r16.
-    val directE = SparkEntry.queries("m_traj_edr")(spark, sf)
-      .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
-    val prunedE = queries.Trajectory.edrPruned(spark, tr, nUsers)
-      .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
-    assert(prunedE == directE, s"pruned edr top-10:\n got=$prunedE\nwant=$directE")
-    // the telemetry the ×10 probe logs must be recorded by every tier
-    for (k <- Seq("m_traj_hausdorff", "m_traj_lcss", "m_traj_edr")) {
-      val (cand, _) = queries.Trajectory.lastPrune(k)
-      assert(cand > 0, s"$k prune telemetry pairs=$cand")
-    }
-  }
-
-  test("m_traj_frechet / m_traj_lcss: keys match exact all-pairs driver DP at fixture scale") {
-    // rebuild the downsampled tracks independently: same derivation SQL,
-    // driver-side stride arithmetic and unit-vector conversion
+  /** Exact all-pairs reference for the four track top-10 keys over raw
+    * fixes (user_id, ts_us, event_id, lat, lon): the keys' downsample
+    * redone with local stride arithmetic and unit-vector conversion,
+    * every pair scored by the scalar kernels, each metric's top-10 in its
+    * key's output layout (Fréchet, LCSS, EDR, Hausdorff). */
+  private def referenceTop10(fixes: Seq[(Long, Long, Long, Double, Double)]) = {
     val cap = 64
-    val fixes = spark.read.parquet(s"$sf/events.parquet")
-      .withColumn("lat", (col("event_id") * 37L % 1700L) / 10.0 - 85.0)
-      .withColumn("lon", (col("event_id") * 131L % 3600L) / 10.0 - 180.0)
-      .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
-      .select($"user_id", $"ts_us", $"event_id", $"lat", $"lon")
-      .as[(Long, Long, Long, Double, Double)].collect()
     val tracks = fixes.groupBy(_._1).map { case (u, rows) =>
       val ordered = rows.sortBy(r => (r._2, r._3))
       val stride = math.max(1, (ordered.length + cap - 1) / cap)
@@ -326,41 +286,113 @@ class TrajectorySpec extends BaseSpec {
         graft.functions.EdrDist.compute(ta, tb, 500.0),
         math.rint(graft.functions.HausdorffKm.compute(ta, tb) * 10000) / 10000)
     }
-
+    def n(u: Long) = tracks(u)._1
     val wantF = allPairs.sortBy(p => (p._3, p._1, p._2)).take(10)
-      .map(p => (p._1, p._2, tracks(p._1)._1, tracks(p._2)._1, p._3))
+      .map(p => (p._1, p._2, n(p._1), n(p._2), p._3))
+    val wantL = allPairs.map { p =>
+      val nMin = math.min(math.min(n(p._1), n(p._2)), cap.toLong)
+      (p._1, p._2, n(p._1), n(p._2), p._4, math.rint(p._4 * 10000.0 / nMin) / 10000)
+    }.sortBy(p => (-p._6, p._1, p._2)).take(10)
+    val wantE = allPairs.map { p =>
+      val nMax = math.max(tracks(p._1)._2.length, tracks(p._2)._2.length) / 3
+      (p._1, p._2, n(p._1), n(p._2), p._5, math.rint(p._5 * 10000.0 / nMax) / 10000)
+    }.sortBy(p => (p._6, p._1, p._2)).take(10)
+    val wantH = allPairs.sortBy(p => (p._6, p._1, p._2)).take(10)
+      .map(p => (p._1, p._2, n(p._1), n(p._2), p._6))
+    (wantF, wantL, wantE, wantH)
+  }
+
+  /** Runs a top-10 frame and returns its rows with the survivors its
+    * threshold prune counted: an observe() metric on the EXECUTED frame
+    * (each as[]/select creates its own queryExecution — read the one that
+    * ran); a direct scan has none. */
+  private def runPruned(df: org.apache.spark.sql.DataFrame) = {
+    val rows = df.collect().toSeq
+    (rows, df.queryExecution.observedMetrics.get("prune").map(_.getLong(0)))
+  }
+
+  test("threshold prune drops pairs; EDR's forced prune == its direct scan at fixture scale") {
+    val tr = queries.Trajectory.tracks(spark, sf)
+    val nUsers = tr.count()
+    val pairs = nUsers * (nUsers - 1) / 2
+    // m_traj_frechet / m_traj_hausdorff / m_traj_lcss have one path, the
+    // threshold prune: their exactness reference is the all-pairs test
+    // below. Here the prune must run (the metric exists) and drop
+    // pairs (sf0.001, 105 pairs: 10 Hausdorff, 10 Fréchet and 88 LCSS
+    // survivors).
+    for (k <- Seq("m_traj_hausdorff", "m_traj_lcss", "m_traj_frechet")) {
+      val (rows, surv) = runPruned(SparkEntry.queries(k)(spark, sf))
+      assert(rows.size == 10, s"$k top-10: $rows")
+      assert(surv.exists(v => v >= 10 && v < pairs), s"$k observe survivors $surv of $pairs")
+    }
+    // EDR's prune (the free length-difference bound) runs above 5M pairs
+    // only. On this uniform fixture the bound prunes little — the
+    // equality below pins that the forced prune is still exact; the skew
+    // case is probed in PREFLIGHT_r16.
+    val (directE, noSurv) = runPruned(SparkEntry.queries("m_traj_edr")(spark, sf))
+    assert(noSurv.isEmpty, s"m_traj_edr's direct scan observed $noSurv")
+    val (prunedE, survE) = runPruned(queries.Trajectory.edrTop(spark, tr, prune = true))
+    assert(prunedE == directE, s"pruned edr top-10:\n got=$prunedE\nwant=$directE")
+    assert(survE.exists(v => v >= 10 && v <= pairs), s"edr observe survivors $survE of $pairs")
+  }
+
+  test("m_traj_frechet / m_traj_lcss: keys match exact all-pairs driver DP at fixture scale") {
+    val fixes = spark.read.parquet(s"$sf/events.parquet")
+      .withColumn("lat", (col("event_id") * 37L % 1700L) / 10.0 - 85.0)
+      .withColumn("lon", (col("event_id") * 131L % 3600L) / 10.0 - 180.0)
+      .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
+      .select($"user_id", $"ts_us", $"event_id", $"lat", $"lon")
+      .as[(Long, Long, Long, Double, Double)].collect().toSeq
+    val (wantF, wantL, wantE, wantH) = referenceTop10(fixes)
     val gotF = SparkEntry.queries("m_traj_frechet")(spark, sf)
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(gotF == wantF, s"frechet top-10:\n got=$gotF\nwant=$wantF")
-    // the large-U prune branch, forced on the same fixture: the
-    // endpoint-lb threshold prune must be output-invisible
-    val trF = queries.Trajectory.tracks(spark, sf)
-    val gotFP = queries.Trajectory.frechetPruned(spark, trF, trF.count())
-      .as[(Long, Long, Long, Long, Double)].collect().toSeq
-    assert(gotFP == wantF, s"pruned frechet top-10:\n got=$gotFP\nwant=$wantF")
-
-    val wantL = allPairs.map { p =>
-      val nMin = math.min(math.min(tracks(p._1)._1, tracks(p._2)._1), cap.toLong)
-      (p._1, p._2, tracks(p._1)._1, tracks(p._2)._1, p._4,
-        math.rint(p._4 * 10000.0 / nMin) / 10000)
-    }.sortBy(p => (-p._6, p._1, p._2)).take(10)
     val gotL = SparkEntry.queries("m_traj_lcss")(spark, sf)
       .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
     assert(gotL == wantL, s"lcss top-10:\n got=$gotL\nwant=$wantL")
-
-    val wantE = allPairs.map { p =>
-      val nMax = math.max(tracks(p._1)._2.length, tracks(p._2)._2.length) / 3
-      (p._1, p._2, tracks(p._1)._1, tracks(p._2)._1, p._5,
-        math.rint(p._5 * 10000.0 / nMax) / 10000)
-    }.sortBy(p => (p._6, p._1, p._2)).take(10)
     val gotE = SparkEntry.queries("m_traj_edr")(spark, sf)
       .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
     assert(gotE == wantE, s"edr top-10:\n got=$gotE\nwant=$wantE")
-
-    val wantH = allPairs.sortBy(p => (p._6, p._1, p._2)).take(10)
-      .map(p => (p._1, p._2, tracks(p._1)._1, tracks(p._2)._1, p._6))
     val gotH = SparkEntry.queries("m_traj_hausdorff")(spark, sf)
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(gotH == wantH, s"hausdorff top-10:\n got=$gotH\nwant=$wantH")
+  }
+
+  test("every track top-10 path matches the all-pairs reference on fewer than 10 pairs and on tied clones") {
+    val rnd = new scala.util.Random(17)
+    def walk(u: Long, n: Int, lat0: Double, lon0: Double) =
+      (0 until n).map(i => (u, i * 60000000L, u * 1000L + i,
+        lat0 + rnd.nextInt(40) / 10.0, lon0 + rnd.nextInt(40) / 10.0))
+    // (a) four users, six pairs: the seed holds every pair, thr is the
+    // largest value, and every pair survives
+    val few = Seq(walk(1, 7, 10, 20), walk(2, 12, 11, 21), walk(3, 30, 40, -60),
+      walk(4, 3, 10.5, 20.5)).flatten
+    // (b) three routes cloned five times each (30 zero-distance pairs,
+    // LCSS 1.0) among four other users: thr is 0 (LCSS: 1.0), and the 20
+    // clone pairs outside the top-10 tie with it
+    val routes = Seq(walk(0, 9, 5, 5), walk(0, 20, -30, 100), walk(0, 64, 50, -10))
+    val clones = for ((r, k) <- routes.zipWithIndex; c <- 0 until 5; p <- r)
+      yield p.copy(_1 = 10L + 5 * k + c, _3 = p._3 + 1000L * (10 + 5 * k + c))
+    val tied = clones ++ Seq(walk(30, 9, 5.2, 5.1), walk(31, 20, -30, 100),
+      walk(32, 40, 0, 0), walk(33, 5, 60, 60)).flatten
+    for ((label, fixes) <- Seq("few" -> few, "tied" -> tied)) {
+      val tr = queries.Trajectory.tracksFromPoints(spark,
+        fixes.toDF("user_id", "ts_us", "event_id", "lat", "lon"))
+      val (wantF, wantL, wantE, wantH) = referenceTop10(fixes)
+      val gotF = queries.Trajectory.frechetPruned(spark, tr)
+        .as[(Long, Long, Long, Long, Double)].collect().toSeq
+      assert(gotF == wantF, s"$label frechet:\n got=$gotF\nwant=$wantF")
+      val gotH = queries.Trajectory.hausdorffPruned(spark, tr)
+        .as[(Long, Long, Long, Long, Double)].collect().toSeq
+      assert(gotH == wantH, s"$label hausdorff:\n got=$gotH\nwant=$wantH")
+      val gotL = queries.Trajectory.lcssPruned(spark, tr)
+        .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
+      assert(gotL == wantL, s"$label lcss:\n got=$gotL\nwant=$wantL")
+      for (prune <- Seq(true, false)) {
+        val gotE = queries.Trajectory.edrTop(spark, tr, prune)
+          .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
+        assert(gotE == wantE, s"$label edr (prune=$prune):\n got=$gotE\nwant=$wantE")
+      }
+    }
   }
 }
