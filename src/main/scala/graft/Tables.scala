@@ -4,15 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Catalog over the driver-generated parquet testdata (TESTDATA.md).
   *
-  * The returned DataFrame is memoized per (session, sfDir, table). What is
-  * cached is the LOGICAL PLAN OBJECT only — never materialized data — so
-  * Catalyst still sees the raw scan node and pushes filters / prunes columns
-  * into the vectorized parquet reader exactly as with a fresh read. What the
-  * memo removes is the per-call driver work of `spark.read.parquet`: file
-  * listing and footer/schema inference, which at ~200 table reads across a
-  * 92-query bench run is pure fixed overhead (SURVEY §6). At 100 TB the
-  * same pattern holds — one resolved relation per table, shared by every
-  * query plan, with the scan node as the pushdown target.
+  * The returned DataFrame is memoized per (session, sfDir, table) in a
+  * [[SessionMemo]], so a stopped session's entries are evicted with it.
+  * What is cached is the LOGICAL PLAN OBJECT only — never materialized
+  * data — so Catalyst still sees the raw scan node and pushes filters /
+  * prunes columns into the vectorized parquet reader exactly as with a
+  * fresh read. What the memo removes is the per-call driver work of
+  * `spark.read.parquet`: file listing and footer/schema inference, which
+  * at ~200 table reads across a 92-query bench run is pure fixed overhead
+  * (SURVEY §6). At 100 TB the same pattern holds — one resolved relation
+  * per table, shared by every query plan, with the scan node as the
+  * pushdown target.
   */
 object Tables {
   import org.apache.spark.sql.functions._
@@ -21,11 +23,10 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]
+  private[graft] val memo = new SessionMemo[(String, String), DataFrame]
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    memo.computeIfAbsent((spark, sfDir, name), { _ =>
+    memo.getOrCompute(spark, (sfDir, name)) {
       if (name == "events") {
         // The generator has shipped `ts` three ways across rounds — parquet
         // TIMESTAMP(NANOS) (Spark 4 rejects it unless read as raw Long via
@@ -58,5 +59,5 @@ object Tables {
       } else {
         spark.read.parquet(s"$sfDir/$name.parquet")
       }
-    })
+    }
 }

@@ -1,9 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType, StructField, StructType}
 import graft.functions.HaversineDist
+import graft.operators.{Bfs, Endgame}
 import Q._
 
 /** SURVEY §2.10 — spatio-temporal mining over derived pseudo-coordinates
@@ -55,10 +58,11 @@ object Geo extends QueryGroup {
     * ([[graft.SessionMemo]]; keyed by VALUE since each call site builds a
     * fresh pts() plan, so DataFrame identity would never hit). The value
     * is pinned ([[graft.operators.Endgame.pin]]): a driver-resident
-    * `LocalRelation` while the pair set fits the budget (the graph
-    * operators then gate and fetch it without a job, and its exact
-    * statistics let the triangle joins broadcast), an eager checkpoint
-    * above it. */
+    * `LocalRelation` while the pair set fits the budget — the graph
+    * operators and the graph-statistics keys ([[triangles]],
+    * [[clustCoef]], [[modularity]], [[bfsHistogram]]) then gate and fetch
+    * it without a job and compute on the driver — and an eager checkpoint
+    * above it, where those keys run their Spark plans. */
   private val convoyMemo = new graft.SessionMemo[(String, Double, Int), DataFrame]
 
   // private[graft] so ScaleProbe's dist_loop probe can time the
@@ -246,14 +250,16 @@ object Geo extends QueryGroup {
       .withColumn("seg_km", hv(col("plat"), col("plon"), col("lat"), col("lon")))
       .withColumn("dt_us", col("ts_us") - col("pts_us"))
 
-  /** Shared triangle machinery over the memoized co-traveler pair set:
-    * (closed a<b<c triangle triples, endpoint-union degree frame) — one
-    * definition for q_graph_triangles AND q_graph_clustcoef, so a fix to
-    * the orientation or the pair substrate can never desynchronize the
-    * two keys' graphs. */
-  private def triangleFrames(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val e = coTravelerPairs(s, dir, cellDeg = 20.0, minHours = 2)
-      .select(col("u1"), col("u2"))
+  /** Shared triangle machinery over a (u1 < u2) pair set: (closed a<b<c
+    * triangle triples, endpoint-union degree frame) — one definition for
+    * q_graph_triangles AND q_graph_clustcoef, so a fix to the orientation
+    * can never desynchronize the two keys' graphs. This is their
+    * above-budget path and the `Endgame.distributed` reference; over a
+    * pinned `LocalRelation` (a distributed-path run after the memo was
+    * filled) both joins plan as broadcasts over it. Below the budget the
+    * keys read [[triangleCounts]] instead and run no Spark job. */
+  private def triangleFrames(pairs: DataFrame): (DataFrame, DataFrame) = {
+    val e = pairs.select(col("u1"), col("u2"))
     val paths = e.as("ab").join(e.as("bc"), col("ab.u2") === col("bc.u1"))
       .select(col("ab.u1").as("a"), col("ab.u2").as("b"), col("bc.u2").as("c"))
     val tri = paths.join(e.as("ac"),
@@ -262,6 +268,203 @@ object Geo extends QueryGroup {
     val deg = e.select(col("u1").as("u")).unionAll(e.select(col("u2").as("u")))
       .groupBy(col("u")).agg(count(lit(1)).as("d"))
     (tri, deg)
+  }
+
+  /** A pair set's (u1, u2) as driver longs, through the one gate-and-fetch
+    * ([[Endgame.rows]]: no job for the pinned memo; `None` above the
+    * budget or inside `Endgame.distributed`). */
+  private def longPairs(pairs: DataFrame, weight: Long = 1): Option[Array[(Long, Long)]] = {
+    val s = pairs.sparkSession
+    import s.implicits._
+    Endgame.rows(pairs.select($"u1".cast("long"), $"u2".cast("long")).as[(Long, Long)], weight)
+  }
+
+  private def inc(m: mutable.LongMap[Long], k: Long, by: Long = 1L): Unit =
+    m(k) = m.getOrElse(k, 0L) + by
+
+  /** The driver twin of [[triangleFrames]]: per-vertex degree `d` and
+    * triangle count `t` as a `LocalRelation` (u, d, t), when the pair set
+    * passes [[longPairs]]. Each u1 < u2 edge (a, b) closes one a<b<c
+    * triangle per c in out(a) ∩ out(b) — exactly the triples of the path
+    * join and its closing join — and the intersection walks the smaller
+    * out-set, probing the larger. Pairs must be each undirected pair once
+    * with u1 < u2 (the co-traveler memo's contract). */
+  private def triangleCounts(pairs: DataFrame): Option[DataFrame] = {
+    val s = pairs.sparkSession
+    import s.implicits._
+    longPairs(pairs).map { es =>
+      val out = es.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+      val deg = mutable.LongMap.empty[Long]
+      val tri = mutable.LongMap.empty[Long]
+      for ((a, b) <- es) {
+        inc(deg, a); inc(deg, b)
+        for (ob <- out.get(b)) {
+          val oa = out(a)
+          val (small, big) = if (oa.size <= ob.size) (oa, ob) else (ob, oa)
+          small.foreach(c => if (big(c)) { inc(tri, a); inc(tri, b); inc(tri, c) })
+        }
+      }
+      deg.toSeq.map { case (u, d) => (u, d, tri.getOrElse(u, 0L)) }.toDF("u", "d", "t")
+    }
+  }
+
+  /** C(d, 2) of a degree column `d` — the wedges at a vertex. */
+  private def wedges: Column = expr("d * (d - 1) div 2")
+
+  /** q_graph_triangles over a (u1 < u2) pair set: (n_triangles, n_wedges).
+    * Below the budget: Σt / 3 and Σ C(d, 2) over [[triangleCounts]]'
+    * rows (`n_wedges` NULL on an empty graph, as Spark's `sum` gives it);
+    * above it, the joins of [[triangleFrames]]. */
+  private[graft] def triangles(pairs: DataFrame): DataFrame = {
+    val s = pairs.sparkSession
+    import s.implicits._
+    triangleCounts(pairs) match {
+      case Some(vt) =>
+        val tw = vt.select($"t", wedges).as[(Long, Long)].collect()
+        Seq((tw.map(_._1).sum / 3, if (tw.isEmpty) None else Some(tw.map(_._2).sum)))
+          .toDF("n_triangles", "n_wedges")
+      case None =>
+        val (tri, deg) = triangleFrames(pairs)
+        tri.agg(count(lit(1)).as("n_triangles"))
+          .crossJoin(deg.agg(sum(wedges).as("n_wedges")))
+    }
+  }
+
+  /** Per-vertex local clustering coefficient t / C(d, 2) and its 0.1
+    * bucket — the one expression text of both q_graph_clustcoef paths. */
+  private def withCoef(nodes: DataFrame): DataFrame = nodes
+    .withColumn("coef", col("t").cast("double") / wedges.cast("double"))
+    .withColumn("bucket", floor(col("coef") * 10).cast("int"))
+
+  /** q_graph_clustcoef over a (u1 < u2) pair set: (bucket, n_nodes,
+    * avg_coef) over the vertices of degree ≥ 2, ordered by bucket. Below
+    * the budget the per-vertex rows of [[triangleCounts]] run
+    * [[withCoef]] and `davg`'s DECIMAL(18,6) cast as a projection (folded
+    * into the `LocalRelation`, no job); the driver only groups, counts
+    * and sums those decimals exactly, and the final projection takes
+    * `davg`'s double quotient and `r4` — the values Spark's aggregate
+    * gives. Above it, the joins of [[triangleFrames]]. */
+  private[graft] def clustCoef(pairs: DataFrame): DataFrame = {
+    val s = pairs.sparkSession
+    import s.implicits._
+    triangleCounts(pairs) match {
+      case Some(vt) =>
+        val byBucket = withCoef(vt.filter($"d" >= 2))
+          .select($"bucket", $"coef".cast(DecimalType(18, 6)))
+          .collect().groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+          .map { case (b, rs) =>
+            Row(b, rs.length.toLong, rs.map(_.getDecimal(1)).reduce(_ add _))
+          }
+        s.createDataFrame(java.util.Arrays.asList(byBucket: _*), StructType(Seq(
+            StructField("bucket", IntegerType), StructField("n_nodes", LongType),
+            StructField("coef_sum", DecimalType(28, 6)))))
+          .select($"bucket", $"n_nodes",
+            r4($"coef_sum".cast("double") / $"n_nodes").as("avg_coef"))
+      case None =>
+        val (tri, deg) = triangleFrames(pairs)
+        val triNodes = tri
+          .select(explode(array($"a", $"b", $"c")).as("u"))
+          .groupBy($"u").agg(count(lit(1)).as("t"))
+        withCoef(deg.filter($"d" >= 2)
+            .join(triNodes, Seq("u"), "left")
+            .withColumn("t", coalesce($"t", lit(0L))))
+          .groupBy($"bucket")
+          .agg(count(lit(1)).as("n_nodes"), r4(davg($"coef", 6)).as("avg_coef"))
+          .orderBy($"bucket")
+    }
+  }
+
+  /** Community `c`'s modularity term e_c/m − (d_c/2m)² over (e_c, d_c, m). */
+  private def qC: Column =
+    col("e_c").cast("double") / col("m") -
+      (col("d_c").cast("double") / (lit(2.0) * col("m"))) *
+      (col("d_c").cast("double") / (lit(2.0) * col("m")))
+
+  /** m_graph_modularity over a (u1 < u2) pair set and its (id, label)
+    * communities: (n_communities, m_edges, modularity). Below the budget
+    * (both frames through [[Endgame.rows]]) the driver counts m, e_c and
+    * d_c with the joins' inner semantics — an edge counts toward e_c only
+    * when both ends carry the same label, a vertex's degree toward d_c
+    * only when it carries one — and [[qC]] with its DECIMAL(28,12) cast
+    * runs as a projection over a `LocalRelation` of the communities; the
+    * driver sums those decimals exactly and the last projection rounds.
+    * On no communities, `m_edges` and `modularity` are NULL, as Spark's
+    * `max` and `sum` give them. Above it, the vertex-keyed joins and
+    * community-keyed aggregates. */
+  private[graft] def modularity(pairs: DataFrame, labels: DataFrame): DataFrame = {
+    val s = pairs.sparkSession
+    import s.implicits._
+    val local = for {
+      es <- longPairs(pairs)
+      ls <- Endgame.rows(labels.select($"id".cast("long"), $"label".cast("long")).as[(Long, Long)])
+    } yield {
+      val lab = mutable.LongMap.from(ls)
+      val deg = mutable.LongMap.empty[Long]
+      val eC = mutable.LongMap.empty[Long]
+      for ((a, b) <- es) {
+        inc(deg, a); inc(deg, b)
+        for (la <- lab.get(a); lb <- lab.get(b) if la == lb) inc(eC, la)
+      }
+      val dC = mutable.LongMap.empty[Long]
+      for ((v, d) <- deg; c <- lab.get(v)) inc(dC, c, d)
+      val m = es.length.toLong
+      val terms = dC.toSeq.map { case (c, d) => (c, d, eC.getOrElse(c, 0L), m) }
+        .toDF("label", "d_c", "e_c", "m")
+        .select(qC.cast(DecimalType(28, 12))).collect().flatMap(r => Option(r.getDecimal(0)))
+      val row = Row(dC.size.toLong, if (dC.isEmpty) null else m,
+        if (terms.isEmpty) null else terms.reduce(_ add _))
+      s.createDataFrame(java.util.Arrays.asList(row), StructType(Seq(
+          StructField("n_communities", LongType, nullable = false),
+          StructField("m_edges", LongType), StructField("q_sum", DecimalType(38, 12)))))
+        .select($"n_communities", $"m_edges", round($"q_sum".cast("double"), 6).as("modularity"))
+    }
+    local.getOrElse {
+      val e = pairs.select($"u1", $"u2")
+      val edges = e.select($"u1".as("src"), $"u2".as("dst"))
+        .unionAll(e.select($"u2".as("src"), $"u1".as("dst")))
+      val ec = e
+        .join(labels.select($"id".as("u1"), $"label".as("lab1")), Seq("u1"))
+        .join(labels.select($"id".as("u2"), $"label".as("lab2")), Seq("u2"))
+        .filter($"lab1" === $"lab2")
+        .groupBy($"lab1".as("label")).agg(count(lit(1)).as("e_c"))
+      val dc = edges.groupBy($"src".as("id")).agg(count(lit(1)).as("d"))
+        .join(labels, Seq("id"))
+        .groupBy($"label").agg(sum($"d").as("d_c"))
+      val m = e.agg(count(lit(1)).as("m"))
+      dc.join(ec, Seq("label"), "left")
+        .select($"label", $"d_c", coalesce($"e_c", lit(0L)).as("e_c"))
+        .crossJoin(broadcast(m)) // 1-row stats join, the declared pattern
+        .withColumn("q_c", qC)
+        .agg(count(lit(1)).as("n_communities"), max($"m").as("m_edges"),
+             round(sum($"q_c".cast(DecimalType(28, 12))).cast("double"), 6)
+               .as("modularity"))
+    }
+  }
+
+  /** q_graph_bfs over a (u1 < u2) pair set: the (dist, n_users) histogram
+    * of ≤8-hop BFS distances from the 3 smallest vertex ids, ordered by
+    * dist. Below the budget (gated at [[Bfs.run]]'s own weight 2, so its
+    * driver kernel runs too) the seeds come from the fetched rows and the
+    * histogram from the `LocalRelation` BFS returns; above it, the
+    * distinct/order/limit seed plan and the grouped histogram. */
+  private[graft] def bfsHistogram(pairs: DataFrame): DataFrame = {
+    val s = pairs.sparkSession
+    import s.implicits._
+    val edges = pairs.select($"u1", $"u2")
+    val local = for {
+      es <- longPairs(pairs, 2)
+      seeds = es.flatMap { case (a, b) => Array(a, b) }.distinct.sorted.take(3)
+      dist <- Endgame.rows(
+        Bfs.run(s, edges, seeds.toSeq.toDF("id"), maxHops = 8).select($"dist").as[Int])
+    } yield dist.groupBy(identity).toSeq.sortBy(_._1)
+      .map { case (d, vs) => (d, vs.length.toLong) }.toDF("dist", "n_users")
+    local.getOrElse {
+      val verts = pairs.select($"u1".as("id")).unionAll(pairs.select($"u2".as("id")))
+        .distinct()
+      Bfs.run(s, edges, verts.orderBy($"id").limit(3), maxHops = 8)
+        .groupBy($"dist").agg(count(lit(1)).as("n_users"))
+        .orderBy($"dist")
+    }
   }
 
   /** Convex CCW pentagon for q_geo_polygon, as (lon, lat) vertices — all
@@ -1303,45 +1506,30 @@ object Geo extends QueryGroup {
     // Triangle count + wedge count of the co-traveler graph — the global
     // clustering-coefficient numerator/denominator (3T/W), emitted as the
     // two exact integers so no FP division enters the oracle compare. The
-    // u1 < u2 edge orientation counts each triangle exactly once via the
-    // standard two-hop path (a<b<c) + closing-edge equi-join — never an
-    // all-pairs wedge materialization against unordered edges; wedges are
-    // the integer-exact sum of C(degree, 2). Shares the memoized pair set
-    // with m_graph_pagerank/q_graph_degree. At 100 TB the closing join is
-    // edge-keyed (two-long key) and benefits from degree-orientation: the
-    // a<b<c ordering already bounds fanout by the ordered out-degree.
-    "q_graph_triangles" -> ((s, dir) => {
-      import s.implicits._
-      val (tri, deg) = triangleFrames(s, dir)
-      val wedges = deg.agg(sum(expr("d * (d - 1) div 2")).as("n_wedges"))
-      tri.agg(count(lit(1)).as("n_triangles")).crossJoin(wedges)
-    }),
+    // u1 < u2 edge orientation counts each triangle exactly once (a<b<c);
+    // wedges are the integer-exact sum of C(degree, 2). Shares the
+    // memoized pair set with m_graph_pagerank/q_graph_degree. Below the
+    // budget the pinned pair set is counted on the driver ([[triangles]]:
+    // no Spark job); above it the standard two-hop path + closing-edge
+    // equi-join runs — never an all-pairs wedge materialization against
+    // unordered edges. At 100 TB the closing join is edge-keyed (two-long
+    // key) and the a<b<c ordering bounds fanout by the ordered out-degree.
+    "q_graph_triangles" -> ((s, dir) =>
+      triangles(coTravelerPairs(s, dir, cellDeg = 20.0, minHours = 2))),
 
     // Local clustering coefficient distribution — how clique-like each
     // user's neighborhood is (the transitivity profile an analyst reads
     // beside the degree histogram): per node, triangles/wedges, bucketed
-    // at 0.1. Same two-join triangle plan as q_graph_triangles (shared
-    // memoized pair set; triples explode to their three corners for the
-    // per-node count). Parity is structural: t and d(d−1)/2 are integers,
-    // the coefficient one exact division, the avg decimal-routed. At
-    // 100 TB the a<b<c orientation already sends each triangle through
-    // the join once, and the per-node rollup is a key-sized hash agg.
-    "q_graph_clustcoef" -> ((s, dir) => {
-      import s.implicits._
-      val (tri, deg) = triangleFrames(s, dir)
-      val triNodes = tri
-        .select(explode(array($"a", $"b", $"c")).as("u"))
-        .groupBy($"u").agg(count(lit(1)).as("t"))
-      deg.filter($"d" >= 2)
-        .join(triNodes, Seq("u"), "left")
-        .withColumn("t", coalesce($"t", lit(0L)))
-        .withColumn("coef", $"t".cast("double") /
-          expr("d * (d - 1) div 2").cast("double"))
-        .withColumn("bucket", floor($"coef" * 10).cast("int"))
-        .groupBy($"bucket")
-        .agg(count(lit(1)).as("n_nodes"), r4(davg($"coef", 6)).as("avg_coef"))
-        .orderBy($"bucket")
-    }),
+    // at 0.1. Same triangle counts as q_graph_triangles on the shared
+    // memoized pair set: on the driver below the budget ([[clustCoef]]:
+    // no Spark job), the two-join triangle plan above it (triples explode
+    // to their three corners for the per-node count). Parity is
+    // structural: t and d(d−1)/2 are integers, the coefficient one exact
+    // division, the avg decimal-routed. At 100 TB the a<b<c orientation
+    // already sends each triangle through the join once, and the per-node
+    // rollup is a key-sized hash agg.
+    "q_graph_clustcoef" -> ((s, dir) =>
+      clustCoef(coTravelerPairs(s, dir, cellDeg = 20.0, minHours = 2))),
 
     // Community structure of the co-traveler graph via synchronous label
     // propagation — property-tested (LabelPropSpec: node-wise ≡ in-memory
@@ -1362,38 +1550,15 @@ object Geo extends QueryGroup {
     // Q = Σ_c (e_c/m − (d_c/2m)²), the standard "did the community
     // detection find real structure" score (Q ≈ 0: no better than random
     // wiring; Q ≳ 0.3: strong structure). Composes the memoized pair set
-    // + LabelProp labels with two keyed joins and community-keyed aggs —
-    // everything shuffles on vertex/label keys; the Q fold runs over
+    // + LabelProp labels ([[modularity]]): below the budget both are
+    // driver-resident and e_c, d_c and m are counted on the driver with no
+    // Spark job; above it, two keyed joins and community-keyed aggs —
+    // everything shuffles on vertex/label keys, and the Q fold runs over
     // |communities| rows. No oracle (depends on iterative LP labels) —
     // LabelPropSpec recomputes Q on the driver and pins the planted
     // two-clique Q = 1/2 exactly.
-    "m_graph_modularity" -> ((s, dir) => {
-      import s.implicits._
-      val pairs = coTravelerPairs(s, dir, cellDeg = 20.0, minHours = 2)
-        .select($"u1", $"u2")
-      val edges = pairs.select($"u1".as("src"), $"u2".as("dst"))
-        .unionAll(pairs.select($"u2".as("src"), $"u1".as("dst")))
-      val labels = lpLabels(s, dir)
-      val ec = pairs
-        .join(labels.select($"id".as("u1"), $"label".as("lab1")), Seq("u1"))
-        .join(labels.select($"id".as("u2"), $"label".as("lab2")), Seq("u2"))
-        .filter($"lab1" === $"lab2")
-        .groupBy($"lab1".as("label")).agg(count(lit(1)).as("e_c"))
-      val dc = edges.groupBy($"src".as("id")).agg(count(lit(1)).as("d"))
-        .join(labels, Seq("id"))
-        .groupBy($"label").agg(sum($"d").as("d_c"))
-      val m = pairs.agg(count(lit(1)).as("m"))
-      dc.join(ec, Seq("label"), "left")
-        .select($"label", $"d_c", coalesce($"e_c", lit(0L)).as("e_c"))
-        .crossJoin(broadcast(m)) // 1-row stats join, the declared pattern
-        .withColumn("q_c",
-          $"e_c".cast("double") / $"m" -
-            ($"d_c".cast("double") / (lit(2.0) * $"m")) *
-            ($"d_c".cast("double") / (lit(2.0) * $"m")))
-        .agg(count(lit(1)).as("n_communities"), max($"m").as("m_edges"),
-             round(sum($"q_c".cast(org.apache.spark.sql.types.DecimalType(28, 12)))
-               .cast("double"), 6).as("modularity"))
-    }),
+    "m_graph_modularity" -> ((s, dir) =>
+      modularity(coTravelerPairs(s, dir, cellDeg = 20.0, minHours = 2), lpLabels(s, dir))),
 
     // Community OPTIMIZATION — full multi-level Louvain (Blondel et al.
     // 2008) on the co-traveler graph: where m_graph_lp adopts plurality
@@ -1422,18 +1587,12 @@ object Geo extends QueryGroup {
     // influence spread from a seed set) beside PageRank/LP/triangles/CC.
     // Output is the (dist, n_users) layer histogram within 8 hops; seeds
     // are content-determined (smallest ids), so both engines pick the same
-    // set with no driver-side choice. Oracle: recursive CTE over the same
-    // pair edges, MIN(d) per vertex — hop distance by construction.
-    "q_graph_bfs" -> ((s, dir) => {
-      import s.implicits._
-      val pairs = coTravelerPairs(s, dir, cellDeg = 20.0, minHours = 2)
-      val verts = pairs.select($"u1".as("id")).unionAll(pairs.select($"u2".as("id")))
-        .distinct()
-      val seeds = verts.orderBy($"id").limit(3)
-      graft.operators.Bfs.run(s, pairs.select($"u1", $"u2"), seeds, maxHops = 8)
-        .groupBy($"dist").agg(count(lit(1)).as("n_users"))
-        .orderBy($"dist")
-    }),
+    // set ([[bfsHistogram]]: seeds, BFS and histogram on the driver with
+    // no Spark job below the budget, Spark plans above it). Oracle:
+    // recursive CTE over the same pair edges, MIN(d) per vertex — hop
+    // distance by construction.
+    "q_graph_bfs" -> ((s, dir) =>
+      bfsHistogram(coTravelerPairs(s, dir, cellDeg = 20.0, minHours = 2))),
 
     // Hop-bounded closeness + harmonic centrality (Bavelas 1950 /
     // Marchiori-Latora 2000) — WHO sits centrally in the co-traveler

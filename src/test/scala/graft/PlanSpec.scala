@@ -1494,11 +1494,14 @@ class PlanSpec extends BaseSpec {
   }
 
   test("q_graph_triangles broadcasts the driver-resident pair set: no shuffle below its joins") {
-    // The memoized co-traveler pair set is pinned as a LocalRelation under
-    // the endgame budget, so its exact size statistics plan both triangle
-    // joins as broadcast joins straight over LocalTableScan. A memo held
-    // as a checkpoint (size unknown to the planner) plans them as shuffle
-    // joins and fails here.
+    // The triangle joins are the key's above-budget path: below the
+    // budget it counts on the driver and plans no join at all. They run
+    // here inside Endgame.distributed, after a default-path call has
+    // filled the memo, so the co-traveler pair set they read is the one
+    // pinned as a LocalRelation under the endgame budget. Its exact size
+    // statistics plan both triangle joins as broadcast joins straight
+    // over LocalTableScan. A memo held as a checkpoint (size unknown to
+    // the planner) plans them as shuffle joins and fails here.
     import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
@@ -1509,8 +1512,12 @@ class PlanSpec extends BaseSpec {
       case r: ReusedExchangeExec => nodes(r.child)
       case _ => p.children.flatMap(nodes)
     })
-    val df = SparkEntry.queries("q_graph_triangles")(spark, sf)
-    df.collect()
+    SparkEntry.queries("q_graph_triangles")(spark, sf).collect()
+    val df = graft.operators.Endgame.distributed {
+      val d = SparkEntry.queries("q_graph_triangles")(spark, sf)
+      d.collect()
+      d
+    }
     val plan = df.queryExecution.executedPlan
     val joins = nodes(plan).collect { case j: BroadcastHashJoinExec => j }
     assert(joins.size == 2, s"q_graph_triangles: expected two broadcast triangle joins:\n$plan")

@@ -58,6 +58,20 @@ class TablesSpec extends BaseSpec {
       s"events.ts µs range [$lo, $hi] outside plausible epoch bounds — unit drift?")
   }
 
+  test("the memo returns one object per session and table, and evict drops it") {
+    // A child session shares the context, so evicting it leaves the shared
+    // session's entries (and every other suite's) in place.
+    val child = spark.newSession()
+    val region = Tables(child, sf, "region")
+    assert(Tables(child, sf, "region") eq region)
+    assert(Tables(spark, sf, "region") ne region)
+    assert(Tables.memo.sizeFor(child) == 1)
+    Tables.memo.evict(child)
+    assert(Tables.memo.sizeFor(child) == 0)
+    assert(Tables.memo.sizeFor(spark) > 0)
+    assert(Tables(child, sf, "region") ne region)
+  }
+
   test("every contract column is selectable end-to-end (no lazy analysis trap)") {
     // Materialize one row of every required column: analysis-only breakage
     // (the round-9 failure mode) surfaces at .collect, not at schema time.
