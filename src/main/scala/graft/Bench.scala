@@ -100,9 +100,7 @@ object Bench {
       // Executed-round counts for the iterative keys (set by the run the
       // min came from or its twin — both run the same fixed-cap loop), so
       // a slow sample is attributable to rounds × actions, not guessed.
-      // Bindings self-register at query-group init (LastIterations) — a
-      // new iterative operator gets its line without editing Bench.
-      graft.operators.LastIterations.get(name).foreach(iters(name) = _)
+      graft.operators.LastIterations.take().foreach(iters(name) = _)
       val best =
         if (a < 0) b
         else if (b < 0) a

@@ -518,10 +518,7 @@ object ScaleProbe {
             try {
               val rows = body()
               val sec = (System.nanoTime() - t0) / 1e9
-              val it = op match {
-                case "pagerank" => graft.operators.PageRank.lastIterations
-                case _ => graft.operators.Bfs.lastIterations
-              }
+              val it = graft.operators.LastIterations.take().getOrElse(-1)
               println(s"""{"metric":"scaleprobe","key":"dist_loop_$op","scale":"$label","mode":"$mode","sec":${r3(sec)},"rows":$rows,"rounds":$it,"edges":$nEdges}""")
             } catch { case scala.util.control.NonFatal(e) =>
               val m = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"
@@ -623,7 +620,7 @@ object ScaleProbe {
         val rows = if (trajTop) df.collect().length.toLong else df.count()
         val sec = (System.nanoTime() - t0) / 1e9
         val ex = countShuffles(df.queryExecution.executedPlan)
-        val it = graft.operators.LastIterations.get(key).map(i => s""","rounds":$i""").getOrElse("")
+        val it = graft.operators.LastIterations.take().map(i => s""","rounds":$i""").getOrElse("")
         val pr = if (trajTop) pruneStats(df, graft.queries.Trajectory.tracks(spark, dir)) else ""
         println(s"""{"metric":"scaleprobe","key":"$key","scale":"$label","sec":${r3(sec)},"rows":$rows,"exchanges":$ex$it$pr}""")
       } catch { case scala.util.control.NonFatal(e) =>

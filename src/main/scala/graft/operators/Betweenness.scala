@@ -29,16 +29,14 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Sources are the K smallest vertex ids — deterministic, and when
   * |V| ≤ K the result is EXACT Brandes (the spec pins both regimes).
-  * Rounds needed = eccentricity of the sampled sources (lastIterations
-  * reports it exactly, read back from the reached frame's max level);
+  * Rounds needed = eccentricity of the sampled sources (the recorded
+  * rounds, exactly, read back from the reached frame's max level);
   * if `maxDepth` rounds still leave DISCOVERABLE vertices — probed with
   * one extra frontier join, so completing exactly at `maxDepth` is fine
   * — run() THROWS (the [[KCore]]/[[Sssp]] discipline: a truncated BFS
   * would silently underestimate every score).
   */
 object Betweenness {
-  @volatile var lastIterations: Int = -1
-
   /** @param edges undirected (u1, u2) pair list, each pair once
     * @param k     number of BFS sources (smallest ids; |V| ≤ k → exact)
     * @return (id, bc): Σ over sampled sources of Brandes δ, halved
@@ -194,7 +192,7 @@ object Betweenness {
             .as("bc")), maxLevel, true)
       }
     }
-    lastIterations = rounds
+    LastIterations.record(rounds)
     if (!complete)
       throw new IllegalStateException(
         s"Brandes BFS still had undiscovered vertices after $maxDepth " +

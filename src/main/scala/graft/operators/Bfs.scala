@@ -25,8 +25,6 @@ import org.apache.spark.sql.functions._
   * on cadence rounds — lineage is cut lazily in between.
   */
 object Bfs {
-  @volatile var lastIterations: Int = 0
-
   /** Both directions of the undirected (u1, u2) list as (sv, dst), cached
     * — the distributed loop's edge view. */
   private def symmetric(edges: DataFrame): DataFrame =
@@ -124,7 +122,7 @@ object Bfs {
           runDistributed(symmetric(edges), seeds.select($"id", lit(0).as("dist")),
             Nil, maxHops, checkEvery)
       }
-    lastIterations = rounds
+    LastIterations.record(rounds)
     out
   }
 
@@ -160,7 +158,7 @@ object Bfs {
             sources.select($"id".as("src"), $"id", lit(0).as("dist")),
             Seq("src"), maxHops, checkEvery)
       }
-    lastIterations = rounds
+    LastIterations.record(rounds)
     out
   }
 }

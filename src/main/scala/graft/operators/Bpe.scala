@@ -31,8 +31,6 @@ import org.apache.spark.sql.functions._
   * equality with a driver-side reference trainer.
   */
 object Bpe {
-  @volatile var lastIterations: Int = -1
-
   /** One trained merge: (step starting at 1, left symbol, right symbol,
     * weighted pair count at merge time). */
   final case class Merge(step: Int, left: String, right: String, cnt: Long)
@@ -79,7 +77,7 @@ object Bpe {
             .localCheckpoint(eager = false)
       }
     }
-    lastIterations = step
+    LastIterations.record(step)
     merges.result()
   }
 

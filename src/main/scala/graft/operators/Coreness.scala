@@ -26,8 +26,6 @@ import org.apache.spark.sql.functions._
   * in the edge list and have core number 0 by definition — callers that
   * need them add them back (documented, not silently invented here). */
 object Coreness {
-  @volatile var lastIterations: Int = -1
-
   /** @param edges undirected pair list (u1, u2), each pair once
     * @return (id, coreness) for every vertex with ≥ 1 edge */
   def run(spark: SparkSession, edges: DataFrame,
@@ -88,7 +86,7 @@ object Coreness {
       }
       (lab.select($"u".as("id"), $"c".as("coreness")), i, done)
     }
-    lastIterations = rounds
+    LastIterations.record(rounds)
     if (!done)
       throw new IllegalStateException(
         s"h-index coreness did not reach its fixpoint in $maxIter rounds — " +

@@ -24,8 +24,6 @@ import org.apache.spark.sql.functions._
   * cadence round, so the exit state is never stale).
   */
 object KCore {
-  @volatile var lastIterations: Int = -1
-
   /** @param edges undirected pair list (u1, u2), each pair once
     * @return (id) — vertices of the k-core
     * @throws IllegalStateException if the peeling fixpoint is not reached
@@ -84,7 +82,7 @@ object KCore {
       }
       (cur.select($"src".as("id")).distinct(), i, done)
     }
-    lastIterations = rounds
+    LastIterations.record(rounds)
     if (!done)
       throw new IllegalStateException(
         s"k-core peeling did not reach its fixpoint in $maxIter rounds " +

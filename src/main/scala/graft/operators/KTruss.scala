@@ -32,8 +32,6 @@ import org.apache.spark.sql.functions._
   * instead of a wrong answer.
   */
 object KTruss {
-  @volatile var lastIterations: Int = -1
-
   /** @param edges undirected (u1, u2) pair list, each pair once
     * @param k     truss order ≥ 3 (k−2 triangles required per edge)
     * @return the k-truss edge set as canonical (u1 < u2) rows */
@@ -131,7 +129,7 @@ object KTruss {
       if (!converged) converged = peelOnce(cur).count() == prevCount
       (cur, i, converged)
     }
-    lastIterations = rounds
+    LastIterations.record(rounds)
     if (!converged)
       throw new IllegalStateException(
         s"k-truss peeling did not reach its fixpoint in $maxIter rounds — " +

@@ -44,11 +44,14 @@ import graft.functions.HaversineDist
   */
 object KnnJoin {
 
-  /** Executed physical plans of the ring rounds of the LAST `knn` call
-    * (pre-checkpoint, so the candidate join is visible) — the spec's
-    * no-cartesian/no-BNL assertion surface; the exact-fallback round, if
-    * any, is deliberately excluded (it IS a declared cross join). */
-  @volatile var lastRingPlans: Seq[String] = Nil
+  private val ringPlans = ThreadLocal.withInitial[Seq[String]](() => Nil)
+
+  /** Executed physical plans of the ring rounds of the LAST `knn` call on
+    * this thread (pre-checkpoint, so the candidate join is visible) — the
+    * spec's no-cartesian/no-BNL assertion surface; the exact-fallback
+    * round, if any, is deliberately excluded (it IS a declared cross
+    * join). */
+  def lastRingPlans: Seq[String] = ringPlans.get
 
   /** @param left  relation with an id + lat/lon; one output group per row
     * @param right relation with an id + lat/lon (the "depot" side)
@@ -188,11 +191,11 @@ object KnnJoin {
     val certified = col("__cnt") === k.toLong && col("__kth") < col("__safe")
 
     var ringsLeft = rings
-    lastRingPlans = Nil
+    ringPlans.set(Nil)
     while (ringsLeft.nonEmpty && !remaining.isEmpty) {
       val preCp = roundTopK(remaining, Some(ringsLeft.head))
       val topk = preCp.localCheckpoint(eager = true)
-      lastRingPlans :+= preCp.queryExecution.executedPlan.toString
+      ringPlans.set(ringPlans.get :+ preCp.queryExecution.executedPlan.toString)
       emitted += topk.filter(certified)
         .select(col(lId), col(rId), col("__dist").as("dist_km"), col("__rk").as("rk"))
       remaining = remaining

@@ -33,10 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object LabelProp {
 
-  /** Rounds executed by the most recent [[runCounted]] on this JVM —
-    * read by `graft.Bench`'s note line. Diagnostic only. */
-  @volatile var lastIterations: Int = -1
-
   /** @param edges UNDIRECTED adjacency given as directed (src, dst) rows —
     *        pass each edge in BOTH directions; duplicate rows weight the
     *        vote by multiplicity
@@ -112,7 +108,7 @@ object LabelProp {
       }
       (labels, i)
     }
-    lastIterations = rounds
+    LastIterations.record(rounds)
     (labels, rounds)
   }
 }

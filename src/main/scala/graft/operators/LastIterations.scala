@@ -1,35 +1,36 @@
 package graft.operators
 
-/** Self-registering executed-round counters for iterative operators.
+/** The executed-rounds record of the iterative operators.
   *
-  * Bench attributes a slow iterative key to rounds × per-round actions via
-  * its `iterations` line. Hard-coding `if (name == ...)` hooks in Bench
-  * meant every NEW iterative operator silently lost that attribution until
-  * someone edited Bench — so the binding now lives where the query key is
-  * declared: the query group registers `queryKey -> counter` at object
-  * init (which runs before Bench's query loop, because Bench reads the
-  * keys through `SparkEntry.queries`), and Bench just snapshots whatever
-  * is registered after timing each key.
+  * Each iterative operator records its executed-round count when its loop
+  * ends; a reader takes the count of whatever ran on its own thread since
+  * the last read. The record is thread-confined, so two sessions running
+  * the same operator on different threads never see each other's count.
+  * Plain ThreadLocal, not DynamicVariable: the latter is inheritable, so a
+  * pool thread first created on a thread holding a count would start with
+  * it (the same reason as `Endgame`'s forced gate).
+  *
+  * A key that hits a memoized operator result runs no operator and reads
+  * `None`. A reader that skips a read (a failed key, an untimed pass)
+  * leaves the count for its thread's next read.
   */
 object LastIterations {
-  private val m = new java.util.concurrent.ConcurrentHashMap[String, () => Int]
+  private val rounds = ThreadLocal.withInitial[Option[Int]](() => None)
 
-  /** Bind a bench query key to its operator's executed-round counter
-    * (typically a `lastIterations` volatile; re-registration overwrites). */
-  def register(queryKey: String)(counter: => Int): Unit =
-    m.put(queryKey, () => counter)
+  /** Records an operator's executed rounds on this thread; the last write
+    * before a read wins. */
+  private[graft] def record(n: Int): Unit = rounds.set(Some(n))
 
-  /** The executed-round count for `queryKey`, if it is a registered
-    * iterative key whose operator has run (counters are -1 before any
-    * run — filtered out so Bench never prints a sentinel as a count). */
-  def get(queryKey: String): Option[Int] =
-    Option(m.get(queryKey)).map(_.apply()).filter(_ >= 0)
-
-  /** Visible for tests: every registered key. */
-  private[graft] def registeredKeys: Set[String] = {
-    val it = m.keySet.iterator
-    val b = Set.newBuilder[String]
-    while (it.hasNext) b += it.next()
-    b.result()
+  /** The rounds recorded on this thread since the last read, and clears
+    * them. */
+  def take(): Option[Int] = {
+    val r = rounds.get
+    rounds.set(None)
+    r
   }
+
+  /** [[take]] under the name perfbench calls after each successful key.
+    * `queryKey` is ignored: the count is whatever ran on this thread since
+    * the last read, not a per-key binding. */
+  def get(queryKey: String): Option[Int] = take()
 }

@@ -81,11 +81,6 @@ object Louvain {
     * envelope (scaladoc above). floor(sqrt(2⁶³ − 1)). */
   private val ExactW2Max = 3037000499L
 
-
-  /** Local-move rounds executed across all levels of the most recent
-    * run on this JVM — read by `graft.Bench`'s note line. Diagnostic. */
-  @volatile var lastIterations: Int = -1
-
   /** Level-1 only (the r12-verdict surface, kept for the spec's
     * node-wise mirror): local moves on the unweighted simple graph.
     *
@@ -109,7 +104,7 @@ object Louvain {
       .withColumn("w", lit(1L))
       .localCheckpoint(eager = true).transform(cp)
     val (comm, iters) = localMoves(spark, e, iterations, checkEvery)
-    lastIterations = iters
+    LastIterations.record(iters)
     (comm, iters)
   }
 
@@ -182,7 +177,7 @@ object Louvain {
         }
       }
     }
-    lastIterations = itersTotal
+    LastIterations.record(itersTotal)
     assign
   }
 

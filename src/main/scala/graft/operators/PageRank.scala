@@ -33,11 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
-  /** Rounds executed by the most recent [[runCounted]] on this JVM —
-    * read by `graft.Bench`'s note line so a judge can attribute iterative
-    * cost without re-running the operator. Diagnostic only. */
-  @volatile var lastIterations: Int = -1
-
   /** @param edges DIRECTED (src, dst) edge list, duplicates allowed
     *        (weights by multiplicity); pass both directions for an
     *        undirected graph. With `weighted = true` the list must also
@@ -187,7 +182,7 @@ object PageRank {
       }
       (ranks, i)
     }
-    lastIterations = rounds
+    LastIterations.record(rounds)
     (ranks, rounds)
   }
 }

@@ -18,8 +18,6 @@ import org.apache.spark.sql.functions._
   * untouched.
   */
 object Ppr {
-  @volatile var lastIterations: Int = -1
-
   /** Driver-local restart iteration — the [[PageRank]] [[Endgame]]
     * kernel with the seed teleport vector; the seed set collects too (it
     * is probe-sized by contract). Same update equations, same
@@ -130,7 +128,7 @@ object Ppr {
       }
       (ranks, i)
     }
-    lastIterations = rounds
+    LastIterations.record(rounds)
     ranks
   }
 }

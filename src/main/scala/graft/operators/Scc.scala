@@ -34,8 +34,6 @@ import org.apache.spark.sql.functions._
   * lineage, the CC eager-checkpoint lesson.
   */
 object Scc {
-  @volatile var lastIterations: Int = -1
-
   /** Largest matrix universe the driver-local closure takes: its bitset
     * squaring is |V|³/64 word-ops per round, ~1.2e8 at 2000 vertices. */
   private val LocalVertexCap = 2000
@@ -67,7 +65,7 @@ object Scc {
       else None
     val (out, rounds, done) =
       viaLocal.getOrElse(closeDistributed(spark, vertices, edges, maxIter))
-    lastIterations = rounds
+    LastIterations.record(rounds)
     if (!done)
       throw new IllegalStateException(
         s"SCC path-doubling closure did not reach its fixpoint in $maxIter " +

@@ -28,8 +28,6 @@ import org.apache.spark.sql.functions._
   * decrease must never be returned as final).
   */
 object Sssp {
-  @volatile var lastIterations: Int = -1
-
   /** @param edges DIRECTED (src, dst, w) rows, w > 0 (duplicates fine —
     *        min relaxation ignores the heavier copy); pass both
     *        directions for an undirected graph
@@ -100,7 +98,7 @@ object Sssp {
       }
       (dist, i, converged)
     }
-    lastIterations = rounds
+    LastIterations.record(rounds)
     if (!converged)
       throw new IllegalStateException(
         s"SSSP relaxation did not reach its fixpoint in $maxIter rounds — " +

@@ -31,27 +31,6 @@ import Q._
   * rounded to integer km/h. */
 object Geo extends QueryGroup {
 
-  // Executed-round attribution for Bench's iterations line: the binding
-  // lives HERE, next to the key declarations, so adding an iterative key
-  // never requires a Bench edit (operators/LastIterations).
-  locally {
-    import graft.operators.LastIterations.register
-    register("m_graph_pagerank")(graft.operators.PageRank.lastIterations)
-    register("m_graph_wpagerank")(graft.operators.PageRank.lastIterations)
-    register("m_graph_lp")(graft.operators.LabelProp.lastIterations)
-    register("m_graph_modularity")(graft.operators.LabelProp.lastIterations)
-    register("m_graph_louvain")(graft.operators.Louvain.lastIterations)
-    register("m_graph_ppr")(graft.operators.Ppr.lastIterations)
-    register("m_graph_kcore")(graft.operators.KCore.lastIterations)
-    register("q_graph_bfs")(graft.operators.Bfs.lastIterations)
-    register("q_graph_closeness")(graft.operators.Bfs.lastIterations)
-    register("m_graph_sssp")(graft.operators.Sssp.lastIterations)
-    register("m_graph_betweenness")(graft.operators.Betweenness.lastIterations)
-    register("m_graph_ktruss")(graft.operators.KTruss.lastIterations)
-    register("m_graph_scc")(graft.operators.Scc.lastIterations)
-    register("m_graph_coreness")(graft.operators.Coreness.lastIterations)
-  }
-
   /** Co-traveler pair memo: m_graph_pagerank and q_graph_degree read the
     * SAME coTravelers(cell=20°, minHours=2) pair set — one bucket join per
     * (session, sfDir, params) instead of one per key
@@ -1663,8 +1642,7 @@ object Geo extends QueryGroup {
     // bucketing is presentation, not a noise belt. No SQL oracle
     // (iterative relaxation); SsspSpec pins node-wise equality to a
     // driver-side Dijkstra on random weighted graphs plus the
-    // non-convergence throw. Shares the memoized pair set; rounds emit
-    // through LastIterations.
+    // non-convergence throw. Shares the memoized pair set.
     "m_graph_sssp" -> ((s, dir) => {
       import s.implicits._
       val pairs = coTravelerPairs(s, dir, cellDeg = 20.0, minHours = 2)

@@ -228,7 +228,8 @@ object Mining extends QueryGroup {
       // costs (~+40% A/B-timed). Apply it when the item universe is
       // long-tailed and the bar is fractional (the web-corpus case); here
       // the minimal plan is the right one.
-      // Bar-is-contract, probed (r15 verdict ask #6, IterProbe at sf0.1):
+      // Bar-is-contract, probed (r15 verdict ask #6, sf0.1; re-measure with
+      // perfbench/tools/survey.py --keys m_mine_fpgrowth):
       // the exhaustive minCount = 2 is SEMANTIC, not habit — co-purchase
       // supports on this corpus live in single digits, so any fractional
       // bar empties the key (minSupport 0.1%: 0 size ≥ 2 itemsets, 0.5 s;

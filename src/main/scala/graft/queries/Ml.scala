@@ -773,7 +773,8 @@ object Ml extends QueryGroup {
     * planted two-vocabulary corpus (the logregFrame sharing discipline).
     * Returns (topic, rank, term, weight) for the top-5 terms per topic.
     *
-    * Cost-is-contract, probed (r15 verdict ask #6, IterProbe at sf0.1):
+    * Cost-is-contract, probed (r15 verdict ask #6, sf0.1; re-measure
+    * with perfbench/tools/survey.py --keys m_text_lda):
     * EM maxIter = 5 (2.8 s), maxIter = 3 (2.0 s) and the online
     * optimizer (2.7 s) ALL change the pinned top-terms vs the shipped
     * EM maxIter = 10 (11.2 s) — the 10-round fit is what the output

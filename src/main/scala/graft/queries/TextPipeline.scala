@@ -1357,17 +1357,6 @@ object TextPipeline extends QueryGroup {
       graft.operators.Bpe.train(s, wordCounts(s, dir), numMerges = 8)
     }
 
-  // Executed-round attribution for Bench's iterations line (the Geo
-  // discipline: the binding lives next to the key declaration).
-  locally {
-    graft.operators.LastIterations.register("m_text_bpe")(
-      graft.operators.Bpe.lastIterations)
-    graft.operators.LastIterations.register("q_text_bpe_encode")(
-      graft.operators.Bpe.lastIterations)
-    graft.operators.LastIterations.register("q_pack_bpe")(
-      graft.operators.Bpe.lastIterations)
-  }
-
   /** Oracle-side mirror of [[clusterAssign]]: recursive reachability over
     * the symmetric pair edges, ending in an `assign(doc_id, comp)` CTE. */
   private val clusterCte =

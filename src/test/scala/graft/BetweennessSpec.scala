@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Betweenness
+import graft.operators.{Betweenness, LastIterations}
 
 /** m_graph_betweenness has no SQL oracle (iterative float fixpoint), so
   * this spec is its correctness contract: a driver-side textbook Brandes
@@ -115,9 +115,9 @@ class BetweennessSpec extends BaseSpec {
     val exact = Betweenness.run(spark, path.toDF("u1", "u2"), maxDepth = 2)
       .as[(Long, Double)].collect().toMap
     assert(exact == got, "completing exactly at maxDepth must not throw or truncate")
-    // lastIterations = true eccentricity (2), not the cadence-deferred
+    // recorded rounds = true eccentricity (2), not the cadence-deferred
     // loop counter (which runs empty rounds before detecting the end)
-    assert(Betweenness.lastIterations == 2)
+    assert(LastIterations.take().contains(2))
     // genuinely truncated BFS throws
     intercept[IllegalStateException] {
       Betweenness.run(spark, path.toDF("u1", "u2"), maxDepth = 1).collect()
@@ -136,6 +136,6 @@ class BetweennessSpec extends BaseSpec {
       case List(a, b) => assert(a._2 > b._2 || (a._2 == b._2 && a._1 < b._1))
       case _          =>
     }
-    assert(Betweenness.lastIterations >= 1)
+    assert(LastIterations.take().exists(_ >= 1))
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Bpe
+import graft.operators.{Bpe, LastIterations}
 
 /** m_text_bpe has no SQL oracle (iterative merge training), so this spec
   * IS its correctness contract: an independent driver-side reference
@@ -88,7 +88,7 @@ class BpeSpec extends BaseSpec {
       case List(c1, c2) => assert(c1 >= c2, s"counts rose: $c1 -> $c2")
       case _            =>
     }
-    // (no Bpe.lastIterations assertion here: the key's training is
+    // (no rounds assertion here: the key's training is
     // session-memoized, so another suite sharing the session may have
     // already trained — got.size == 8 above pins the round count)
   }
@@ -103,7 +103,7 @@ class BpeSpec extends BaseSpec {
     // round 3: the only pair left
     assert(got == Seq((1, "a", "a", 10L), (2, "a", "</w>", 5L),
                       (3, "aa", "a</w>", 5L)))
-    assert(Bpe.lastIterations == 3, "training stops when no pair remains")
+    assert(LastIterations.take().contains(3), "training stops when no pair remains")
   }
 
   test("supplementary-plane corpus: surrogate pairs stay whole, ties break by code point") {
@@ -122,7 +122,7 @@ class BpeSpec extends BaseSpec {
   test("minCount floors training: singleton pairs are never merged") {
     val words = Seq(("ab", 1L), ("cd", 1L)).toDF("word", "freq")
     assert(Bpe.train(spark, words, numMerges = 4).isEmpty)
-    assert(Bpe.lastIterations == 0)
+    assert(LastIterations.take().contains(0))
   }
 
   /** Reference encoder: apply the merge sequence in training order by an

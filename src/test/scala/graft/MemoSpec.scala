@@ -3,7 +3,8 @@ package graft
 /** SessionMemo contract (r9, ADVICE): compute-once per key, nested
   * different-key computes (Spark jobs inside a memoized compute routinely
   * memoize their own sub-plans), racing threads on one key share one
-  * compute, and eviction drops a session's entries. */
+  * compute, and eviction drops a session's entries. Plus the per-thread
+  * executed-rounds record (`operators.LastIterations`). */
 class MemoSpec extends BaseSpec {
 
   test("computes once per key and caches the value") {
@@ -54,17 +55,23 @@ class MemoSpec extends BaseSpec {
     assert(memo.getOrCompute(spark, "k") { calls += 1; calls } == 2)
   }
 
-  test("every iterative key self-registers its round counter for Bench") {
-    // Bench attributes slow iterative keys via LastIterations; the
-    // bindings register at query-group init, which SparkEntry.queries
-    // forces — exactly the order Bench observes them in.
-    assert(SparkEntry.queries.nonEmpty)
-    val keys = graft.operators.LastIterations.registeredKeys
-    for (k <- Seq("m_graph_pagerank", "m_graph_lp", "m_graph_ppr",
-                  "m_graph_kcore", "q_graph_bfs", "m_graph_sssp",
-                  "m_text_bpe", "m_graph_betweenness", "m_graph_ktruss"))
-      assert(keys.contains(k), s"iterative key $k lost its Bench attribution")
-    // unregistered keys and never-run counters read as None, not a sentinel
-    assert(graft.operators.LastIterations.get("q_scan_count").isEmpty)
+  test("executed rounds are thread-confined: another thread's run never overwrites them") {
+    import spark.implicits._
+    import graft.operators.{Bpe, LastIterations}
+    LastIterations.take()
+    // thread A (this one): the 'aaa' corpus trains 3 rounds
+    Bpe.train(spark, Seq(("aaa", 5L)).toDF("word", "freq"), numMerges = 8)
+    // thread B: nothing ran there yet, then the minCount corpus trains 0
+    var seenByB: (Option[Int], Option[Int]) = (Some(-1), Some(-1))
+    val b = new Thread(() => {
+      val fresh = LastIterations.take()
+      Bpe.train(spark, Seq(("ab", 1L), ("cd", 1L)).toDF("word", "freq"), numMerges = 4)
+      seenByB = (fresh, LastIterations.take())
+    })
+    b.start(); b.join()
+    assert(LastIterations.take().contains(3), "thread B's run overwrote thread A's rounds")
+    assert(seenByB == ((None, Some(0))))
+    // a read clears the record: nothing ran since, so the next read is None
+    assert(LastIterations.get("q_scan_count").isEmpty)
   }
 }
