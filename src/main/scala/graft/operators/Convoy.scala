@@ -1,21 +1,42 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Convoy / co-travel detection (SURVEY §2.10 `q_traj_convoy`): pairs of
   * users observed in the same space-time bucket — an (hour, grid-cell)
   * triple — in at least `minHours` distinct hours.
   *
-  * Scale shape: the self-join is keyed on (hour, cell), so candidate pairs
-  * are generated bucket-locally — never across all user pairs — and the
-  * distinct() pre-pass caps each bucket at |users seen in that cell-hour|.
+  * Two paths over ONE projection, the (user_id, hb, cla, clo) Columns, so
+  * every double → long cell value comes from the same expression text:
+  *  - The driver endgame ([[Endgame]]): when `user_id` is a BIGINT, the
+  *    projection's rows pass [[Endgame.rows]] at weight 2 (a count and a
+  *    collect, no row shuffle) and the candidate pair work Σ C(bn, 2)
+  *    over the deduplicated buckets fits [[Endgame.Budget]] — checked
+  *    before any pair is enumerated — the pairs come from primitive
+  *    arrays on the driver (users and buckets ranked to dense ints, each
+  *    (u1, u2, hour) packed into one long, sorted, runs counted) and
+  *    return as a `LocalRelation` with the distributed plan's schema.
+  *    Rows with a NULL in any of the four columns are dropped, as the
+  *    bucket join and its `<` filter drop them, and a pair meeting in two
+  *    cells within one hour counts that hour once, as `countDistinct(hb)`
+  *    does. Driver heap: the collect's transient four-field `Row[]` (~120 B/row, about
+  *    twice the narrow row [[Endgame.Budget]] is sized for, hence the
+  *    weight) plus ~40 B/row of primitive arrays, so at most ~85 MB.
+  *  - The distributed bucket join, above either bound or inside
+  *    [[Endgame.distributed]]; it is built only on this path.
   *
-  * Hot-bucket skew, honestly: within ONE bucket the pair count is
-  * C(u, 2) — and every one of those pairs IS a candidate the semantics
-  * require, so no algorithm emits fewer; the question at 100 TB is only
-  * whether one task computes them all. Two output-preserving mitigations,
-  * both live:
+  * Scale shape of the distributed path: the self-join is keyed on
+  * (hour, cell), so candidate pairs are generated bucket-locally — never
+  * across all user pairs — and the distinct() pre-pass caps each bucket
+  * at |users seen in that cell-hour|.
+  *
+  * Hot-bucket skew on the distributed path, honestly: within ONE bucket
+  * the pair count is C(u, 2) — and every one of those pairs IS a candidate
+  * the semantics require, so no algorithm emits fewer; the question at
+  * 100 TB is only whether one task computes them all. Two
+  * output-preserving mitigations, both live:
   *  - AQE skew-join (on by default): an oversized bucket partition is
   *    split into chunks with the matching side replicated per chunk, so a
   *    hot bucket fans out across tasks at runtime (GeoSpec pins the
@@ -47,11 +68,108 @@ object Convoy {
     * @return (u1, u2, n_hours), u1 < u2, ordered */
   def coTravelers(points: DataFrame, cellDeg: Double, minHours: Int,
                   hotUsers: Int = 10000, groups: Int = 0): DataFrame = {
-    val p = points
+    val cells = points
       .select(col("user_id"), expr("ts_us div 3600000000").as("hb"),
               floor(col("lat") / cellDeg).cast("long").as("cla"),
               floor(col("lon") / cellDeg).cast("long").as("clo"))
-      .distinct()
+    val user = cells.schema("user_id")
+    val local =
+      if (user.dataType != LongType) None
+      else Endgame.rows(cells, weight = 2).flatMap(driverPairs(_, minHours))
+    local.fold(bucketJoin(cells, minHours, hotUsers, groups)) { pairs =>
+      val schema = StructType(Seq(user.copy(name = "u1"), user.copy(name = "u2"),
+        StructField("n_hours", LongType, nullable = false)))
+      cells.sparkSession.createDataFrame(java.util.Arrays.asList(pairs: _*), schema)
+    }
+  }
+
+  /** The driver endgame over the fetched projection rows: (u1, u2,
+    * n_hours) with n_hours ≥ `minHours`, ordered by (u1, u2), or `None`
+    * when the candidate pair work exceeds [[Endgame.Budget]]. Every rank
+    * is a dense int below the fetched row count (≤ Budget / 2 = 2^19), so
+    * a (bucket, user) member packs into one long and a (u1, u2, hour) pair
+    * entry into another; every dedup and grouping is a sort of those. */
+  private def driverPairs(rows: Array[Row], minHours: Int): Option[Array[Row]] = {
+    val fixes = rows.filterNot(_.anyNull)
+    def ranked(i: Int): (Array[Long], Array[Int]) = {
+      val vs = fixes.map(_.getLong(i))
+      val keys = sortedDistinct(vs.clone())
+      (keys, vs.map(java.util.Arrays.binarySearch(keys, _)))
+    }
+    val (users, u) = ranked(0)
+    val (hours, h) = ranked(1)
+    val (lats, a) = ranked(2)
+    val (lons, o) = ranked(3)
+    // (hour, lat cell, lon cell) in mixed radix: below 2^60, and its
+    // quotient by the cell count is the hour rank again
+    val perHour = lats.length.toLong * lons.length
+    val cellKey = Array.tabulate(fixes.length)(i =>
+      h(i) * perHour + a(i).toLong * lons.length + o(i))
+    val buckets = sortedDistinct(cellKey.clone())
+    // deduplicated (bucket, user) members, sorted by bucket then user
+    val members = sortedDistinct(Array.tabulate(fixes.length)(i =>
+      (java.util.Arrays.binarySearch(buckets, cellKey(i)).toLong << 32) | u(i)))
+    val ends = Array.range(0, members.length).filter(i =>
+      i + 1 == members.length || (members(i + 1) >>> 32) != (members(i) >>> 32))
+
+    var work = 0L
+    var s = 0
+    for (e <- ends) { work += (e + 1L - s) * (e - s) / 2; s = e + 1 }
+    if (!Endgame.local(work)) return None
+
+    val hb = bits(hours.length)
+    val ub = bits(users.length)
+    require(2 * ub + hb < 64)
+    val entries = new Array[Long](work.toInt)
+    var k = 0
+    s = 0
+    for (e <- ends) {
+      val hour = buckets((members(s) >>> 32).toInt) / perHour
+      var i = s
+      while (i < e) {
+        val hi = (members(i) & 0xffffffffL) << (ub + hb)
+        var j = i + 1
+        while (j <= e) {
+          entries(k) = hi | (members(j) & 0xffffffffL) << hb | hour
+          k += 1; j += 1
+        }
+        i += 1
+      }
+      s = e + 1
+    }
+    // one entry per (pair, hour): a pair met in two cells within one hour
+    // is one hour; then one run per pair
+    val met = sortedDistinct(entries)
+    val out = Array.newBuilder[Row]
+    var i = 0
+    while (i < met.length) {
+      val pair = met(i) >>> hb
+      var j = i + 1
+      while (j < met.length && (met(j) >>> hb) == pair) j += 1
+      if (j - i >= minHours)
+        out += Row(users((pair >>> ub).toInt), users((pair & ((1L << ub) - 1)).toInt),
+          (j - i).toLong)
+      i = j
+    }
+    Some(out.result())
+  }
+
+  /** Bits that hold every rank below `n`. */
+  private def bits(n: Int): Int = math.max(1, 32 - Integer.numberOfLeadingZeros(n - 1))
+
+  /** `vs` sorted in place, duplicates dropped. */
+  private def sortedDistinct(vs: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(vs)
+    var n = 0
+    for (i <- vs.indices if i == 0 || vs(i) != vs(i - 1)) { vs(n) = vs(i); n += 1 }
+    java.util.Arrays.copyOf(vs, n)
+  }
+
+  /** The distributed plan: distinct pre-pass, (hb, cla, clo) bucket join
+    * with the triangle split past `hotUsers`, per-pair distinct hours. */
+  private def bucketJoin(cells: DataFrame, minHours: Int,
+                         hotUsers: Int, groups: Int): DataFrame = {
+    val p = cells.distinct()
     val key = Seq("hb", "cla", "clo")
     // Bucket populations ride the same (hb, cla, clo) shuffle key as the
     // pair join, so the size tag and the split are co-partitioned work.

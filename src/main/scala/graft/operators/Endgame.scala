@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
+import org.apache.spark.sql.execution.GraftFrames
 
 /** The one path choice of every hybrid operator: distributed rounds at
   * scale, an exact driver-local kernel once the input fits [[Budget]].
@@ -16,9 +17,11 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
   * every input exceeds the budget and the distributed path runs unchanged.
   *
   * An input that is already driver-resident needs no such proof: when its
-  * optimized plan is a `LocalRelation`, its length is known without a job
-  * and [[rows]] gates and fetches it with no job at all. [[pin]] makes
-  * memoized substrates driver-resident in the first place — a shared frame
+  * optimized plan is a `LocalRelation`, or a `Union` of them (the
+  * symmetric edge list over a pinned pair set), its length is known
+  * without a job and [[rows]] gates and fetches it with no job at all.
+  * [[pin]] makes memoized substrates driver-resident in the first place
+  * (an operator may also return one, as [[Convoy]] does) — a shared frame
   * proven under budget is held as a `LocalRelation` (exact statistics, so
   * its consumers plan broadcasts; no checkpoint job per read) instead of
   * a checkpointed RDD. A pinned frame stays on the driver heap for the
@@ -54,24 +57,37 @@ object Endgame {
     * caller's arithmetic over that count (2 for an edge list the kernel
     * symmetrizes, 4 per BFS source). */
   def rows[T](ds: Dataset[T], weight: Long = 1): Option[Array[T]] = {
-    val fits = local() && (ds.queryExecution.optimizedPlan match {
-      case l: LocalRelation => local(l.data.length * weight)
-      case _ => local(ds.count() * weight)
-    })
-    if (fits) Some(ds.collect()) else None
+    lazy val res = resident(ds)
+    val fits = local() && local(res.fold(ds.count())(_._1) * weight)
+    if (fits) Some(res.fold(ds)(_._2).collect()) else None
   }
 
-  /** A memo value's physical form: `df` itself when it is already
-    * driver-resident and within [[Budget]]; otherwise one eager
-    * checkpoint, rebuilt as a `LocalRelation` of the same rows in the same
-    * order when [[rows]] admits it, else the checkpoint itself. */
-  def pin(df: DataFrame): DataFrame = df.queryExecution.optimizedPlan match {
-    case l: LocalRelation if local(l.data.length) => df
+  /** A memo value's physical form: `df`'s driver-resident form when it
+    * has one within [[Budget]] (`df` itself for a `LocalRelation`);
+    * otherwise one eager checkpoint, rebuilt as a `LocalRelation` of the
+    * same rows in the same order when [[rows]] admits it, else the
+    * checkpoint itself. */
+  def pin(df: DataFrame): DataFrame = resident(df) match {
+    case Some((n, r)) if local(n) => r
     case _ =>
       val cp = df.localCheckpoint(eager = true)
       rows(cp).fold(cp)(rs =>
         df.sparkSession.createDataFrame(java.util.Arrays.asList(rs: _*), cp.schema))
   }
+
+  /** The length and jobless form of `ds` when its optimized plan is
+    * driver-resident: `ds` itself over a `LocalRelation`; over a `Union`
+    * of them, one `LocalRelation` of the children's rows in order (a
+    * union is positional, and its output already carries the children's
+    * merged nullability). */
+  private def resident[T](ds: Dataset[T]): Option[(Long, Dataset[T])] =
+    ds.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some((l.data.length.toLong, ds))
+      case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
+        val data = u.children.flatMap(_.asInstanceOf[LocalRelation].data)
+        Some((data.length.toLong, GraftFrames.of(ds, LocalRelation(u.output, data))))
+      case _ => None
+    }
 
   /** Runs `body` with every gate on this thread closed (nests, and restores
     * the outer state on exit or exception). */

@@ -32,16 +32,18 @@ import Q._
 object Geo extends QueryGroup {
 
   /** Co-traveler pair memo: m_graph_pagerank and q_graph_degree read the
-    * SAME coTravelers(cell=20°, minHours=2) pair set — one bucket join per
-    * (session, sfDir, params) instead of one per key
+    * SAME coTravelers(cell=20°, minHours=2) pair set — one construction
+    * per (session, sfDir, params) instead of one per key
     * ([[graft.SessionMemo]]; keyed by VALUE since each call site builds a
-    * fresh pts() plan, so DataFrame identity would never hit). The value
-    * is pinned ([[graft.operators.Endgame.pin]]): a driver-resident
-    * `LocalRelation` while the pair set fits the budget — the graph
+    * fresh pts() plan, so DataFrame identity would never hit). Below the
+    * budget [[graft.operators.Convoy]] builds the pair set on the driver
+    * (the projection's count and collect) and returns a `LocalRelation`,
+    * which [[graft.operators.Endgame.pin]] keeps as is: the graph
     * operators and the graph-statistics keys ([[triangles]],
     * [[clustCoef]], [[modularity]], [[bfsHistogram]]) then gate and fetch
-    * it without a job and compute on the driver — and an eager checkpoint
-    * above it, where those keys run their Spark plans. */
+    * it without a job and compute on the driver. Above the budget the
+    * value is the bucket join's result behind `pin`'s eager checkpoint,
+    * and those keys run their Spark plans. */
   private val convoyMemo = new graft.SessionMemo[(String, Double, Int), DataFrame]
 
   // private[graft] so ScaleProbe's dist_loop probe can time the
@@ -1399,8 +1401,9 @@ object Geo extends QueryGroup {
     // Convoy/co-travel detection (grid-coarse): pairs of users observed
     // in the same 20° cell during the same hour, in ≥3 distinct hours
     // (cell size chosen so the derived lattice actually co-locates).
-    // Bucket-local self-join; hot-bucket skew story in [[Convoy]]'s
-    // scaladoc, pinned by GeoSpec's hot-bucket property.
+    // A driver endgame below the budget, a bucket-local self-join above
+    // it; hot-bucket skew story in [[Convoy]]'s scaladoc, pinned by
+    // GeoSpec's hot-bucket property on both paths.
     "q_traj_convoy" -> ((s, dir) =>
       coTravelerPairs(s, dir, cellDeg = 20.0, minHours = 3)),
 

@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic
 
 /** Drops the `originStats` annotation a (local)checkpointed Dataset's
-  * [[LogicalRDD]] leaf carries (one of the library's two internal-API
-  * touches, with [[GraftColumns]], hence this file's package).
+  * [[LogicalRDD]] leaf carries (one of the library's internal-API touches,
+  * with [[GraftColumns]] and [[GraftFrames]], hence this file's package).
   *
   * Why it exists: `Dataset.localCheckpoint` cuts LINEAGE but propagates the
   * origin plan's COMPUTED `Statistics` into the new leaf. Catalyst's

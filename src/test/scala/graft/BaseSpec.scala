@@ -22,22 +22,31 @@ trait BaseSpec extends AnyFunSuite {
   def onPath[T](distributed: Boolean)(body: => T): T =
     if (distributed) operators.Endgame.distributed(body) else body
 
-  /** Spark jobs launched while `body` runs. Listener events are async, so
-    * the counter is polled to a plateau, before counting (events of
-    * earlier jobs) and after. */
-  def jobsDuring(body: => Unit): Int = {
+  /** Spark jobs launched while `body` runs. */
+  def jobsDuring(body: => Unit): Int = workDuring(body)._1
+
+  /** Spark jobs launched, and shuffle records written by tasks, while
+    * `body` runs. Listener events are async, so the counters are polled
+    * to a plateau, before counting (events of earlier jobs) and after. */
+  def workDuring(body: => Unit): (Int, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+    val shuffled = new java.util.concurrent.atomic.AtomicLong(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(); ()
       }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null) {
+          shuffled.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten); ()
+        }
     }
-    def settled(): Int = {
-      var last = -1
-      var cur = jobs.get()
+    def settled(): (Int, Long) = {
+      var last = (-1, -1L)
+      var cur = (jobs.get(), shuffled.get())
       var spins = 0
       while (cur != last && spins < 50) {
-        Thread.sleep(100); last = cur; cur = jobs.get(); spins += 1
+        Thread.sleep(100); last = cur; cur = (jobs.get(), shuffled.get()); spins += 1
       }
       cur
     }
@@ -45,6 +54,7 @@ trait BaseSpec extends AnyFunSuite {
     try {
       settled()
       jobs.set(0)
+      shuffled.set(0)
       body
       settled()
     } finally spark.sparkContext.removeSparkListener(l)

@@ -1,7 +1,8 @@
 package graft
 
 import graft.operators.Endgame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
+import org.apache.spark.sql.functions.when
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one endgame gate: the budget boundary, the forced distributed
@@ -61,6 +62,32 @@ class EndgameSpec extends BaseSpec {
     var got: Option[Array[org.apache.spark.sql.Row]] = None
     assert(jobsDuring { got = Endgame.rows(df) } == 0)
     assert(got.map(_.toSeq) == Some(df.collect().toSeq))
+  }
+
+  test("rows over a union of driver-resident frames fetches it without a job") {
+    // the symmetric edge list over a pinned pair set; the second child's
+    // column is nullable, so the union's merged nullability shows
+    val df = pairs(5)
+    val sym = df.unionAll(df.select($"b".as("a"), when($"a" > 2L, $"a").as("b")))
+    assert(sym.queryExecution.optimizedPlan match {
+      case u: Union => u.children.forall(_.isInstanceOf[LocalRelation])
+      case _ => false
+    })
+    var got: Option[Array[org.apache.spark.sql.Row]] = None
+    var typed: Option[Array[(Long, Option[Long])]] = None
+    assert(jobsDuring {
+      got = Endgame.rows(sym)
+      typed = Endgame.rows(sym.as[(Long, Option[Long])])
+    } == 0)
+    assert(got.map(_.toSeq) == Some(sym.collect().toSeq))
+    assert(typed.map(_.toSeq) == Some(sym.as[(Long, Option[Long])].collect().toSeq))
+    // gated on the children's summed length: 10 rows
+    assert(Endgame.rows(sym, weight = Endgame.Budget / 10).nonEmpty)
+    assert(Endgame.rows(sym, weight = Endgame.Budget / 5).isEmpty)
+    val pinned = Endgame.pin(sym)
+    assert(isLocal(pinned))
+    assert(pinned.schema == sym.schema)
+    assert(pinned.collect().toSeq == sym.collect().toSeq)
   }
 
   test("rows over a distributed frame is count-gated and equals its collect()") {

@@ -1,12 +1,41 @@
 package graft
 
-import graft.operators.Convoy
+import graft.operators.{Convoy, Endgame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
 
 /** Skew properties of the bucket-keyed spatio-temporal operators: one hot
   * space-time bucket must produce exactly its combinatorial output (with
-  * AQE's skew-join handling on, the default) — not fewer pairs, not a hang. */
+  * AQE's skew-join handling on, the default) — not fewer pairs, not a hang.
+  * Convoy runs on both paths: the driver endgame below the budget and the
+  * bucket join (with its triangle split) inside `Endgame.distributed`. */
 class GeoSpec extends BaseSpec {
   import spark.implicits._
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  private def hasJoin(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectFirst { case j: Join => j }.nonEmpty
+
+  private def pairsOf(df: DataFrame): List[(Long, Long, Long)] =
+    df.as[(Long, Long, Long)].collect().toList
+
+  /** `Convoy.coTravelers` on both paths: the default returns the driver
+    * endgame's `LocalRelation`, the forced one the bucket join, and both
+    * the same schema and rows, which are returned. */
+  private def convoy(pts: DataFrame, minHours: Int): List[(Long, Long, Long)] = {
+    val got = bothPaths.map { d =>
+      val df = onPath(d)(Convoy.coTravelers(pts, cellDeg = 20.0, minHours = minHours))
+      assert(isLocal(df) != d && hasJoin(df) == d, s"distributed=$d took the other path")
+      (df.schema, pairsOf(df))
+    }
+    val (local, dist) = (got(0), got(1))
+    assert(local._1 == dist._1, "the paths' schemas differ")
+    assert(local._2 == dist._2, s"driver endgame != bucket join: " +
+      s"missing=${(dist._2.toSet -- local._2).take(3)} extra=${(local._2.toSet -- dist._2).take(3)}")
+    dist._2
+  }
 
   test("convoy: one hot (hour, cell) bucket yields exactly C(u,2) pairs") {
     val H = 3600L * 1000000L
@@ -20,8 +49,7 @@ class GeoSpec extends BaseSpec {
     } yield (u.toLong, h * H + rep * 60000000L, 5.0 + (u % 7) * 0.1, 5.0)
     val decoys = for (u <- 1000 until 1020) yield (u.toLong, 0L, -75.0, -170.0)
     val pts = (hot ++ decoys).toDF("user_id", "ts_us", "lat", "lon")
-    val got = Convoy.coTravelers(pts, cellDeg = 20.0, minHours = 3)
-      .as[(Long, Long, Long)].collect()
+    val got = convoy(pts, minHours = 3)
     val expectedPairs = hotUsers.toLong * (hotUsers - 1) / 2
     assert(got.length == expectedPairs,
       s"hot bucket must emit C($hotUsers,2)=$expectedPairs pairs, got ${got.length}")
@@ -45,18 +73,15 @@ class GeoSpec extends BaseSpec {
     val cold = for (u <- 500 until 502; h <- 0 until 3)
       yield (u.toLong, h * H, -75.0, -170.0)
     val pts = (hot ++ cold).toDF("user_id", "ts_us", "lat", "lon")
-    val plain = Convoy.coTravelers(pts, cellDeg = 20.0, minHours = 3)
-      .as[(Long, Long, Long)].collect().toList
-    val split = Convoy.coTravelers(pts, cellDeg = 20.0, minHours = 3,
-        hotUsers = 50, groups = 4)
-      .as[(Long, Long, Long)].collect().toList
+    val plain = convoy(pts, minHours = 3)
+    val split = pairsOf(Endgame.distributed(Convoy.coTravelers(pts, cellDeg = 20.0,
+        minHours = 3, hotUsers = 50, groups = 4)))
     assert(split == plain, s"triangle-split changed the result: " +
       s"missing=${(plain.toSet -- split).take(3)} extra=${(split.toSet -- plain).take(3)}")
     // Adaptive width on the same planted bucket: 150 users past a 50
     // threshold derives g = 3, again output-identical.
-    val adaptive = Convoy.coTravelers(pts, cellDeg = 20.0, minHours = 3,
-        hotUsers = 50)
-      .as[(Long, Long, Long)].collect().toList
+    val adaptive = pairsOf(Endgame.distributed(Convoy.coTravelers(pts, cellDeg = 20.0,
+        minHours = 3, hotUsers = 50)))
     assert(adaptive == plain, s"adaptive split changed the result: " +
       s"missing=${(plain.toSet -- adaptive).take(3)} extra=${(adaptive.toSet -- plain).take(3)}")
     assert(split.count { case (u1, _, _) => u1 < 500L } == 150L * 149 / 2,
@@ -207,15 +232,13 @@ class GeoSpec extends BaseSpec {
         rnd.nextInt(4) * 20.0 + rnd.nextDouble(),
         rnd.nextInt(3) * 25.0 + rnd.nextDouble())
     }.toDF("user_id", "ts_us", "lat", "lon")
-    val plain = Convoy.coTravelers(pts, cellDeg = 20.0, minHours = 2)
-      .as[(Long, Long, Long)].collect().toList
+    val plain = convoy(pts, minHours = 2)
     assert(plain.nonEmpty, "random cloud should produce co-travel pairs")
     // g = 0 is the ADAPTIVE width (ceil(bn / hotUsers) per bucket): th=1
     // salts every bucket at its own width, th=25 splits only the hot ones.
     for ((th, g) <- Seq((1, 4), (10, 3), (40, 8), (1, 0), (25, 0))) {
-      val split = Convoy.coTravelers(pts, cellDeg = 20.0, minHours = 2,
-          hotUsers = th, groups = g)
-        .as[(Long, Long, Long)].collect().toList
+      val split = pairsOf(Endgame.distributed(Convoy.coTravelers(pts, cellDeg = 20.0,
+          minHours = 2, hotUsers = th, groups = g)))
       assert(split == plain, s"hotUsers=$th groups=$g: " +
         s"missing=${(plain.toSet -- split).take(3)} extra=${(split.toSet -- plain).take(3)}")
     }
@@ -233,9 +256,75 @@ class GeoSpec extends BaseSpec {
       // user 4 is always one cell east → never pairs
       (4L, 0L, 10.0, 25.0), (4L, H, 10.0, 25.0), (4L, 2 * H, 10.0, 25.0)
     ).toDF("user_id", "ts_us", "lat", "lon")
-    val got = Convoy.coTravelers(pts, cellDeg = 20.0, minHours = 3)
-      .as[(Long, Long, Long)].collect().toList
+    val got = convoy(pts, minHours = 3)
     assert(got == List((1L, 2L, 3L)), s"expected only (1,2,3): $got")
+  }
+
+  test("convoy: a pair meeting in two cells within one hour counts that hour once; duplicate fixes count once") {
+    val H = 3600L * 1000000L
+    val pts = Seq(
+      // hour 0: users 1 and 2 meet in cell (0, 0), then in cell (0, 1)
+      (1L, 0L, 10.0, 10.0), (2L, 0L, 11.0, 11.0),
+      (1L, 60000000L, 10.0, 30.0), (2L, 60000000L, 11.0, 31.0),
+      // hour 1: the same cell, fixed three and two times
+      (1L, H, 10.0, 10.0), (1L, H + 1, 10.5, 10.5), (1L, H + 2, 10.0, 10.0),
+      (2L, H, 11.0, 11.0), (2L, H + 5, 11.0, 11.0)
+    ).toDF("user_id", "ts_us", "lat", "lon")
+    assert(convoy(pts, minHours = 2) == List((1L, 2L, 2L)))
+    assert(convoy(pts, minHours = 3) == Nil)
+  }
+
+  test("convoy: rows with a NULL user_id, ts_us or lat are dropped") {
+    val H = 3600L * 1000000L
+    val pts = Seq[(Option[Long], Option[Long], Option[Double], Double)](
+      // users 1 and 2 share hours 0 and 1
+      (Some(1L), Some(0L), Some(10.0), 10.0), (Some(2L), Some(0L), Some(11.0), 11.0),
+      (Some(1L), Some(H), Some(10.0), 10.0), (Some(2L), Some(H), Some(11.0), 11.0),
+      // hour 2: user 2's fix has no lat (read as 0.0 it would join user 1)
+      (Some(1L), Some(2 * H), Some(10.0), 10.0), (Some(2L), Some(2 * H), None, 0.0),
+      // user 3: hour 1 with both, and a fix with no time (read as hour 0,
+      // it would make a second hour)
+      (Some(3L), Some(H), Some(12.0), 12.0), (Some(3L), None, Some(12.0), 12.0),
+      // a fix with no user beside them every hour pairs with no one
+      (None, Some(0L), Some(13.0), 13.0), (None, Some(H), Some(13.0), 13.0),
+      (None, Some(2 * H), Some(13.0), 13.0)
+    ).toDF("user_id", "ts_us", "lat", "lon")
+    assert(convoy(pts, minHours = 2) == List((1L, 2L, 2L)))
+    assert(convoy(pts, minHours = 3) == Nil)
+    assert(convoy(pts, minHours = 1) == List((1L, 2L, 2L), (1L, 3L, 1L), (2L, 3L, 1L)))
+  }
+
+  test("convoy path choice: the driver endgame in the gate's jobs below the budget, the bucket join past it") {
+    val H = 3600L * 1000000L
+    // a distributed input of three partitions
+    val pts = spark.range(0, 600, 1, 3).selectExpr("id % 40 AS user_id",
+      s"(id div 40 % 5) * $H AS ts_us", "(id % 3) * 20.0 + 1.0 AS lat", "1.0 AS lon")
+    var local: DataFrame = null
+    val (jobs, shuffled) = workDuring {
+      local = Convoy.coTravelers(pts, cellDeg = 20.0, minHours = 2)
+    }
+    assert(isLocal(local))
+    // the gate's count and collect; only the count's per-partition
+    // partial counts are shuffled
+    assert(jobs <= 3 && shuffled <= 3, s"jobs=$jobs shuffled records=$shuffled")
+    val forced = Endgame.distributed(Convoy.coTravelers(pts, cellDeg = 20.0, minHours = 2))
+    assert(!isLocal(forced) && hasJoin(forced))
+    assert(local.schema == forced.schema)
+    assert(pairsOf(local) == pairsOf(forced) && pairsOf(local).nonEmpty)
+    // the fixture's events (a parquet scan, nullable user_id) on both paths
+    val events = Tables(spark, sf, "events").selectExpr("user_id", "unix_micros(ts) AS ts_us",
+      "((event_id * 37) % 1700) / 10.0 - 85.0 AS lat",
+      "((event_id * 131) % 3600) / 10.0 - 180.0 AS lon")
+    assert(convoy(events, minHours = 2).nonEmpty)
+
+    // one bucket of 1,449 users: C(1449, 2) = 1,049,076 candidate pairs
+    // exceed the budget, so the bucket join is returned, unexecuted (the
+    // driver-resident input is gated and fetched with no job)
+    assert(1449L * 1448 / 2 > Endgame.Budget)
+    val hot = (0L until 1449L).map(u => (u, 0L, 1.0, 1.0)).toDF("user_id", "ts_us", "lat", "lon")
+    var big: DataFrame = null
+    assert(jobsDuring { big = Convoy.coTravelers(hot, cellDeg = 20.0, minHours = 1) } == 0)
+    assert(!isLocal(big) && hasJoin(big))
   }
 
   test("DistanceJoin: planted pairs — antimeridian wrap, cell-boundary, just-outside") {
