@@ -21,11 +21,15 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    Rows with a NULL in any of the four columns are dropped, as the
   *    bucket join and its `<` filter drop them, and a pair meeting in two
   *    cells within one hour counts that hour once, as `countDistinct(hb)`
-  *    does. Driver heap: the collect's transient four-field `Row[]` (~120 B/row, about
-  *    twice the narrow row [[Endgame.Budget]] is sized for, hence the
-  *    weight) plus ~40 B/row of primitive arrays, so at most ~85 MB.
-  *  - The distributed bucket join, above either bound or inside
-  *    [[Endgame.distributed]]; it is built only on this path.
+  *    does. Driver heap at the gate's limit of Budget / 2 rows: the
+  *    collect's transient four-field `Row[]` retains 114 B/row, 60 MB
+  *    (measured once after a full GC on a 4 GB JDK 17 heap; about twice
+  *    the narrow row [[Endgame.Budget]] is sized for, hence the weight),
+  *    plus an estimated ~40 B/row of primitive arrays, so roughly 85 MB.
+  *  - The distributed bucket join, above either bound, inside
+  *    [[Endgame.distributed]], or for a `user_id` of any other type (the
+  *    driver kernel packs BIGINT ranks; the join keeps the input's id
+  *    type in `u1`/`u2`); it is built only on this path.
   *
   * Scale shape of the distributed path: the self-join is keyed on
   * (hour, cell), so candidate pairs are generated bucket-locally — never
@@ -154,8 +158,9 @@ object Convoy {
     Some(out.result())
   }
 
-  /** Bits that hold every rank below `n`. */
-  private def bits(n: Int): Int = math.max(1, 32 - Integer.numberOfLeadingZeros(n - 1))
+  /** Bits that hold every rank below `n` (one for n ≤ 2, so an input
+    * with no fix left packs nothing and returns no pair). */
+  private def bits(n: Int): Int = 32 - Integer.numberOfLeadingZeros(math.max(n - 1, 1))
 
   /** `vs` sorted in place, duplicates dropped. */
   private def sortedDistinct(vs: Array[Long]): Array[Long] = {

@@ -294,6 +294,41 @@ class GeoSpec extends BaseSpec {
     assert(convoy(pts, minHours = 1) == List((1L, 2L, 2L), (1L, 3L, 1L), (2L, 3L, 1L)))
   }
 
+  test("convoy: an empty input and an input with a NULL in every row give no pairs") {
+    // distributed inputs, which the optimizer cannot prove empty, so the
+    // forced path keeps its bucket join
+    val rows = spark.range(0, 90, 1, 3)
+    assert(convoy(rows.filter("id < 0").selectExpr("id AS user_id", "id AS ts_us",
+      "1.0 AS lat", "1.0 AS lon"), minHours = 1) == Nil)
+    assert(convoy(rows.selectExpr("IF(id % 3 = 0, NULL, id % 7) AS user_id",
+      "IF(id % 3 = 1, NULL, 0L) AS ts_us", "IF(id % 3 = 2, NULL, 1.0) AS lat",
+      "1.0 AS lon"), minHours = 1) == Nil)
+    // driver-resident inputs: the forced plan folds to an empty relation
+    val empty = Seq.empty[(Long, Long, Double, Double)].toDF("user_id", "ts_us", "lat", "lon")
+    val noUser = Seq[(Option[Long], Long, Double, Double)]((None, 0L, 1.0, 1.0),
+      (None, 0L, 1.0, 1.0)).toDF("user_id", "ts_us", "lat", "lon")
+    for (pts <- Seq(empty, noUser)) {
+      val local = Convoy.coTravelers(pts, cellDeg = 20.0, minHours = 1)
+      val forced = Endgame.distributed(Convoy.coTravelers(pts, cellDeg = 20.0, minHours = 1))
+      assert(isLocal(local) && local.schema == forced.schema)
+      assert(pairsOf(local) == Nil && pairsOf(forced) == Nil)
+    }
+  }
+
+  test("convoy: an INT user_id takes the bucket join and keeps its type") {
+    val H = 3600L * 1000000L
+    val fixes = Seq((1, 0L, 10.0, 10.0), (2, 0L, 11.0, 11.0), (3, 0L, 50.0, 50.0),
+      (1, H, 10.0, 10.0), (2, H, 11.0, 11.0), (3, H, 12.0, 12.0))
+    val ints = fixes.toDF("user_id", "ts_us", "lat", "lon")
+    val got = Convoy.coTravelers(ints, cellDeg = 20.0, minHours = 1)
+    assert(!isLocal(got) && hasJoin(got))
+    assert(got.schema("u1").dataType == org.apache.spark.sql.types.IntegerType)
+    val longs = fixes.map { case (u, t, a, o) => (u.toLong, t, a, o) }
+      .toDF("user_id", "ts_us", "lat", "lon")
+    assert(pairsOf(got) == convoy(longs, minHours = 1))
+    assert(pairsOf(got) == List((1L, 2L, 2L), (1L, 3L, 1L), (2L, 3L, 1L)))
+  }
+
   test("convoy path choice: the driver endgame in the gate's jobs below the budget, the bucket join past it") {
     val H = 3600L * 1000000L
     // a distributed input of three partitions
