@@ -66,7 +66,7 @@ object TraclusPartition {
     * polyline (MDL_nopar = L(H) of the sub-segments, L(D|H) = 0). */
   def compute(a: ArrayData): ArrayData = {
     val u = a.toDoubleArray()
-    FrechetDist.checkTrack(u, u, "traclus_partition")
+    FrechetDist.checkTrack(u.length, u.length, "traclus_partition")
     val n = u.length / 3
     // Scale to km once: chord geometry, file scaladoc.
     val p = new Array[Double](u.length)

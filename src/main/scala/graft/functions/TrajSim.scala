@@ -1,11 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.GraftColumns.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.unsafe.Platform
 
 /** Track-level trajectory similarity kernels (SURVEY §2.10 extension,
   * `m_traj_frechet` / `m_traj_lcss`): discrete Fréchet distance (Eiter &
@@ -37,7 +38,25 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * whole-stage codegen (`doGenCode` calls the same static kernel as the
   * interpreted path, the [[CosineSim]] discipline). Callers bound the DP
   * by construction: tracks are downsampled to a declared per-user point
-  * cap, so per-pair cost is cap² cells regardless of data volume. */
+  * cap, so per-pair cost is cap² cells regardless of data volume.
+  *
+  * IN-PLACE READS (the [[TrajSketch]] per-pair cost discipline): every
+  * kernel here runs once per PAIR, so none copies a track. Each input is
+  * normalized once to an `UnsafeArrayData` ([[FrechetDist.unsafeTrack]] —
+  * a no-op in codegen, where every array read out of an `UnsafeRow`
+  * already is one; any other `ArrayData` is copied once there), its base
+  * object and the address of element 0 (base offset + null-bitmap header)
+  * are read once, and coordinates are read with `Platform.getDouble`. The
+  * arithmetic order is the copying kernels', so every value is
+  * bit-identical (TrajectorySpec pins it on rows, primitive arrays and
+  * generic arrays). The virtual `ArrayData.getDouble(i)` is not enough:
+  * it re-checks the index and recomputes the element address on every
+  * read. One thread scanning all sf0.1 pairs at the Hausdorff seed
+  * threshold took 2.0–2.2 s copying both tracks per pair, 2.1–2.3 s
+  * through `getDouble` and 1.36–1.45 s reading in place; a getter-only
+  * build moved perfbench `kernels` `warm_s` from 1.55 to 1.69 s (median
+  * of 4 pairs), worse than the copy. Fréchet's two DP rows come from a
+  * per-thread scratch instead of two new arrays per pair. */
 case class FrechetDist(left: Expression, right: Expression)
   extends BinaryExpression
   with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
@@ -94,21 +113,37 @@ case class FrechetCapped(first: Expression, second: Expression, third: Expressio
 
 object FrechetDist {
 
-  private[functions] def checkTrack(xs: Array[Double], ys: Array[Double],
-                                    name: String): Unit =
+  private[functions] def checkTrack(na: Int, nb: Int, name: String): Unit =
     // Fail loudly on malformed tracks — a dropped coordinate would silently
     // shift every subsequent value's axis role.
-    if (xs.length < 3 || ys.length < 3 || xs.length % 3 != 0 || ys.length % 3 != 0)
+    if (na < 3 || nb < 3 || na % 3 != 0 || nb % 3 != 0)
       throw new IllegalArgumentException(
         s"$name: tracks must be non-empty interleaved [x, y, z, ...] " +
-          s"unit-vector arrays (got lengths ${xs.length}, ${ys.length})")
+          s"unit-vector arrays (got lengths $na, $nb)")
 
-  /** Squared chord distance between points i of xs and j of ys. */
-  @inline private[functions] def chordSq(xs: Array[Double], i: Int,
-                                         ys: Array[Double], j: Int): Double = {
-    val dx = xs(3 * i) - ys(3 * j)
-    val dy = xs(3 * i + 1) - ys(3 * j + 1)
-    val dz = xs(3 * i + 2) - ys(3 * j + 2)
+  /** The one conversion of the in-place kernels (file scaladoc): an
+    * `UnsafeArrayData` as is, any other track copied once into one. */
+  private[functions] def unsafeTrack(a: ArrayData): UnsafeArrayData = a match {
+    case u: UnsafeArrayData => u
+    case other => UnsafeArrayData.fromPrimitiveArray(other.toDoubleArray())
+  }
+
+  /** Address of element 0 of `u`: its base offset past the null bitmap. */
+  @inline private[functions] def dataOffset(u: UnsafeArrayData): Long =
+    u.getBaseOffset + UnsafeArrayData.calculateHeaderPortionInBytes(u.numElements())
+
+  /** Coordinate `axis` (0 = x, 1 = y, 2 = z) of point i of the track
+    * whose element 0 is at (o, off). */
+  @inline private[functions] def coord(o: AnyRef, off: Long, i: Int, axis: Int): Double =
+    Platform.getDouble(o, off + 24L * i + 8L * axis)
+
+  /** Squared chord distance between the point (x, y, z) and point j of
+    * the track whose element 0 is at (o, off). */
+  @inline private[functions] def chordSq(x: Double, y: Double, z: Double,
+                                         o: AnyRef, off: Long, j: Int): Double = {
+    val dx = x - coord(o, off, j, 0)
+    val dy = y - coord(o, off, j, 1)
+    val dz = z - coord(o, off, j, 2)
     dx * dx + dy * dy + dz * dz
   }
 
@@ -117,6 +152,15 @@ object FrechetDist {
   @inline private[functions] def chordSqToKm(c2: Double): Double =
     2.0 * HaversineDist.EarthRadiusKm * math.asin(math.min(math.sqrt(c2) / 2.0, 1.0))
 
+  /** Fréchet's two DP rows, per thread, sized for TrackCap = 64 points;
+    * longer (ad-hoc) tracks get fresh rows. */
+  private final class Rows(len: Int) {
+    val prev = new Array[Double](len)
+    val cur = new Array[Double](len)
+  }
+  private val rows = ThreadLocal.withInitial[Rows](() => new Rows(64))
+  private def scratch(m: Int): Rows = if (m <= 64) rows.get() else new Rows(m)
+
   /** Discrete Fréchet distance in km over interleaved unit-vector arrays.
     * ca(i,j) = max(d(i,j), min(ca(i-1,j), ca(i-1,j-1), ca(i,j-1))) — the
     * shortest leash admitting only forward moves; rolling two rows like
@@ -124,22 +168,33 @@ object FrechetDist {
     * monotonicity argument in the file scaladoc). One implementation for
     * both eval paths. */
   def compute(a: ArrayData, b: ArrayData): Double = {
-    val xs = a.toDoubleArray()
-    val ys = b.toDoubleArray()
-    checkTrack(xs, ys, "frechet_km")
-    val n = xs.length / 3
-    val m = ys.length / 3
-    var prev = new Array[Double](m)
-    var cur = new Array[Double](m)
-    prev(0) = chordSq(xs, 0, ys, 0)
+    checkTrack(a.numElements(), b.numElements(), "frechet_km")
+    val ua = unsafeTrack(a)
+    val ub = unsafeTrack(b)
+    val ao = ua.getBaseObject
+    val aOff = dataOffset(ua)
+    val bo = ub.getBaseObject
+    val bOff = dataOffset(ub)
+    val n = ua.numElements() / 3
+    val m = ub.numElements() / 3
+    val sc = scratch(m)
+    var prev = sc.prev
+    var cur = sc.cur
+    var x = coord(ao, aOff, 0, 0)
+    var y = coord(ao, aOff, 0, 1)
+    var z = coord(ao, aOff, 0, 2)
+    prev(0) = chordSq(x, y, z, bo, bOff, 0)
     var j = 1
-    while (j < m) { prev(j) = math.max(prev(j - 1), chordSq(xs, 0, ys, j)); j += 1 }
+    while (j < m) { prev(j) = math.max(prev(j - 1), chordSq(x, y, z, bo, bOff, j)); j += 1 }
     var i = 1
     while (i < n) {
-      cur(0) = math.max(prev(0), chordSq(xs, i, ys, 0))
+      x = coord(ao, aOff, i, 0)
+      y = coord(ao, aOff, i, 1)
+      z = coord(ao, aOff, i, 2)
+      cur(0) = math.max(prev(0), chordSq(x, y, z, bo, bOff, 0))
       j = 1
       while (j < m) {
-        cur(j) = math.max(chordSq(xs, i, ys, j),
+        cur(j) = math.max(chordSq(x, y, z, bo, bOff, j),
           math.min(prev(j), math.min(cur(j - 1), prev(j - 1))))
         j += 1
       }
@@ -158,22 +213,30 @@ object FrechetDist {
 
   /** [[FrechetCapped]]'s kernel — exact dF when ≤ capKm, else MaxValue. */
   def computeCapped(a: ArrayData, b: ArrayData, capKm: Double): Double = {
-    val xs = a.toDoubleArray()
-    val ys = b.toDoubleArray()
-    checkTrack(xs, ys, "frechet_km_capped")
-    val n = xs.length / 3
-    val m = ys.length / 3
+    checkTrack(a.numElements(), b.numElements(), "frechet_km_capped")
+    val ua = unsafeTrack(a)
+    val ub = unsafeTrack(b)
+    val ao = ua.getBaseObject
+    val aOff = dataOffset(ua)
+    val bo = ub.getBaseObject
+    val bOff = dataOffset(ub)
+    val n = ua.numElements() / 3
+    val m = ub.numElements() / 3
     val capC2 = kmToChordSq(capKm)
     val Inf = Double.MaxValue
-    var prev = new Array[Double](m)
-    var cur = new Array[Double](m)
+    val sc = scratch(m)
+    var prev = sc.prev
+    var cur = sc.cur
     var alive = false
-    val d00 = chordSq(xs, 0, ys, 0)
+    var x = coord(ao, aOff, 0, 0)
+    var y = coord(ao, aOff, 0, 1)
+    var z = coord(ao, aOff, 0, 2)
+    val d00 = chordSq(x, y, z, bo, bOff, 0)
     prev(0) = if (d00 <= capC2) d00 else Inf
     alive = prev(0) < Inf
     var j = 1
     while (j < m) {
-      val d = chordSq(xs, 0, ys, j)
+      val d = chordSq(x, y, z, bo, bOff, j)
       prev(j) = if (d <= capC2 && prev(j - 1) < Inf) math.max(prev(j - 1), d) else Inf
       if (prev(j) < Inf) alive = true
       j += 1
@@ -182,12 +245,15 @@ object FrechetDist {
     var i = 1
     while (i < n) {
       alive = false
-      val d0 = chordSq(xs, i, ys, 0)
+      x = coord(ao, aOff, i, 0)
+      y = coord(ao, aOff, i, 1)
+      z = coord(ao, aOff, i, 2)
+      val d0 = chordSq(x, y, z, bo, bOff, 0)
       cur(0) = if (d0 <= capC2 && prev(0) < Inf) math.max(prev(0), d0) else Inf
       if (cur(0) < Inf) alive = true
       j = 1
       while (j < m) {
-        val d = chordSq(xs, i, ys, j)
+        val d = chordSq(x, y, z, bo, bOff, j)
         cur(j) =
           if (d > capC2) Inf
           else {
@@ -240,14 +306,20 @@ case class LcssMatches(first: Expression, second: Expression, third: Expression)
 
 object LcssMatches {
 
+  import FrechetDist.{chordSq, coord, dataOffset, unsafeTrack}
+
   /** lcss(i,j) = 1 + lcss(i-1,j-1) if d(i,j) ≤ eps else
     * max(lcss(i-1,j), lcss(i,j-1)) — rolling two rows. */
   def compute(a: ArrayData, b: ArrayData, epsKm: Double): Long = {
-    val xs = a.toDoubleArray()
-    val ys = b.toDoubleArray()
-    FrechetDist.checkTrack(xs, ys, "lcss_matches")
-    val n = xs.length / 3
-    val m = ys.length / 3
+    FrechetDist.checkTrack(a.numElements(), b.numElements(), "lcss_matches")
+    val ua = unsafeTrack(a)
+    val ub = unsafeTrack(b)
+    val ao = ua.getBaseObject
+    val aOff = dataOffset(ua)
+    val bo = ub.getBaseObject
+    val bOff = dataOffset(ub)
+    val n = ua.numElements() / 3
+    val m = ub.numElements() / 3
     // km → chord² threshold, once per call: chord = 2·sin(d / 2R)
     val s = 2.0 * math.sin(epsKm / (2.0 * HaversineDist.EarthRadiusKm))
     val epsC2 = s * s
@@ -255,10 +327,13 @@ object LcssMatches {
     var cur = new Array[Long](m + 1)
     var i = 1
     while (i <= n) {
+      val x = coord(ao, aOff, i - 1, 0)
+      val y = coord(ao, aOff, i - 1, 1)
+      val z = coord(ao, aOff, i - 1, 2)
       var j = 1
       while (j <= m) {
         cur(j) =
-          if (FrechetDist.chordSq(xs, i - 1, ys, j - 1) <= epsC2) prev(j - 1) + 1L
+          if (chordSq(x, y, z, bo, bOff, j - 1) <= epsC2) prev(j - 1) + 1L
           else math.max(prev(j), cur(j - 1))
         j += 1
       }
@@ -306,25 +381,34 @@ case class EdrDist(first: Expression, second: Expression, third: Expression)
 
 object EdrDist {
 
+  import FrechetDist.{chordSq, coord, dataOffset, unsafeTrack}
+
   /** edr(i,j) = edr(i-1,j-1) on a match, else 1 + min(sub, del, ins);
     * borders edr(i,0) = i, edr(0,j) = j — rolling two rows. */
   def compute(a: ArrayData, b: ArrayData, epsKm: Double): Long = {
-    val xs = a.toDoubleArray()
-    val ys = b.toDoubleArray()
-    FrechetDist.checkTrack(xs, ys, "edr_dist")
-    val n = xs.length / 3
-    val m = ys.length / 3
+    FrechetDist.checkTrack(a.numElements(), b.numElements(), "edr_dist")
+    val ua = unsafeTrack(a)
+    val ub = unsafeTrack(b)
+    val ao = ua.getBaseObject
+    val aOff = dataOffset(ua)
+    val bo = ub.getBaseObject
+    val bOff = dataOffset(ub)
+    val n = ua.numElements() / 3
+    val m = ub.numElements() / 3
     val s = 2.0 * math.sin(epsKm / (2.0 * HaversineDist.EarthRadiusKm))
     val epsC2 = s * s
     var prev = Array.tabulate[Long](m + 1)(_.toLong) // edr(0, j) = j
     var cur = new Array[Long](m + 1)
     var i = 1
     while (i <= n) {
+      val x = coord(ao, aOff, i - 1, 0)
+      val y = coord(ao, aOff, i - 1, 1)
+      val z = coord(ao, aOff, i - 1, 2)
       cur(0) = i.toLong // edr(i, 0) = i
       var j = 1
       while (j <= m) {
         cur(j) =
-          if (FrechetDist.chordSq(xs, i - 1, ys, j - 1) <= epsC2) prev(j - 1)
+          if (chordSq(x, y, z, bo, bOff, j - 1) <= epsC2) prev(j - 1)
           else 1L + math.min(prev(j - 1), math.min(prev(j), cur(j - 1)))
         j += 1
       }
@@ -376,7 +460,8 @@ case class HausdorffKm(left: Expression, right: Expression)
   * counterpart lies beyond the cap: that fix alone proves dH > cap. A far
   * pair therefore pays about one full inner scan instead of the whole
   * max-min (sf0.1 tracks at the key's threshold, one thread of a 4-core
-  * host: 1.7–1.8 µs per pair against 7.2–7.5 µs for [[HausdorffKm]]). */
+  * host: 1.45–1.73 µs per pair reading in place, 2.35–2.42 µs when each
+  * pair copied both tracks, 7.9–8.0 µs for [[HausdorffKm]]). */
 case class HausdorffCapped(first: Expression, second: Expression, third: Expression)
   extends TernaryExpression
   with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
@@ -402,21 +487,26 @@ case class HausdorffCapped(first: Expression, second: Expression, third: Express
 
 object HausdorffKm {
 
-  /** Directed Hausdorff on chord²: max over xs-points of (min over
-    * ys-points), with the best-so-far cutoff — once a ys-point is closer
-    * than the current outer max, this xs-point cannot raise it. Returns
-    * Double.MaxValue as soon as one xs-point's nearest ys-point is farther
+  import FrechetDist.{chordSq, coord, dataOffset, unsafeTrack}
+
+  /** Directed Hausdorff on chord² from the n points at (xo, xOff) to the
+    * m points at (yo, yOff): max over x-points of (min over y-points),
+    * with the best-so-far cutoff — once a y-point is closer than the
+    * current outer max, this x-point cannot raise it. Returns
+    * Double.MaxValue as soon as one x-point's nearest y-point is farther
     * than `capC2` (an inner scan that ran to the end holds the true min). */
-  private def directedC2(xs: Array[Double], ys: Array[Double], capC2: Double): Double = {
-    val n = xs.length / 3
-    val m = ys.length / 3
+  private def directedC2(xo: AnyRef, xOff: Long, n: Int,
+                         yo: AnyRef, yOff: Long, m: Int, capC2: Double): Double = {
     var best = 0.0
     var i = 0
     while (i < n) {
+      val x = coord(xo, xOff, i, 0)
+      val y = coord(xo, xOff, i, 1)
+      val z = coord(xo, xOff, i, 2)
       var minD = Double.MaxValue
       var j = 0
       while (j < m && minD > best) {
-        val d = FrechetDist.chordSq(xs, i, ys, j)
+        val d = chordSq(x, y, z, yo, yOff, j)
         if (d < minD) minD = d
         j += 1
       }
@@ -428,22 +518,35 @@ object HausdorffKm {
   }
 
   def compute(a: ArrayData, b: ArrayData): Double = {
-    val xs = a.toDoubleArray()
-    val ys = b.toDoubleArray()
-    FrechetDist.checkTrack(xs, ys, "hausdorff_km")
+    FrechetDist.checkTrack(a.numElements(), b.numElements(), "hausdorff_km")
+    val ua = unsafeTrack(a)
+    val ub = unsafeTrack(b)
+    val ao = ua.getBaseObject
+    val aOff = dataOffset(ua)
+    val bo = ub.getBaseObject
+    val bOff = dataOffset(ub)
+    val n = ua.numElements() / 3
+    val m = ub.numElements() / 3
     FrechetDist.chordSqToKm(math.max(
-      directedC2(xs, ys, Double.MaxValue), directedC2(ys, xs, Double.MaxValue)))
+      directedC2(ao, aOff, n, bo, bOff, m, Double.MaxValue),
+      directedC2(bo, bOff, m, ao, aOff, n, Double.MaxValue)))
   }
 
   /** [[HausdorffCapped]]'s kernel — exact dH when ≤ capKm, else MaxValue. */
   def computeCapped(a: ArrayData, b: ArrayData, capKm: Double): Double = {
-    val xs = a.toDoubleArray()
-    val ys = b.toDoubleArray()
-    FrechetDist.checkTrack(xs, ys, "hausdorff_km_capped")
+    FrechetDist.checkTrack(a.numElements(), b.numElements(), "hausdorff_km_capped")
+    val ua = unsafeTrack(a)
+    val ub = unsafeTrack(b)
+    val ao = ua.getBaseObject
+    val aOff = dataOffset(ua)
+    val bo = ub.getBaseObject
+    val bOff = dataOffset(ub)
+    val n = ua.numElements() / 3
+    val m = ub.numElements() / 3
     val capC2 = FrechetDist.kmToChordSq(capKm)
-    val ab = directedC2(xs, ys, capC2)
+    val ab = directedC2(ao, aOff, n, bo, bOff, m, capC2)
     if (ab == Double.MaxValue) return Double.MaxValue
-    val ba = directedC2(ys, xs, capC2)
+    val ba = directedC2(bo, bOff, m, ao, aOff, n, capC2)
     if (ba == Double.MaxValue) Double.MaxValue
     else FrechetDist.chordSqToKm(math.max(ab, ba))
   }

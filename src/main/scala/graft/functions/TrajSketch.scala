@@ -67,13 +67,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   *    EDR = min over chains of Σ max-gap, a DP over the sparse match set
   *    (O(P²), falling back to the full-matrix kernel when P is dense —
   *    both paths exact, the fallback merely faster at high match density).
-  *  - Hausdorff takes no cell bound: [[TrajSketch.cellOverlap]] only
-  *    picks the seed pairs whose exact distances set the threshold, and
+  *  - Hausdorff takes no cell bound: `cell_hits` ([[TrajSketch.cellHits]])
+  *    only picks the seed pairs whose exact distances set the threshold, and
   *    the capped exact kernel ([[graft.functions.HausdorffCapped]])
   *    prunes the pair scan itself. On sf0.1 at the key's threshold (one
   *    thread of a 4-core host) a cell-rectangle lower bound cost
   *    2.5–3.2 µs per pair and kept 16,595 of 1,124,250 pairs; the capped
-  *    kernel costs 1.7–1.8 µs, keeps 974, and its survivors are exact. */
+  *    kernel costs 1.45–1.73 µs, keeps 974, and its survivors are exact. */
 object TrajSketch {
 
   private[graft] val CellDeg = 2.5
@@ -346,10 +346,11 @@ object TrajSketch {
     best
   }
 
-  /** Shared-cell count of two DISTINCT SORTED cell arrays — the cheap
-    * (one merge pass) closeness PROXY the pruned keys use to SEED their
-    * threshold: any ≥10-pair subset gives a valid (≥ d₁₀) threshold, so
-    * the proxy only affects how TIGHT the prune is, never correctness. */
+  /** Shared-cell count of two DISTINCT SORTED cell arrays by one merge
+    * pass — the SQL `cell_overlap`. The pruned keys SEED their threshold
+    * with the equal [[cellHits]]: any ≥10-pair subset gives a valid
+    * (≥ d₁₀) threshold, so the proxy only affects how TIGHT the prune is,
+    * never correctness. */
   def cellOverlap(ca: ArrayData, cb: ArrayData): Int = {
     val nA = ca.numElements()
     val nB = cb.numElements()
@@ -362,6 +363,41 @@ object TrajSketch {
       if (a == b) { cnt += 1; i += 1; j += 1 }
       else if (a < b) i += 1
       else j += 1
+    }
+    cnt
+  }
+
+  /** Bit of cell `c` in the NRow × NLon bitmaps ([[DilWords]] words):
+    * row·NLon + col, dense row-major. */
+  @inline private def cellBit(c: Int): Int = (c >>> 8) * NLon + (c & 0xff)
+
+  /** The cell bitmap of a cell array: bit [[cellBit]] set per cell. */
+  def cellBitmap(cells: ArrayData): Array[Long] = {
+    val out = new Array[Long](DilWords)
+    val n = cells.numElements()
+    var i = 0
+    while (i < n) {
+      val bit = cellBit(cells.getInt(i))
+      out(bit >>> 6) |= 1L << (bit & 63)
+      i += 1
+    }
+    out
+  }
+
+  /** Shared-cell count of A's DISTINCT cell array against B's cell
+    * bitmap ([[cellBitmap]]): one bit lookup per cell of A, equal to
+    * [[cellOverlap]] of A and B's cells. The seed's proxy: B's bitmap is
+    * built once per user on the broadcast side, so a pair pays no merge
+    * (almost every pair shares no cell, and a sorted merge branches on
+    * every step to find that out). */
+  def cellHits(ca: ArrayData, bitsB: ArrayData): Int = {
+    val n = ca.numElements()
+    var cnt = 0
+    var i = 0
+    while (i < n) {
+      val bit = cellBit(ca.getInt(i))
+      if ((bitsB.getLong(bit >>> 6) & (1L << (bit & 63))) != 0L) cnt += 1
+      i += 1
     }
     cnt
   }
@@ -450,8 +486,7 @@ object TrajSketch {
     var cnt = 0
     var i = 0
     while (i < np) {
-      val c = (p.getLong(i) >>> 32).toInt
-      val bit = (c >>> 8) * NLon + (c & 0xff)
+      val bit = cellBit((p.getLong(i) >>> 32).toInt)
       if ((dil.getLong(bit >>> 6) & (1L << (bit & 63))) != 0L) cnt += 1
       i += 1
     }
@@ -603,6 +638,54 @@ case class CellOverlapExpr(left: Expression, right: Expression)
   override def prettyName: String = "cell_overlap"
 }
 
+/** cell_hits(cellsA, bitsB): [[TrajSketch.cellHits]], the seed proxy of
+  * the Hausdorff and EDR keys. */
+case class CellHitsExpr(left: Expression, right: Expression)
+  extends BinaryExpression
+  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
+
+  override def inputTypes = Seq(ArrayType(IntegerType), ArrayType(LongType))
+
+  override def dataType: DataType = IntegerType
+
+  override def nullSafeEval(ca: Any, bb: Any): Any =
+    TrajSketch.cellHits(ca.asInstanceOf[ArrayData], bb.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (ca, bb) =>
+      s"${ev.value} = graft.functions.TrajSketch.cellHits($ca, $bb);")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+
+  override def prettyName: String = "cell_hits"
+}
+
+/** cell_bits(cells) → the cell bitmap (array of DilWords longs) that
+  * [[CellHitsExpr]] looks up. */
+case class CellBitsExpr(child: Expression)
+  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
+
+  override def inputTypes = Seq(ArrayType(IntegerType))
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def nullSafeEval(ca: Any): Any =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      TrajSketch.cellBitmap(ca.asInstanceOf[ArrayData]))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, ca =>
+      s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
+        s"graft.functions.TrajSketch.cellBitmap($ca));")
+
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+
+  override def prettyName: String = "cell_bits"
+}
+
 object TrajSketchFns {
   def lcssSparse(pa: Column, a: Column, pb: Column, b: Column, epsKm: Double): Column =
     column(LcssSparseExpr(expression(pa), expression(a), expression(pb), expression(b), epsKm))
@@ -610,8 +693,11 @@ object TrajSketchFns {
   def edrSparse(pa: Column, a: Column, pb: Column, b: Column, epsKm: Double): Column =
     column(EdrSparseExpr(expression(pa), expression(a), expression(pb), expression(b), epsKm))
 
-  def cellOverlap(ca: Column, cb: Column): Column =
-    column(CellOverlapExpr(expression(ca), expression(cb)))
+  def cellHits(ca: Column, bitsB: Column): Column =
+    column(CellHitsExpr(expression(ca), expression(bitsB)))
+
+  def cellBits(cells: Column): Column =
+    column(CellBitsExpr(expression(cells)))
 
   def nearCounts(pa: Column, dilB: Column, pb: Column, dilA: Column): Column =
     column(NearCountsExpr(expression(pa), expression(dilB), expression(pb), expression(dilA)))

@@ -203,12 +203,17 @@ object Trajectory extends QueryGroup {
   }
 
   /** The cell-overlap seed of Hausdorff and EDR: shared distinct cells,
-    * one merge pass over two sorted ≤64-int arrays per pair. A low
+    * counted by one bit lookup per cell of A in B's cell bitmap
+    * (`cell_hits`, equal to the sorted merge `cell_overlap`). B's bitmap
+    * is built once per user in the broadcast side's projection; stored
+    * as a tracks column it measured 2.2 MB more live heap. A low
     * distance needs shared ε-neighbourhoods, so the most-overlapping
     * pairs are good threshold candidates; the r15 lesson is never to
     * carry track payloads through the seed's TakeOrdered heap. */
-  private def cellSeed(ab: String) = Seq(col("cells").as(s"c$ab"))
-  private def cellProxy = -TrajSketchFns.cellOverlap(col("ca"), col("cb"))
+  private def cellSeed(ab: String) =
+    if (ab == "a") Seq(col("cells").as("ca"))
+    else Seq(TrajSketchFns.cellBits(col("cells")).as("bb"))
+  private def cellProxy = -TrajSketchFns.cellHits(col("ca"), col("bb"))
 
   /** m_traj_frechet's only path. Seed and first bound: the endpoint chord
     * lb = max(head chord, tail chord) ≤ dF, since every coupling pairs
@@ -238,9 +243,11 @@ object Trajectory extends QueryGroup {
     * whose nearest counterpart lies beyond the cap. Measured at sf0.1 on
     * a 4-core host (1,500 users, 1,124,250 pairs): seed threshold
     * 2,861 km against a true d₁₀ of 2,511 km; the capped kernel costs
-    * 1.7–1.8 µs per pair on one thread against 7.2–7.5 µs for the full
-    * kernel and keeps 974 pairs; the key's traced task CPU fell from
-    * 9.3 s to 3.4 s. */
+    * 1.45–1.73 µs per pair on one thread against 7.9–8.0 µs for the full
+    * kernel and keeps 974 pairs. The key's traced task CPU fell from
+    * 9.3 s to 3.4 s with the capped kernel, and from 3.6–4.2 s to
+    * 2.2–2.8 s (warm passes) once the kernels read tracks in place and
+    * the seed looked up bits instead of merging. */
   private[graft] def hausdorffPruned(s: SparkSession, tr: DataFrame): DataFrame = {
     import s.implicits._
     topPairs(s, tr, extra = _ => Nil, seed = cellSeed, proxy = cellProxy,

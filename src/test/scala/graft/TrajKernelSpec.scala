@@ -1,0 +1,336 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.unsafe.Platform
+import graft.functions.{EdrDist, FrechetDist, HausdorffKm, LcssMatches, TrajSketch}
+import scala.jdk.CollectionConverters._
+
+/** The per-pair trajectory kernels read their tracks in place (TrajSim
+  * file scaladoc): every value is bit-identical to the copying kernels
+  * they replaced, on every kind of `ArrayData` a caller passes, and the
+  * Hausdorff/EDR seed's bit lookup counts exactly the merge's shared
+  * cells. */
+class TrajKernelSpec extends BaseSpec {
+
+  /** The copying kernels the in-place ones replaced, verbatim over the
+    * `Array[Double]` copies each pair used to make of both tracks: the
+    * reference every in-place value must equal bit for bit. */
+  private object Copied {
+    def check(xs: Array[Double], ys: Array[Double], name: String): Unit =
+      if (xs.length < 3 || ys.length < 3 || xs.length % 3 != 0 || ys.length % 3 != 0)
+        throw new IllegalArgumentException(
+          s"$name: tracks must be non-empty interleaved [x, y, z, ...] " +
+            s"unit-vector arrays (got lengths ${xs.length}, ${ys.length})")
+
+    def chordSq(xs: Array[Double], i: Int, ys: Array[Double], j: Int): Double = {
+      val dx = xs(3 * i) - ys(3 * j)
+      val dy = xs(3 * i + 1) - ys(3 * j + 1)
+      val dz = xs(3 * i + 2) - ys(3 * j + 2)
+      dx * dx + dy * dy + dz * dz
+    }
+
+    def toKm(c2: Double): Double =
+      2.0 * functions.HaversineDist.EarthRadiusKm * math.asin(math.min(math.sqrt(c2) / 2.0, 1.0))
+
+    def toC2(km: Double): Double = {
+      val s = 2.0 * math.sin(math.min(km / (2.0 * functions.HaversineDist.EarthRadiusKm), math.Pi / 2))
+      s * s
+    }
+
+    def epsC2(epsKm: Double): Double = {
+      val s = 2.0 * math.sin(epsKm / (2.0 * functions.HaversineDist.EarthRadiusKm))
+      s * s
+    }
+
+    def frechet(xs: Array[Double], ys: Array[Double]): Double = {
+      check(xs, ys, "frechet_km")
+      val n = xs.length / 3
+      val m = ys.length / 3
+      var prev = new Array[Double](m)
+      var cur = new Array[Double](m)
+      prev(0) = chordSq(xs, 0, ys, 0)
+      var j = 1
+      while (j < m) { prev(j) = math.max(prev(j - 1), chordSq(xs, 0, ys, j)); j += 1 }
+      var i = 1
+      while (i < n) {
+        cur(0) = math.max(prev(0), chordSq(xs, i, ys, 0))
+        j = 1
+        while (j < m) {
+          cur(j) = math.max(chordSq(xs, i, ys, j),
+            math.min(prev(j), math.min(cur(j - 1), prev(j - 1))))
+          j += 1
+        }
+        val t = prev; prev = cur; cur = t
+        i += 1
+      }
+      toKm(prev(m - 1))
+    }
+
+    def frechetCapped(xs: Array[Double], ys: Array[Double], capKm: Double): Double = {
+      check(xs, ys, "frechet_km_capped")
+      val n = xs.length / 3
+      val m = ys.length / 3
+      val capC2 = toC2(capKm)
+      val Inf = Double.MaxValue
+      var prev = new Array[Double](m)
+      var cur = new Array[Double](m)
+      var alive = false
+      val d00 = chordSq(xs, 0, ys, 0)
+      prev(0) = if (d00 <= capC2) d00 else Inf
+      alive = prev(0) < Inf
+      var j = 1
+      while (j < m) {
+        val d = chordSq(xs, 0, ys, j)
+        prev(j) = if (d <= capC2 && prev(j - 1) < Inf) math.max(prev(j - 1), d) else Inf
+        if (prev(j) < Inf) alive = true
+        j += 1
+      }
+      if (!alive) return Inf
+      var i = 1
+      while (i < n) {
+        alive = false
+        val d0 = chordSq(xs, i, ys, 0)
+        cur(0) = if (d0 <= capC2 && prev(0) < Inf) math.max(prev(0), d0) else Inf
+        if (cur(0) < Inf) alive = true
+        j = 1
+        while (j < m) {
+          val d = chordSq(xs, i, ys, j)
+          cur(j) =
+            if (d > capC2) Inf
+            else {
+              val best = math.min(prev(j), math.min(cur(j - 1), prev(j - 1)))
+              if (best == Inf) Inf else math.max(d, best)
+            }
+          if (cur(j) < Inf) alive = true
+          j += 1
+        }
+        if (!alive) return Inf
+        val t = prev; prev = cur; cur = t
+        i += 1
+      }
+      if (prev(m - 1) == Inf) Inf else toKm(prev(m - 1))
+    }
+
+    def directed(xs: Array[Double], ys: Array[Double], capC2: Double): Double = {
+      val n = xs.length / 3
+      val m = ys.length / 3
+      var best = 0.0
+      var i = 0
+      while (i < n) {
+        var minD = Double.MaxValue
+        var j = 0
+        while (j < m && minD > best) {
+          val d = chordSq(xs, i, ys, j)
+          if (d < minD) minD = d
+          j += 1
+        }
+        if (minD > capC2) return Double.MaxValue
+        if (minD > best) best = minD
+        i += 1
+      }
+      best
+    }
+
+    def hausdorff(xs: Array[Double], ys: Array[Double]): Double = {
+      check(xs, ys, "hausdorff_km")
+      toKm(math.max(directed(xs, ys, Double.MaxValue), directed(ys, xs, Double.MaxValue)))
+    }
+
+    def hausdorffCapped(xs: Array[Double], ys: Array[Double], capKm: Double): Double = {
+      check(xs, ys, "hausdorff_km_capped")
+      val capC2 = toC2(capKm)
+      val ab = directed(xs, ys, capC2)
+      if (ab == Double.MaxValue) return Double.MaxValue
+      val ba = directed(ys, xs, capC2)
+      if (ba == Double.MaxValue) Double.MaxValue else toKm(math.max(ab, ba))
+    }
+
+    def lcss(xs: Array[Double], ys: Array[Double], epsKm: Double): Long = {
+      check(xs, ys, "lcss_matches")
+      val (n, m, eps) = (xs.length / 3, ys.length / 3, epsC2(epsKm))
+      var prev = new Array[Long](m + 1)
+      var cur = new Array[Long](m + 1)
+      for (i <- 1 to n) {
+        for (j <- 1 to m)
+          cur(j) = if (chordSq(xs, i - 1, ys, j - 1) <= eps) prev(j - 1) + 1L
+                   else math.max(prev(j), cur(j - 1))
+        val t = prev; prev = cur; cur = t
+      }
+      prev(m)
+    }
+
+    def edr(xs: Array[Double], ys: Array[Double], epsKm: Double): Long = {
+      check(xs, ys, "edr_dist")
+      val (n, m, eps) = (xs.length / 3, ys.length / 3, epsC2(epsKm))
+      var prev = Array.tabulate[Long](m + 1)(_.toLong)
+      var cur = new Array[Long](m + 1)
+      for (i <- 1 to n) {
+        cur(0) = i.toLong
+        for (j <- 1 to m)
+          cur(j) = if (chordSq(xs, i - 1, ys, j - 1) <= eps) prev(j - 1)
+                   else 1L + math.min(prev(j - 1), math.min(prev(j), cur(j - 1)))
+        val t = prev; prev = cur; cur = t
+      }
+      prev(m)
+    }
+  }
+
+  private val rnd = new scala.util.Random(1010)
+
+  private def start(): (Double, Double) =
+    (rnd.nextDouble() * 120 - 60, rnd.nextDouble() * 340 - 170)
+
+  /** A random walk of unit vectors from `from` (lat, lon), `len` doubles
+    * long (a length that is no multiple of 3 cuts the last point short). */
+  private def track(len: Int, from: (Double, Double) = start()): Array[Double] = {
+    var (lat, lon) = from
+    Array.tabulate(len) { k =>
+      if (k % 3 == 0) {
+        lat = math.max(-89.0, math.min(89.0, lat + rnd.nextGaussian() * 4))
+        lon += rnd.nextGaussian() * 4
+      }
+      val (la, lo) = (math.toRadians(lat), math.toRadians(lon))
+      k % 3 match {
+        case 0 => math.cos(la) * math.cos(lo)
+        case 1 => math.cos(la) * math.sin(lo)
+        case _ => math.sin(la)
+      }
+    }
+  }
+
+  private val pairSchema: Array[DataType] =
+    Array(IntegerType, ArrayType(DoubleType, containsNull = false),
+      ArrayType(DoubleType, containsNull = false))
+
+  /** The three kinds of input a kernel sees: arrays read out of an
+    * `UnsafeRow` (after a leading field, so element 0 sits past a non-zero
+    * offset into the row's bytes), `fromPrimitiveArray`, and a boxed
+    * `GenericArrayData` (the interpreted path's input). */
+  private def kinds(a: Array[Double], b: Array[Double]): Seq[(String, ArrayData, ArrayData)] = {
+    val row = UnsafeProjection.create(pairSchema)
+      .apply(InternalRow(7, new GenericArrayData(a), new GenericArrayData(b))).copy()
+    val (ra, rb) = (row.getArray(1), row.getArray(2))
+    assert(ra.isInstanceOf[UnsafeArrayData] &&
+      ra.asInstanceOf[UnsafeArrayData].getBaseOffset > Platform.BYTE_ARRAY_OFFSET)
+    Seq(("unsafe-row", ra, rb),
+      ("primitive", UnsafeArrayData.fromPrimitiveArray(a), UnsafeArrayData.fromPrimitiveArray(b)),
+      ("generic", new GenericArrayData(a), new GenericArrayData(b)))
+  }
+
+  /** The six kernels against their copies: (name, in-place, copied),
+    * returning raw double bits (longs as themselves). */
+  private def kernels(dF: Double, dH: Double): Seq[(String, (ArrayData, ArrayData) => Long,
+      (Array[Double], Array[Double]) => Long)] = {
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    Seq(
+      ("frechet_km", (a, b) => bits(FrechetDist.compute(a, b)),
+        (x, y) => bits(Copied.frechet(x, y))),
+      ("frechet_km_capped", (a, b) => bits(FrechetDist.computeCapped(a, b, dF)),
+        (x, y) => bits(Copied.frechetCapped(x, y, dF))),
+      ("hausdorff_km", (a, b) => bits(HausdorffKm.compute(a, b)),
+        (x, y) => bits(Copied.hausdorff(x, y))),
+      ("hausdorff_km_capped", (a, b) => bits(HausdorffKm.computeCapped(a, b, dH)),
+        (x, y) => bits(Copied.hausdorffCapped(x, y, dH))),
+      ("lcss_matches", (a, b) => LcssMatches.compute(a, b, 900.0),
+        (x, y) => Copied.lcss(x, y, 900.0)),
+      ("edr_dist", (a, b) => EdrDist.compute(a, b, 900.0),
+        (x, y) => Copied.edr(x, y, 900.0)))
+  }
+
+  test("in-place kernels equal the copying kernels bit for bit on rows, primitive and generic arrays") {
+    // 1, 63, 64 and 65 points: the null-bitmap header grows by a word
+    // every 64 elements, so a wrong header offset misreads these lengths
+    val lengths = Seq(3, 189, 192, 195)
+    for (la <- lengths; lb <- lengths; rep <- 0 until 3) {
+      // two walks from one start overlap (matches, early Hausdorff exits);
+      // the third pair starts anywhere
+      val from = start()
+      val (a, b) = (track(la, from), track(lb, if (rep < 2) from else start()))
+      val dF = Copied.frechet(a, b)
+      val dH = Copied.hausdorff(a, b)
+      // caps at, above and below the exact value: exact, exact, abandoned
+      val cap = Seq(0.0, 1.0, -1.0)(rep)
+      for ((name, inPlace, copied) <- kernels(dF + cap, dH + cap)) {
+        val want = copied(a, b)
+        for ((kind, ua, ub) <- kinds(a, b))
+          assert(inPlace(ua, ub) == want, s"$name on $kind arrays of $la, $lb doubles")
+        // repeated calls reuse the per-thread rows: still the same value
+        assert(inPlace(UnsafeArrayData.fromPrimitiveArray(a),
+          UnsafeArrayData.fromPrimitiveArray(b)) == want, s"$name rerun")
+      }
+    }
+  }
+
+  test("in-place kernels reject malformed tracks with the copying kernels' exception") {
+    val good = track(9)
+    for (bad <- Seq(0, 4).map(track(_)); (x, y) <- Seq((good, bad), (bad, good))) {
+      for ((name, inPlace, copied) <- kernels(1000.0, 1000.0)) {
+        val want = intercept[IllegalArgumentException](copied(x, y)).getMessage
+        for ((kind, ua, ub) <- kinds(x, y)) {
+          val got = intercept[IllegalArgumentException](inPlace(ua, ub)).getMessage
+          assert(got == want, s"$name on $kind arrays")
+        }
+      }
+    }
+  }
+
+  test("cell_hits over cell_bits equals cell_overlap on random distinct sorted cell sets") {
+    // the lattice's corners: row 71, column 143, the clamped/wrapped
+    // cellId(90, 180) = (71, 0) and the last bit of the last word (71, 143)
+    val edges = Seq((71 << 8) | 0, (71 << 8) | 143, (0 << 8) | 143, 0,
+      TrajSketch.cellId(90, 180), TrajSketch.cellId(-90, -180)).distinct.sorted
+    def cells(): Array[Int] = {
+      val n = rnd.nextInt(80)
+      val drawn = Seq.fill(n)((rnd.nextInt(72) << 8) | rnd.nextInt(144))
+      val withEdges = if (rnd.nextBoolean()) drawn ++ edges.filter(_ => rnd.nextBoolean()) else drawn
+      withEdges.distinct.sorted.toArray
+    }
+    val sets = Seq.fill(300)((cells(), cells())) ++
+      Seq((edges.toArray, edges.toArray),
+        (Array.empty[Int], edges.sorted.toArray), (edges.sorted.toArray, Array.empty[Int]))
+    for ((a, b) <- sets) {
+      val (ca, cb) = (ArrayData.toArrayData(a), ArrayData.toArrayData(b))
+      val bits = ArrayData.toArrayData(TrajSketch.cellBitmap(cb))
+      assert(TrajSketch.cellHits(ca, bits) == TrajSketch.cellOverlap(ca, cb),
+        s"${a.toSeq} vs ${b.toSeq}")
+    }
+    // and through the expressions, generated code included
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.functions.{CellOverlapExpr, TrajSketchFns}
+    import org.apache.spark.sql.execution.GraftColumns.{column, expression}
+    val df = sets.map { case (a, b) => (a.toSeq, b.toSeq) }.toDF("a", "b")
+      .select(TrajSketchFns.cellHits(col("a"), TrajSketchFns.cellBits(col("b"))).as("hits"),
+        column(CellOverlapExpr(expression(col("a")), expression(col("b")))).as("overlap"))
+    val rows = df.collect()
+    assert(rows.length == sets.size)
+    assert(rows.forall(r => r.getInt(0) == r.getInt(1)))
+  }
+
+  test("the pair kernels copy no array outside the one normalization helper") {
+    val files = Seq("TrajSim.scala", "TrajSketch.scala")
+      .map(f => Paths.get("src/main/scala/graft/functions", f))
+    val copy = """\.to(Double|Int|Long)Array\b""".r
+    val hits = for (f <- files) yield {
+      assert(Files.isRegularFile(f), s"not found: ${f.toAbsolutePath}")
+      val lines = Files.readAllLines(f).asScala.toIndexedSeq
+      // the helper's body: from its def to the closing brace at its indent
+      val start = lines.indexWhere(_.contains("def unsafeTrack("))
+      val end = if (start < 0) -1 else {
+        val indent = lines(start).takeWhile(_ == ' ')
+        lines.indexWhere(_ == s"$indent}", start)
+      }
+      lines.indices.filter(i => copy.findFirstIn(lines(i)).isDefined)
+        .map(i => (f, i, start <= i && i <= end && start >= 0, lines(i).trim))
+    }
+    val all = hits.flatten
+    val outside = all.filterNot(_._3)
+    assert(outside.isEmpty, outside.map { case (f, i, _, l) => s"$f:${i + 1}: $l" }
+      .mkString("array copy outside FrechetDist.unsafeTrack:\n", "\n", ""))
+    assert(all.count(_._3) == 1, s"FrechetDist.unsafeTrack must hold the one copy: $all")
+  }
+}
