@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.GraftColumns.{column, expression}
@@ -155,14 +155,6 @@ object TrajSketch {
   }
   private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch)
 
-  /** Squared chord distance between track points, via ArrayData getters. */
-  @inline private def chordSqAD(a: ArrayData, i: Int, b: ArrayData, j: Int): Double = {
-    val dx = a.getDouble(3 * i) - b.getDouble(3 * j)
-    val dy = a.getDouble(3 * i + 1) - b.getDouble(3 * j + 1)
-    val dz = a.getDouble(3 * i + 2) - b.getDouble(3 * j + 2)
-    dx * dx + dy * dy + dz * dz
-  }
-
   private def checkAligned(pb: ArrayData, xs: ArrayData, name: String): Unit =
     if (pb.numElements() * 3 != xs.numElements())
       throw new IllegalArgumentException(
@@ -172,10 +164,16 @@ object TrajSketch {
   /** The ε-match set {(i, j) : d(a_i, b_j) ≤ eps}, exact, written packed
     * i·2³²+j into `out` sorted ascending; returns the count. Both packed
     * inputs are (cell << 32 | fixIdx) sorted ascending (a `tracks()`
-    * column — computed once per user, never per pair). */
-  private def findMatches(pa: Array[Long], nA: Int, ta: ArrayData,
-                          pb: Array[Long], nB: Int, tb: ArrayData,
+    * column — computed once per user, never per pair). The tracks are
+    * read in place, as the TrajSim kernels read them: point i of A once
+    * per packed entry, each candidate of B with `Platform.getDouble`. */
+  private def findMatches(pa: Array[Long], nA: Int, ta: UnsafeArrayData,
+                          pb: Array[Long], nB: Int, tb: UnsafeArrayData,
                           epsKm: Double, out: Array[Long]): Int = {
+    val ao = ta.getBaseObject
+    val aOff = FrechetDist.dataOffset(ta)
+    val bo = tb.getBaseObject
+    val bOff = FrechetDist.dataOffset(tb)
     val g = geom(epsKm)
     val s = 2.0 * math.sin(epsKm / (2.0 * R))
     val epsC2 = s * s
@@ -187,6 +185,9 @@ object TrajSketch {
       val i = (packed & 0xffffffffL).toInt
       val r1 = c >>> 8
       val col = c & 0xff
+      val x = FrechetDist.coord(ao, aOff, i, 0)
+      val y = FrechetDist.coord(ao, aOff, i, 1)
+      val z = FrechetDist.coord(ao, aOff, i, 2)
       var k = 0
       while (k < 2 * g.maxDr + 1) {
         val r2 = r1 + k - g.maxDr
@@ -209,7 +210,7 @@ object TrajSketch {
               var q = lowerBound(pb, nB, loKey)
               while (q < nB && pb(q) <= hiKey) {
                 val jj = (pb(q) & 0xffffffffL).toInt
-                if (chordSqAD(ta, i, tb, jj) <= epsC2) {
+                if (FrechetDist.chordSq(x, y, z, bo, bOff, jj) <= epsC2) {
                   out(cnt) = (i.toLong << 32) | jj.toLong
                   cnt += 1
                 }
@@ -265,7 +266,8 @@ object TrajSketch {
     val ms = if (big) new Array[Long](pa.numElements() * pb.numElements()) else sc.matches
     val paB = copyLongs(pa, sc.pbufA)
     val pbB = copyLongs(pb, sc.pbufB)
-    val nM = findMatches(paB, pa.numElements(), a, pbB, pb.numElements(), b, epsKm, ms)
+    val nM = findMatches(paB, pa.numElements(), FrechetDist.unsafeTrack(a),
+      pbB, pb.numElements(), FrechetDist.unsafeTrack(b), epsKm, ms)
     val tMax = math.min(pa.numElements(), pb.numElements())
     val tails = if (tMax > sc.tails.length) new Array[Int](tMax) else sc.tails
     val snap = if (tMax > sc.snap.length) new Array[Int](tMax) else sc.snap
@@ -318,8 +320,10 @@ object TrajSketch {
     val ms = if (big) new Array[Long](n * m) else sc.matches
     val paB = copyLongs(pa, sc.pbufA)
     val pbB = copyLongs(pb, sc.pbufB)
-    val nM = findMatches(paB, n, a, pbB, m, b, epsKm, ms)
-    if (nM.toLong * nM > 4L * n * m) return EdrDist.compute(a, b, epsKm)
+    val ua = FrechetDist.unsafeTrack(a)
+    val ub = FrechetDist.unsafeTrack(b)
+    val nM = findMatches(paB, n, ua, pbB, m, ub, epsKm, ms)
+    if (nM.toLong * nM > 4L * n * m) return EdrDist.compute(ua, ub, epsKm)
     // dp(t) = cheapest cost of an alignment prefix ending in match t
     var best = math.max(n, m).toLong // the no-match alignment
     val dp = if (nM > sc.dp.length) new Array[Long](nM) else sc.dp

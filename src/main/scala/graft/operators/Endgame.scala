@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.GraftFrames
 
 /** The one path choice of every hybrid operator: distributed rounds at
@@ -24,10 +25,13 @@ import org.apache.spark.sql.execution.GraftFrames
   * (an operator may also return one, as [[Convoy]] does) — a shared frame
   * proven under budget is held as a `LocalRelation` (exact statistics, so
   * its consumers plan broadcasts; no checkpoint job per read) instead of
-  * a checkpointed RDD. A pinned frame stays on the driver heap for the
-  * life of its memo entry: on the order of 100 B per narrow row (a
-  * generic internal row of boxed values), so up to ~100 MB per memoized
-  * substrate at [[Budget]] rows.
+  * a checkpointed RDD. It holds the checkpoint's own internal rows
+  * (`UnsafeRow`s: no boxed values, no external `Row` round trip), and the
+  * checkpoint is released once they are collected. A pinned frame stays
+  * on the driver heap for the life of its memo entry: on the order of
+  * 100 B per narrow row, so up to ~100 MB per memoized substrate at
+  * [[Budget]] rows; a memo of wide rows passes a `weight` that keeps it
+  * near that figure.
   *
   * The choice is made per call from the observed input size, never from a
   * caller-set option. The only override is [[distributed]], the hook that
@@ -37,9 +41,10 @@ import org.apache.spark.sql.execution.GraftFrames
 object Endgame {
 
   /** Rows a driver-local endgame may collect. A kernel keeps two or three
-    * 8 B/row primitive arrays plus the transient `Row[]` of the collect
-    * (~60 B/row until the next GC), so 1M rows peaks well under 100 MB of
-    * driver heap. */
+    * 8 B/row primitive arrays plus the transient `Row[]` of a [[rows]]
+    * collect (~60 B/row until the next GC), so 1M rows peaks well under
+    * 100 MB of driver heap. A [[pin]] holds `UnsafeRow`s, with no
+    * transient external rows. */
   val Budget: Long = 1L << 20
 
   // Plain ThreadLocal, not DynamicVariable: the latter is inheritable, so
@@ -62,18 +67,38 @@ object Endgame {
     if (fits) Some(res.fold(ds)(_._2).collect()) else None
   }
 
-  /** A memo value's physical form: `df`'s driver-resident form when it
-    * has one within [[Budget]] (`df` itself for a `LocalRelation`);
-    * otherwise one eager checkpoint, rebuilt as a `LocalRelation` of the
-    * same rows in the same order when [[rows]] admits it, else the
-    * checkpoint itself. */
-  def pin(df: DataFrame): DataFrame = resident(df) match {
-    case Some((n, r)) if local(n) => r
+  /** A memo value's physical form, each row weighing `weight` rows of
+    * [[Budget]] (a wide row is several narrow ones): `df`'s
+    * driver-resident form when it has one within the budget (`df` itself
+    * for a `LocalRelation`). Otherwise one job materializes a local
+    * checkpoint and returns each partition's row count. When the weighted
+    * total passes [[local]], a second job collects the checkpoint's copied
+    * internal rows, which are held as a `LocalRelation` of the same rows in
+    * the same order, and the checkpoint's blocks are released; else the
+    * checkpoint itself is the memo value. */
+  def pin(df: DataFrame, weight: Long = 1): DataFrame = resident(df) match {
+    case Some((n, r)) if local(n * weight) => r
     case _ =>
-      val cp = df.localCheckpoint(eager = true)
-      rows(cp).fold(cp)(rs =>
-        df.sparkSession.createDataFrame(java.util.Arrays.asList(rs: _*), cp.schema))
+      val (cp, rdd, sizes) = GraftFrames.localCheckpoint(df)
+      if (!local(sizes.sum * weight)) cp else {
+        val data = rdd.collect()
+        rdd.unpersist(blocking = true)
+        GraftFrames.frame(df.sparkSession,
+          LocalRelation(DataTypeUtils.toAttributes(df.schema), data.toSeq))
+      }
   }
+
+  /** The row count of `ds`: the known length of a driver-resident `ds`
+    * (no job), else `count()`. */
+  def size[T](ds: Dataset[T]): Long = resident(ds).fold(ds.count())(_._1)
+
+  /** The `LocalRelation` of a driver-resident `df` when `weight` × its
+    * length passes [[local]], else `None`: internal rows positional to
+    * its output, with no job and no conversion to external rows. */
+  private[graft] def held(df: DataFrame, weight: Long = 1): Option[LocalRelation] =
+    resident(df).collect { case (n, r) if local(n * weight) =>
+      r.queryExecution.optimizedPlan.asInstanceOf[LocalRelation]
+    }
 
   /** The length and jobless form of `ds` when its optimized plan is
     * driver-resident: `ds` itself over a `LocalRelation`; over a `Union`

@@ -1,9 +1,14 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.GraftFrames
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.functions.{TrajSim, TrajSketchFns}
+import graft.operators.Endgame
 import Q._
 
 /** SURVEY §2.10 extension — TRACK-LEVEL trajectory similarity (round 14):
@@ -105,10 +110,10 @@ object Trajectory extends QueryGroup {
   }
 
   /** The memoized tracks and their pair count, once [[exactPairsGate]]
-    * admits it (one count job on the memoized frame). */
+    * admits it (no job when the memo is pinned on the driver). */
   private def gatedTracks(s: SparkSession, dir: String, key: String): (DataFrame, Long) = {
     val tr = tracks(s, dir)
-    (tr, exactPairsGate(s.sparkContext.defaultParallelism, key, tr.count()))
+    (tr, exactPairsGate(s.sparkContext.defaultParallelism, key, Endgame.size(tr)))
   }
 
   /** Great-circle km between the two sides' `end` ("h" head or "t" tail)
@@ -122,28 +127,186 @@ object Trajectory extends QueryGroup {
       asin(least(sqrt(c2) / lit(2.0), lit(1.0)))
   }
 
-  /** The one threshold-prune path of the exact top-10 track keys: the
-    * REPOSE (ICDE 2021) seed-threshold-then-prune design, written once.
-    * A metric supplies only its columns. `extra` names the main pass's
-    * per-side columns beyond `n_a`/`ta` (n_fixes and track), suffixed
-    * with the side "a" or "b". `seed` and `proxy` are the light seed
-    * scan's side columns and its ranking, smallest first. `exact` is the
+  /** One seed of [[topPairs]]: the light pair scan's per-side columns and
+    * its ranking, smallest first. `byCells` marks the shared-cell ranking
+    * ([[cellSeed]]), whose winners the driver can also find from an
+    * inverted index ([[cellWinners]]). */
+  private[graft] final case class Seed(side: String => Seq[Column], proxy: Column,
+                                       byCells: Boolean = false)
+
+  /** One exact top-10 track metric, as [[topPairs]] runs it. `extra`
+    * names the main pass's per-side columns beyond `n_a`/`ta` (n_fixes
+    * and track), suffixed with the side "a" or "b". `exact` is the
     * unrounded value over the main-pass columns, and `bound` the pair
     * predicate at a margined threshold. `out` lists the output columns
     * after (u1, u2, n_a, n_b); its last one ranks the result, ascending
-    * for distances and descending for similarities.
+    * for distances and descending for similarities. */
+  private[graft] final case class PairMetric(extra: String => Seq[Column], seed: Seed,
+                                             exact: Column, bound: Double => Column,
+                                             out: Seq[(String, Column)], ascending: Boolean) {
+    def side(tr: DataFrame, ab: String, cols: String => Seq[Column]): DataFrame =
+      tr.select((col("user_id").as(if (ab == "a") "u1" else "u2") +: cols(ab)): _*)
+    def main(ab: String): Seq[Column] =
+      col("n_fixes").as(s"n_$ab") +: col("track").as(s"t$ab") +: extra(ab)
+    def best(c: Column): Column = if (ascending) c.asc else c.desc
+  }
+
+  /** Seed pairs whose exact value sets the threshold. */
+  private val SeedPairs = 2000
+
+  /** The broadcast pair join of `m`'s two sides over `cols`, `u1 < u2`
+    * first in its condition; the streamed side round-robin repartitioned
+    * ([[topPairs]]' last bullet). */
+  private def pairs(s: SparkSession, tr: DataFrame, m: PairMetric,
+                    cols: String => Seq[Column], cond: Option[Column]): DataFrame =
+    m.side(tr, "a", cols).repartition(s.sparkContext.defaultParallelism)
+      .join(broadcast(m.side(tr, "b", cols)), cond.foldLeft(col("u1") < col("u2"))(_ && _))
+
+  /** The light seed scan in Spark: the [[SeedPairs]] pairs of smallest
+    * proxy, as (u1, u2) in the order (proxy, u1, u2). */
+  private[graft] def lightWinners(s: SparkSession, tr: DataFrame, m: PairMetric): DataFrame =
+    pairs(s, tr, m, m.seed.side, None)
+      .select(col("u1"), col("u2"), m.seed.proxy.as("px"))
+      .orderBy(col("px"), col("u1"), col("u2")).limit(SeedPairs)
+      .select("u1", "u2")
+
+  /** The seed threshold `thr` of [[topPairs]]: the 10th-best exact value
+    * over the seed's winners. With the tracks pinned on the driver
+    * (BIGINT user ids, outside [[graft.operators.Endgame.distributed]])
+    * it is found there: the winners come from [[cellWinners]] or the
+    * collected [[lightWinners]], and their exact values from one
+    * projection over a driver-built `LocalRelation` of their two sides'
+    * pinned rows, which `ConvertToLocalRelation` evaluates with no job,
+    * calling the same kernels as generated code. Otherwise, or when the
+    * cell index is past its gate, Spark runs the whole seed: the light
+    * scan, two broadcast joins attaching the tracks, the exact kernel,
+    * the top-10 and its aggregate. */
+  private[graft] def seedThreshold(s: SparkSession, tr: DataFrame, m: PairMetric): Double = {
+    import s.implicits._
+    val onDriver = for {
+      a <- Endgame.held(m.side(tr, "a", m.main), TrackWeight)
+      b <- Endgame.held(m.side(tr, "b", m.main), TrackWeight)
+      if tr.schema("user_id").dataType == LongType
+      winners <- if (m.seed.byCells) cellWinners(tr)
+                 else Some(lightWinners(s, tr, m).as[(Long, Long)].collect().toSeq)
+      v <- exactOnDriver(s, a, b, winners, m.exact)
+    } yield tenth(v, m.ascending)
+    onDriver.getOrElse {
+      lightWinners(s, tr, m)
+        .join(broadcast(m.side(tr, "a", m.main)), Seq("u1"))
+        .join(broadcast(m.side(tr, "b", m.main)), Seq("u2"))
+        .select(m.exact.as("v"))
+        .orderBy(m.best(col("v"))).limit(10)
+        .agg((if (m.ascending) max(col("v")) else min(col("v"))).as("t"))
+        .select(coalesce(col("t"), lit(if (m.ascending) Double.MaxValue else -1.0)))
+        .head().getDouble(0)
+    }
+  }
+
+  /** `exact` over each winner's two sides, on the driver: the winner's
+    * side-a and side-b rows (keyed by their first column, the user id)
+    * joined positionally into one `LocalRelation`; `None` if the
+    * projection did not fold into a `LocalRelation`. A NULL value reads
+    * `None`. */
+  private def exactOnDriver(s: SparkSession, a: LocalRelation, b: LocalRelation,
+                            winners: Seq[(Long, Long)], exact: Column): Option[Seq[Option[Double]]] = {
+    def byUser(l: LocalRelation) =
+      l.data.iterator.filterNot(_.isNullAt(0)).map(r => r.getLong(0) -> r).toMap
+    val (ra, rb) = (byUser(a), byUser(b))
+    val joined = LocalRelation(a.output ++ b.output,
+      winners.map { case (u1, u2) => new JoinedRow(ra(u1), rb(u2)) })
+    Endgame.held(GraftFrames.frame(s, joined).select(exact.as("v")))
+      .map(_.data.map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))))
+  }
+
+  /** `orderBy(best(v)).limit(10)`, then max (ascending) or min
+    * (descending) of v, then `coalesce` to the unbounded threshold, in
+    * Scala with Spark's ordering: NULL first ascending and last
+    * descending, NaN above every number, and -0.0 equal to 0.0 (which of
+    * the two an aggregate returns is moot: `thr` only ever gets the ±1e-4
+    * margin added). */
+  private def tenth(vs: Seq[Option[Double]], ascending: Boolean): Double = {
+    val sparkOrder: Ordering[Double] = (x, y) => if (x == y) 0 else java.lang.Double.compare(x, y)
+    val nums = vs.flatten.sorted(sparkOrder)
+    val top =
+      if (ascending) nums.take(10 - math.min(10, vs.count(_.isEmpty)))
+      else nums.reverse.take(10)
+    top.lastOption.getOrElse(if (ascending) Double.MaxValue else -1.0)
+  }
+
+  /** The cell seed's [[SeedPairs]] winners on the driver, in the Spark
+    * seed's order (−shared cells, u1, u2), from a cell → users inverted
+    * index over the pinned tracks' distinct `cells`: every pair sharing a
+    * cell is one packed (rank(u1), rank(u2)) long per shared cell, and a
+    * sorted run's length is the pair's shared-cell count, `cell_hits`.
+    * Fewer than [[SeedPairs]] such pairs are filled with the smallest
+    * zero-hit (u1, u2) pairs in order, as the Spark seed's ranking does.
+    * NULL user ids are dropped: `u1 < u2` never holds for them. `None`
+    * when the tracks are not pinned on the driver, or when the pair work
+    * Σ_c C(n_c, 2) over the cells' user counts n_c is past the budget (a
+    * hot cell at scale). At sf0.1 that work is 223,760 longs against
+    * 1,124,250 pairs. */
+  private[graft] def cellWinners(tr: DataFrame): Option[Seq[(Long, Long)]] =
+    Endgame.held(tr.select(col("user_id"), col("cells")), TrackWeight).flatMap { rel =>
+      val users = rel.data.filterNot(_.isNullAt(0)).sortBy(_.getLong(0))
+      val ids = users.map(_.getLong(0)).toArray
+      val n = ids.length.toLong
+      val cells = users.map(_.getArray(1).toIntArray()).toArray
+      // postings as CSR over the cell ids (row << 8 | col < NRow << 8);
+      // ranks enter each list ascending
+      val width = graft.functions.TrajSketch.NRow << 8
+      val start = new Array[Int](width + 1)
+      for (cs <- cells; c <- cs) start(c + 1) += 1
+      for (c <- 0 until width) start(c + 1) += start(c)
+      val work = (0 until width).map { c => val k = (start(c + 1) - start(c)).toLong; k * (k - 1) / 2 }.sum
+      if (!Endgame.local(work)) None else {
+        val post = new Array[Int](start(width))
+        val fill = start.clone()
+        for (r <- cells.indices; c <- cells(r)) { post(fill(c)) = r; fill(c) += 1 }
+        val packed = new Array[Long](work.toInt)
+        var k = 0
+        for (c <- 0 until width; i <- start(c) until start(c + 1); j <- i + 1 until start(c + 1)) {
+          packed(k) = post(i) * n + post(j); k += 1
+        }
+        java.util.Arrays.sort(packed)
+        // distinct pairs ascending (= (u1, u2) order) and their run lengths
+        val pk = new Array[Long](packed.length)
+        val hits = new Array[Int](packed.length)
+        var d = 0
+        for (p <- packed) {
+          if (d > 0 && pk(d - 1) == p) hits(d - 1) += 1
+          else { pk(d) = p; hits(d) = 1; d += 1 }
+        }
+        // most hits first, then pair order: index order within equal hits
+        val byHits = Array.tabulate(d)(i => ((Int.MaxValue - hits(i)).toLong << 32) | i)
+        java.util.Arrays.sort(byHits)
+        val hit = byHits.iterator.take(SeedPairs).map(key => pk((key & 0xffffffffL).toInt))
+        val zero = Iterator.range(0L, n).flatMap(r1 => Iterator.range(r1 + 1, n).map(r1 * n + _))
+          .filter(p => java.util.Arrays.binarySearch(pk, 0, d, p) < 0)
+        Some((hit ++ zero).take(SeedPairs).map(p => (ids((p / n).toInt), ids((p % n).toInt))).toSeq)
+      }
+    }
+
+  /** The one threshold-prune path of the exact top-10 track keys: the
+    * REPOSE (ICDE 2021) seed-threshold-then-prune design, written once.
+    * A metric supplies only its columns ([[PairMetric]]).
     *
     * Why the output equals the all-pairs scan's (written for ascending;
     * descending mirrors it with min for max and the margin's sign
     * flipped):
-    *  - SEED: one light pair scan keeps the 2000 pairs of smallest
-    *    `proxy`, and `thr` is the 10th-smallest EXACT value among them. Any
-    *    ≥10-pair subset's 10th-smallest is ≥ the global d₁₀, so the
-    *    proxy decides how tight thr is, never whether it is valid. 2000
-    *    kernel calls are noise next to one pair scan and bring thr near
-    *    d₁₀ (the r15 probe measured 50-pair seeds leaving 30–100× more
-    *    survivors). With fewer than 10 pairs the seed holds them all and
-    *    thr is their maximum; with none, `coalesce` leaves it unbounded.
+    *  - SEED ([[seedThreshold]]): the light seed ranking keeps the 2000
+    *    pairs of smallest `proxy`, and `thr` is the 10th-smallest EXACT
+    *    value among them. Any ≥10-pair subset's 10th-smallest is ≥ the
+    *    global d₁₀, so the proxy decides how tight thr is, never whether
+    *    it is valid. 2000 kernel calls are noise next to one pair scan
+    *    and bring thr near d₁₀ (the r15 probe measured 50-pair seeds
+    *    leaving 30–100× more survivors). With fewer than 10 pairs the
+    *    seed holds them all and thr is their maximum; with none,
+    *    `coalesce` leaves it unbounded. With the tracks pinned the seed
+    *    finishes on the driver with the same winners in the same order
+    *    and the same doubles (the same kernels over the same rows, and
+    *    Spark's ordering written out in [[tenth]]), so thr is the Spark
+    *    seed's to the bit (TrajectorySpec compares the two paths).
     *  - MAIN: one broadcast pair join whose condition is `u1 < u2` FIRST
     *    and then `bound(thr + 1e-4)`, which must hold for every pair
     *    whose exact value is ≤ thr + 1e-4. Ten seed pairs lie within
@@ -168,37 +331,17 @@ object Trajectory extends QueryGroup {
     *    with the tracks' window exchange and then coalesced anyway.
     * With `prune = false` the same main pass runs with no seed, no bound
     * and no observe: the direct all-pairs scan. */
-  private def topPairs(s: SparkSession, tr: DataFrame, extra: String => Seq[Column],
-                       seed: String => Seq[Column], proxy: Column, exact: Column,
-                       bound: Double => Column, out: Seq[(String, Column)],
-                       ascending: Boolean, prune: Boolean = true): DataFrame = {
-    def side(ab: String, cols: String => Seq[Column]) =
-      tr.select((col("user_id").as(if (ab == "a") "u1" else "u2") +: cols(ab)): _*)
-    def pairs(cols: String => Seq[Column], cond: Option[Column]) =
-      side("a", cols).repartition(s.sparkContext.defaultParallelism)
-        .join(broadcast(side("b", cols)), cond.foldLeft(col("u1") < col("u2"))(_ && _))
-    def main(ab: String) =
-      col("n_fixes").as(s"n_$ab") +: col("track").as(s"t$ab") +: extra(ab)
-    def best(c: Column) = if (ascending) c.asc else c.desc
+  private def topPairs(s: SparkSession, tr: DataFrame, m: PairMetric,
+                       prune: Boolean = true): DataFrame = {
     val cond = if (!prune) None else {
-      val thr = pairs(seed, None)
-        .select(col("u1"), col("u2"), proxy.as("px"))
-        .orderBy(col("px"), col("u1"), col("u2")).limit(2000)
-        .select("u1", "u2")
-        .join(broadcast(side("a", main)), Seq("u1"))
-        .join(broadcast(side("b", main)), Seq("u2"))
-        .select(exact.as("v"))
-        .orderBy(best(col("v"))).limit(10)
-        .agg((if (ascending) max(col("v")) else min(col("v"))).as("t"))
-        .select(coalesce(col("t"), lit(if (ascending) Double.MaxValue else -1.0)))
-        .head().getDouble(0)
-      Some(bound(if (ascending) thr + 1e-4 else thr - 1e-4))
+      val thr = seedThreshold(s, tr, m)
+      Some(m.bound(if (m.ascending) thr + 1e-4 else thr - 1e-4))
     }
-    val scan = pairs(main, cond)
+    val scan = pairs(s, tr, m, m.main, cond)
     val kept = if (prune) scan.observe("prune", count(lit(1)).as("survivors")) else scan
-    out.foldLeft(kept) { case (df, (name, c)) => df.withColumn(name, c) }
-      .select((Seq("u1", "u2", "n_a", "n_b") ++ out.map(_._1)).map(col): _*)
-      .orderBy(best(col(out.last._1)), col("u1"), col("u2"))
+    m.out.foldLeft(kept) { case (df, (name, c)) => df.withColumn(name, c) }
+      .select((Seq("u1", "u2", "n_a", "n_b") ++ m.out.map(_._1)).map(col): _*)
+      .orderBy(m.best(col(m.out.last._1)), col("u1"), col("u2"))
       .limit(10)
   }
 
@@ -209,11 +352,13 @@ object Trajectory extends QueryGroup {
     * as a tracks column it measured 2.2 MB more live heap. A low
     * distance needs shared ε-neighbourhoods, so the most-overlapping
     * pairs are good threshold candidates; the r15 lesson is never to
-    * carry track payloads through the seed's TakeOrdered heap. */
-  private def cellSeed(ab: String) =
-    if (ab == "a") Seq(col("cells").as("ca"))
-    else Seq(TrajSketchFns.cellBits(col("cells")).as("bb"))
-  private def cellProxy = -TrajSketchFns.cellHits(col("ca"), col("bb"))
+    * carry track payloads through the seed's TakeOrdered heap. With the
+    * tracks pinned, the driver finds the same winners from a cell → users
+    * index instead ([[cellWinners]]), with no pair scan. */
+  private def cellSeed = Seed(
+    ab => if (ab == "a") Seq(col("cells").as("ca"))
+          else Seq(TrajSketchFns.cellBits(col("cells")).as("bb")),
+    -TrajSketchFns.cellHits(col("ca"), col("bb")), byCells = true)
 
   /** m_traj_frechet's only path. Seed and first bound: the endpoint chord
     * lb = max(head chord, tail chord) ≤ dF, since every coupling pairs
@@ -225,17 +370,18 @@ object Trajectory extends QueryGroup {
     * pairs the endpoint bound cannot exclude. sf0.1 on a 4-core host
     * (1,124,250 pairs): the direct all-pairs DP this replaced ran
     * 41.6–47.0 task-CPU s, this path 3.9–6.4 s, with the same top-10. */
-  private[graft] def frechetPruned(s: SparkSession, tr: DataFrame): DataFrame = {
-    import s.implicits._
+  private[graft] def frechet: PairMetric = {
     def ends(ab: String) =
       Seq("hx", "hy", "hz", "tx", "ty", "tz").map(c => col(c).as(c + ab))
     val lb = greatest(endChordKm("h"), endChordKm("t"))
-    topPairs(s, tr, extra = ends, seed = ends, proxy = lb,
-      exact = TrajSim.frechetKm($"ta", $"tb"),
-      bound = t => lb <= t && TrajSim.frechetKmCapped($"ta", $"tb", lit(t)) <= t,
-      out = Seq("frechet_km" -> round(TrajSim.frechetKm($"ta", $"tb"), 4)),
+    PairMetric(extra = ends, seed = Seed(ends, lb),
+      exact = TrajSim.frechetKm(col("ta"), col("tb")),
+      bound = t => lb <= t && TrajSim.frechetKmCapped(col("ta"), col("tb"), lit(t)) <= t,
+      out = Seq("frechet_km" -> round(TrajSim.frechetKm(col("ta"), col("tb")), 4)),
       ascending = true)
   }
+  private[graft] def frechetPruned(s: SparkSession, tr: DataFrame): DataFrame =
+    topPairs(s, tr, frechet)
 
   /** m_traj_hausdorff's only path: the cell-overlap seed, and the CAPPED
     * exact kernel ([[graft.functions.HausdorffCapped]]) as the bound. It
@@ -247,15 +393,19 @@ object Trajectory extends QueryGroup {
     * kernel and keeps 974 pairs. The key's traced task CPU fell from
     * 9.3 s to 3.4 s with the capped kernel, and from 3.6–4.2 s to
     * 2.2–2.8 s (warm passes) once the kernels read tracks in place and
-    * the seed looked up bits instead of merging. */
-  private[graft] def hausdorffPruned(s: SparkSession, tr: DataFrame): DataFrame = {
-    import s.implicits._
-    topPairs(s, tr, extra = _ => Nil, seed = cellSeed, proxy = cellProxy,
-      exact = TrajSim.hausdorffKm($"ta", $"tb"),
-      bound = t => TrajSim.hausdorffKmCapped($"ta", $"tb", lit(t)) <= t,
-      out = Seq("hausdorff_km" -> round(TrajSim.hausdorffKm($"ta", $"tb"), 4)),
+    * the seed looked up bits instead of merging. With the tracks pinned
+    * the seed finishes on the driver ([[cellWinners]], then 2000 exact
+    * kernels over a `LocalRelation`): the traced warm pass runs 3 jobs
+    * instead of 9, none of them while the frame is built (6 before), and
+    * its construction takes 0.12 s instead of 0.50–0.56 s. */
+  private[graft] def hausdorff: PairMetric =
+    PairMetric(extra = _ => Nil, seed = cellSeed,
+      exact = TrajSim.hausdorffKm(col("ta"), col("tb")),
+      bound = t => TrajSim.hausdorffKmCapped(col("ta"), col("tb"), lit(t)) <= t,
+      out = Seq("hausdorff_km" -> round(TrajSim.hausdorffKm(col("ta"), col("tb")), 4)),
       ascending = true)
-  }
+  private[graft] def hausdorffPruned(s: SparkSession, tr: DataFrame): DataFrame =
+    topPairs(s, tr, hausdorff)
 
   /** m_traj_lcss's only path, a MAXIMIZATION: the shared near-count
     * kernel ([[graft.functions.TrajSketch.nearCounts]]) gives the EXACT
@@ -266,21 +416,21 @@ object Trajectory extends QueryGroup {
     * kernel, ≡ the full cap² DP on every input. sf0.1 on a 4-core host:
     * the direct scan this replaced ran 13.0–14.6 task-CPU s, this path
     * 8.0–10.6 s, with the same top-10. */
-  private[graft] def lcssPruned(s: SparkSession, tr: DataFrame): DataFrame = {
-    import s.implicits._
-    def norm = least(least($"n_a", $"n_b"), lit(TrackCap.toLong))
-    val ub = TrajSketchFns.lcssUb($"sa", $"db", $"sb", $"da") / norm
-    topPairs(s, tr,
-      extra = ab => Seq($"pb".as(s"s$ab"), $"dil".as(s"d$ab")),
-      seed = ab => Seq($"pb".as(s"s$ab"), $"dil".as(s"d$ab"), $"n_fixes".as(s"n_$ab")),
-      proxy = -ub,
-      exact = TrajSketchFns.lcssSparse($"sa", $"ta", $"sb", $"tb", MatchEpsKm) / norm,
+  private[graft] def lcss: PairMetric = {
+    def norm = least(least(col("n_a"), col("n_b")), lit(TrackCap.toLong))
+    def matches = TrajSketchFns.lcssSparse(col("sa"), col("ta"), col("sb"), col("tb"), MatchEpsKm)
+    val ub = TrajSketchFns.lcssUb(col("sa"), col("db"), col("sb"), col("da")) / norm
+    PairMetric(
+      extra = ab => Seq(col("pb").as(s"s$ab"), col("dil").as(s"d$ab")),
+      seed = Seed(ab => Seq(col("pb").as(s"s$ab"), col("dil").as(s"d$ab"),
+        col("n_fixes").as(s"n_$ab")), -ub),
+      exact = matches / norm,
       bound = t => ub >= t,
-      out = Seq(
-        "n_match" -> TrajSketchFns.lcssSparse($"sa", $"ta", $"sb", $"tb", MatchEpsKm),
-        "lcss" -> round($"n_match" * lit(1.0) / norm, 4)),
+      out = Seq("n_match" -> matches, "lcss" -> round(col("n_match") * lit(1.0) / norm, 4)),
       ascending = false)
   }
+  private[graft] def lcssPruned(s: SparkSession, tr: DataFrame): DataFrame =
+    topPairs(s, tr, lcss)
 
   /** m_traj_edr's two paths: with `prune` the cell-overlap seed and the
     * FREE length-difference bound n_edits ≥ |n − m| (every unmatched
@@ -305,32 +455,54 @@ object Trajectory extends QueryGroup {
     * equal-length pairs, thr ≈ 0.94, survivors 100%). The d₁₀ ≈ 1 100×-U
     * wall has no exact escape; the threshold/corridor query form rides
     * [[graft.operators.TrajLsh.edrThresholdPairs]] instead. */
-  private[graft] def edrTop(s: SparkSession, tr: DataFrame, prune: Boolean): DataFrame = {
-    import s.implicits._
+  private[graft] def edr: PairMetric = {
     // normalize by the longer DOWNSAMPLED track: its exact point count is
     // size(track)/3 (stride rounding makes it ≤ cap, not always min(n, cap))
-    def longer = greatest(size($"ta"), size($"tb"))
-    def edits = TrajSketchFns.edrSparse($"sa", $"ta", $"sb", $"tb", MatchEpsKm)
-    topPairs(s, tr, extra = ab => Seq($"pb".as(s"s$ab")),
-      seed = cellSeed, proxy = cellProxy,
+    def longer = greatest(size(col("ta")), size(col("tb")))
+    def edits = TrajSketchFns.edrSparse(col("sa"), col("ta"), col("sb"), col("tb"), MatchEpsKm)
+    PairMetric(extra = ab => Seq(col("pb").as(s"s$ab")), seed = cellSeed,
       exact = edits * lit(3.0) / longer,
-      bound = t => abs(size($"ta") - size($"tb")).cast("double") / longer <= t,
+      bound = t => abs(size(col("ta")) - size(col("tb"))).cast("double") / longer <= t,
       out = Seq("n_edits" -> edits,
-        "edr" -> round($"n_edits" * lit(3.0) / longer, 4)),
-      ascending = true, prune = prune)
+        "edr" -> round(col("n_edits") * lit(3.0) / longer, 4)),
+      ascending = true)
   }
+  private[graft] def edrTop(s: SparkSession, tr: DataFrame, prune: Boolean): DataFrame =
+    topPairs(s, tr, edr, prune)
 
   /** One row per user: (user_id, n_fixes, track) where track is the
     * interleaved [x0, y0, z0, x1, ...] unit-vector array of the ≤ TrackCap
     * downsampled time-ordered fixes. The rank/stride arithmetic is integer-
     * exact (no FP ever picks a point), so reruns and both DP keys see
-    * bit-identical tracks. Memoized per (session, SF) with a lazy local
-    * checkpoint (the cellMoves idiom): both DP keys and repeated runs
-    * share one window+aggregate derivation instead of recomputing the
-    * data-sized pass per key side. */
+    * bit-identical tracks. Memoized per (session, SF) and pinned
+    * ([[graft.operators.Endgame.pin]] at [[TrackWeight]]): below the
+    * budget a driver-resident `LocalRelation` of the checkpoint's
+    * `UnsafeRow`s, so every track key and repeated run share one
+    * window+aggregate derivation, the pair-count gate reads its length
+    * with no job, and the top-10 seeds finish on the driver; above it the
+    * eager local checkpoint. */
   private val tracksMemo = new graft.SessionMemo[String, DataFrame]
   private[graft] def tracks(s: SparkSession, dir: String): DataFrame =
-    tracksMemo.getOrCompute(s, dir) { buildTracks(s, dir).localCheckpoint(eager = false) }
+    tracksMemo.getOrCompute(s, dir) { Endgame.pin(buildTracks(s, dir), TrackWeight) }
+
+  /** Budget rows one pinned track row weighs. Measured at sf0.1: the
+    * 1,500 pinned `UnsafeRow`s hold 4,115 B each on average (5,136 B at
+    * most): the 64-fix track, its lat/lon, cell and packed-cell arrays,
+    * the 162-word dilation bitmap and the scalars. With the row object
+    * and its byte array's header (~56 B, estimated) that is ~4,170 B, or
+    * 42 budget rows of ~100 B ([[graft.operators.Endgame]]), so at most
+    * [[graft.operators.Endgame.Budget]] / 42 ≈ 25,000 users pin, near
+    * 104 MB of driver heap (estimated from the per-row figure, not
+    * measured at that size). */
+  private[graft] val TrackWeight = 42L
+
+  /** The memoized tracks for a per-user kernel (map matching, TRACLUS
+    * partitioning): a distributed scan of the pinned rows, so the kernel
+    * runs in the executed plan's tasks. Over the `LocalRelation` itself
+    * Spark's `ConvertToLocalRelation` would evaluate the kernel's
+    * projection on the driver while optimizing. */
+  private def trackScan(s: SparkSession, dir: String): DataFrame =
+    GraftFrames.scan(tracks(s, dir))
 
   private def buildTracks(s: SparkSession, dir: String): DataFrame =
     tracksFromPoints(s,
@@ -463,7 +635,7 @@ object Trajectory extends QueryGroup {
     // and planted crossing corridors separate with noise staying noise.
     "m_traj_traclus" -> ((s, dir) => {
       import s.implicits._
-      val segs = graft.operators.Traclus.partition(s, tracks(s, dir))
+      val segs = graft.operators.Traclus.partition(s, trackScan(s, dir))
       graft.operators.Traclus.run(s, segs, epsKm = 1000.0, minLns = 3,
           minUsers = 2, maxSegKm = 2500.0)
         .filter($"cluster" >= 0L)
@@ -513,7 +685,7 @@ object Trajectory extends QueryGroup {
     // planted-walk recovery, and the gross-outlier correction.
     "m_traj_mapmatch" -> ((s, dir) => {
       import s.implicits._
-      tracks(s, dir)
+      trackScan(s, dir)
         .withColumn("noisy", expr(
           """flatten(transform(sequence(0, size(ll) div 2 - 1), i -> array(
             |  ll[2*i]   + (pmod(xxhash64(user_id, i), 91) - 45) / 1000.0d,

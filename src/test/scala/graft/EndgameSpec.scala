@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Endgame
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
 import org.apache.spark.sql.functions.when
 import org.apache.spark.sql.execution.LogicalRDD
@@ -116,12 +117,18 @@ class EndgameSpec extends BaseSpec {
 
   test("pin rebuilds a small distributed frame as a LocalRelation, same rows in order") {
     // a descending sort over three range partitions: row order is the
-    // sort's, not the input's, so a reordering pin shows
-    val df = spark.range(0, 60, 1, 3).selectExpr("id", "id % 7 AS m")
+    // sort's, not the input's, so a reordering pin shows; the array and
+    // string columns show that the held rows are the checkpoint's
+    // UnsafeRows, not external rows converted back
+    val df = spark.range(0, 60, 1, 3)
+      .selectExpr("id", "id % 7 AS m", "array(id * 0.5, id * 1.5) AS xs",
+        "sequence(0, id % 5) AS ks", "CAST(id AS STRING) AS s")
       .orderBy($"m".desc, $"id")
     assert(!isLocal(df))
     val pinned = Endgame.pin(df)
     assert(isLocal(pinned))
+    assert(pinned.queryExecution.optimizedPlan.asInstanceOf[LocalRelation].data
+      .forall(_.isInstanceOf[UnsafeRow]))
     assert(pinned.schema == df.schema)
     assert(pinned.collect().toSeq == df.collect().toSeq)
   }
@@ -134,5 +141,32 @@ class EndgameSpec extends BaseSpec {
     val local = Endgame.distributed(Endgame.pin(pairs(30)))
     assert(local.queryExecution.optimizedPlan.isInstanceOf[LogicalRDD])
     assert(local.collect().toSeq == pairs(30).collect().toSeq)
+  }
+
+  test("pin weighs each row: weight × rows at the budget pins, one more is distributed") {
+    val df = spark.range(0, 64, 1, 4).selectExpr("id", "id * 3 AS v")
+    val w = Endgame.Budget / 64
+    assert(isLocal(Endgame.pin(df, weight = w)))
+    assert(Endgame.pin(df, weight = w + 1).queryExecution.optimizedPlan.isInstanceOf[LogicalRDD])
+    // a driver-resident frame: kept as is at the boundary, checkpointed past it
+    val local = pairs(64)
+    assert(Endgame.pin(local, weight = w) eq local)
+    assert(Endgame.pin(local, weight = w + 1).queryExecution.optimizedPlan.isInstanceOf[LogicalRDD])
+  }
+
+  test("a pin's first touch runs at most two jobs and releases its checkpoint") {
+    def cached() = spark.sparkContext.getRDDStorageInfo.filter(_.numCachedPartitions > 0).map(_.id).toSet
+    val df = spark.range(0, 500, 1, 4).selectExpr("id", "array(id, id + 1) AS xs")
+    val before = cached()
+    var pinned: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring { pinned = Endgame.pin(df) }
+    assert(jobs <= 2, s"first touch ran $jobs jobs")
+    assert(isLocal(pinned))
+    assert(cached() -- before == Set.empty, "the rebuilt pin kept its checkpoint's blocks")
+    // above the budget the checkpoint is the memo value, blocks and all
+    val held = Endgame.pin(df, weight = Endgame.Budget)
+    assert(held.queryExecution.optimizedPlan.isInstanceOf[LogicalRDD])
+    assert((cached() -- before).nonEmpty)
+    assert(held.count() == 500)
   }
 }

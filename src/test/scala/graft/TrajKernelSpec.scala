@@ -332,5 +332,40 @@ class TrajKernelSpec extends BaseSpec {
     assert(outside.isEmpty, outside.map { case (f, i, _, l) => s"$f:${i + 1}: $l" }
       .mkString("array copy outside FrechetDist.unsafeTrack:\n", "\n", ""))
     assert(all.count(_._3) == 1, s"FrechetDist.unsafeTrack must hold the one copy: $all")
+    // and no track is read through the virtual getter: every coordinate
+    // read is Platform.getDouble on the normalized track
+    val getter = """(?<!Platform)\.getDouble\(""".r
+    val virtual = for (f <- files; (l, i) <- Files.readAllLines(f).asScala.zipWithIndex
+                       if !l.trim.startsWith("*") && !l.trim.startsWith("//") &&
+                          getter.findFirstIn(l).isDefined) yield s"$f:${i + 1}: ${l.trim}"
+    assert(virtual.isEmpty, virtual.mkString("virtual getDouble on a track:\n", "\n", ""))
+  }
+
+  /** The tracks() `pb` column of a unit-vector track: (cell << 32 | fix)
+    * ascending, each fix's cell from its own coordinates. */
+  private def packedCells(xs: Array[Double]): ArrayData =
+    ArrayData.toArrayData(Array.tabulate(xs.length / 3) { i =>
+      val lat = math.toDegrees(math.asin(xs(3 * i + 2)))
+      val lon = math.toDegrees(math.atan2(xs(3 * i + 1), xs(3 * i)))
+      (TrajSketch.cellId(lat, lon).toLong << 32) | i.toLong
+    }.sorted)
+
+  test("sparse LCSS/EDR read tracks in place and equal the full DPs on rows, primitive and generic arrays") {
+    // the same lengths as the dense kernels' matrix: 1 × 63 points and
+    // below take the full-matrix fallback, 63 × 63 and above the sparse
+    // ε-match search
+    val lengths = Seq(3, 189, 192, 195)
+    for (la <- lengths; lb <- lengths; rep <- 0 until 2) {
+      val from = start()
+      val (a, b) = (track(la, from), track(lb, if (rep == 0) from else start()))
+      val (pa, pb) = (packedCells(a), packedCells(b))
+      val (lcss, edr) = (Copied.lcss(a, b, 900.0), Copied.edr(a, b, 900.0))
+      for ((kind, ua, ub) <- kinds(a, b)) {
+        assert(TrajSketch.lcssSparse(pa, ua, pb, ub, 900.0) == lcss,
+          s"lcss_sparse on $kind arrays of $la, $lb doubles")
+        assert(TrajSketch.edrSparse(pa, ua, pb, ub, 900.0) == edr,
+          s"edr_sparse on $kind arrays of $la, $lb doubles")
+      }
+    }
   }
 }

@@ -361,41 +361,140 @@ class TrajectorySpec extends BaseSpec {
     assert(gotH == wantH, s"hausdorff top-10:\n got=$gotH\nwant=$wantH")
   }
 
-  test("every track top-10 path matches the all-pairs reference on fewer than 10 pairs and on tied clones") {
+  /** Planted inputs of the top-10 paths, as raw fixes: (a) four users,
+    * six pairs: the seed holds every pair, thr is the largest value, and
+    * every pair survives; (b) three routes cloned five times each (30
+    * zero-distance pairs, LCSS 1.0) among four other users: thr is 0
+    * (LCSS: 1.0), and the 20 clone pairs outside the top-10 tie with it. */
+  private lazy val planted: Seq[(String, Seq[(Long, Long, Long, Double, Double)])] = {
     val rnd = new scala.util.Random(17)
     def walk(u: Long, n: Int, lat0: Double, lon0: Double) =
       (0 until n).map(i => (u, i * 60000000L, u * 1000L + i,
         lat0 + rnd.nextInt(40) / 10.0, lon0 + rnd.nextInt(40) / 10.0))
-    // (a) four users, six pairs: the seed holds every pair, thr is the
-    // largest value, and every pair survives
     val few = Seq(walk(1, 7, 10, 20), walk(2, 12, 11, 21), walk(3, 30, 40, -60),
       walk(4, 3, 10.5, 20.5)).flatten
-    // (b) three routes cloned five times each (30 zero-distance pairs,
-    // LCSS 1.0) among four other users: thr is 0 (LCSS: 1.0), and the 20
-    // clone pairs outside the top-10 tie with it
     val routes = Seq(walk(0, 9, 5, 5), walk(0, 20, -30, 100), walk(0, 64, 50, -10))
     val clones = for ((r, k) <- routes.zipWithIndex; c <- 0 until 5; p <- r)
       yield p.copy(_1 = 10L + 5 * k + c, _3 = p._3 + 1000L * (10 + 5 * k + c))
     val tied = clones ++ Seq(walk(30, 9, 5.2, 5.1), walk(31, 20, -30, 100),
       walk(32, 40, 0, 0), walk(33, 5, 60, 60)).flatten
-    for ((label, fixes) <- Seq("few" -> few, "tied" -> tied)) {
-      val tr = queries.Trajectory.tracksFromPoints(spark,
-        fixes.toDF("user_id", "ts_us", "event_id", "lat", "lon"))
+    Seq("few" -> few, "tied" -> tied)
+  }
+
+  private def fixFrame(fixes: Seq[(Long, Long, Long, Double, Double)]) =
+    fixes.toDF("user_id", "ts_us", "event_id", "lat", "lon")
+
+  test("every track top-10 path matches the all-pairs reference on fewer than 10 pairs and on tied clones") {
+    // on both paths: the default one pins the tracks on the driver, so
+    // every seed finishes there; the forced one keeps the checkpoint and
+    // runs the whole seed in Spark
+    for ((label, fixes) <- planted; distributed <- bothPaths) onPath(distributed) {
+      val tr = graft.operators.Endgame.pin(
+        queries.Trajectory.tracksFromPoints(spark, fixFrame(fixes)), queries.Trajectory.TrackWeight)
+      val path = s"$label (distributed=$distributed)"
       val (wantF, wantL, wantE, wantH) = referenceTop10(fixes)
       val gotF = queries.Trajectory.frechetPruned(spark, tr)
         .as[(Long, Long, Long, Long, Double)].collect().toSeq
-      assert(gotF == wantF, s"$label frechet:\n got=$gotF\nwant=$wantF")
+      assert(gotF == wantF, s"$path frechet:\n got=$gotF\nwant=$wantF")
       val gotH = queries.Trajectory.hausdorffPruned(spark, tr)
         .as[(Long, Long, Long, Long, Double)].collect().toSeq
-      assert(gotH == wantH, s"$label hausdorff:\n got=$gotH\nwant=$wantH")
+      assert(gotH == wantH, s"$path hausdorff:\n got=$gotH\nwant=$wantH")
       val gotL = queries.Trajectory.lcssPruned(spark, tr)
         .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
-      assert(gotL == wantL, s"$label lcss:\n got=$gotL\nwant=$wantL")
+      assert(gotL == wantL, s"$path lcss:\n got=$gotL\nwant=$wantL")
       for (prune <- Seq(true, false)) {
         val gotE = queries.Trajectory.edrTop(spark, tr, prune)
           .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
-        assert(gotE == wantE, s"$label edr (prune=$prune):\n got=$gotE\nwant=$wantE")
+        assert(gotE == wantE, s"$path edr (prune=$prune):\n got=$gotE\nwant=$wantE")
       }
     }
+  }
+
+  /** The four metrics' seeds on `tr` pinned on the driver: the driver's
+    * cell-index winners equal the Spark light scan's, in order, and every
+    * driver threshold equals the Spark seed's (under the forced scope) to
+    * the bit. Returns the pinned tracks. */
+  private def seedsAgree(label: String, tr: org.apache.spark.sql.DataFrame) = {
+    import graft.operators.Endgame
+    val T = queries.Trajectory
+    val pinned = Endgame.pin(tr, T.TrackWeight)
+    assert(Endgame.held(pinned, T.TrackWeight).nonEmpty, s"$label: tracks not pinned")
+    for ((name, m) <- Seq("frechet" -> T.frechet, "hausdorff" -> T.hausdorff,
+                          "lcss" -> T.lcss, "edr" -> T.edr)) {
+      val sparkWinners = T.lightWinners(spark, pinned, m).as[(Long, Long)].collect().toSeq
+      if (m.seed.byCells)
+        assert(T.cellWinners(pinned).forall(_ == sparkWinners),
+          s"$label $name winners:\n driver=${T.cellWinners(pinned)}\n spark=$sparkWinners")
+      val onDriver = T.seedThreshold(spark, pinned, m)
+      val inSpark = Endgame.distributed(T.seedThreshold(spark, pinned, m))
+      assert(java.lang.Double.doubleToRawLongBits(onDriver) ==
+        java.lang.Double.doubleToRawLongBits(inSpark), s"$label $name thr: $onDriver vs $inSpark")
+    }
+    pinned
+  }
+
+  test("the driver seed picks the Spark seed's winners and threshold") {
+    val T = queries.Trajectory
+    // the fixture (the memo is pinned already) and the planted ties
+    val memo = seedsAgree("sf0.001", T.tracks(spark, sf))
+    assert(T.cellWinners(memo).exists(_.size == 105), "sf0.001 has 105 pairs, all in the seed")
+    seedsAgree("tied", T.tracksFromPoints(spark, fixFrame(planted(1)._2)))
+
+    // fewer than 2000 pairs share a cell: 80 users of three fixes each
+    // scattered over the globe (3160 pairs), so zero-hit pairs fill the
+    // seed in (u1, u2) order
+    val rnd = new scala.util.Random(23)
+    val scattered = (1 to 80).flatMap { u =>
+      val (lat, lon) = (rnd.nextInt(1600) / 10.0 - 80, rnd.nextInt(3500) / 10.0 - 175)
+      (0 until 3).map(i => (u.toLong, i * 60000000L, u * 10L + i, lat + i * 0.5, lon + i * 0.5))
+    }
+    val sc = seedsAgree("scattered", T.tracksFromPoints(spark, fixFrame(scattered)))
+    val cellSets = sc.select("user_id", "cells").as[(Long, Seq[Int])].collect()
+    val sharing = cellSets.combinations(2).count { case Array(a, b) => a._2.intersect(b._2).nonEmpty }
+    assert(sharing > 0 && sharing < 2000, s"$sharing pairs share a cell")
+    assert(T.cellWinners(sc).exists(_.size == 2000))
+
+    // a NULL user id: never a seed pair on either path, and the keys agree
+    val withNull = scattered.map(f => (if (f._1 == 7L) None else Some(f._1), f._2, f._3, f._4, f._5))
+      .toDF("user_id", "ts_us", "event_id", "lat", "lon")
+    val nl = seedsAgree("null user", T.tracksFromPoints(spark, withNull))
+    assert(T.cellWinners(nl).exists(_.size == 2000))
+    for (key <- Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+           T.hausdorffPruned(spark, _), T.frechetPruned(spark, _), T.lcssPruned(spark, _),
+           T.edrTop(spark, _, prune = true))) {
+      val rows = key(nl).collect().toSeq
+      assert(rows.size == 10 && rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+      assert(rows == graft.operators.Endgame.distributed(key(nl).collect().toSeq))
+    }
+
+    // one hot cell past the gate: 1,500 users with a fix in one 2.5° cell
+    // is Σ C(n_c, 2) > Budget pair work, so the Spark seed runs
+    val hot = (1 to 1500).flatMap { u =>
+      Seq((u.toLong, 0L, u * 10L, 10.0 + (u % 20) / 10.0, 20.0 + (u % 15) / 10.0),
+        (u.toLong, 60000000L, u * 10L + 1, rnd.nextInt(1600) / 10.0 - 80,
+          rnd.nextInt(3500) / 10.0 - 175))
+    }
+    val hp = graft.operators.Endgame.pin(T.tracksFromPoints(spark, fixFrame(hot)), T.TrackWeight)
+    assert(graft.operators.Endgame.held(hp, T.TrackWeight).nonEmpty)
+    assert(T.cellWinners(hp).isEmpty, "a hot cell past the budget must take the Spark seed")
+    assert(jobsDuring(T.seedThreshold(spark, hp, T.hausdorff)) > 0)
+  }
+
+  test("a warm track top-10 key builds its frame with no job but the light scan") {
+    val T = queries.Trajectory
+    T.tracks(spark, sf) // warm memo
+    def jobs(key: String) = jobsDuring(SparkEntry.queries(key)(spark, sf))
+    // Hausdorff's seed finishes on the driver from the cell index; EDR
+    // runs its direct scan at this size, with no seed at all
+    assert(jobs("m_traj_hausdorff") == 0)
+    assert(jobs("m_traj_edr") == 0)
+    // Fréchet and LCSS collect their light scan's 2000 winners. At this
+    // fixture's 15 users the pair join holds at most 225 rows, under the
+    // limit, so the optimizer drops the limit and plans a global sort:
+    // the round-robin shuffle, the broadcast, the range sample, the sort
+    // shuffle and the result are 5 jobs (at sf0.1 the limit stays and the
+    // scan is a top-k)
+    assert(jobs("m_traj_frechet") == 5)
+    assert(jobs("m_traj_lcss") == 5)
   }
 }
