@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.GraftColumns.{column, expression}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.unsafe.Platform
 
 /** Cell-sketch kernels that make the track-DP family scale past the U²·cap²
   * wall (SURVEY §2.10, round-15): per-fix 2.5° lattice cells turn the LCSS
@@ -67,13 +68,24 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   *    EDR = min over chains of Σ max-gap, a DP over the sparse match set
   *    (O(P²), falling back to the full-matrix kernel when P is dense —
   *    both paths exact, the fallback merely faster at high match density).
-  *  - Hausdorff takes no cell bound: `cell_hits` ([[TrajSketch.cellHits]])
-  *    only picks the seed pairs whose exact distances set the threshold, and
-  *    the capped exact kernel ([[graft.functions.HausdorffCapped]])
-  *    prunes the pair scan itself. On sf0.1 at the key's threshold (one
-  *    thread of a 4-core host) a cell-rectangle lower bound cost
-  *    2.5–3.2 µs per pair and kept 16,595 of 1,124,250 pairs; the capped
-  *    kernel costs 1.45–1.73 µs, keeps 974, and its survivors are exact. */
+  *  - Hausdorff's cell cover: `cell_hits` ([[TrajSketch.cellHits]]) picks
+  *    the seed pairs whose exact distances set the threshold t, and the
+  *    pair scan then tests a cover before the capped exact kernel
+  *    ([[graft.functions.HausdorffCapped]]): every cell of A set in B's
+  *    cells dilated at t (plus a metre), and every cell of B in A's
+  *    ([[TrajSketch.cellsCovered]]). If dH ≤ t every fix lies within t of
+  *    a fix on the other side, and the bound above never exceeds the
+  *    distance of two points, so the cover drops no pair the kernel keeps
+  *    and the kernel still makes every decision. This is not the
+  *    deleted cell-rectangle bound `haus_lb_exceeds`: that one compared
+  *    the two tracks' cells pair by pair through the tables, 2.5–3.2 µs
+  *    per track pair. The cover builds each user's dilation
+  *    once per side and query, and a pair pays one bit lookup per cell,
+  *    out at the first miss. On sf0.1 at the key's threshold (2,861 km,
+  *    one thread of a 4-core host, all 1,124,250 pairs) the cover costs
+  *    0.12–0.18 s (0.10–0.16 µs per pair) and keeps 16,595 pairs; the
+  *    capped kernel alone costs 1.57–1.94 s and keeps 974, and both
+  *    together 0.23–0.27 s with the same 974. */
 object TrajSketch {
 
   private[graft] val CellDeg = 2.5
@@ -109,8 +121,10 @@ object TrajSketch {
 
   /** Per-row table: max column gap dc such that two cells (r1, ·), (r2, ·)
     * at that gap can still hold points within `epsKm` — the cell-range
-    * radius of the ε-match lookup. Computed once per (eps, r1, r2-band). */
-  private final class MatchGeom(epsKm: Double) {
+    * radius of the ε-match lookup and of the dilation bitmaps. Built by
+    * [[geom]]; serializable, since generated code holds it as a reference
+    * object. */
+  private[graft] final class MatchGeom(val epsKm: Double) extends Serializable {
     val epsHav: Double = kmToHavSq(epsKm)
     // row band: |r1-r2| beyond which the row gap alone exceeds eps
     val maxDr: Int = {
@@ -132,13 +146,15 @@ object TrajSketch {
     }
   }
 
-  // eps is a per-key constant (MatchEpsKm); memoize the tables per value
-  private val geoms = new java.util.concurrent.ConcurrentHashMap[Double, MatchGeom]
-  private def geom(epsKm: Double): MatchGeom = {
-    val g = geoms.get(epsKm)
-    if (g != null) g
-    else { val ng = new MatchGeom(epsKm); geoms.putIfAbsent(epsKm, ng); geoms.get(epsKm) }
-  }
+  /** The ε-match radius is the per-key constant
+    * [[graft.queries.Trajectory.MatchEpsKm]]: its tables are built once per
+    * JVM. Any other radius (a library caller's ε, a top-10 threshold)
+    * builds its own tables, which the expression holding it keeps for its
+    * lifetime ([[DilateCellsExpr]]), so no radius accumulates in a
+    * process-wide cache. */
+  private lazy val matchGeom = new MatchGeom(graft.queries.Trajectory.MatchEpsKm)
+  private[graft] def geom(epsKm: Double): MatchGeom =
+    if (epsKm == matchGeom.epsKm) matchGeom else new MatchGeom(epsKm)
 
   /** Per-thread working memory, bounded by TrackCap² = 4096 — no hot-path
     * allocation (the round-15 probe lesson in the file scaladoc). */
@@ -169,13 +185,12 @@ object TrajSketch {
     * per packed entry, each candidate of B with `Platform.getDouble`. */
   private def findMatches(pa: Array[Long], nA: Int, ta: UnsafeArrayData,
                           pb: Array[Long], nB: Int, tb: UnsafeArrayData,
-                          epsKm: Double, out: Array[Long]): Int = {
+                          g: MatchGeom, out: Array[Long]): Int = {
     val ao = ta.getBaseObject
     val aOff = FrechetDist.dataOffset(ta)
     val bo = tb.getBaseObject
     val bOff = FrechetDist.dataOffset(tb)
-    val g = geom(epsKm)
-    val s = 2.0 * math.sin(epsKm / (2.0 * R))
+    val s = 2.0 * math.sin(g.epsKm / (2.0 * R))
     val epsC2 = s * s
     var cnt = 0
     var p = 0
@@ -250,7 +265,13 @@ object TrajSketch {
     * chain in both i and j; per-i snapshot keeps same-i matches from
     * chaining each other). ≡ [[LcssMatches.compute]] on every input. */
   def lcssSparse(pa: ArrayData, a: ArrayData, pb: ArrayData, b: ArrayData,
-                 epsKm: Double): Long = {
+                 epsKm: Double): Long =
+    lcssSparse(pa, a, pb, b, geom(epsKm))
+
+  /** [[lcssSparse]] with the ε tables built by the caller, once. */
+  def lcssSparse(pa: ArrayData, a: ArrayData, pb: ArrayData, b: ArrayData,
+                 g: MatchGeom): Long = {
+    val epsKm = g.epsKm
     checkAligned(pa, a, "lcss_sparse"); checkAligned(pb, b, "lcss_sparse")
     if (pa.numElements() == 0 || pb.numElements() == 0)
       throw new IllegalArgumentException("lcss_sparse: empty track")
@@ -267,7 +288,7 @@ object TrajSketch {
     val paB = copyLongs(pa, sc.pbufA)
     val pbB = copyLongs(pb, sc.pbufB)
     val nM = findMatches(paB, pa.numElements(), FrechetDist.unsafeTrack(a),
-      pbB, pb.numElements(), FrechetDist.unsafeTrack(b), epsKm, ms)
+      pbB, pb.numElements(), FrechetDist.unsafeTrack(b), g, ms)
     val tMax = math.min(pa.numElements(), pb.numElements())
     val tails = if (tMax > sc.tails.length) new Array[Int](tMax) else sc.tails
     val snap = if (tMax > sc.snap.length) new Array[Int](tMax) else sc.snap
@@ -307,7 +328,13 @@ object TrajSketch {
     * the full-matrix kernel when the match set is dense enough that O(P²)
     * would lose to O(n·m). ≡ [[EdrDist.compute]] on every input. */
   def edrSparse(pa: ArrayData, a: ArrayData, pb: ArrayData, b: ArrayData,
-                epsKm: Double): Long = {
+                epsKm: Double): Long =
+    edrSparse(pa, a, pb, b, geom(epsKm))
+
+  /** [[edrSparse]] with the ε tables built by the caller, once. */
+  def edrSparse(pa: ArrayData, a: ArrayData, pb: ArrayData, b: ArrayData,
+                g: MatchGeom): Long = {
+    val epsKm = g.epsKm
     checkAligned(pa, a, "edr_sparse"); checkAligned(pb, b, "edr_sparse")
     val n = pa.numElements()
     val m = pb.numElements()
@@ -322,7 +349,7 @@ object TrajSketch {
     val pbB = copyLongs(pb, sc.pbufB)
     val ua = FrechetDist.unsafeTrack(a)
     val ub = FrechetDist.unsafeTrack(b)
-    val nM = findMatches(paB, n, ua, pbB, m, ub, epsKm, ms)
+    val nM = findMatches(paB, n, ua, pbB, m, ub, g, ms)
     if (nM.toLong * nM > 4L * n * m) return EdrDist.compute(ua, ub, epsKm)
     // dp(t) = cheapest cost of an alignment prefix ending in match t
     var best = math.max(n, m).toLong // the no-match alignment
@@ -433,8 +460,16 @@ object TrajSketch {
     * tracks() column (the round-15 probe lesson, round 2: the per-pair
     * band-search near-test measured 10 µs/pair — precomputing the
     * dilation turns the pair-time bound into one bit test per fix). */
-  def dilatedBitmap(cells: ArrayData, epsKm: Double): Array[Long] = {
-    val g = geom(epsKm)
+  def dilatedBitmap(cells: ArrayData, epsKm: Double): Array[Long] =
+    dilatedBitmap(cells, geom(epsKm))
+
+  /** [[dilatedBitmap]] with the ε tables built by the caller, once. Each
+    * cell's window in each row of its band is one circular column run,
+    * set a 64-bit word at a time ([[setWindow]]). At Hausdorff's sf0.1
+    * threshold (2,861 km) a cell's band is 23 rows of windows up to 145
+    * columns wide: set bit by bit, the 3,000 dilations of its two sides
+    * took 0.53–0.72 s on one thread, run by run 0.033–0.058 s. */
+  def dilatedBitmap(cells: ArrayData, g: MatchGeom): Array[Long] = {
     val out = new Array[Long](DilWords)
     val n = cells.numElements()
     var i = 0
@@ -442,26 +477,85 @@ object TrajSketch {
       val c = cells.getInt(i)
       val r1 = c >>> 8
       val col = c & 0xff
+      val widths = g.dcMax(r1) // -1 for rows past the lattice's edge
       var k = 0
-      while (k < 2 * g.maxDr + 1) {
-        val r2 = r1 + k - g.maxDr
-        if (r2 >= 0 && r2 < NRow) {
-          val dcm = g.dcMax(r1)(k)
-          if (dcm >= 0) {
-            var dc = -dcm
-            while (dc <= dcm) {
-              val cc = ((col + dc) % NLon + NLon) % NLon
-              val bit = r2 * NLon + cc
-              out(bit >>> 6) |= 1L << (bit & 63)
-              dc += 1
-            }
-          }
-        }
+      while (k < widths.length) {
+        val dcm = widths(k)
+        if (dcm >= 0) setWindow(out, (r1 + k - g.maxDr) * NLon, col - dcm, col + dcm)
         k += 1
       }
       i += 1
     }
     out
+  }
+
+  /** Sets the circular column window [lo, hi] of the row whose first bit
+    * is `row`: the whole row, or one run, or two when it wraps past
+    * column 0 or NLon − 1. */
+  @inline private def setWindow(out: Array[Long], row: Int, lo: Int, hi: Int): Unit =
+    if (hi - lo + 1 >= NLon) setRun(out, row, row + NLon - 1)
+    else if (lo < 0) { setRun(out, row, row + hi); setRun(out, row + lo + NLon, row + NLon - 1) }
+    else if (hi >= NLon) { setRun(out, row, row + hi - NLon); setRun(out, row + lo, row + NLon - 1) }
+    else setRun(out, row + lo, row + hi)
+
+  /** Sets bits `from` to `to` (inclusive) of `out`. */
+  @inline private def setRun(out: Array[Long], from: Int, to: Int): Unit = {
+    val w0 = from >>> 6
+    val w1 = to >>> 6
+    val head = -1L << (from & 63)
+    val tail = -1L >>> (63 - (to & 63))
+    if (w0 == w1) out(w0) |= head & tail
+    else {
+      out(w0) |= head
+      var w = w0 + 1
+      while (w < w1) { out(w) = -1L; w += 1 }
+      out(w1) |= tail
+    }
+  }
+
+  /** Whether every cell of a cell array is set in a dilation bitmap
+    * ([[dilatedBitmap]]): `cellHits(cells, dil) == cells.numElements()`,
+    * read in place (both arrays normalized once by [[unsafeInts]] and
+    * [[unsafeLongs]], then `Platform` reads), exiting at the first cell
+    * that is not set. Hausdorff's cover test: with `dil` the other
+    * track's cells dilated at radius r, a track whose every fix lies
+    * within r of the other track passes, since the cell bound never
+    * exceeds the distance of two points. */
+  def cellsCovered(cells: ArrayData, dil: ArrayData): Boolean = {
+    val c = unsafeInts(cells)
+    val g = unsafeLongs(dil)
+    if (g.numElements() < DilWords)
+      throw new IllegalArgumentException(
+        s"cell_cover: dilation bitmap has ${g.numElements()} words, not $DilWords")
+    val co = c.getBaseObject
+    val cOff = FrechetDist.dataOffset(c)
+    val go = g.getBaseObject
+    val gOff = FrechetDist.dataOffset(g)
+    val n = c.numElements()
+    var i = 0
+    while (i < n) {
+      val cell = Platform.getInt(co, cOff + 4L * i)
+      val bit = cellBit(cell)
+      if (cell < 0 || bit >= NRow * NLon)
+        throw new IllegalArgumentException(s"cell_cover: $cell is no cell id")
+      if ((Platform.getLong(go, gOff + 8L * (bit >>> 6)) & (1L << (bit & 63))) == 0L)
+        return false
+      i += 1
+    }
+    true
+  }
+
+  /** `a` as an `UnsafeArrayData` of ints: itself, as read out of an
+    * `UnsafeRow`, or else one copy. */
+  private[functions] def unsafeInts(a: ArrayData): UnsafeArrayData = a match {
+    case u: UnsafeArrayData => u
+    case other => UnsafeArrayData.fromPrimitiveArray(other.toIntArray())
+  }
+
+  /** `a` as an `UnsafeArrayData` of longs: itself, or else one copy. */
+  private[functions] def unsafeLongs(a: ArrayData): UnsafeArrayData = a match {
+    case u: UnsafeArrayData => u
+    case other => UnsafeArrayData.fromPrimitiveArray(other.toLongArray())
   }
 
   /** Per-side counts of fixes with ANY possible ε-match on the other
@@ -500,7 +594,8 @@ object TrajSketch {
 
 /** lcss_sparse(pbA, trackA, pbB, trackB) with the per-key eps passed by the
   * caller via [[TrajSketchFns]] (the eps is a key-level constant, so it
-  * rides as a constructor argument instead of a fifth child). */
+  * rides as a constructor argument instead of a fifth child, and its
+  * tables are built once per expression instance). */
 case class LcssSparseExpr(first: Expression, second: Expression,
                           third: Expression, fourth: Expression, epsKm: Double)
   extends QuaternaryExpression
@@ -511,13 +606,17 @@ case class LcssSparseExpr(first: Expression, second: Expression,
 
   override def dataType: DataType = LongType
 
+  @transient private lazy val geom = TrajSketch.geom(epsKm)
+
   override def nullSafeEval(fa: Any, a: Any, fb: Any, b: Any): Any =
     TrajSketch.lcssSparse(fa.asInstanceOf[ArrayData], a.asInstanceOf[ArrayData],
-      fb.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], epsKm)
+      fb.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], geom)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val g = TrajSketchFns.geomRef(ctx, geom)
     nullSafeCodeGen(ctx, ev, (fa, a, fb, b) =>
-      s"${ev.value} = graft.functions.TrajSketch.lcssSparse($fa, $a, $fb, $b, $epsKm);")
+      s"${ev.value} = graft.functions.TrajSketch.lcssSparse($fa, $a, $fb, $b, $g);")
+  }
 
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression, q: Expression): Expression =
@@ -536,13 +635,17 @@ case class EdrSparseExpr(first: Expression, second: Expression,
 
   override def dataType: DataType = LongType
 
+  @transient private lazy val geom = TrajSketch.geom(epsKm)
+
   override def nullSafeEval(fa: Any, a: Any, fb: Any, b: Any): Any =
     TrajSketch.edrSparse(fa.asInstanceOf[ArrayData], a.asInstanceOf[ArrayData],
-      fb.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], epsKm)
+      fb.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], geom)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val g = TrajSketchFns.geomRef(ctx, geom)
     nullSafeCodeGen(ctx, ev, (fa, a, fb, b) =>
-      s"${ev.value} = graft.functions.TrajSketch.edrSparse($fa, $a, $fb, $b, $epsKm);")
+      s"${ev.value} = graft.functions.TrajSketch.edrSparse($fa, $a, $fb, $b, $g);")
+  }
 
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression, q: Expression): Expression =
@@ -596,8 +699,10 @@ case class LcssUbExpr(first: Expression, second: Expression,
 }
 
 /** dilate_cells(cells) → the ε-dilation bitmap (array of DilWords longs),
-  * computed once per user in tracks() — the pair-time near test is then a
-  * single bit lookup. */
+  * computed once per user: in tracks() at the match radius, so the
+  * pair-time near test is a single bit lookup, and at Hausdorff's
+  * threshold for its cover test. The radius's tables are built once per
+  * expression instance, not once per user. */
 case class DilateCellsExpr(child: Expression, epsKm: Double)
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
   with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
@@ -606,14 +711,17 @@ case class DilateCellsExpr(child: Expression, epsKm: Double)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(ca: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      TrajSketch.dilatedBitmap(ca.asInstanceOf[ArrayData], epsKm))
+  @transient private lazy val geom = TrajSketch.geom(epsKm)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override def nullSafeEval(ca: Any): Any =
+    UnsafeArrayData.fromPrimitiveArray(TrajSketch.dilatedBitmap(ca.asInstanceOf[ArrayData], geom))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val g = TrajSketchFns.geomRef(ctx, geom)
     nullSafeCodeGen(ctx, ev, ca =>
-      s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.TrajSketch.dilatedBitmap($ca, $epsKm));")
+      s"${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData" +
+        s".fromPrimitiveArray(graft.functions.TrajSketch.dilatedBitmap($ca, $g));")
+  }
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -665,6 +773,29 @@ case class CellHitsExpr(left: Expression, right: Expression)
   override def prettyName: String = "cell_hits"
 }
 
+/** cell_cover(cells, dil): [[TrajSketch.cellsCovered]], every cell of
+  * `cells` set in the dilation bitmap `dil` — Hausdorff's cover test. */
+case class CellCoverExpr(left: Expression, right: Expression)
+  extends BinaryExpression
+  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
+
+  override def inputTypes = Seq(ArrayType(IntegerType), ArrayType(LongType))
+
+  override def dataType: DataType = BooleanType
+
+  override def nullSafeEval(ca: Any, dil: Any): Any =
+    TrajSketch.cellsCovered(ca.asInstanceOf[ArrayData], dil.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (ca, dil) =>
+      s"${ev.value} = graft.functions.TrajSketch.cellsCovered($ca, $dil);")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+
+  override def prettyName: String = "cell_cover"
+}
+
 /** cell_bits(cells) → the cell bitmap (array of DilWords longs) that
   * [[CellHitsExpr]] looks up. */
 case class CellBitsExpr(child: Expression)
@@ -703,6 +834,9 @@ object TrajSketchFns {
   def cellBits(cells: Column): Column =
     column(CellBitsExpr(expression(cells)))
 
+  def cellCover(cells: Column, dil: Column): Column =
+    column(CellCoverExpr(expression(cells), expression(dil)))
+
   def nearCounts(pa: Column, dilB: Column, pb: Column, dilA: Column): Column =
     column(NearCountsExpr(expression(pa), expression(dilB), expression(pb), expression(dilA)))
 
@@ -711,4 +845,9 @@ object TrajSketchFns {
 
   def lcssUb(pa: Column, dilB: Column, pb: Column, dilA: Column): Column =
     column(LcssUbExpr(expression(pa), expression(dilB), expression(pb), expression(dilA)))
+
+  /** `g` as a reference object of generated code: the expression's tables
+    * travel with its plan instead of being rebuilt per row. */
+  private[functions] def geomRef(ctx: CodegenContext, g: TrajSketch.MatchGeom): String =
+    ctx.addReferenceObj("matchGeom", g, classOf[TrajSketch.MatchGeom].getName)
 }

@@ -37,9 +37,9 @@ import Q._
   *     stage. Per metric:
   *     - Fréchet: the endpoint-chord lower bound, then the capped DP
   *       ([[frechetPruned]]).
-  *     - Hausdorff: the capped exact kernel ([[hausdorffPruned]]; sf0.1,
-  *       4-core host: 974 of 1,124,250 pairs survive, key task CPU
-  *       9.3 s → 3.4 s).
+  *     - Hausdorff: a cell cover at the threshold radius, then the capped
+  *       exact kernel ([[hausdorffPruned]]; sf0.1, 4-core host: the
+  *       cover keeps 16,595 of 1,124,250 pairs and the kernel 974).
   *     - LCSS: the exact match upper bound ub = min(nearA, nearB)
   *       ([[lcssPruned]]) over the exact SPARSE-MATCH kernel
   *       (Hunt-Szymanski LIS over the ε-match set found by 2.5°-cell
@@ -138,12 +138,15 @@ object Trajectory extends QueryGroup {
     * names the main pass's per-side columns beyond `n_a`/`ta` (n_fixes
     * and track), suffixed with the side "a" or "b". `exact` is the
     * unrounded value over the main-pass columns, and `bound` the pair
-    * predicate at a margined threshold. `out` lists the output columns
-    * after (u1, u2, n_a, n_b); its last one ranks the result, ascending
-    * for distances and descending for similarities. */
+    * predicate at a margined threshold, which may also read the per-side
+    * columns `boundSide` projects at that threshold. `out` lists the
+    * output columns after (u1, u2, n_a, n_b); its last one ranks the
+    * result, ascending for distances and descending for similarities. */
   private[graft] final case class PairMetric(extra: String => Seq[Column], seed: Seed,
                                              exact: Column, bound: Double => Column,
-                                             out: Seq[(String, Column)], ascending: Boolean) {
+                                             out: Seq[(String, Column)], ascending: Boolean,
+                                             boundSide: Double => String => Seq[Column] =
+                                               _ => _ => Nil) {
     def side(tr: DataFrame, ab: String, cols: String => Seq[Column]): DataFrame =
       tr.select((col("user_id").as(if (ab == "a") "u1" else "u2") +: cols(ab)): _*)
     def main(ab: String): Seq[Column] =
@@ -173,10 +176,11 @@ object Trajectory extends QueryGroup {
   /** The seed threshold `thr` of [[topPairs]]: the 10th-best exact value
     * over the seed's winners. With the tracks pinned on the driver
     * (BIGINT user ids, outside [[graft.operators.Endgame.distributed]])
-    * it is found there: the winners come from [[cellWinners]] or the
-    * collected [[lightWinners]], and their exact values from one
-    * projection over a driver-built `LocalRelation` of their two sides'
-    * pinned rows, which `ConvertToLocalRelation` evaluates with no job,
+    * it is found there: the winners come from [[cellWinners]], from
+    * [[everyPair]] or from the collected [[lightWinners]], and their
+    * exact values from one projection over a driver-built
+    * `LocalRelation` of their two sides' pinned rows, which
+    * `ConvertToLocalRelation` evaluates with no job,
     * calling the same kernels as generated code. Otherwise, or when the
     * cell index is past its gate, Spark runs the whole seed: the light
     * scan, two broadcast joins attaching the tracks, the exact kernel,
@@ -188,7 +192,7 @@ object Trajectory extends QueryGroup {
       b <- Endgame.held(m.side(tr, "b", m.main), TrackWeight)
       if tr.schema("user_id").dataType == LongType
       winners <- if (m.seed.byCells) cellWinners(tr)
-                 else Some(lightWinners(s, tr, m).as[(Long, Long)].collect().toSeq)
+                 else everyPair(a).orElse(Some(lightWinners(s, tr, m).as[(Long, Long)].collect().toSeq))
       v <- exactOnDriver(s, a, b, winners, m.exact)
     } yield tenth(v, m.ascending)
     onDriver.getOrElse {
@@ -201,6 +205,17 @@ object Trajectory extends QueryGroup {
         .select(coalesce(col("t"), lit(if (m.ascending) Double.MaxValue else -1.0)))
         .head().getDouble(0)
     }
+  }
+
+  /** Every (u1 < u2) pair of the held side's non-NULL user ids, in
+    * order, when there are at most [[SeedPairs]] of them (63 users or
+    * fewer): the light scan's winners are then every pair, and [[tenth]]
+    * orders them by value, so the seed runs no Spark scan. */
+  private def everyPair(side: LocalRelation): Option[Seq[(Long, Long)]] = {
+    val ids = side.data.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toArray.sorted
+    val n = ids.length.toLong
+    if (n * (n - 1) / 2 > SeedPairs) None
+    else Some(for (i <- ids.indices; j <- i + 1 until ids.length) yield (ids(i), ids(j)))
   }
 
   /** `exact` over each winner's two sides, on the driver: the winner's
@@ -250,40 +265,93 @@ object Trajectory extends QueryGroup {
     Endgame.held(tr.select(col("user_id"), col("cells")), TrackWeight).flatMap { rel =>
       val users = rel.data.filterNot(_.isNullAt(0)).sortBy(_.getLong(0))
       val ids = users.map(_.getLong(0)).toArray
-      val n = ids.length.toLong
+      val n = ids.length
       val cells = users.map(_.getArray(1).toIntArray()).toArray
       // postings as CSR over the cell ids (row << 8 | col < NRow << 8);
       // ranks enter each list ascending
       val width = graft.functions.TrajSketch.NRow << 8
       val start = new Array[Int](width + 1)
-      for (cs <- cells; c <- cs) start(c + 1) += 1
-      for (c <- 0 until width) start(c + 1) += start(c)
-      val work = (0 until width).map { c => val k = (start(c + 1) - start(c)).toLong; k * (k - 1) / 2 }.sum
+      var r = 0
+      while (r < n) {
+        val cs = cells(r)
+        var i = 0
+        while (i < cs.length) { start(cs(i) + 1) += 1; i += 1 }
+        r += 1
+      }
+      var work = 0L
+      var c = 0
+      while (c < width) {
+        val k = start(c + 1).toLong
+        work += k * (k - 1) / 2
+        start(c + 1) += start(c)
+        c += 1
+      }
       if (!Endgame.local(work)) None else {
         val post = new Array[Int](start(width))
         val fill = start.clone()
-        for (r <- cells.indices; c <- cells(r)) { post(fill(c)) = r; fill(c) += 1 }
+        r = 0
+        while (r < n) {
+          val cs = cells(r)
+          var i = 0
+          while (i < cs.length) { post(fill(cs(i))) = r; fill(cs(i)) += 1; i += 1 }
+          r += 1
+        }
         val packed = new Array[Long](work.toInt)
         var k = 0
-        for (c <- 0 until width; i <- start(c) until start(c + 1); j <- i + 1 until start(c + 1)) {
-          packed(k) = post(i) * n + post(j); k += 1
+        c = 0
+        while (c < width) {
+          var i = start(c)
+          while (i < start(c + 1)) {
+            var j = i + 1
+            while (j < start(c + 1)) { packed(k) = post(i).toLong * n + post(j); k += 1; j += 1 }
+            i += 1
+          }
+          c += 1
         }
         java.util.Arrays.sort(packed)
         // distinct pairs ascending (= (u1, u2) order) and their run lengths
         val pk = new Array[Long](packed.length)
         val hits = new Array[Int](packed.length)
         var d = 0
-        for (p <- packed) {
-          if (d > 0 && pk(d - 1) == p) hits(d - 1) += 1
-          else { pk(d) = p; hits(d) = 1; d += 1 }
+        var maxHits = 0
+        k = 0
+        while (k < packed.length) {
+          if (d > 0 && pk(d - 1) == packed(k)) hits(d - 1) += 1
+          else { pk(d) = packed(k); hits(d) = 1; d += 1 }
+          maxHits = math.max(maxHits, hits(d - 1))
+          k += 1
         }
-        // most hits first, then pair order: index order within equal hits
-        val byHits = Array.tabulate(d)(i => ((Int.MaxValue - hits(i)).toLong << 32) | i)
-        java.util.Arrays.sort(byHits)
-        val hit = byHits.iterator.take(SeedPairs).map(key => pk((key & 0xffffffffL).toInt))
-        val zero = Iterator.range(0L, n).flatMap(r1 => Iterator.range(r1 + 1, n).map(r1 * n + _))
-          .filter(p => java.util.Arrays.binarySearch(pk, 0, d, p) < 0)
-        Some((hit ++ zero).take(SeedPairs).map(p => (ids((p / n).toInt), ids((p % n).toInt))).toSeq)
+        // most hits first, then pair order: a stable counting sort by hit
+        // count (at most the cells a track holds, 64), keeping the first
+        // SeedPairs; pos(h) is where the next pair of h hits goes
+        val pos = new Array[Int](maxHits + 1)
+        k = 0
+        while (k < d) { pos(hits(k)) += 1; k += 1 }
+        var before = 0
+        var h = maxHits
+        while (h > 0) { val cnt = pos(h); pos(h) = before; before += cnt; h -= 1 }
+        val nHit = math.min(d, SeedPairs)
+        val won = new Array[Long](math.min(n.toLong * (n - 1) / 2, SeedPairs.toLong).toInt)
+        k = 0
+        while (k < d) {
+          val p = pos(hits(k))
+          if (p < nHit) won(p) = pk(k)
+          pos(hits(k)) = p + 1
+          k += 1
+        }
+        // the smallest zero-hit pairs in order fill a short seed
+        var w = nHit
+        var r1 = 0
+        while (w < won.length && r1 < n) {
+          var r2 = r1 + 1
+          while (w < won.length && r2 < n) {
+            val p = r1.toLong * n + r2
+            if (java.util.Arrays.binarySearch(pk, 0, d, p) < 0) { won(w) = p; w += 1 }
+            r2 += 1
+          }
+          r1 += 1
+        }
+        Some(won.toSeq.map(p => (ids((p / n).toInt), ids((p % n).toInt))))
       }
     }
 
@@ -329,15 +397,21 @@ object Trajectory extends QueryGroup {
     *    line alone). A user-specified repartition is exempt from
     *    coalescing; a hash repartition on u1 would be removed as redundant
     *    with the tracks' window exchange and then coalesced anyway.
+    *  - Per-side columns the bound reads at the threshold
+    *    (`boundSide`, Hausdorff's dilation at radius t) are projected
+    *    once per user on each side, not once per pair. Over pinned tracks
+    *    `ConvertToLocalRelation` evaluates them on the driver while
+    *    optimizing.
     * With `prune = false` the same main pass runs with no seed, no bound
     * and no observe: the direct all-pairs scan. */
-  private def topPairs(s: SparkSession, tr: DataFrame, m: PairMetric,
-                       prune: Boolean = true): DataFrame = {
-    val cond = if (!prune) None else {
+  private[graft] def topPairs(s: SparkSession, tr: DataFrame, m: PairMetric,
+                              prune: Boolean = true): DataFrame = {
+    val (cols, cond) = if (!prune) (m.main _, None) else {
       val thr = seedThreshold(s, tr, m)
-      Some(m.bound(if (m.ascending) thr + 1e-4 else thr - 1e-4))
+      val t = if (m.ascending) thr + 1e-4 else thr - 1e-4
+      ((ab: String) => m.main(ab) ++ m.boundSide(t)(ab), Some(m.bound(t)))
     }
-    val scan = pairs(s, tr, m, m.main, cond)
+    val scan = pairs(s, tr, m, cols, cond)
     val kept = if (prune) scan.observe("prune", count(lit(1)).as("survivors")) else scan
     m.out.foldLeft(kept) { case (df, (name, c)) => df.withColumn(name, c) }
       .select((Seq("u1", "u2", "n_a", "n_b") ++ m.out.map(_._1)).map(col): _*)
@@ -383,29 +457,63 @@ object Trajectory extends QueryGroup {
   private[graft] def frechetPruned(s: SparkSession, tr: DataFrame): DataFrame =
     topPairs(s, tr, frechet)
 
-  /** m_traj_hausdorff's only path: the cell-overlap seed, and the CAPPED
-    * exact kernel ([[graft.functions.HausdorffCapped]]) as the bound. It
-    * is exact whenever dH ≤ cap and abandons a far pair at its first fix
-    * whose nearest counterpart lies beyond the cap. Measured at sf0.1 on
-    * a 4-core host (1,500 users, 1,124,250 pairs): seed threshold
-    * 2,861 km against a true d₁₀ of 2,511 km; the capped kernel costs
-    * 1.45–1.73 µs per pair on one thread against 7.9–8.0 µs for the full
-    * kernel and keeps 974 pairs. The key's traced task CPU fell from
-    * 9.3 s to 3.4 s with the capped kernel, and from 3.6–4.2 s to
-    * 2.2–2.8 s (warm passes) once the kernels read tracks in place and
-    * the seed looked up bits instead of merging. With the tracks pinned
-    * the seed finishes on the driver ([[cellWinners]], then 2000 exact
-    * kernels over a `LocalRelation`): the traced warm pass runs 3 jobs
-    * instead of 9, none of them while the frame is built (6 before), and
-    * its construction takes 0.12 s instead of 0.50–0.56 s. */
-  private[graft] def hausdorff: PairMetric =
+  /** m_traj_hausdorff's only path: the cell-overlap seed, then two tests
+    * in the join condition after `u1 < u2`.
+    *  - The cell cover at radius r = t + [[CoverMarginKm]]: every distinct
+    *    cell of A is set in B's cells dilated at r, and every cell of B in
+    *    A's ([[graft.functions.TrajSketch.cellsCovered]], one bit lookup
+    *    per cell, out at the first miss). It drops no pair the kernel
+    *    keeps: if dH ≤ t every fix lies within t of some fix on the other
+    *    side, and the cell bound never exceeds the distance of two points.
+    *    The dilations depend on t, so they are no tracks column: each side
+    *    projects its own once per user (`boundSide`). At or past πR the
+    *    cover is left out ([[coverRadius]]).
+    *  - The CAPPED exact kernel ([[graft.functions.HausdorffCapped]]),
+    *    exact whenever dH ≤ cap, which abandons a far pair at its first
+    *    fix whose nearest counterpart lies beyond the cap and makes every
+    *    decision: the threshold, the survivors and the output are the
+    *    kernel's alone.
+    * Measured at sf0.1 on a 4-core host (1,500 users, 1,124,250 pairs):
+    * seed threshold 2,861 km against a true d₁₀ of 2,511 km; the capped
+    * kernel costs 1.45–1.73 µs per pair on one thread against 7.9–8.0 µs
+    * for the full kernel and keeps 974 pairs. The cover costs
+    * 0.10–0.16 µs per pair and keeps 16,595, so the kernel runs on 1.5%
+    * of the pairs. With the tracks pinned the seed finishes on the
+    * driver ([[cellWinners]], then 2000 exact kernels over a
+    * `LocalRelation`): the traced warm pass runs 3 jobs. */
+  private[graft] def hausdorff: PairMetric = {
+    def capped(t: Double) = TrajSim.hausdorffKmCapped(col("ta"), col("tb"), lit(t)) <= t
     PairMetric(extra = _ => Nil, seed = cellSeed,
       exact = TrajSim.hausdorffKm(col("ta"), col("tb")),
-      bound = t => TrajSim.hausdorffKmCapped(col("ta"), col("tb"), lit(t)) <= t,
+      bound = t => coverRadius(t).fold(capped(t)) { _ =>
+        TrajSketchFns.cellCover(col("ca"), col("gb")) &&
+          TrajSketchFns.cellCover(col("cb"), col("ga")) && capped(t)
+      },
       out = Seq("hausdorff_km" -> round(TrajSim.hausdorffKm(col("ta"), col("tb")), 4)),
-      ascending = true)
+      ascending = true,
+      boundSide = t => ab => coverRadius(t).toSeq.flatMap { r =>
+        Seq(col("cells").as(s"c$ab"), TrajSketchFns.dilateCells(col("cells"), r).as(s"g$ab"))
+      })
+  }
+
+  /** m_traj_hausdorff over `tr`: the seed on the driver or in Spark, then
+    * one pair scan testing `u1 < u2`, the cell cover and the capped
+    * kernel, in that order ([[hausdorff]]). */
   private[graft] def hausdorffPruned(s: SparkSession, tr: DataFrame): DataFrame =
     topPairs(s, tr, hausdorff)
+
+  /** Added to Hausdorff's threshold for its cover radius: a metre, far
+    * above the rounding of the cell bound's and the kernel's doubles
+    * (about 1e-9 km at the sf0.1 threshold). */
+  private val CoverMarginKm = 1e-3
+
+  /** The cover radius at threshold t, or `None` at or past πR: the
+    * dilation's haversine term sin²(r / 2R) falls again past half the
+    * circumference, so a larger radius (`Double.MaxValue`, the seed's
+    * `coalesce` with no finite value) would build a small, wrong
+    * dilation, while the kernel alone keeps every pair there. */
+  private[graft] def coverRadius(t: Double): Option[Double] =
+    Some(t + CoverMarginKm).filter(_ < math.Pi * graft.functions.HaversineDist.EarthRadiusKm)
 
   /** m_traj_lcss's only path, a MAXIMIZATION: the shared near-count
     * kernel ([[graft.functions.TrajSketch.nearCounts]]) gives the EXACT
@@ -661,9 +769,10 @@ object Trajectory extends QueryGroup {
     // axiom, reversed-corridor-reads-0, and key top-10 vs an exact
     // all-pairs driver recomputation.
     "m_traj_hausdorff" -> ((s, dir) => {
-      // One path at every pair count: the capped-kernel threshold prune
-      // ([[hausdorffPruned]]) pays the full kernel only on the ~1,000 of
-      // sf0.1's 1.1M pairs the cap cannot abandon.
+      // One path at every pair count: the threshold prune
+      // ([[hausdorffPruned]]). A cell cover at the threshold radius
+      // leaves the capped kernel ~17,000 of sf0.1's 1.1M pairs, and only
+      // the ~1,000 the cap cannot abandon pay the full kernel.
       hausdorffPruned(s, gatedTracks(s, dir, "m_traj_hausdorff")._1)
     }),
 

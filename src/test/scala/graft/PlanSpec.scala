@@ -1477,9 +1477,10 @@ class PlanSpec extends BaseSpec {
       s"m_traj_lcss: u1 < u2 must precede the match bound in the join condition:\n$lCond")
 
     // m_traj_hausdorff (its only path is hausdorffPruned): the same pin —
-    // one broadcast pair join, u1 < u2 BEFORE the capped kernel in its
-    // condition (a pushed withColumn+filter form lands the kernel first
-    // and doubles its calls)
+    // one broadcast pair join, u1 < u2 first, then the cell cover, then
+    // the capped kernel in its condition (a pushed withColumn+filter form
+    // lands the kernel first and doubles its calls; the kernel ahead of
+    // the cover would run on every pair)
     val hp = SparkEntry.queries("m_traj_hausdorff")(spark, sf)
     hp.collect()
     val hpP = finalSection(hp.queryExecution.executedPlan.toString)
@@ -1488,9 +1489,12 @@ class PlanSpec extends BaseSpec {
     assert(hpP.linesIterator.count(_.contains("Join")) == 1,
       s"m_traj_hausdorff: main pass must be single-join (no re-attach):\n$hpP")
     val hCond = hpP.linesIterator.find(_.contains("BroadcastNestedLoopJoin")).get
-    assert(hCond.indexOf("u1") >= 0 && hCond.indexOf("hausdorff_km_capped") >= 0 &&
-           hCond.indexOf("u1") < hCond.indexOf("hausdorff_km_capped"),
-      s"m_traj_hausdorff: u1 < u2 must precede the capped kernel in the join condition:\n$hCond")
+    assert(hCond.indexOf("u1") >= 0 && hCond.indexOf("cell_cover") >= 0 &&
+           hCond.indexOf("hausdorff_km_capped") >= 0 &&
+           hCond.indexOf("u1") < hCond.indexOf("cell_cover") &&
+           hCond.indexOf("cell_cover") < hCond.indexOf("hausdorff_km_capped"),
+      s"m_traj_hausdorff: the join condition must run u1 < u2, then the cell cover, " +
+        s"then the capped kernel:\n$hCond")
   }
 
   test("q_graph_triangles broadcasts the driver-resident pair set: no shuffle below its joins") {

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 import org.apache.spark.unsafe.Platform
 import graft.functions.{EdrDist, FrechetDist, HausdorffKm, LcssMatches, TrajSketch}
 import scala.jdk.CollectionConverters._
@@ -311,27 +311,35 @@ class TrajKernelSpec extends BaseSpec {
     assert(rows.forall(r => r.getInt(0) == r.getInt(1)))
   }
 
-  test("the pair kernels copy no array outside the one normalization helper") {
+  test("the pair and cover kernels copy no array outside their normalization helpers") {
     val files = Seq("TrajSim.scala", "TrajSketch.scala")
       .map(f => Paths.get("src/main/scala/graft/functions", f))
     val copy = """\.to(Double|Int|Long)Array\b""".r
+    /** The body of `def name(` in `lines`: from its def to the closing
+      * brace at its indent (the def line alone for a one-line def). */
+    def body(lines: IndexedSeq[String], name: String): Range = {
+      val start = lines.indexWhere(_.contains(s"def $name("))
+      if (start < 0) 0 until 0 else {
+        val indent = lines(start).takeWhile(_ == ' ')
+        val end = lines.indexWhere(_ == s"$indent}", start)
+        start to (if (end < 0) start else end)
+      }
+    }
+    val helpers = Seq("unsafeTrack", "unsafeInts", "unsafeLongs")
     val hits = for (f <- files) yield {
       assert(Files.isRegularFile(f), s"not found: ${f.toAbsolutePath}")
       val lines = Files.readAllLines(f).asScala.toIndexedSeq
-      // the helper's body: from its def to the closing brace at its indent
-      val start = lines.indexWhere(_.contains("def unsafeTrack("))
-      val end = if (start < 0) -1 else {
-        val indent = lines(start).takeWhile(_ == ' ')
-        lines.indexWhere(_ == s"$indent}", start)
-      }
+      val bodies = helpers.map(h => h -> body(lines, h))
       lines.indices.filter(i => copy.findFirstIn(lines(i)).isDefined)
-        .map(i => (f, i, start <= i && i <= end && start >= 0, lines(i).trim))
+        .map(i => (f, i, bodies.find(_._2.contains(i)).map(_._1), lines(i).trim))
     }
     val all = hits.flatten
-    val outside = all.filterNot(_._3)
+    val outside = all.filter(_._3.isEmpty)
     assert(outside.isEmpty, outside.map { case (f, i, _, l) => s"$f:${i + 1}: $l" }
-      .mkString("array copy outside FrechetDist.unsafeTrack:\n", "\n", ""))
-    assert(all.count(_._3) == 1, s"FrechetDist.unsafeTrack must hold the one copy: $all")
+      .mkString("array copy outside the normalization helpers:\n", "\n", ""))
+    // one copy per helper: the double tracks, the int cells and the long
+    // bitmaps, each copied once when they do not come out of a row
+    assert(all.flatMap(_._3).sorted == helpers.sorted, s"one copy per normalization helper: $all")
     // and no track is read through the virtual getter: every coordinate
     // read is Platform.getDouble on the normalized track
     val getter = """(?<!Platform)\.getDouble\(""".r
@@ -339,6 +347,107 @@ class TrajKernelSpec extends BaseSpec {
                        if !l.trim.startsWith("*") && !l.trim.startsWith("//") &&
                           getter.findFirstIn(l).isDefined) yield s"$f:${i + 1}: ${l.trim}"
     assert(virtual.isEmpty, virtual.mkString("virtual getDouble on a track:\n", "\n", ""))
+    // the cover test reads its cells and bitmap words in place too
+    val sketch = Files.readAllLines(files(1)).asScala.toIndexedSeq
+    val cover = body(sketch, "cellsCovered")
+    assert(cover.size > 1, "TrajSketch.cellsCovered not found")
+    val reads = cover.map(sketch).filter(_.contains(".get"))
+    assert(reads.nonEmpty && reads.forall(l => """(?<!Platform)\.get(Int|Long)\(""".r.findFirstIn(l).isEmpty),
+      reads.mkString("virtual read in cellsCovered:\n", "\n", ""))
+  }
+
+  /** The per-bit dilation fill that the run fill replaced, verbatim over
+    * the same tables. */
+  private def perBitDilation(cells: ArrayData, g: TrajSketch.MatchGeom): Array[Long] = {
+    val (nRow, nLon) = (TrajSketch.NRow, TrajSketch.NLon)
+    val out = new Array[Long](TrajSketch.DilWords)
+    val n = cells.numElements()
+    var i = 0
+    while (i < n) {
+      val c = cells.getInt(i)
+      val r1 = c >>> 8
+      val col = c & 0xff
+      var k = 0
+      while (k < 2 * g.maxDr + 1) {
+        val r2 = r1 + k - g.maxDr
+        if (r2 >= 0 && r2 < nRow) {
+          val dcm = g.dcMax(r1)(k)
+          if (dcm >= 0) {
+            var dc = -dcm
+            while (dc <= dcm) {
+              val cc = ((col + dc) % nLon + nLon) % nLon
+              val bit = r2 * nLon + cc
+              out(bit >>> 6) |= 1L << (bit & 63)
+              dc += 1
+            }
+          }
+        }
+        k += 1
+      }
+      i += 1
+    }
+    out
+  }
+
+  /** Random distinct sorted cell sets, some with the lattice's corners
+    * (their own generator: the walks above keep their inputs). */
+  private val cellRnd = new scala.util.Random(1212)
+  private def cellSet(): Array[Int] = {
+    val edges = Seq((71 << 8) | 0, (71 << 8) | 143, (0 << 8) | 143, 0, (35 << 8) | 71)
+    val drawn = Seq.fill(cellRnd.nextInt(80))((cellRnd.nextInt(72) << 8) | cellRnd.nextInt(144))
+    (if (cellRnd.nextBoolean()) drawn ++ edges.filter(_ => cellRnd.nextBoolean()) else drawn)
+      .distinct.sorted.toArray
+  }
+
+  private val piR = math.Pi * functions.HaversineDist.EarthRadiusKm
+
+  test("dilatedBitmap fills runs of words exactly as the per-bit fill did") {
+    val radii = Seq(0.0, 500.0, 2861.0, 10000.0, math.nextDown(piR))
+    val singles = for (row <- 0 until TrajSketch.NRow; col <- 0 until TrajSketch.NLon)
+      yield Array((row << 8) | col)
+    val sets = singles ++ Seq.fill(200)(cellSet()) :+ Array.empty[Int]
+    for (r <- radii) {
+      val g = TrajSketch.geom(r)
+      for (cs <- sets) {
+        val cells = ArrayData.toArrayData(cs)
+        assert(TrajSketch.dilatedBitmap(cells, g).sameElements(perBitDilation(cells, g)),
+          s"radius $r, cells ${cs.toSeq}")
+      }
+    }
+    // a radius just under πR dilates every cell to the whole sphere
+    assert(TrajSketch.dilatedBitmap(ArrayData.toArrayData(Array(0)), math.nextDown(piR))
+      .forall(_ == -1L))
+  }
+
+  test("cell_cover equals cell_hits == size on rows, primitive and generic arrays") {
+    val schema: Array[DataType] = Array(IntegerType, ArrayType(IntegerType, containsNull = false),
+      ArrayType(LongType, containsNull = false))
+    for (rep <- 0 until 300) {
+      val cs = cellSet()
+      // the other side's dilation at a radius that covers some sets and not others
+      val dil = TrajSketch.dilatedBitmap(ArrayData.toArrayData(cellSet()),
+        Seq(0.0, 300.0, 1500.0, 4000.0)(rep % 4))
+      val want = TrajSketch.cellHits(ArrayData.toArrayData(cs), ArrayData.toArrayData(dil)) == cs.length
+      val row = UnsafeProjection.create(schema)
+        .apply(InternalRow(7, new GenericArrayData(cs), new GenericArrayData(dil))).copy()
+      val kinds = Seq(("unsafe-row", row.getArray(1), row.getArray(2)),
+        ("primitive", UnsafeArrayData.fromPrimitiveArray(cs), UnsafeArrayData.fromPrimitiveArray(dil)),
+        ("generic", new GenericArrayData(cs), new GenericArrayData(dil)))
+      for ((kind, c, g) <- kinds)
+        assert(TrajSketch.cellsCovered(c, g) == want, s"$kind: ${cs.toSeq}")
+    }
+    // a covering and a missing cell, and the same through generated code
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.functions.TrajSketchFns
+    val sets = Seq.fill(200)((cellSet().toSeq, cellSet().toSeq))
+    val df = sets.toDF("a", "b")
+      .select(TrajSketchFns.cellCover(col("a"), TrajSketchFns.dilateCells(col("b"), 1500.0)).as("cover"),
+        TrajSketchFns.cellHits(col("a"), TrajSketchFns.dilateCells(col("b"), 1500.0)).as("hits"),
+        org.apache.spark.sql.functions.size(col("a")).as("n"))
+    val rows = df.collect()
+    assert(rows.length == sets.size && rows.exists(_.getBoolean(0)) && rows.exists(!_.getBoolean(0)))
+    assert(rows.forall(r => r.getBoolean(0) == (r.getInt(1) == r.getInt(2))))
   }
 
   /** The tracks() `pb` column of a unit-vector track: (cell << 32 | fix)

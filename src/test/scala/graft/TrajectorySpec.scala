@@ -488,13 +488,68 @@ class TrajectorySpec extends BaseSpec {
     // runs its direct scan at this size, with no seed at all
     assert(jobs("m_traj_hausdorff") == 0)
     assert(jobs("m_traj_edr") == 0)
-    // Fréchet and LCSS collect their light scan's 2000 winners. At this
-    // fixture's 15 users the pair join holds at most 225 rows, under the
-    // limit, so the optimizer drops the limit and plans a global sort:
-    // the round-robin shuffle, the broadcast, the range sample, the sort
-    // shuffle and the result are 5 jobs (at sf0.1 the limit stays and the
-    // scan is a top-k)
-    assert(jobs("m_traj_frechet") == 5)
-    assert(jobs("m_traj_lcss") == 5)
+    // Fréchet and LCSS: this fixture's 15 users make 105 pairs, fewer
+    // than the seed's 2000, so every pair is a winner and the driver
+    // lists them with no light scan (at sf0.1 the scan runs as a top-k)
+    assert(jobs("m_traj_frechet") == 0)
+    assert(jobs("m_traj_lcss") == 0)
+  }
+
+  test("the cell cover at r keeps every pair whose exact Hausdorff distance is at most r") {
+    import graft.functions.{HausdorffKm, TrajSketch}
+    val rnd = new scala.util.Random(90180)
+    // fixes anywhere, on the poles, on the antimeridian and on cell edges
+    def fix(): (Double, Double) = rnd.nextInt(6) match {
+      case 0 => (if (rnd.nextBoolean()) 90.0 else -90.0, rnd.nextDouble() * 360 - 180)
+      case 1 => (rnd.nextDouble() * 180 - 90, if (rnd.nextBoolean()) 180.0 else -180.0)
+      case 2 => (rnd.nextInt(73) * 2.5 - 90, rnd.nextInt(145) * 2.5 - 180)
+      case _ => (rnd.nextDouble() * 180 - 90, rnd.nextDouble() * 360 - 180)
+    }
+    // a track, or one near another: its fixes moved by up to `jitter` degrees
+    def near(of: Array[Double], jitter: Double): Array[Double] =
+      of.grouped(2).flatMap { case Array(lat, lon) =>
+        Seq(math.max(-90.0, math.min(90.0, lat + (rnd.nextDouble() * 2 - 1) * jitter)),
+          lon + (rnd.nextDouble() * 2 - 1) * jitter)
+      }.toArray
+    def cover(a: Array[Double], b: Array[Double], r: Double): Boolean = {
+      def cells(t: Array[Double]) = ArrayData.toArrayData(fcArr(t).distinct.sorted)
+      def dil(t: Array[Double]) = ArrayData.toArrayData(TrajSketch.dilatedBitmap(cells(t), r))
+      TrajSketch.cellsCovered(cells(a), dil(b)) && TrajSketch.cellsCovered(cells(b), dil(a))
+    }
+    var checked = 0
+    for (k <- 0 until 400) {
+      val a = trk(Seq.fill(1 + rnd.nextInt(16))(fix()): _*)
+      val b = if (k % 3 == 0) trk(Seq.fill(1 + rnd.nextInt(16))(fix()): _*)
+              else near(a, Seq(0.01, 1.0, 5.0)(k % 3))
+      val dH = HausdorffKm.compute(arr(xyz(a)), arr(xyz(b)))
+      for (r <- Seq(dH, dH * 1.01 + 1.0, dH + rnd.nextDouble() * 3000) if r < math.Pi * HaversineDist.EarthRadiusKm) {
+        assert(cover(a, b, r), s"dH = $dH <= r = $r but the cover drops\n a=${a.toSeq}\n b=${b.toSeq}")
+        checked += 1
+      }
+    }
+    assert(checked > 1000)
+  }
+
+  test("a threshold past half the circumference skips the cover and keeps the all-pairs top-10") {
+    val T = queries.Trajectory
+    // πR and beyond wrap sin²(r / 2R) around: no cover radius there
+    assert(T.coverRadius(Double.MaxValue).isEmpty)
+    assert(T.coverRadius(math.Pi * HaversineDist.EarthRadiusKm).isEmpty)
+    assert(T.coverRadius(2861.0).contains(2861.0 + 1e-3))
+    // a seed whose every exact value is NULL leaves coalesce's
+    // Double.MaxValue as the threshold; the main pass must then keep
+    // every pair, on the driver seed and the Spark seed alike
+    val nullSeed = T.hausdorff.copy(exact = lit(null).cast("double"))
+    val fixes = planted(1)._2
+    val wantH = referenceTop10(fixes)._4
+    for (distributed <- bothPaths) onPath(distributed) {
+      val tr = graft.operators.Endgame.pin(T.tracksFromPoints(spark, fixFrame(fixes)), T.TrackWeight)
+      assert(T.seedThreshold(spark, tr, nullSeed) == Double.MaxValue)
+      val (rows, surv) = runPruned(T.topPairs(spark, tr, nullSeed))
+      val n = fixes.map(_._1).distinct.size.toLong
+      assert(surv.contains(n * (n - 1) / 2), s"distributed=$distributed: survivors $surv")
+      val gotH = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
+      assert(gotH == wantH, s"distributed=$distributed hausdorff:\n got=$gotH\nwant=$wantH")
+    }
   }
 }
