@@ -402,6 +402,16 @@ object TrajSketch {
     * row·NLon + col, dense row-major. */
   @inline private def cellBit(c: Int): Int = (c >>> 8) * NLon + (c & 0xff)
 
+  /** [[cellBit]] of a cell the cover test reads, rejecting a negative id
+    * or one past the lattice ([[cellsCovered]], and Hausdorff's driver
+    * main pass in [[graft.queries.Trajectory]]). */
+  @inline private[graft] def coverBit(cell: Int): Int = {
+    val bit = cellBit(cell)
+    if (cell < 0 || bit >= NRow * NLon)
+      throw new IllegalArgumentException(s"cell_cover: $cell is no cell id")
+    bit
+  }
+
   /** The cell bitmap of a cell array: bit [[cellBit]] set per cell. */
   def cellBitmap(cells: ArrayData): Array[Long] = {
     val out = new Array[Long](DilWords)
@@ -534,10 +544,7 @@ object TrajSketch {
     val n = c.numElements()
     var i = 0
     while (i < n) {
-      val cell = Platform.getInt(co, cOff + 4L * i)
-      val bit = cellBit(cell)
-      if (cell < 0 || bit >= NRow * NLon)
-        throw new IllegalArgumentException(s"cell_cover: $cell is no cell id")
+      val bit = coverBit(Platform.getInt(co, cOff + 4L * i))
       if ((Platform.getLong(go, gOff + 8L * (bit >>> 6)) & (1L << (bit & 63))) == 0L)
         return false
       i += 1

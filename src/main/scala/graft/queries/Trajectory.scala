@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.GraftFrames
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import graft.functions.{TrajSim, TrajSketchFns}
+import graft.functions.{HausdorffKm, TrajSim, TrajSketch, TrajSketchFns}
 import graft.operators.Endgame
 import Q._
 
@@ -39,7 +39,8 @@ import Q._
   *       ([[frechetPruned]]).
   *     - Hausdorff: a cell cover at the threshold radius, then the capped
   *       exact kernel ([[hausdorffPruned]]; sf0.1, 4-core host: the
-  *       cover keeps 16,595 of 1,124,250 pairs and the kernel 974).
+  *       cover keeps 16,595 of 1,124,250 pairs and the kernel 974), on
+  *       the driver below the budget ([[hausdorffOnDriver]]).
   *     - LCSS: the exact match upper bound ub = min(nearA, nearB)
   *       ([[lcssPruned]]) over the exact SPARSE-MATCH kernel
   *       (Hunt-Szymanski LIS over the ε-match set found by 2.5°-cell
@@ -141,12 +142,17 @@ object Trajectory extends QueryGroup {
     * predicate at a margined threshold, which may also read the per-side
     * columns `boundSide` projects at that threshold. `out` lists the
     * output columns after (u1, u2, n_a, n_b); its last one ranks the
-    * result, ascending for distances and descending for similarities. */
+    * result, ascending for distances and descending for similarities.
+    * `onDriver`, given the pinned tracks and the margined threshold,
+    * lists the (u1, u2) pairs the bound keeps, or `None` past its gates;
+    * by default the pair join always runs. */
   private[graft] final case class PairMetric(extra: String => Seq[Column], seed: Seed,
                                              exact: Column, bound: Double => Column,
                                              out: Seq[(String, Column)], ascending: Boolean,
                                              boundSide: Double => String => Seq[Column] =
-                                               _ => _ => Nil) {
+                                               _ => _ => Nil,
+                                             onDriver: (LocalRelation, Double) =>
+                                               Option[Seq[(Long, Long)]] = (_, _) => None) {
     def side(tr: DataFrame, ab: String, cols: String => Seq[Column]): DataFrame =
       tr.select((col("user_id").as(if (ab == "a") "u1" else "u2") +: cols(ab)): _*)
     def main(ab: String): Seq[Column] =
@@ -173,24 +179,37 @@ object Trajectory extends QueryGroup {
       .orderBy(col("px"), col("u1"), col("u2")).limit(SeedPairs)
       .select("u1", "u2")
 
+  /** The main pass's two sides over pinned tracks with BIGINT user ids,
+    * each folded once (`ConvertToLocalRelation`, no job) into a
+    * `LocalRelation` of internal rows, which the seed's exact values and
+    * the driver main pass both read; `None` otherwise, and inside
+    * [[graft.operators.Endgame.distributed]]. */
+  private def heldSides(tr: DataFrame, m: PairMetric): Option[(LocalRelation, LocalRelation)] =
+    if (tr.schema("user_id").dataType != LongType) None
+    else for {
+      a <- Endgame.held(m.side(tr, "a", m.main), TrackWeight)
+      b <- Endgame.held(m.side(tr, "b", m.main), TrackWeight)
+    } yield (a, b)
+
   /** The seed threshold `thr` of [[topPairs]]: the 10th-best exact value
     * over the seed's winners. With the tracks pinned on the driver
-    * (BIGINT user ids, outside [[graft.operators.Endgame.distributed]])
-    * it is found there: the winners come from [[cellWinners]], from
-    * [[everyPair]] or from the collected [[lightWinners]], and their
-    * exact values from one projection over a driver-built
-    * `LocalRelation` of their two sides' pinned rows, which
+    * ([[heldSides]]) it is found there: the winners come from
+    * [[cellWinners]], from [[everyPair]] or from the collected
+    * [[lightWinners]], and their exact values from one projection over a
+    * driver-built `LocalRelation` of their two sides' pinned rows, which
     * `ConvertToLocalRelation` evaluates with no job,
     * calling the same kernels as generated code. Otherwise, or when the
     * cell index is past its gate, Spark runs the whole seed: the light
     * scan, two broadcast joins attaching the tracks, the exact kernel,
     * the top-10 and its aggregate. */
-  private[graft] def seedThreshold(s: SparkSession, tr: DataFrame, m: PairMetric): Double = {
+  private[graft] def seedThreshold(s: SparkSession, tr: DataFrame, m: PairMetric): Double =
+    seedThreshold(s, tr, m, heldSides(tr, m))
+
+  private def seedThreshold(s: SparkSession, tr: DataFrame, m: PairMetric,
+                            sides: Option[(LocalRelation, LocalRelation)]): Double = {
     import s.implicits._
     val onDriver = for {
-      a <- Endgame.held(m.side(tr, "a", m.main), TrackWeight)
-      b <- Endgame.held(m.side(tr, "b", m.main), TrackWeight)
-      if tr.schema("user_id").dataType == LongType
+      (a, b) <- sides
       winners <- if (m.seed.byCells) cellWinners(tr)
                  else everyPair(a).orElse(Some(lightWinners(s, tr, m).as[(Long, Long)].collect().toSeq))
       v <- exactOnDriver(s, a, b, winners, m.exact)
@@ -218,21 +237,24 @@ object Trajectory extends QueryGroup {
     else Some(for (i <- ids.indices; j <- i + 1 until ids.length) yield (ids(i), ids(j)))
   }
 
-  /** `exact` over each winner's two sides, on the driver: the winner's
-    * side-a and side-b rows (keyed by their first column, the user id)
-    * joined positionally into one `LocalRelation`; `None` if the
-    * projection did not fold into a `LocalRelation`. A NULL value reads
-    * `None`. */
-  private def exactOnDriver(s: SparkSession, a: LocalRelation, b: LocalRelation,
-                            winners: Seq[(Long, Long)], exact: Column): Option[Seq[Option[Double]]] = {
+  /** Each (u1, u2) pair's side-a and side-b rows (keyed by their first
+    * column, the user id) joined positionally into one `LocalRelation`,
+    * in the pairs' order: the pair join's output rows for those pairs. */
+  private def joinedSides(a: LocalRelation, b: LocalRelation,
+                          pairs: Seq[(Long, Long)]): LocalRelation = {
     def byUser(l: LocalRelation) =
       l.data.iterator.filterNot(_.isNullAt(0)).map(r => r.getLong(0) -> r).toMap
     val (ra, rb) = (byUser(a), byUser(b))
-    val joined = LocalRelation(a.output ++ b.output,
-      winners.map { case (u1, u2) => new JoinedRow(ra(u1), rb(u2)) })
-    Endgame.held(GraftFrames.frame(s, joined).select(exact.as("v")))
-      .map(_.data.map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))))
+    LocalRelation(a.output ++ b.output, pairs.map { case (u1, u2) => new JoinedRow(ra(u1), rb(u2)) })
   }
+
+  /** `exact` over each winner's two sides ([[joinedSides]]), on the
+    * driver; `None` if the projection did not fold into a
+    * `LocalRelation`. A NULL value reads `None`. */
+  private def exactOnDriver(s: SparkSession, a: LocalRelation, b: LocalRelation,
+                            winners: Seq[(Long, Long)], exact: Column): Option[Seq[Option[Double]]] =
+    Endgame.held(GraftFrames.frame(s, joinedSides(a, b, winners)).select(exact.as("v")))
+      .map(_.data.map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))))
 
   /** `orderBy(best(v)).limit(10)`, then max (ascending) or min
     * (descending) of v, then `coalesce` to the unbounded threshold, in
@@ -376,13 +398,14 @@ object Trajectory extends QueryGroup {
     *    Spark's ordering written out in [[tenth]]), so thr is the Spark
     *    seed's to the bit (TrajectorySpec compares the two paths).
     *  - MAIN: one broadcast pair join whose condition is `u1 < u2` FIRST
-    *    and then `bound(thr + 1e-4)`, which must hold for every pair
-    *    whose exact value is ≤ thr + 1e-4. Ten seed pairs lie within
-    *    thr, so the 10th-smallest ROUNDED value R₁₀ is ≤ round(thr, 4). A
-    *    pair of the output has round(d, 4) ≤ R₁₀, so d ≤ thr + 1e-4 and
-    *    it survives. A dropped pair has d > thr + 1e-4, so
-    *    round(d, 4) > R₁₀ and it sorts strictly after every output row;
-    *    ties at the threshold all survive.
+    *    and then `bound(thr + 1e-4)` (or its driver form, last bullets),
+    *    which must hold for every pair whose exact value is ≤ thr + 1e-4.
+    *    Ten seed pairs lie within thr, so the 10th-smallest ROUNDED value
+    *    R₁₀ is ≤ round(thr, 4). A pair of the output has
+    *    round(d, 4) ≤ R₁₀, so d ≤ thr + 1e-4 and it survives. A dropped
+    *    pair has d > thr + 1e-4, so round(d, 4) > R₁₀ and it sorts
+    *    strictly after every output row; ties at the threshold all
+    *    survive.
     *  - Only survivors pay the exact kernel and `round(…, 4)`: Spark's
     *    Round goes through BigDecimal, and rounding every abandoned pair's
     *    MaxValue cost more than the kernel saved. Survivors are counted
@@ -397,22 +420,39 @@ object Trajectory extends QueryGroup {
     *    line alone). A user-specified repartition is exempt from
     *    coalescing; a hash repartition on u1 would be removed as redundant
     *    with the tracks' window exchange and then coalesced anyway.
-    *  - Per-side columns the bound reads at the threshold
+    *  - A metric with a driver form (`onDriver`, Hausdorff's
+    *    [[hausdorffOnDriver]]) finishes the main pass on the driver when
+    *    the tracks are pinned ([[heldSides]]) and its gates pass: the
+    *    pairs it keeps are exactly the pairs the join condition keeps,
+    *    and their two sides' rows, joined as the seed joins its winners
+    *    ([[joinedSides]], the sides folded once per call for both), make
+    *    one `LocalRelation` that the same observe, `out`, order and limit
+    *    run over, in one job. It is held in one partition: at ten
+    *    survivors or fewer the optimizer drops the limit, and a global
+    *    sort over several partitions would sample them in a second job
+    *    that counts the survivors again.
+    *  - Otherwise, per-side columns the bound reads at the threshold
     *    (`boundSide`, Hausdorff's dilation at radius t) are projected
-    *    once per user on each side, not once per pair. Over pinned tracks
-    *    `ConvertToLocalRelation` evaluates them on the driver while
+    *    once per user on each side of the pair join, not once per pair.
+    *    Over pinned tracks (the forced path, or past the driver form's
+    *    gates) `ConvertToLocalRelation` evaluates them on the driver while
     *    optimizing.
     * With `prune = false` the same main pass runs with no seed, no bound
     * and no observe: the direct all-pairs scan. */
   private[graft] def topPairs(s: SparkSession, tr: DataFrame, m: PairMetric,
                               prune: Boolean = true): DataFrame = {
-    val (cols, cond) = if (!prune) (m.main _, None) else {
-      val thr = seedThreshold(s, tr, m)
+    val kept = if (!prune) pairs(s, tr, m, m.main _, None) else {
+      val sides = heldSides(tr, m)
+      val thr = seedThreshold(s, tr, m, sides)
       val t = if (m.ascending) thr + 1e-4 else thr - 1e-4
-      ((ab: String) => m.main(ab) ++ m.boundSide(t)(ab), Some(m.bound(t)))
+      val onDriver = for {
+        (a, b) <- sides
+        rel <- Endgame.held(tr, TrackWeight)
+        won <- m.onDriver(rel, t)
+      } yield GraftFrames.frame(s, joinedSides(a, b, won)).coalesce(1)
+      onDriver.getOrElse(pairs(s, tr, m, ab => m.main(ab) ++ m.boundSide(t)(ab), Some(m.bound(t))))
+        .observe("prune", count(lit(1)).as("survivors"))
     }
-    val scan = pairs(s, tr, m, cols, cond)
-    val kept = if (prune) scan.observe("prune", count(lit(1)).as("survivors")) else scan
     m.out.foldLeft(kept) { case (df, (name, c)) => df.withColumn(name, c) }
       .select((Seq("u1", "u2", "n_a", "n_b") ++ m.out.map(_._1)).map(col): _*)
       .orderBy(m.best(col(m.out.last._1)), col("u1"), col("u2"))
@@ -443,7 +483,11 @@ object Trajectory extends QueryGroup {
     * `frechet_km_capped`, exact whenever dF ≤ cap, which abandons the far
     * pairs the endpoint bound cannot exclude. sf0.1 on a 4-core host
     * (1,124,250 pairs): the direct all-pairs DP this replaced ran
-    * 41.6–47.0 task-CPU s, this path 3.9–6.4 s, with the same top-10. */
+    * 41.6–47.0 task-CPU s, this path 3.9–6.4 s, with the same top-10.
+    * No cell cover: Hausdorff ≤ Fréchet makes [[hausdorff]]'s cover exact
+    * here too, but at sf0.1 Fréchet's seed threshold is 9,768.53 km, at
+    * which every user's dilation sets all 10,368 cells and the cover keeps
+    * 1,124,250 of 1,124,250 pairs. */
   private[graft] def frechet: PairMetric = {
     def ends(ab: String) =
       Seq("hx", "hy", "hz", "tx", "ty", "tz").map(c => col(c).as(c + ab))
@@ -458,16 +502,18 @@ object Trajectory extends QueryGroup {
     topPairs(s, tr, frechet)
 
   /** m_traj_hausdorff's only path: the cell-overlap seed, then two tests
-    * in the join condition after `u1 < u2`.
+    * after `u1 < u2`, on the driver over pinned tracks
+    * ([[hausdorffOnDriver]]) and in the pair join's condition otherwise.
     *  - The cell cover at radius r = t + [[CoverMarginKm]]: every distinct
     *    cell of A is set in B's cells dilated at r, and every cell of B in
     *    A's ([[graft.functions.TrajSketch.cellsCovered]], one bit lookup
     *    per cell, out at the first miss). It drops no pair the kernel
     *    keeps: if dH ≤ t every fix lies within t of some fix on the other
     *    side, and the cell bound never exceeds the distance of two points.
-    *    The dilations depend on t, so they are no tracks column: each side
-    *    projects its own once per user (`boundSide`). At or past πR the
-    *    cover is left out ([[coverRadius]]).
+    *    The dilations depend on t, so they are no tracks column: the
+    *    driver form builds each user's once, and each side of the pair
+    *    join projects its own once per user (`boundSide`). At or past πR
+    *    the cover is left out ([[coverRadius]]) and the pair join runs.
     *  - The CAPPED exact kernel ([[graft.functions.HausdorffCapped]]),
     *    exact whenever dH ≤ cap, which abandons a far pair at its first
     *    fix whose nearest counterpart lies beyond the cap and makes every
@@ -480,7 +526,11 @@ object Trajectory extends QueryGroup {
     * 0.10–0.16 µs per pair and keeps 16,595, so the kernel runs on 1.5%
     * of the pairs. With the tracks pinned the seed finishes on the
     * driver ([[cellWinners]], then 2000 exact kernels over a
-    * `LocalRelation`): the traced warm pass runs 3 jobs. */
+    * `LocalRelation`), and so does the main pass: 1,500 dilations, the
+    * cover matrix and the 16,595 capped kernels take 91–170 ms on one
+    * thread. A traced warm pass of perfbench `kernels` runs 1 job, the
+    * top-10 over the 974 survivors (0.05 s of job wall time), where the
+    * pair join ran 3 (0.28–0.32 s). */
   private[graft] def hausdorff: PairMetric = {
     def capped(t: Double) = TrajSim.hausdorffKmCapped(col("ta"), col("tb"), lit(t)) <= t
     PairMetric(extra = _ => Nil, seed = cellSeed,
@@ -493,7 +543,8 @@ object Trajectory extends QueryGroup {
       ascending = true,
       boundSide = t => ab => coverRadius(t).toSeq.flatMap { r =>
         Seq(col("cells").as(s"c$ab"), TrajSketchFns.dilateCells(col("cells"), r).as(s"g$ab"))
-      })
+      },
+      onDriver = hausdorffOnDriver)
   }
 
   /** m_traj_hausdorff over `tr`: the seed on the driver or in Spark, then
@@ -514,6 +565,108 @@ object Trajectory extends QueryGroup {
     * dilation, while the kernel alone keeps every pair there. */
   private[graft] def coverRadius(t: Double): Option[Double] =
     Some(t + CoverMarginKm).filter(_ < math.Pi * graft.functions.HaversineDist.EarthRadiusKm)
+
+  /** Hausdorff's main pass on the driver ([[hausdorff]]'s `onDriver`):
+    * the (u1, u2) pairs of the pinned tracks `rel` that pass the cell
+    * cover at [[coverRadius]](t) both ways and then the capped kernel at
+    * t, the pairs the pair join's condition keeps. A user with a NULL id,
+    * cells or track passes no condition there and is left out. Over the
+    * n users ranked by id, with bitsets of ⌈n/64⌉ words:
+    *  1. each user's cells dilated at the cover radius, once;
+    *  2. holds(x): the users whose dilation holds cell bit x;
+    *  3. covers(a): the AND of holds over a's distinct cells, exactly the
+    *     users b with cells(a) ⊆ dil(b), `cell_cover(ca, gb)`;
+    *  4. (i < j) is a candidate when covers(i) holds j and covers(j)
+    *     holds i, the cover both ways;
+    *  5. each candidate pays `computeCapped(ti, tj, t) <= t`.
+    * Tracks, cells and dilations are read in place. `None` at no cover
+    * radius, on a repeated id, when the (NRow·NLon + n)·⌈n/64⌉ words of
+    * holds and covers do not fit the budget, or when the candidate count
+    * read off them does not, each checked before the work it bounds. At
+    * sf0.1 (1,500 users): 284,832 words, 16,595 candidates, 974 pairs
+    * kept. */
+  private[graft] def hausdorffOnDriver(rel: LocalRelation, t: Double): Option[Seq[(Long, Long)]] = {
+    def at(name: String) = rel.output.indexWhere(_.name == name)
+    val (uo, co, to) = (at("user_id"), at("cells"), at("track"))
+    val users = rel.data.filter(u => !u.isNullAt(uo) && !u.isNullAt(co) && !u.isNullAt(to))
+      .sortBy(_.getLong(uo)).toArray
+    val n = users.length
+    val ids = users.map(_.getLong(uo))
+    val w = (n + 63) >>> 6
+    val bits = TrajSketch.NRow * TrajSketch.NLon
+    val distinct = (1 until n).forall(i => ids(i) != ids(i - 1))
+    coverRadius(t).filter(_ => distinct && Endgame.local((bits + n).toLong * w)).flatMap { r =>
+      val cells = users.map(_.getArray(co))
+      // holds(x) is bit u of the words holds(word · bits + x), word = u / 64
+      val holds = new Array[Long](bits * w)
+      val g = TrajSketch.geom(r)
+      var u = 0
+      while (u < n) {
+        val dil = TrajSketch.dilatedBitmap(cells(u), g)
+        val base = (u >>> 6) * bits
+        val mask = 1L << (u & 63)
+        var k = 0
+        while (k < dil.length) {
+          var m = dil(k)
+          while (m != 0L) {
+            holds(base + (k << 6) + java.lang.Long.numberOfTrailingZeros(m)) |= mask
+            m &= m - 1
+          }
+          k += 1
+        }
+        u += 1
+      }
+      // covers(a) is the words covers(a · w + word): all n users, ANDed
+      // with holds over a's cells (an empty cell set is in every dilation)
+      val covers = new Array[Long](n * w)
+      val last = if ((n & 63) == 0) -1L else (1L << (n & 63)) - 1
+      var a = 0
+      while (a < n) {
+        val row = a * w
+        java.util.Arrays.fill(covers, row, row + w - 1, -1L)
+        covers(row + w - 1) = last
+        val cs = cells(a)
+        var i = 0
+        while (i < cs.numElements()) {
+          val x = TrajSketch.coverBit(cs.getInt(i))
+          var wd = 0
+          while (wd < w) { covers(row + wd) &= holds(wd * bits + x); wd += 1 }
+          i += 1
+        }
+        a += 1
+      }
+      // visits each candidate (i < j) in order; returns their count
+      def candidates(visit: (Int, Int) => Unit): Long = {
+        var k = 0L
+        var i = 0
+        while (i < n) {
+          val iw = i >>> 6
+          val ib = 1L << (i & 63)
+          var wd = iw
+          while (wd < w) {
+            var m = covers(i * w + wd) & (if (wd == iw) -2L << (i & 63) else -1L)
+            while (m != 0L) {
+              val j = (wd << 6) + java.lang.Long.numberOfTrailingZeros(m)
+              if ((covers(j * w + iw) & ib) != 0L) { k += 1; visit(i, j) }
+              m &= m - 1
+            }
+            wd += 1
+          }
+          i += 1
+        }
+        k
+      }
+      if (!Endgame.local(candidates((_, _) => ()))) None
+      else {
+        val tracks = users.map(_.getArray(to))
+        val kept = Seq.newBuilder[(Long, Long)]
+        candidates { (i, j) =>
+          if (HausdorffKm.computeCapped(tracks(i), tracks(j), t) <= t) kept += ((ids(i), ids(j)))
+        }
+        Some(kept.result())
+      }
+    }
+  }
 
   /** m_traj_lcss's only path, a MAXIMIZATION: the shared near-count
     * kernel ([[graft.functions.TrajSketch.nearCounts]]) gives the EXACT
@@ -772,7 +925,10 @@ object Trajectory extends QueryGroup {
       // One path at every pair count: the threshold prune
       // ([[hausdorffPruned]]). A cell cover at the threshold radius
       // leaves the capped kernel ~17,000 of sf0.1's 1.1M pairs, and only
-      // the ~1,000 the cap cannot abandon pay the full kernel.
+      // the ~1,000 the cap cannot abandon pay the full kernel. Over the
+      // pinned tracks the cover and the capped kernels run on the driver
+      // (a user-bit cover matrix, [[hausdorffOnDriver]]), and one job
+      // ranks the survivors; past its gates the broadcast pair join runs.
       hausdorffPruned(s, gatedTracks(s, dir, "m_traj_hausdorff")._1)
     }),
 

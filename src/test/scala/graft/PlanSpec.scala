@@ -1360,8 +1360,10 @@ class PlanSpec extends BaseSpec {
     // m_traj_hausdorff's u1 < u2 pair scan against the broadcast track
     // frame IS the declared BroadcastNestedLoopJoin (a theta join moves no
     // data twice); anything heavier (cartesian, SMJ) is a regression.
-    val hd = SparkEntry.queries("m_traj_hausdorff")(spark, sf)
-      .queryExecution.executedPlan.toString
+    // Below the budget the key's main pass runs on the driver, so the
+    // pair scan, its above-budget path, is pinned in the forced scope.
+    val hd = operators.Endgame.distributed(SparkEntry.queries("m_traj_hausdorff")(spark, sf)
+      .queryExecution.executedPlan.toString)
     assert(hd.contains("BroadcastNestedLoopJoin") &&
            !hd.contains("CartesianProduct") && !hd.contains("SortMergeJoin"),
       s"m_traj_hausdorff: pair scan shape regressed:\n$hd")
@@ -1480,10 +1482,18 @@ class PlanSpec extends BaseSpec {
     // one broadcast pair join, u1 < u2 first, then the cell cover, then
     // the capped kernel in its condition (a pushed withColumn+filter form
     // lands the kernel first and doubles its calls; the kernel ahead of
-    // the cover would run on every pair)
-    val hp = SparkEntry.queries("m_traj_hausdorff")(spark, sf)
-    hp.collect()
-    val hpP = finalSection(hp.queryExecution.executedPlan.toString)
+    // the cover would run on every pair). The pair join is the main pass
+    // above the budget, pinned in the forced scope; below it (the default
+    // path here) the main pass runs on the driver and plans no join.
+    val hd = SparkEntry.queries("m_traj_hausdorff")(spark, sf)
+    hd.collect()
+    val hdP = hd.queryExecution.executedPlan.toString
+    assert(!hdP.contains("Join"), s"m_traj_hausdorff: the driver main pass plans no join:\n$hdP")
+    val hpP = operators.Endgame.distributed {
+      val hp = SparkEntry.queries("m_traj_hausdorff")(spark, sf)
+      hp.collect()
+      finalSection(hp.queryExecution.executedPlan.toString)
+    }
     assert("BroadcastNestedLoopJoin".r.findAllIn(hpP).size == 1,
       s"m_traj_hausdorff: main pass must be exactly one pair join:\n$hpP")
     assert(hpP.linesIterator.count(_.contains("Join")) == 1,

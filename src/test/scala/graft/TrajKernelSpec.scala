@@ -354,6 +354,15 @@ class TrajKernelSpec extends BaseSpec {
     val reads = cover.map(sketch).filter(_.contains(".get"))
     assert(reads.nonEmpty && reads.forall(l => """(?<!Platform)\.get(Int|Long)\(""".r.findFirstIn(l).isEmpty),
       reads.mkString("virtual read in cellsCovered:\n", "\n", ""))
+    // Hausdorff's driver main pass hands the pinned rows' tracks, cells
+    // and dilations to the kernels as they are: no copy in its loop
+    val traj = Files.readAllLines(Paths.get("src/main/scala/graft/queries/Trajectory.scala"))
+      .asScala.toIndexedSeq
+    val driver = body(traj, "hausdorffOnDriver").map(traj)
+    assert(driver.size > 1 && driver.exists(_.contains("HausdorffKm.computeCapped(")) &&
+      driver.exists(_.contains("TrajSketch.dilatedBitmap(")), "Trajectory.hausdorffOnDriver not found")
+    val copies = driver.filter(l => copy.findFirstIn(l).isDefined)
+    assert(copies.isEmpty, copies.mkString("array copy in hausdorffOnDriver:\n", "\n", ""))
   }
 
   /** The per-bit dilation fill that the run fill replaced, verbatim over

@@ -311,6 +311,32 @@ class TrajectorySpec extends BaseSpec {
     (rows, df.queryExecution.observedMetrics.get("prune").map(_.getLong(0)))
   }
 
+  /** Whether `df`'s executed plan holds a join: the Spark main pass. */
+  private def joins(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("Join")
+
+  /** `m` (Hausdorff by default) on `tr` by the default path and under
+    * `Endgame.distributed`: the rows must match to the bit and the
+    * `prune` survivors must be equal. Returns whether the default path's
+    * main pass ran in Spark (a join in its plan) rather than on the
+    * driver. */
+  private def mainPassesAgree(label: String, tr: org.apache.spark.sql.DataFrame,
+                              m: queries.Trajectory.PairMetric = queries.Trajectory.hausdorff): Boolean = {
+    def bits(r: org.apache.spark.sql.Row) =
+      r.toSeq.map { case d: Double => java.lang.Double.doubleToRawLongBits(d); case v => v }
+    def run() = {
+      val df = queries.Trajectory.topPairs(spark, tr, m)
+      val (rows, surv) = runPruned(df)
+      (rows.map(bits), surv, joins(df))
+    }
+    val (rows, surv, inSpark) = run()
+    val (dRows, dSurv, dJoin) = graft.operators.Endgame.distributed(run())
+    assert(dJoin, s"$label: the forced main pass must be the pair join")
+    assert(rows == dRows, s"$label main pass:\n default=$rows\n forced=$dRows")
+    assert(surv.nonEmpty && surv == dSurv, s"$label survivors: default $surv, forced $dSurv")
+    inSpark
+  }
+
   test("threshold prune drops pairs; EDR's forced prune == its direct scan at fixture scale") {
     val tr = queries.Trajectory.tracks(spark, sf)
     val nUsers = tr.count()
@@ -407,6 +433,8 @@ class TrajectorySpec extends BaseSpec {
           .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
         assert(gotE == wantE, s"$path edr (prune=$prune):\n got=$gotE\nwant=$wantE")
       }
+      // Hausdorff's main pass runs on the driver over the pinned tracks
+      if (!distributed) assert(!mainPassesAgree(path, tr), s"$path: Hausdorff's main pass ran in Spark")
     }
   }
 
@@ -430,6 +458,9 @@ class TrajectorySpec extends BaseSpec {
       assert(java.lang.Double.doubleToRawLongBits(onDriver) ==
         java.lang.Double.doubleToRawLongBits(inSpark), s"$label $name thr: $onDriver vs $inSpark")
     }
+    // and Hausdorff's main pass finishes on the driver with the Spark
+    // main pass's rows and survivors
+    assert(!mainPassesAgree(label, pinned), s"$label: Hausdorff's main pass ran in Spark")
     pinned
   }
 
@@ -493,6 +524,10 @@ class TrajectorySpec extends BaseSpec {
     // lists them with no light scan (at sf0.1 the scan runs as a top-k)
     assert(jobs("m_traj_frechet") == 0)
     assert(jobs("m_traj_lcss") == 0)
+    // Hausdorff's main pass finishes on the driver: the collect runs the
+    // top-10 over the survivors in one job (the pair join ran more)
+    val hausdorffJobs = jobsDuring(SparkEntry.queries("m_traj_hausdorff")(spark, sf).collect())
+    assert(hausdorffJobs <= 1, s"warm m_traj_hausdorff collect ran $hausdorffJobs jobs")
   }
 
   test("the cell cover at r keeps every pair whose exact Hausdorff distance is at most r") {
@@ -550,6 +585,45 @@ class TrajectorySpec extends BaseSpec {
       assert(surv.contains(n * (n - 1) / 2), s"distributed=$distributed: survivors $surv")
       val gotH = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
       assert(gotH == wantH, s"distributed=$distributed hausdorff:\n got=$gotH\nwant=$wantH")
+      // with no cover radius the driver main pass declines: the default
+      // path runs the same pair join as the forced one
+      if (!distributed) assert(mainPassesAgree("nullSeed", tr, nullSeed))
     }
+  }
+
+  /** Pinned tracks of one fix per user, user u at `at(u)`. */
+  private def oneFixTracks(users: Seq[Long], at: Long => (Double, Double)) = {
+    val fixes = users.map { u => val (lat, lon) = at(u); (u, 0L, u, lat, lon) }
+    graft.operators.Endgame.pin(queries.Trajectory.tracksFromPoints(spark, fixFrame(fixes)),
+      queries.Trajectory.TrackWeight)
+  }
+
+  /** Hausdorff's top-10 on `tr`: whether its main pass ran in Spark, and
+    * the jobs its collect ran. */
+  private def hausdorffPass(tr: org.apache.spark.sql.DataFrame): (Boolean, Int) = {
+    val df = queries.Trajectory.hausdorffPruned(spark, tr)
+    val jobs = jobsDuring(df.collect())
+    (joins(df), jobs)
+  }
+
+  test("past the matrix gate Hausdorff's main pass runs in Spark") {
+    // (NRow·NLon + n)·⌈n/64⌉ words of holds and covers: 4,480 users fit
+    // the budget (1,039,360 words), 4,481 do not (1,054,279)
+    val scatter = (u: Long) => ((u * 37 % 1600) / 10.0 - 80, (u * 131 % 3500) / 10.0 - 175)
+    val (below, belowJobs) = hausdorffPass(oneFixTracks(1L to 4480L, scatter))
+    assert(!below && belowJobs <= 1, s"4,480 users: in Spark $below, $belowJobs jobs")
+    val (above, aboveJobs) = hausdorffPass(oneFixTracks(1L to 4481L, scatter))
+    assert(above && aboveJobs > 1, s"4,481 users: in Spark $above, $aboveJobs jobs")
+  }
+
+  test("past the candidate gate Hausdorff's main pass runs in Spark") {
+    // every user in one 2.5° cell: every pair is a candidate, and
+    // C(1448, 2) = 1,047,628 fits the budget while C(1449, 2) = 1,049,076
+    // does not; the matrix (271,791 words at 1,449 users) fits both
+    val oneCell = (u: Long) => (10.0 + (u % 40) * 0.05, 20.0 + (u / 40) * 0.05)
+    val (below, belowJobs) = hausdorffPass(oneFixTracks(1L to 1448L, oneCell))
+    assert(!below && belowJobs <= 1, s"1,448 users: in Spark $below, $belowJobs jobs")
+    val (above, aboveJobs) = hausdorffPass(oneFixTracks(1L to 1449L, oneCell))
+    assert(above && aboveJobs > 1, s"1,449 users: in Spark $above, $aboveJobs jobs")
   }
 }
