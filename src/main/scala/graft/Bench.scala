@@ -39,8 +39,9 @@ object Bench {
         .write.mode("overwrite").parquet(s"$wdir/warm.parquet")
     } catch { case scala.util.control.NonFatal(_) => () }
     // Each query runs TWICE in-JVM and reports the min: host-level noise on
-    // this box measured up to 1.6× between identical binaries (PREFLIGHT_r06,
-    // heap A/B excluded GC), so a single sample is a coin flip. The min of
+    // this box measured up to 1.6× between identical binaries
+    // (PREFLIGHT_r06.md at commit 3998105; heap A/B excluded GC), so a
+    // single sample is a coin flip. The min of
     // two back-to-back runs is the steady-state cost — fixed overhead is
     // already warmed, and a one-off scheduler stall can't masquerade as a
     // regression. A failed run is -1 and never the reported min unless both

@@ -6,9 +6,10 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
-/** Measured scaling point for the 100 TB arguments (PREFLIGHT probe, not
-  * a driver surface): synthesizes a `factor`× copy of the tables the
-  * slowest keys + the dedup/ANN substrate read, then times each probe
+/** Measured scaling point for the 100 TB arguments (a preflight probe,
+  * PREFLIGHT_r*.md at commit 3998105; not a driver surface): synthesizes
+  * a `factor`× copy of the tables the slowest keys + the dedup/ANN
+  * substrate read, then times each probe
   * key at base and scaled size and reports rows / shuffle-exchange
   * counts / executed rounds. The scale-up is id-shifted REPLICATION with
   * time-disjoint copies (each copy's events shift by the full time span,
@@ -323,7 +324,7 @@ object ScaleProbe {
       // measures a duplicate-saturated corpus, not a ×100 fleet. The
       // shift amounts keep the lat/lon lattice phases distinct
       // (maxE·37 mod 1700 ≠ 0 and maxE·131 mod 3600 ≠ 0 — checked in
-      // PREFLIGHT_r16), matching the on-disk replicate() discipline.
+      // PREFLIGHT_r16.md at commit 3998105), matching the on-disk replicate() discipline.
       def shiftedEvents(copies: Int): DataFrame = {
         val ev = Tables(spark, scaled, "events")
           .select(col("user_id"), col("event_id"), col("ts"))

@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
 object TrajLsh {
 
   /** Measured corridor throughput, users · s⁻¹ · core⁻¹ (round 18, r17
-    * verdict ask #7): the PREFLIGHT_r17 ×100 probe ran ~150k users
+    * verdict ask #7): the ×100 probe (PREFLIGHT_r17.md at commit 3998105) ran ~150k users
     * end-to-end (candidate generation 10.9 s; per-metric verify 6.1–9.4 s
     * each) on local[32] — ≈ 600 users/s/core for generation + one
     * verify, vs the exact family's 1.9 µs·core/PAIR (quadratic). Budget

@@ -276,8 +276,10 @@ object Trajectory extends QueryGroup {
     * index over the pinned tracks' distinct `cells`: every pair sharing a
     * cell is one packed (rank(u1), rank(u2)) long per shared cell, and a
     * sorted run's length is the pair's shared-cell count, `cell_hits`.
-    * Fewer than [[SeedPairs]] such pairs are filled with the smallest
-    * zero-hit (u1, u2) pairs in order, as the Spark seed's ranking does.
+    * The packed longs are sorted with `Arrays.parallelSort` on the
+    * driver's cores, in the same order as a serial sort. Fewer than
+    * [[SeedPairs]] such pairs are filled with the smallest zero-hit
+    * (u1, u2) pairs in order, as the Spark seed's ranking does.
     * NULL user ids are dropped: `u1 < u2` never holds for them. `None`
     * when the tracks are not pinned on the driver, or when the pair work
     * Σ_c C(n_c, 2) over the cells' user counts n_c is past the budget (a
@@ -330,7 +332,7 @@ object Trajectory extends QueryGroup {
           }
           c += 1
         }
-        java.util.Arrays.sort(packed)
+        java.util.Arrays.parallelSort(packed)
         // distinct pairs ascending (= (u1, u2) order) and their run lengths
         val pk = new Array[Long](packed.length)
         val hits = new Array[Int](packed.length)
@@ -426,8 +428,12 @@ object Trajectory extends QueryGroup {
     *    pairs it keeps are exactly the pairs the join condition keeps,
     *    and their two sides' rows, joined as the seed joins its winners
     *    ([[joinedSides]], the sides folded once per call for both), make
-    *    one `LocalRelation` that the same observe, `out`, order and limit
-    *    run over, in one job. It is held in one partition: at ten
+    *    one `LocalRelation`. Its `out` columns and the output select are
+    *    folded into it before the observe (`ConvertToLocalRelation`, no
+    *    job), so the one job that observes, orders and limits ships the
+    *    narrow output rows (974 five-column rows at sf0.1), not the
+    *    joined track rows of about 8 KB each; the pair join projects them
+    *    after the observe. It is held in one partition: at ten
     *    survivors or fewer the optimizer drops the limit, and a global
     *    sort over several partitions would sample them in a second job
     *    that counts the survivors again.
@@ -441,7 +447,11 @@ object Trajectory extends QueryGroup {
     * and no observe: the direct all-pairs scan. */
   private[graft] def topPairs(s: SparkSession, tr: DataFrame, m: PairMetric,
                               prune: Boolean = true): DataFrame = {
-    val kept = if (!prune) pairs(s, tr, m, m.main _, None) else {
+    def narrow(df: DataFrame): DataFrame =
+      m.out.foldLeft(df) { case (d, (name, c)) => d.withColumn(name, c) }
+        .select((Seq("u1", "u2", "n_a", "n_b") ++ m.out.map(_._1)).map(col): _*)
+    def observed(df: DataFrame): DataFrame = df.observe("prune", count(lit(1)).as("survivors"))
+    val kept = if (!prune) narrow(pairs(s, tr, m, m.main _, None)) else {
       val sides = heldSides(tr, m)
       val thr = seedThreshold(s, tr, m, sides)
       val t = if (m.ascending) thr + 1e-4 else thr - 1e-4
@@ -449,13 +459,12 @@ object Trajectory extends QueryGroup {
         (a, b) <- sides
         rel <- Endgame.held(tr, TrackWeight)
         won <- m.onDriver(rel, t)
-      } yield GraftFrames.frame(s, joinedSides(a, b, won)).coalesce(1)
-      onDriver.getOrElse(pairs(s, tr, m, ab => m.main(ab) ++ m.boundSide(t)(ab), Some(m.bound(t))))
-        .observe("prune", count(lit(1)).as("survivors"))
+        out <- Endgame.held(narrow(GraftFrames.frame(s, joinedSides(a, b, won))))
+      } yield observed(GraftFrames.frame(s, out).coalesce(1))
+      onDriver.getOrElse(narrow(observed(
+        pairs(s, tr, m, ab => m.main(ab) ++ m.boundSide(t)(ab), Some(m.bound(t))))))
     }
-    m.out.foldLeft(kept) { case (df, (name, c)) => df.withColumn(name, c) }
-      .select((Seq("u1", "u2", "n_a", "n_b") ++ m.out.map(_._1)).map(col): _*)
-      .orderBy(m.best(col(m.out.last._1)), col("u1"), col("u2"))
+    kept.orderBy(m.best(col(m.out.last._1)), col("u1"), col("u2"))
       .limit(10)
   }
 
@@ -527,10 +536,10 @@ object Trajectory extends QueryGroup {
     * of the pairs. With the tracks pinned the seed finishes on the
     * driver ([[cellWinners]], then 2000 exact kernels over a
     * `LocalRelation`), and so does the main pass: 1,500 dilations, the
-    * cover matrix and the 16,595 capped kernels take 91–170 ms on one
-    * thread. A traced warm pass of perfbench `kernels` runs 1 job, the
-    * top-10 over the 974 survivors (0.05 s of job wall time), where the
-    * pair join ran 3 (0.28–0.32 s). */
+    * cover matrix and the 16,595 capped kernels, fanned out over the
+    * driver's cores, take 26–47 ms on a 4-core host. A traced warm pass
+    * of perfbench `kernels` runs 1 job, the top-10 over the 974
+    * survivors' narrow rows, where the pair join ran 3 (0.28–0.32 s). */
   private[graft] def hausdorff: PairMetric = {
     def capped(t: Double) = TrajSim.hausdorffKmCapped(col("ta"), col("tb"), lit(t)) <= t
     PairMetric(extra = _ => Nil, seed = cellSeed,
@@ -579,12 +588,16 @@ object Trajectory extends QueryGroup {
     *  4. (i < j) is a candidate when covers(i) holds j and covers(j)
     *     holds i, the cover both ways;
     *  5. each candidate pays `computeCapped(ti, tj, t) <= t`.
-    * Tracks, cells and dilations are read in place. `None` at no cover
-    * radius, on a repeated id, when the (NRow·NLon + n)·⌈n/64⌉ words of
-    * holds and covers do not fit the budget, or when the candidate count
-    * read off them does not, each checked before the work it bounds. At
-    * sf0.1 (1,500 users): 284,832 words, 16,595 candidates, 974 pairs
-    * kept. */
+    * Steps 1–2 ([[coverHolds]]), 3 and 5 are fanned out over the driver's
+    * cores ([[fanOut]]); step 4 lists the candidates in order, and the
+    * kept pairs are collected in that order, so the pairs and their order
+    * do not depend on the pool. Every gate is checked on the calling
+    * thread. Tracks, cells and dilations are read in place. `None` at no
+    * cover radius, on a repeated id, when the (NRow·NLon + n)·⌈n/64⌉
+    * words of holds and covers do not fit the budget, or when the
+    * candidate count read off them does not, each checked before the
+    * work it bounds. At sf0.1 (1,500 users): 284,832 words, 16,595
+    * candidates, 974 pairs kept. */
   private[graft] def hausdorffOnDriver(rel: LocalRelation, t: Double): Option[Seq[(Long, Long)]] = {
     def at(name: String) = rel.output.indexWhere(_.name == name)
     val (uo, co, to) = (at("user_id"), at("cells"), at("track"))
@@ -597,43 +610,29 @@ object Trajectory extends QueryGroup {
     val distinct = (1 until n).forall(i => ids(i) != ids(i - 1))
     coverRadius(t).filter(_ => distinct && Endgame.local((bits + n).toLong * w)).flatMap { r =>
       val cells = users.map(_.getArray(co))
-      // holds(x) is bit u of the words holds(word · bits + x), word = u / 64
-      val holds = new Array[Long](bits * w)
       val g = TrajSketch.geom(r)
-      var u = 0
-      while (u < n) {
-        val dil = TrajSketch.dilatedBitmap(cells(u), g)
-        val base = (u >>> 6) * bits
-        val mask = 1L << (u & 63)
-        var k = 0
-        while (k < dil.length) {
-          var m = dil(k)
-          while (m != 0L) {
-            holds(base + (k << 6) + java.lang.Long.numberOfTrailingZeros(m)) |= mask
-            m &= m - 1
-          }
-          k += 1
-        }
-        u += 1
-      }
+      val holds = coverHolds(n, u => TrajSketch.dilatedBitmap(cells(u), g))
       // covers(a) is the words covers(a · w + word): all n users, ANDed
-      // with holds over a's cells (an empty cell set is in every dilation)
+      // with holds over a's cells (an empty cell set is in every
+      // dilation); each row is written by one chunk
       val covers = new Array[Long](n * w)
       val last = if ((n & 63) == 0) -1L else (1L << (n & 63)) - 1
-      var a = 0
-      while (a < n) {
-        val row = a * w
-        java.util.Arrays.fill(covers, row, row + w - 1, -1L)
-        covers(row + w - 1) = last
-        val cs = cells(a)
-        var i = 0
-        while (i < cs.numElements()) {
-          val x = TrajSketch.coverBit(cs.getInt(i))
-          var wd = 0
-          while (wd < w) { covers(row + wd) &= holds(wd * bits + x); wd += 1 }
-          i += 1
+      fanOut(n) { (lo, hi) =>
+        var a = lo
+        while (a < hi) {
+          val row = a * w
+          java.util.Arrays.fill(covers, row, row + w - 1, -1L)
+          covers(row + w - 1) = last
+          val cs = cells(a)
+          var i = 0
+          while (i < cs.numElements()) {
+            val x = TrajSketch.coverBit(cs.getInt(i))
+            var wd = 0
+            while (wd < w) { covers(row + wd) &= holds(wd * bits + x); wd += 1 }
+            i += 1
+          }
+          a += 1
         }
-        a += 1
       }
       // visits each candidate (i < j) in order; returns their count
       def candidates(visit: (Int, Int) => Unit): Long = {
@@ -656,15 +655,93 @@ object Trajectory extends QueryGroup {
         }
         k
       }
-      if (!Endgame.local(candidates((_, _) => ()))) None
+      val k = candidates((_, _) => ())
+      if (!Endgame.local(k)) None
       else {
+        // the candidates in order, their capped kernels fanned out, and
+        // the kept pairs collected in that order
+        val (ci, cj) = (new Array[Int](k.toInt), new Array[Int](k.toInt))
+        var c = 0
+        candidates { (i, j) => ci(c) = i; cj(c) = j; c += 1 }
         val tracks = users.map(_.getArray(to))
-        val kept = Seq.newBuilder[(Long, Long)]
-        candidates { (i, j) =>
-          if (HausdorffKm.computeCapped(tracks(i), tracks(j), t) <= t) kept += ((ids(i), ids(j)))
+        val keep = new Array[Boolean](k.toInt)
+        fanOut(k.toInt) { (lo, hi) =>
+          var p = lo
+          while (p < hi) {
+            keep(p) = HausdorffKm.computeCapped(tracks(ci(p)), tracks(cj(p)), t) <= t
+            p += 1
+          }
         }
+        val kept = Seq.newBuilder[(Long, Long)]
+        c = 0
+        while (c < k) { if (keep(c)) kept += ((ids(ci(c)), ids(cj(c)))); c += 1 }
         Some(kept.result())
       }
+    }
+  }
+
+  /** Runs `f(lo, hi)` over contiguous chunks of [0, n), about four per
+    * core (the capped kernel abandons pairs at uneven points), as one
+    * parallel stream: on the JVM's common pool, sized to the driver's
+    * cores, or on the `ForkJoinPool` whose worker calls it. Each chunk
+    * writes only its own slots, so no result depends on the chunking or
+    * the pool. No chunk may consult an [[graft.operators.Endgame]] gate:
+    * its [[graft.operators.Endgame.distributed]] scope is the calling
+    * thread's, so every gate is checked before the fan-out. */
+  private def fanOut(n: Int)(f: (Int, Int) => Unit): Unit = {
+    val chunks = math.min(n, 4 * Runtime.getRuntime.availableProcessors)
+    java.util.stream.IntStream.range(0, chunks).parallel().forEach { c =>
+      f((c.toLong * n / chunks).toInt, ((c + 1).toLong * n / chunks).toInt)
+    }
+  }
+
+  /** holds(x) of [[hausdorffOnDriver]] over n users: bit u & 63 of the
+    * word holds((u / 64) · NRow·NLon + x) is set when user u's dilation
+    * `dil(u)` ([[graft.functions.TrajSketch.DilWords]] words) holds cell
+    * bit x. Fanned out by 64-user blocks, each owning its slice of holds:
+    * a block builds its users' dilations once each, and per dilation word
+    * the 64 users' words form a 64 × 64 bit matrix whose transpose is the
+    * holds words of that word's 64 cells. */
+  private[graft] def coverHolds(n: Int, dil: Int => Array[Long]): Array[Long] = {
+    val bits = TrajSketch.NRow * TrajSketch.NLon
+    val holds = new Array[Long](bits * ((n + 63) >>> 6))
+    fanOut((n + 63) >>> 6) { (lo, hi) =>
+      val m = new Array[Long](64)
+      var blk = lo
+      while (blk < hi) {
+        val first = blk << 6
+        val dils = Array.tabulate(math.min(64, n - first))(r => dil(first + r))
+        var k = 0
+        while (k < TrajSketch.DilWords) {
+          java.util.Arrays.fill(m, 0L)
+          var r = 0
+          while (r < dils.length) { m(r) = dils(r)(k); r += 1 }
+          transpose64(m)
+          System.arraycopy(m, 0, holds, blk * bits + (k << 6), 64)
+          k += 1
+        }
+        blk += 1
+      }
+    }
+    holds
+  }
+
+  /** Transposes the 64 × 64 bit matrix `m` in place, bit c of m(r) to bit
+    * r of m(c): swaps the two off-diagonal 32 × 32 blocks, then within
+    * each quarter the 16 × 16 ones, down to single bits. */
+  private def transpose64(m: Array[Long]): Unit = {
+    var j = 32
+    var mask = 0xffffffffL
+    while (j != 0) {
+      var k = 0
+      while (k < 64) {
+        val x = ((m(k) >>> j) ^ m(k + j)) & mask
+        m(k) ^= x << j
+        m(k + j) ^= x
+        k = (k + j + 1) & ~j
+      }
+      j >>>= 1
+      mask ^= mask << j
     }
   }
 
@@ -703,7 +780,7 @@ object Trajectory extends QueryGroup {
     *  - the bound bites when d₁₀ ≪ 1, a corpus that CONTAINS near-
     *    duplicate tracks (planted near-dups at ×10 skew: thr collapses to
     *    ~1/n and the scan excludes every pair whose length ratio misses
-    *    it; PREFLIGHT_r16);
+    *    it; PREFLIGHT_r16.md at commit 3998105);
     *  - when even the closest pairs are ~random (d₁₀ ≈ 1, this fixture,
     *    skewed or not: survivors 100% of 112.5M ×10 pairs) nothing can
     *    prune, and the pruned path is 20–30% slower at sf0.1 than the
@@ -926,9 +1003,10 @@ object Trajectory extends QueryGroup {
       // ([[hausdorffPruned]]). A cell cover at the threshold radius
       // leaves the capped kernel ~17,000 of sf0.1's 1.1M pairs, and only
       // the ~1,000 the cap cannot abandon pay the full kernel. Over the
-      // pinned tracks the cover and the capped kernels run on the driver
-      // (a user-bit cover matrix, [[hausdorffOnDriver]]), and one job
-      // ranks the survivors; past its gates the broadcast pair join runs.
+      // pinned tracks the cover and the capped kernels run on the
+      // driver's cores (a user-bit cover matrix, [[hausdorffOnDriver]]),
+      // and one job ranks the survivors' narrow output rows; past its
+      // gates the broadcast pair join runs.
       hausdorffPruned(s, gatedTracks(s, dir, "m_traj_hausdorff")._1)
     }),
 

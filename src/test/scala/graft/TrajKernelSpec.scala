@@ -361,8 +361,14 @@ class TrajKernelSpec extends BaseSpec {
     val driver = body(traj, "hausdorffOnDriver").map(traj)
     assert(driver.size > 1 && driver.exists(_.contains("HausdorffKm.computeCapped(")) &&
       driver.exists(_.contains("TrajSketch.dilatedBitmap(")), "Trajectory.hausdorffOnDriver not found")
-    val copies = driver.filter(l => copy.findFirstIn(l).isDefined)
-    assert(copies.isEmpty, copies.mkString("array copy in hausdorffOnDriver:\n", "\n", ""))
+    // nor do the fan-out and the transposed cover matrix that it runs
+    // on the driver's cores
+    val driverBodies = Seq("hausdorffOnDriver", "fanOut", "coverHolds", "transpose64")
+      .map(h => h -> body(traj, h).map(traj))
+    for ((h, lines) <- driverBodies) assert(lines.size > 1, s"Trajectory.$h not found")
+    val copies = for ((h, lines) <- driverBodies; l <- lines if copy.findFirstIn(l).isDefined)
+      yield s"$h: ${l.trim}"
+    assert(copies.isEmpty, copies.mkString("array copy in Hausdorff's driver main pass:\n", "\n", ""))
   }
 
   /** The per-bit dilation fill that the run fill replaced, verbatim over
@@ -426,6 +432,57 @@ class TrajKernelSpec extends BaseSpec {
     // a radius just under πR dilates every cell to the whole sphere
     assert(TrajSketch.dilatedBitmap(ArrayData.toArrayData(Array(0)), math.nextDown(piR))
       .forall(_ == -1L))
+  }
+
+  /** The per-bit holds fill that the transposed block fill replaced,
+    * verbatim over the users' dilations. */
+  private def perBitHolds(dils: IndexedSeq[Array[Long]]): Array[Long] = {
+    val n = dils.length
+    val w = (n + 63) >>> 6
+    val bits = TrajSketch.NRow * TrajSketch.NLon
+    val holds = new Array[Long](bits * w)
+    var u = 0
+    while (u < n) {
+      val dil = dils(u)
+      val base = (u >>> 6) * bits
+      val mask = 1L << (u & 63)
+      var k = 0
+      while (k < dil.length) {
+        var m = dil(k)
+        while (m != 0L) {
+          holds(base + (k << 6) + java.lang.Long.numberOfTrailingZeros(m)) |= mask
+          m &= m - 1
+        }
+        k += 1
+      }
+      u += 1
+    }
+    holds
+  }
+
+  test("the transposed cover matrix equals the per-bit holds fill") {
+    val rnd = new scala.util.Random(6464)
+    val words = TrajSketch.DilWords
+    val g = TrajSketch.geom(2861.0)
+    // a user's dilation: random words, empty, every row full, some rows
+    // full, or a real dilation of a random cell set
+    def dilation(kind: Int): Array[Long] = kind match {
+      case 0 => Array.fill(words)(rnd.nextLong())
+      case 1 => new Array[Long](words)
+      case 2 => Array.fill(words)(-1L)
+      case 3 =>
+        val out = new Array[Long](words)
+        for (row <- 0 until TrajSketch.NRow if rnd.nextInt(3) == 0;
+             bit <- row * TrajSketch.NLon until (row + 1) * TrajSketch.NLon)
+          out(bit >>> 6) |= 1L << (bit & 63)
+        out
+      case _ => TrajSketch.dilatedBitmap(ArrayData.toArrayData(cellSet()), g)
+    }
+    for (n <- Seq(1, 63, 64, 65, 200); mix <- Seq(-1, 0, 1, 2, 3, 4)) {
+      val dils = IndexedSeq.tabulate(n)(_ => dilation(if (mix >= 0) mix else rnd.nextInt(5)))
+      val got = queries.Trajectory.coverHolds(n, dils)
+      assert(got.sameElements(perBitHolds(dils)), s"n = $n, dilations of kind $mix")
+    }
   }
 
   test("cell_cover equals cell_hits == size on rows, primitive and generic arrays") {

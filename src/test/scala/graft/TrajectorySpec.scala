@@ -357,7 +357,7 @@ class TrajectorySpec extends BaseSpec {
     // EDR's prune (the free length-difference bound) runs above 5M pairs
     // only. On this uniform fixture the bound prunes little — the
     // equality below pins that the forced prune is still exact; the skew
-    // case is probed in PREFLIGHT_r16.
+    // case is probed in PREFLIGHT_r16.md at commit 3998105.
     val (directE, noSurv) = runPruned(SparkEntry.queries("m_traj_edr")(spark, sf))
     assert(noSurv.isEmpty, s"m_traj_edr's direct scan observed $noSurv")
     val (prunedE, survE) = runPruned(queries.Trajectory.edrTop(spark, tr, prune = true))
@@ -509,6 +509,45 @@ class TrajectorySpec extends BaseSpec {
     assert(graft.operators.Endgame.held(hp, T.TrackWeight).nonEmpty)
     assert(T.cellWinners(hp).isEmpty, "a hot cell past the budget must take the Spark seed")
     assert(jobsDuring(T.seedThreshold(spark, hp, T.hausdorff)) > 0)
+  }
+
+  test("Hausdorff's driver main pass gives the same pairs on any pool and from two threads") {
+    import java.util.concurrent.{Callable, CyclicBarrier, ForkJoinPool}
+    import graft.operators.Endgame
+    val T = queries.Trajectory
+    val rnd = new scala.util.Random(4077)
+    val randomUsers = (1 to 300).flatMap { u =>
+      val (lat, lon) = (rnd.nextInt(1600) / 10.0 - 80, rnd.nextInt(3500) / 10.0 - 175)
+      (0 until 1 + rnd.nextInt(8)).map(i => (u.toLong, i * 60000000L, u * 10L + i,
+        lat + rnd.nextInt(40) / 10.0, lon + rnd.nextInt(40) / 10.0))
+    }
+    def pinned(fixes: Seq[(Long, Long, Long, Double, Double)]) =
+      Endgame.pin(T.tracksFromPoints(spark, fixFrame(fixes)), T.TrackWeight)
+    for ((label, tr) <- Seq("sf0.001" -> Endgame.pin(T.tracks(spark, sf), T.TrackWeight),
+                            "tied" -> pinned(planted(1)._2), "random" -> pinned(randomUsers))) {
+      val rel = Endgame.held(tr, T.TrackWeight).getOrElse(fail(s"$label: tracks not pinned"))
+      val thr = T.seedThreshold(spark, tr, T.hausdorff) + 1e-4
+      for (t <- Seq(thr, thr + 1000.0, 6000.0)) {
+        def pass() = T.hausdorffOnDriver(rel, t)
+        val want = pass()
+        assert(want.exists(_.nonEmpty), s"$label at $t km: the driver pass kept $want")
+        // a parallel stream started on a pool's worker runs in that pool
+        def inPool(threads: Int) = {
+          val pool = new ForkJoinPool(threads)
+          try pool.submit(new Callable[Option[Seq[(Long, Long)]]] { def call() = pass() }).get()
+          finally pool.shutdown()
+        }
+        for (threads <- Seq(1, 7))
+          assert(inPool(threads) == want, s"$label at $t km on a $threads-thread pool")
+        val both = new Array[Option[Seq[(Long, Long)]]](2)
+        val start = new CyclicBarrier(2)
+        val callers = (0 until 2).map(i => new Thread(() => { start.await(); both(i) = pass() }))
+        callers.foreach(_.start())
+        callers.foreach(_.join())
+        assert(both.forall(_ == want), s"$label at $t km from two threads at once")
+      }
+      assert(!mainPassesAgree(label, tr), s"$label: Hausdorff's main pass ran in Spark")
+    }
   }
 
   test("a warm track top-10 key builds its frame with no job but the light scan") {
