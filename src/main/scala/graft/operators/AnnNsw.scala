@@ -143,16 +143,17 @@ object AnnNsw {
     // predicate's matching id set is still computed by a distributed
     // filter over `vecs`, so a filtered search stays predicate-exact.
     // MlSpec pins local ≡ distributed.
-    if (Endgame.local(vecs.count()) && Endgame.local(adjacency.count())) {
-      val vArr = vecs.select($"vec_id", $"v").as[(Long, Seq[Double])]
-        .collect().map { case (id, v) => (id, v.toArray) }.toMap
+    (for {
+      vs <- Endgame.rows(vecs.select($"vec_id", $"v").as[(Long, Seq[Double])])
+      adj <- Endgame.rows(adjacency.select($"src", $"dst").as[(Long, Long)])
+    } yield {
+      val vArr = vs.map { case (id, v) => (id, v.toArray) }.toMap
       val out = scala.collection.mutable.LongMap.empty[List[Long]]
       val in = scala.collection.mutable.LongMap.empty[List[Long]]
-      adjacency.select($"src", $"dst").as[(Long, Long)].collect()
-        .foreach { case (s, d) =>
-          out(s) = d :: out.getOrElse(s, Nil)
-          in(d) = s :: in.getOrElse(d, Nil)
-        }
+      adj.foreach { case (s, d) =>
+        out(s) = d :: out.getOrElse(s, Nil)
+        in(d) = s :: in.getOrElse(d, Nil)
+      }
       val seedIds = seeds.select($"vec_id").as[Long].collect()
       val matchIds = pred.map(p =>
         vecs.filter(p).select($"vec_id").as[Long].collect().toSet)
@@ -189,35 +190,34 @@ object AnnNsw {
           case ((id, c), i) => (pid, (i + 1).toLong, id, r4(c))
         }
       }
-      return spark.createDataset(rows)
-        .toDF("probe_id", "rank", "vec_id", "cos")
-    }
+      spark.createDataset(rows).toDF("probe_id", "rank", "vec_id", "cos")
+    }).getOrElse {
+      val probes = vecs.filter($"vec_id".isin(probeIds: _*))
+        .select($"vec_id".as("probe_id"), $"v".as("pv"))
+      val (beam, visited) =
+        walkBeam(spark, vecs, adjacency, seeds, probes, ef, rounds,
+          trackVisited = pred.isDefined)
 
-    val probes = vecs.filter($"vec_id".isin(probeIds: _*))
-      .select($"vec_id".as("probe_id"), $"v".as("pv"))
-    val (beam, visited) =
-      walkBeam(spark, vecs, adjacency, seeds, probes, ef, rounds,
-        trackVisited = pred.isDefined)
-
-    val wb = Window.partitionBy($"probe_id").orderBy($"cos".desc, $"vec_id")
-    // Unfiltered: answer from the final beam (the NSW contract).
-    // Filtered: answer from ALL visited matching nodes — a matching node
-    // the walk passed through in round 1 must stay eligible even after
-    // the unfiltered beam moved on.
-    val pool = pred match {
-      case None => beam
-      case Some(p) =>
-        // k + 1: the probe itself may sit in the matching pool and is
-        // dropped below — k survivors must remain after the drop
-        scoreTop(vecs, probes,
-          visited.join(vecs.filter(p).select($"vec_id"),
-            Seq("vec_id"), "left_semi"), k + 1)
+      val wb = Window.partitionBy($"probe_id").orderBy($"cos".desc, $"vec_id")
+      // Unfiltered: answer from the final beam (the NSW contract).
+      // Filtered: answer from ALL visited matching nodes — a matching node
+      // the walk passed through in round 1 must stay eligible even after
+      // the unfiltered beam moved on.
+      val pool = pred match {
+        case None => beam
+        case Some(p) =>
+          // k + 1: the probe itself may sit in the matching pool and is
+          // dropped below — k survivors must remain after the drop
+          scoreTop(vecs, probes,
+            visited.join(vecs.filter(p).select($"vec_id"),
+              Seq("vec_id"), "left_semi"), k + 1)
+      }
+      pool.filter($"vec_id" =!= $"probe_id")
+        .withColumn("rank", row_number().over(wb).cast("long"))
+        .filter($"rank" <= k)
+        .select($"probe_id", $"rank", $"vec_id", round($"cos", 4).as("cos"))
+        .orderBy($"probe_id", $"rank")
     }
-    pool.filter($"vec_id" =!= $"probe_id")
-      .withColumn("rank", row_number().over(wb).cast("long"))
-      .filter($"rank" <= k)
-      .select($"probe_id", $"rank", $"vec_id", round($"cos", 4).as("cos"))
-      .orderBy($"probe_id", $"rank")
   }
 
   /** Exact-cosine top-`width` per probe over a candidate id frame —

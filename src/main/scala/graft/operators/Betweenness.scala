@@ -45,18 +45,13 @@ object Betweenness {
   def run(spark: SparkSession, edges: DataFrame, k: Int = 16,
           maxDepth: Int = 16, checkEvery: Int = 2): DataFrame = {
     import spark.implicits._
-    val sym = edges.select($"u1".as("src"), $"u2".as("dst"))
-      .unionAll(edges.select($"u2".as("src"), $"u1".as("dst")))
-      .localCheckpoint(eager = true)
-
     // The local path is textbook Brandes per sampled source over a driver
     // adjacency map. σ stays Long-exact; every δ group sum goes through the
     // SAME Decimal(38,18) HALF_UP route as the distributed aggregate
     // (decimal sums are order-independent), so the local path is
     // BIT-IDENTICAL to the distributed one, not merely close
     // (BetweennessSpec pins both paths and the across-runs determinism).
-    val (out, rounds, complete) = if (Endgame.local(sym.count())) {
-      val es = sym.as[(Long, Long)].collect()
+    val (out, rounds, complete) = Bfs.localSymmetric(spark, edges).map { es =>
       val adj = es.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
       val sources = adj.keys.toArray.sorted.take(k)
       def dec(d: Double): java.math.BigDecimal =
@@ -116,7 +111,10 @@ object Betweenness {
       val out = bcAcc.toSeq.sortBy(_._1)
         .map { case (v, acc) => (v, acc.doubleValue / 2.0) }
       (spark.createDataset(out).toDF("id", "bc"), globalMax, complete)
-    } else {
+    }.getOrElse {
+      val sym = edges.select($"u1".as("src"), $"u2".as("dst"))
+        .unionAll(edges.select($"u2".as("src"), $"u1".as("dst")))
+        .localCheckpoint(eager = true)
       val sources = sym.select($"src".as("id")).distinct()
         .orderBy($"id").limit(k)
 

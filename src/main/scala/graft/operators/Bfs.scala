@@ -34,7 +34,8 @@ object Bfs {
 
   /** Both directions of the undirected (u1, u2) list as driver pairs,
     * when twice its row count fits the [[Endgame]] gate — the driver
-    * kernels' edge view (BFS and [[KCore]]). */
+    * kernels' edge view (BFS, [[KCore]], [[Coreness]], [[Betweenness]]
+    * and [[Louvain]]). */
   private[operators] def localSymmetric(spark: SparkSession,
                                         edges: DataFrame): Option[Array[(Long, Long)]] = {
     import spark.implicits._

@@ -63,36 +63,18 @@ object ConnectedComponents {
           maxIter: Int = 50): DataFrame = {
     import spark.implicits._
     val selfLabels = vertices.select($"id", $"id".as("comp"))
-    // Eager checkpoint: materialize the normalized edge set ONCE and cut its
-    // lineage, so every subsequent action in the loop scans cached blocks
-    // instead of re-running the upstream plan. (Lazy checkpoints made each
-    // convergence probe a coin-flip on what had materialized — the source of
-    // the round-5 bench variance on m_dbscan.)
-    var e = edges
+    val norm = edges
       .select(greatest($"src", $"dst").as("hi"), least($"src", $"dst").as("lo"))
       .filter($"hi" =!= $"lo")
-      .distinct()
-      .localCheckpoint(eager = true)
 
     // Endgame: below the budget the remaining O(log n) star rounds would
     // each pay a fixed multi-stage job on a tiny edge list, so finish with
     // an exact union-find on the driver instead — the standard
     // local-completion step for contraction CC. Union-to-min preserves the
-    // invariant label = component minimum; output is the same star forest
-    // the distributed fixpoint would reach, so downstream code is
-    // indifferent to which path produced it.
-    def localStarForest(df: DataFrame): DataFrame = {
-      // Collected Rows are unpacked straight into two primitive long arrays
-      // (the retained footprint) so only the Row[] itself is transient boxed
-      // memory; no tuple/Set materialization of the edge list.
-      val rows = df.select($"hi", $"lo").collect()
-      val n = rows.length
-      val his = new Array[Long](n)
-      val los = new Array[Long](n)
-      var i = 0
-      while (i < n) {
-        his(i) = rows(i).getLong(0); los(i) = rows(i).getLong(1); i += 1
-      }
+    // invariant label = component minimum whatever the edge order; output
+    // is the same star forest the distributed fixpoint would reach, so
+    // downstream code is indifferent to which path produced it.
+    def localStarForest(es: Array[(Long, Long)]): DataFrame = {
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x: Long): Long = {
         var r = x
@@ -101,18 +83,15 @@ object ConnectedComponents {
         while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
         r
       }
-      i = 0
-      while (i < n) {
-        val ra = find(his(i)); val rb = find(los(i))
+      es.foreach { case (hi, lo) =>
+        val ra = find(hi); val rb = find(lo)
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        i += 1
       }
       // One (id, root) pair per non-root vertex; LongMap doubles as the
       // primitive-keyed visited set.
       val star = scala.collection.mutable.LongMap.empty[Long]
       def visit(x: Long): Unit = { val r = find(x); if (r != x) star(x) = r }
-      i = 0
-      while (i < n) { visit(his(i)); visit(los(i)); i += 1 }
+      es.foreach { case (hi, lo) => visit(hi); visit(lo) }
       spark.createDataset(star.toSeq).toDF("hi", "lo")
     }
 
@@ -129,36 +108,45 @@ object ConnectedComponents {
         .filter($"nh" > 1 || ($"nh" > 0 && $"nl" > 0))
         .limit(1).isEmpty
 
-    // Convergence protocol, one cheap action per round: each round produces
-    // an eagerly-checkpointed edge set (the materializing job IS the round's
-    // work), then a count over the cached blocks. Contraction never grows
-    // the edge set, so a count plateau is the convergence hint; it is
-    // confirmed by the definitive single-job star-forest check. A false
-    // plateau (same size, different set) just iterates on — always safe,
-    // always terminating at the true fixpoint.
-    var cnt = e.count()
-    if (cnt > 0) {
-      var verified = false
-      var i = 0
-      while (!verified && !Endgame.local(cnt) && i < maxIter) {
-        val next = smallStar(largeStar(e)).localCheckpoint(eager = true)
-        val prevCnt = cnt
-        cnt = next.count()
-        verified = cnt == prevCnt && isStarForest(next)
-        e = next
-        i += 1
+    val stars = Endgame.rows(norm.as[(Long, Long)]).map(localStarForest).getOrElse {
+      // Eager checkpoint: materialize the normalized edge set ONCE and cut
+      // its lineage, so every subsequent action in the loop scans cached
+      // blocks instead of re-running the upstream plan. (Lazy checkpoints
+      // made each convergence probe a coin-flip on what had materialized —
+      // the source of the round-5 bench variance on m_dbscan.)
+      var e = norm.distinct().localCheckpoint(eager = true)
+      // Convergence protocol, one cheap action per round: each round
+      // produces an eagerly-checkpointed edge set (the materializing job IS
+      // the round's work), then a count over the cached blocks. Contraction
+      // never grows the edge set, so a count plateau is the convergence
+      // hint; it is confirmed by the definitive single-job star-forest
+      // check. A false plateau (same size, different set) just iterates on
+      // — always safe, always terminating at the true fixpoint.
+      var cnt = e.count()
+      if (cnt > 0) {
+        var verified = false
+        var i = 0
+        while (!verified && !Endgame.local(cnt) && i < maxIter) {
+          val next = smallStar(largeStar(e)).localCheckpoint(eager = true)
+          val prevCnt = cnt
+          cnt = next.count()
+          verified = cnt == prevCnt && isStarForest(next)
+          e = next
+          i += 1
+        }
+        if (!verified && Endgame.local(cnt)) {
+          e = localStarForest(e.as[(Long, Long)].collect())
+          verified = true
+        }
+        if (!verified)
+          throw new IllegalStateException(
+            s"ConnectedComponents: no verified star-forest fixpoint after $maxIter rounds")
       }
-      if (!verified && Endgame.local(cnt)) {
-        e = localStarForest(e)
-        verified = true
-      }
-      if (!verified)
-        throw new IllegalStateException(
-          s"ConnectedComponents: no verified star-forest fixpoint after $maxIter rounds")
+      e
     }
 
     selfLabels.as("v")
-      .join(e.select($"hi".as("id"), $"lo".as("root")), Seq("id"), "left")
+      .join(stars.select($"hi".as("id"), $"lo".as("root")), Seq("id"), "left")
       .select($"id", coalesce($"root", $"comp").as("comp"))
   }
 }

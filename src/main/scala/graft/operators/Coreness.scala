@@ -31,13 +31,9 @@ object Coreness {
   def run(spark: SparkSession, edges: DataFrame,
           maxIter: Int = 50, checkEvery: Int = 2): DataFrame = {
     import spark.implicits._
-    val sym = edges.select($"u1".as("u"), $"u2".as("v"))
-      .unionAll(edges.select($"u2".as("u"), $"u1".as("v")))
-      .localCheckpoint(eager = true)
     // Both paths run the identical h-index iteration and cadence — integer
     // labels, so local ≡ distributed exactly (CorenessSpec pins both).
-    val (out, rounds, done) = if (Endgame.local(sym.count())) {
-      val es = sym.as[(Long, Long)].collect()
+    val (out, rounds, done) = Bfs.localSymmetric(spark, edges).map { es =>
       val adj = es.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
       var labL = adj.view.mapValues(_.length.toLong).toMap
       var i = 0
@@ -59,7 +55,10 @@ object Coreness {
         labL = next
       }
       (spark.createDataset(labL.toSeq.sortBy(_._1)).toDF("id", "coreness"), i, done)
-    } else {
+    }.getOrElse {
+      val sym = edges.select($"u1".as("u"), $"u2".as("v"))
+        .unionAll(edges.select($"u2".as("u"), $"u1".as("v")))
+        .localCheckpoint(eager = true)
       var lab = sym.groupBy($"u").agg(count(lit(1)).as("c"))
         .localCheckpoint(eager = true)
       var i = 0

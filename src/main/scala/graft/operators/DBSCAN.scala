@@ -49,56 +49,54 @@ object DBSCAN {
     * ordered ε-pair list (pid, pid2, w2) — the degrees → core → CC →
     * border → noise tail shared with [[StDbscan]]. Below the [[Endgame]]
     * budget those five frames are each a multi-stage job over a list that
-    * fits in a few MB, so one collect + primitive-map work ([[rolesLocal]])
-    * replaces ~10 tiny shuffles. The pair count gates both collects:
-    * every position carries its self-pair, so positions never outnumber
-    * pairs. */
+    * fits in a few MB, so fetching both frames and primitive-map work
+    * ([[rolesLocal]]) replaces ~10 tiny shuffles. Each frame passes its own
+    * gate: a position with a NULL or NaN coordinate has no self-pair, so
+    * the pairs do not bound the positions. */
   private[operators] def roles(spark: SparkSession, pairs: DataFrame,
                                positions: DataFrame, minPts: Int): DataFrame = {
     import spark.implicits._
-    if (Endgame.local(pairs.count())) {
-      val pairRows = pairs.as[(Long, Long, Long)].collect()
-      val posPids = positions.select($"pid").as[Long].collect()
-      if (Endgame.local(posPids.length))
-        return rolesLocal(spark, pairRows, posPids, minPts)
+    (for {
+      pairRows <- Endgame.rows(pairs.as[(Long, Long, Long)])
+      posPids <- Endgame.rows(positions.select($"pid").as[Long])
+    } yield rolesLocal(spark, pairRows, posPids, minPts)).getOrElse {
+      // Weighted degree: each point at position pid has |N_ε| = Σ w2 over the
+      // ε-reachable positions (the self-pair contributes the colocated count).
+      val degrees = pairs.groupBy($"pid").agg(sum($"w2").as("deg"))
+      val core = degrees.filter($"deg" >= minPts).select($"pid".as("core_pid"))
+        .localCheckpoint(eager = false)
+
+      val coreEdges = pairs
+        .join(core, pairs("pid") === core("core_pid")).drop("core_pid")
+        .join(core, pairs("pid2") === core("core_pid")).drop("core_pid")
+        .filter($"pid" < $"pid2")
+
+      // CC labels every core component with its min pid — and pid is the min
+      // point id at its position, so the label IS the min core point id.
+      val cc = ConnectedComponents.run(spark,
+          core.select($"core_pid".as("id")),
+          coreEdges.select($"pid".as("src"), $"pid2".as("dst")))
+        .withColumnRenamed("comp", "cluster")
+        .localCheckpoint(eager = false)
+
+      val corePos = cc.select($"id".as("pid"), lit("core").as("role"), $"cluster")
+
+      // Border: non-core position within ε of ≥1 core position → minimum
+      // neighboring cluster id for determinism. Anti-join, not EXCEPT: pids
+      // are unique, and anti-join skips EXCEPT's distinct.
+      val nonCorePos = positions.select($"pid")
+        .join(core.select($"core_pid".as("pid")), Seq("pid"), "left_anti")
+      val borderPos = pairs.join(nonCorePos, Seq("pid"))
+        .join(cc.select($"id".as("pid2"), $"cluster"), Seq("pid2"))
+        .groupBy($"pid").agg(min($"cluster").as("cluster"))
+        .select($"pid", lit("border").as("role"), $"cluster")
+
+      val assignedPos = corePos.unionAll(borderPos).localCheckpoint(eager = false)
+      val noisePos = positions.select($"pid")
+        .join(assignedPos.select($"pid"), Seq("pid"), "left_anti")
+        .select($"pid", lit("noise").as("role"), lit(-1L).as("cluster"))
+      assignedPos.unionAll(noisePos)
     }
-
-    // Weighted degree: each point at position pid has |N_ε| = Σ w2 over the
-    // ε-reachable positions (the self-pair contributes the colocated count).
-    val degrees = pairs.groupBy($"pid").agg(sum($"w2").as("deg"))
-    val core = degrees.filter($"deg" >= minPts).select($"pid".as("core_pid"))
-      .localCheckpoint(eager = false)
-
-    val coreEdges = pairs
-      .join(core, pairs("pid") === core("core_pid")).drop("core_pid")
-      .join(core, pairs("pid2") === core("core_pid")).drop("core_pid")
-      .filter($"pid" < $"pid2")
-
-    // CC labels every core component with its min pid — and pid is the min
-    // point id at its position, so the label IS the min core point id.
-    val cc = ConnectedComponents.run(spark,
-        core.select($"core_pid".as("id")),
-        coreEdges.select($"pid".as("src"), $"pid2".as("dst")))
-      .withColumnRenamed("comp", "cluster")
-      .localCheckpoint(eager = false)
-
-    val corePos = cc.select($"id".as("pid"), lit("core").as("role"), $"cluster")
-
-    // Border: non-core position within ε of ≥1 core position → minimum
-    // neighboring cluster id for determinism. Anti-join, not EXCEPT: pids
-    // are unique, and anti-join skips EXCEPT's distinct.
-    val nonCorePos = positions.select($"pid")
-      .join(core.select($"core_pid".as("pid")), Seq("pid"), "left_anti")
-    val borderPos = pairs.join(nonCorePos, Seq("pid"))
-      .join(cc.select($"id".as("pid2"), $"cluster"), Seq("pid2"))
-      .groupBy($"pid").agg(min($"cluster").as("cluster"))
-      .select($"pid", lit("border").as("role"), $"cluster")
-
-    val assignedPos = corePos.unionAll(borderPos).localCheckpoint(eager = false)
-    val noisePos = positions.select($"pid")
-      .join(assignedPos.select($"pid"), Seq("pid"), "left_anti")
-      .select($"pid", lit("noise").as("role"), lit(-1L).as("cluster"))
-    assignedPos.unionAll(noisePos)
   }
 
   /** The driver-local [[roles]] kernel. Semantics identical by

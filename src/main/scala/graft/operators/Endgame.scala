@@ -11,11 +11,15 @@ import org.apache.spark.sql.execution.GraftFrames
   * Below the budget a distributed round is fixed job overhead, not data
   * volume — on a contracted or probe-sized input each round is a handful
   * of tiny AQE-materialized exchanges whatever the size — so the same
-  * update rule runs over driver arrays instead. Every gate on a
-  * distributed input is a DISTRIBUTED count or aggregate taken before
+  * update rule runs over driver arrays instead. [[rows]] is the one
+  * gate-and-fetch of every operator, in one shape:
+  * `rows(input).map(kernel).getOrElse { checkpoint; distributed rounds }`,
+  * so the count runs only where the gate needs it and the eager checkpoint
+  * only on the distributed path. Every gate on a distributed input is a
+  * DISTRIBUTED count (or, for a work bound, an aggregate) taken before
   * anything is collected, so an input is proven under budget before it
-  * reaches the driver. At 100 TB
-  * every input exceeds the budget and the distributed path runs unchanged.
+  * reaches the driver. At 100 TB every input exceeds the budget and the
+  * distributed path runs unchanged.
   *
   * An input that is already driver-resident needs no such proof: when its
   * optimized plan is a `LocalRelation`, or a `Union` of them (the

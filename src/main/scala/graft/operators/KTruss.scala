@@ -39,11 +39,9 @@ object KTruss {
           maxIter: Int = 50, checkEvery: Int = 2): DataFrame = {
     import spark.implicits._
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    val e = edges
+    val canon = edges
       .select(least($"u1", $"u2").as("u1"), greatest($"u1", $"u2").as("u2"))
-      .filter($"u1" < $"u2").distinct()
-      .localCheckpoint(eager = true)
-    val nE = e.count()
+      .filter($"u1" < $"u2")
 
     // Both paths run the identical peel — same oriented a<b<c triangle
     // enumeration, same cadence, same round counting — with integer
@@ -52,9 +50,10 @@ object KTruss {
     // not necessarily truncated: the final drop may already be the
     // fixpoint, with no budget left for the confirming no-op round (the
     // Betweenness maxDepth-probe discipline), so one extra support recount
-    // decides and only a further drop throws.
-    val (out, rounds, converged) = if (Endgame.local(nE)) {
-      var es: Array[(Long, Long)] = e.as[(Long, Long)].collect().sorted
+    // decides and only a further drop throws. The driver path dedups the
+    // fetched canonical rows itself, the distributed path by `distinct()`.
+    val (out, rounds, converged) = Endgame.rows(canon.as[(Long, Long)]).map { rows =>
+      var es: Array[(Long, Long)] = rows.distinct.sorted
       def peelLocal(cur: Array[(Long, Long)]): Array[(Long, Long)] = {
         // oriented adjacency: u1 -> sorted larger neighbours
         val adj = cur.groupBy(_._1).view
@@ -93,7 +92,8 @@ object KTruss {
       }
       if (!converged) converged = peelLocal(es).length == prev
       (spark.createDataset(es.toSeq).toDF("u1", "u2"), i, converged)
-    } else {
+    }.getOrElse {
+      val e = canon.distinct().localCheckpoint(eager = true)
       // One support-recount round: survivors of `cur` under the k−2 bar.
       def peelOnce(cur: DataFrame): DataFrame = {
         val paths = cur.as("ab").join(cur.as("bc"), col("ab.u2") === col("bc.u1"))
@@ -112,7 +112,7 @@ object KTruss {
             Seq("u1", "u2"), "left_semi")
       }
       var cur = e
-      var prevCount = nE
+      var prevCount = e.count()
       var i = 0
       var converged = false
       while (i < maxIter && !converged) {

@@ -141,9 +141,10 @@ object KnnJoin {
         .filter(col("__rk") <= k)
     }
 
-    var remaining = left
-      .select(col(lId), col(lLat).as("__llat"), col(lLon).as("__llon"))
-      .localCheckpoint(eager = true)
+    // Lazy, like `r`: the gate's count materializes it, so above the budget
+    // the rings read the left rows without computing `left` a second time.
+    val lsel = left.select(col(lId), col(lLat).as("__llat"), col(lLon).as("__llon"))
+      .localCheckpoint(eager = false)
 
     // [[Endgame]] with a TIGHTER work gate: the local kernel is a
     // single-threaded |L|·|R| brute force, so unlike the loop endgames —
@@ -151,63 +152,60 @@ object KnnJoin {
     // when the PAIR WORK is trivial. Measured at sf0.1 (1500×1485 ≈ 2.2M
     // pairs): local 3.0-3.2 s vs distributed rings 1.7-2.3 s warm — the
     // grid pruning + 32-way parallelism beat the driver, so the gate is
-    // the pair product ≤ Budget/4 (≈ 262k pairs ≈ a quarter second).
-    // Below it the exact kNN runs on the driver with the SAME
+    // the pair product ≤ Budget/4 (≈ 262k pairs ≈ a quarter second),
+    // taken as weights: the left side at 2048 (|L| ≤ 512 = √(Budget/4),
+    // so the bench-scale shape never counts the right side), the right at
+    // 4·|L| (at least 4, so an empty left side never admits an unbounded
+    // right side). Below it the exact kNN runs on the driver with the SAME
     // [[HaversineDist.km]] kernel and (round(km, 3), rId) rank order —
     // the oracle's own semantics, which the ring certificate provably
     // reproduces. `lastRingPlans` is left untouched (it documents the
     // last DISTRIBUTED run, which the spec's ring-plan pins force).
-    // Left pre-gate: |L| <= sqrt(pair budget) — the driver loop can only
-    // win when the left side is already tiny, and pruning here means the
-    // bench-scale shape never pays the right-side count job (measured
-    // +0.13 s of pure gate overhead across three full runs without it).
-    val nL = if (Endgame.local()) remaining.count() else Long.MaxValue
-    if (nL <= math.sqrt(Endgame.Budget.toDouble / 4).toLong) {
-      val nR = r.count()
-      if (Endgame.local(nR) && nL * nR <= Endgame.Budget / 4) {
-        val ls = remaining.select(col(lId).cast("long"),
-            col("__llat").cast("double"), col("__llon").cast("double"))
-          .as[(Long, Double, Double)].collect()
-        val rs = r.select(col(rId).cast("long"),
-            col("__rlat").cast("double"), col("__rlon").cast("double"))
-          .as[(Long, Double, Double)].collect()
-        def rnd3(d: Double): Double =
-          BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
-        val out = ls.sortBy(_._1).flatMap { case (li, la, lo) =>
-          rs.map { case (ri, ra, ro) => (ri, rnd3(HaversineDist.km(la, lo, ra, ro))) }
-            .sortBy { case (ri, d) => (d, ri) }
-            .take(k).zipWithIndex
-            .map { case ((ri, d), i) => (li, ri, d, i + 1) }
-        }
-        return spark.createDataset(out.toSeq)
-          .toDF(lId, rId, "dist_km", "rk")
-          .select(col(lId).cast(left.schema(lId).dataType),
-            col(rId).cast(right.schema(rId).dataType),
-            col("dist_km"), col("rk"))
+    (for {
+      ls <- Endgame.rows(lsel.select(col(lId).cast("long"),
+          col("__llat").cast("double"), col("__llon").cast("double"))
+        .as[(Long, Double, Double)], weight = 2048)
+      rs <- Endgame.rows(r.select(col(rId).cast("long"),
+          col("__rlat").cast("double"), col("__rlon").cast("double"))
+        .as[(Long, Double, Double)], weight = 4L * math.max(1, ls.length))
+    } yield {
+      def rnd3(d: Double): Double =
+        BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val out = ls.sortBy(_._1).flatMap { case (li, la, lo) =>
+        rs.map { case (ri, ra, ro) => (ri, rnd3(HaversineDist.km(la, lo, ra, ro))) }
+          .sortBy { case (ri, d) => (d, ri) }
+          .take(k).zipWithIndex
+          .map { case ((ri, d), i) => (li, ri, d, i + 1) }
       }
+      spark.createDataset(out.toSeq)
+        .toDF(lId, rId, "dist_km", "rk")
+        .select(col(lId).cast(left.schema(lId).dataType),
+          col(rId).cast(right.schema(rId).dataType),
+          col("dist_km"), col("rk"))
+    }).getOrElse {
+      var remaining = lsel
+      val emitted = scala.collection.mutable.ListBuffer.empty[DataFrame]
+      val certified = col("__cnt") === k.toLong && col("__kth") < col("__safe")
+
+      var ringsLeft = rings
+      ringPlans.set(Nil)
+      while (ringsLeft.nonEmpty && !remaining.isEmpty) {
+        val preCp = roundTopK(remaining, Some(ringsLeft.head))
+        val topk = preCp.localCheckpoint(eager = true)
+        ringPlans.set(ringPlans.get :+ preCp.queryExecution.executedPlan.toString)
+        emitted += topk.filter(certified)
+          .select(col(lId), col(rId), col("__dist").as("dist_km"), col("__rk").as("rk"))
+        remaining = remaining
+          .join(topk.filter(certified).select(col(lId)).distinct(),
+            Seq(lId), "left_anti")
+          .localCheckpoint(eager = true)
+        ringsLeft = ringsLeft.tail
+      }
+      if (!remaining.isEmpty)
+        emitted += roundTopK(remaining, None)
+          .select(col(lId), col(rId), col("__dist").as("dist_km"), col("__rk").as("rk"))
+
+      emitted.reduceLeft(_ unionAll _)
     }
-
-    val emitted = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val certified = col("__cnt") === k.toLong && col("__kth") < col("__safe")
-
-    var ringsLeft = rings
-    ringPlans.set(Nil)
-    while (ringsLeft.nonEmpty && !remaining.isEmpty) {
-      val preCp = roundTopK(remaining, Some(ringsLeft.head))
-      val topk = preCp.localCheckpoint(eager = true)
-      ringPlans.set(ringPlans.get :+ preCp.queryExecution.executedPlan.toString)
-      emitted += topk.filter(certified)
-        .select(col(lId), col(rId), col("__dist").as("dist_km"), col("__rk").as("rk"))
-      remaining = remaining
-        .join(topk.filter(certified).select(col(lId)).distinct(),
-          Seq(lId), "left_anti")
-        .localCheckpoint(eager = true)
-      ringsLeft = ringsLeft.tail
-    }
-    if (!remaining.isEmpty)
-      emitted += roundTopK(remaining, None)
-        .select(col(lId), col(rId), col("__dist").as("dist_km"), col("__rk").as("rk"))
-
-    emitted.reduceLeft(_ unionAll _)
   }
 }

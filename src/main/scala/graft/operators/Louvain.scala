@@ -124,57 +124,63 @@ object Louvain {
                     maxLevels: Int = 5, iterations: Int = 10,
                     checkEvery: Int = 2): DataFrame = {
     import spark.implicits._
-    val p = pairs.select($"u1".cast("long"), $"u2".cast("long"))
-    var edges = p.select($"u1".as("src"), $"u2".as("dst"))
-      .unionAll(p.select($"u2".as("src"), $"u1".as("dst")))
-      .withColumn("w", lit(1L))
-      .localCheckpoint(eager = true).transform(cp)
+    var edges: DataFrame = null // the level's checkpointed (src, dst, w)
     var assign: DataFrame = null // original id → current community
     var level = 0
     var done = false
     var itersTotal = 0
     while (level < maxLevels && !done) {
-      if (Endgame.local(edges.count())) {
-        // driver endgame: finish every remaining level locally
-        val rows = edges.select($"src", $"dst", $"w")
-          .as[(Long, Long, Long)].collect()
-        val (fmap, it) = driverLevels(rows, maxLevels - level, iterations, checkEvery)
-        itersTotal += it
-        val fdf = fmap.toSeq.sortBy(_._1).toDF("id", "c")
-        assign =
-          if (assign == null) fdf
-          else assign.withColumnRenamed("c", "cp")
-            .join(fdf.select($"id".as("cp"), $"c"), Seq("cp"))
-            .select($"id", $"c")
-        done = true
-      } else {
-        val (comm, iters) = localMoves(spark, edges, iterations, checkEvery)
-        itersTotal += iters
-        level += 1
-        // no NET merge (|communities| = |vertices|) means the level made
-        // no structural progress — identity, or the synchronous
-        // schedule's pure label churn (a permutation) — so further
-        // levels cannot either; one combined action probes both counts
-        val cnt = comm.agg(count(lit(1)), countDistinct($"c")).first()
-        if (cnt.getLong(1) == cnt.getLong(0)) {
-          done = true
-          if (assign == null) assign = comm
-        } else {
+      // level 0 reads each undirected pair in both directions at weight 1
+      val fetched =
+        if (edges == null) Bfs.localSymmetric(spark, pairs).map(_.map { case (a, b) => (a, b, 1L) })
+        else Endgame.rows(edges.select($"src", $"dst", $"w").as[(Long, Long, Long)])
+      fetched match {
+        case Some(rows) =>
+          // driver endgame: finish every remaining level locally
+          val (fmap, it) = driverLevels(rows, maxLevels - level, iterations, checkEvery)
+          itersTotal += it
+          val fdf = fmap.toSeq.sortBy(_._1).toDF("id", "c")
           assign =
-            if (assign == null) comm.localCheckpoint(eager = false).transform(cp)
+            if (assign == null) fdf
             else assign.withColumnRenamed("c", "cp")
-              .join(comm.select($"id".as("cp"), $"c"), Seq("cp"))
+              .join(fdf.select($"id".as("cp"), $"c"), Seq("cp"))
               .select($"id", $"c")
-              .localCheckpoint(eager = false).transform(cp)
-          // contract: both directed copies of an intra-community edge
-          // land in the single (c, c) row, making its weight 2×intra —
-          // the self-loop convention localMoves' weighted degree expects
-          edges = edges
-            .join(comm.select($"id".as("src"), $"c".as("cs")), Seq("src"))
-            .join(comm.select($"id".as("dst"), $"c".as("cd")), Seq("dst"))
-            .groupBy($"cs".as("src"), $"cd".as("dst")).agg(sum($"w").as("w"))
-            .localCheckpoint(eager = true).transform(cp)
-        }
+          done = true
+        case None =>
+          if (edges == null) {
+            val p = pairs.select($"u1".cast("long"), $"u2".cast("long"))
+            edges = p.select($"u1".as("src"), $"u2".as("dst"))
+              .unionAll(p.select($"u2".as("src"), $"u1".as("dst")))
+              .withColumn("w", lit(1L))
+              .localCheckpoint(eager = true).transform(cp)
+          }
+          val (comm, iters) = localMoves(spark, edges, iterations, checkEvery)
+          itersTotal += iters
+          level += 1
+          // no NET merge (|communities| = |vertices|) means the level made
+          // no structural progress — identity, or the synchronous
+          // schedule's pure label churn (a permutation) — so further
+          // levels cannot either; one combined action probes both counts
+          val cnt = comm.agg(count(lit(1)), countDistinct($"c")).first()
+          if (cnt.getLong(1) == cnt.getLong(0)) {
+            done = true
+            if (assign == null) assign = comm
+          } else {
+            assign =
+              if (assign == null) comm.localCheckpoint(eager = false).transform(cp)
+              else assign.withColumnRenamed("c", "cp")
+                .join(comm.select($"id".as("cp"), $"c"), Seq("cp"))
+                .select($"id", $"c")
+                .localCheckpoint(eager = false).transform(cp)
+            // contract: both directed copies of an intra-community edge
+            // land in the single (c, c) row, making its weight 2×intra —
+            // the self-loop convention localMoves' weighted degree expects
+            edges = edges
+              .join(comm.select($"id".as("src"), $"c".as("cs")), Seq("src"))
+              .join(comm.select($"id".as("dst"), $"c".as("cd")), Seq("dst"))
+              .groupBy($"cs".as("src"), $"cd".as("dst")).agg(sum($"w").as("w"))
+              .localCheckpoint(eager = true).transform(cp)
+          }
       }
     }
     LastIterations.record(itersTotal)

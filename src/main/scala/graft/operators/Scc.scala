@@ -48,6 +48,7 @@ object Scc {
     *         within `maxIter` doubling rounds, or |V| > `maxVertices` */
   def run(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
           maxIter: Int = 20, maxVertices: Long = 10000L): DataFrame = {
+    import spark.implicits._
     val nV = vertices.count()
     if (nV > maxVertices)
       throw new IllegalStateException(
@@ -57,12 +58,12 @@ object Scc {
 
     // |V| bounds neither the edge list (it may repeat pairs) nor the matrix
     // universe (endpoints may lie outside `vertices`), so the edges pass
-    // their own count gate before the collect, and the local kernel falls
-    // back to the distributed closure when the universe exceeds the cap.
+    // their own gate, and the local kernel falls back to the distributed
+    // closure when the universe exceeds the cap.
     val viaLocal =
-      if (nV <= LocalVertexCap && Endgame.local(edges.count()))
-        closeLocal(spark, vertices, edges, maxIter)
-      else None
+      if (nV > LocalVertexCap) None
+      else Endgame.rows(edges.select($"src".cast("long"), $"dst".cast("long")).as[(Long, Long)])
+        .flatMap(closeLocal(spark, vertices, _, maxIter))
     val (out, rounds, done) =
       viaLocal.getOrElse(closeDistributed(spark, vertices, edges, maxIter))
     LastIterations.record(rounds)
@@ -78,14 +79,11 @@ object Scc {
     * mutual partner. Integer-exact, so local ≡ distributed (SccSpec pins
     * both paths). None when the matrix universe exceeds the cap. */
   private def closeLocal(spark: SparkSession, vertices: DataFrame,
-                         edges: DataFrame, maxIter: Int)
+                         edges: Array[(Long, Long)], maxIter: Int)
       : Option[(DataFrame, Int, Boolean)] = {
     import spark.implicits._
     val vset = vertices.select($"id".cast("long")).as[Long].collect()
-    val es = edges.select($"src".cast("long"), $"dst".cast("long"))
-      .as[(Long, Long)].collect()
-      .filter { case (s, d) => s != d }
-      .distinct
+    val es = edges.filter { case (s, d) => s != d }.distinct
     // The matrix universe is vertices ∪ edge endpoints: an endpoint
     // outside `vertices` still carries reachability between vertices
     // (and can be the min mutual partner), exactly as in the

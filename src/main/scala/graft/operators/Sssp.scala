@@ -39,14 +39,12 @@ object Sssp {
   def run(spark: SparkSession, edges: DataFrame, source: Long,
           maxIter: Int = 20, checkEvery: Int = 2): DataFrame = {
     import spark.implicits._
-    val e = edges.select($"src".cast("long"), $"dst".cast("long"),
+    val typed = edges.select($"src".cast("long"), $"dst".cast("long"),
         $"w".cast("double"))
-      .localCheckpoint(eager = true)
     // Both paths run the same Bellman-Ford rounds and cadence —
     // min-relaxation over doubles is order-independent, so the local path
     // is bit-identical to the distributed one (SsspSpec pins both).
-    val (out, rounds, converged) = if (Endgame.local(e.count())) {
-      val es = e.as[(Long, Long, Double)].collect()
+    val (out, rounds, converged) = Endgame.rows(typed.as[(Long, Long, Double)]).map { es =>
       val adj = es.groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3))).toMap
       val dist = scala.collection.mutable.LongMap[Double](source -> 0.0)
       var i = 0
@@ -75,7 +73,8 @@ object Sssp {
         // (assignment above keeps `dist` = round-i tentative distances)
       }
       (spark.createDataset(dist.toSeq.sortBy(_._1)).toDF("id", "d"), i, converged)
-    } else {
+    }.getOrElse {
+      val e = typed.localCheckpoint(eager = true)
       var dist = Seq((source, 0.0)).toDF("id", "d")
       var i = 0
       var converged = false

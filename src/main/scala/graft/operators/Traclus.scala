@@ -162,111 +162,108 @@ object Traclus {
     // distributed at every scale. TraclusSpec pins both paths against the
     // brute-force reference. ε-pairs are canonical sid1<sid2, so a sparse
     // input can have few pairs yet arbitrarily many segments — the segment
-    // frame must pass its own count gate before the (sid, user) list comes
-    // to the driver.
-    if (Endgame.local(pairs.count()) && Endgame.local(s.count())) {
-      val pr = pairs.as[(Long, Long)].collect()
-      val sids = s.select($"sid", $"user_id").as[(Long, Long)].collect()
+    // frame passes its own gate.
+    (for {
+      pr <- Endgame.rows(pairs.as[(Long, Long)])
+      sids <- Endgame.rows(s.select($"sid", $"user_id").as[(Long, Long)])
+    } yield {
       val nbrs = scala.collection.mutable.LongMap.empty[Long] // deg-1
-        pr.foreach { case (a, b) =>
-          nbrs(a) = nbrs.getOrElse(a, 0L) + 1L
-          nbrs(b) = nbrs.getOrElse(b, 0L) + 1L
+      pr.foreach { case (a, b) =>
+        nbrs(a) = nbrs.getOrElse(a, 0L) + 1L
+        nbrs(b) = nbrs.getOrElse(b, 0L) + 1L
+      }
+      val coreSet = scala.collection.mutable.LongMap.empty[Boolean]
+      sids.foreach { case (sid, _) =>
+        if (nbrs.getOrElse(sid, 0L) + 1L >= minLns) coreSet(sid) = true
+      }
+      val parent = scala.collection.mutable.LongMap.empty[Long]
+      def find(x: Long): Long = {
+        var r = x
+        while (parent.getOrElse(r, r) != r) r = parent(r)
+        var c = x
+        while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
+        r
+      }
+      pr.foreach { case (a, b) =>
+        if (coreSet.contains(a) && coreSet.contains(b)) {
+          val ra = find(a); val rb = find(b)
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
         }
-        val coreSet = scala.collection.mutable.LongMap.empty[Boolean]
-        sids.foreach { case (sid, _) =>
-          if (nbrs.getOrElse(sid, 0L) + 1L >= minLns) coreSet(sid) = true
+      }
+      val borderMin = scala.collection.mutable.LongMap.empty[Long]
+      def noteBorder(sid: Long, nb: Long): Unit =
+        if (!coreSet.contains(sid) && coreSet.contains(nb)) {
+          val cl = find(nb)
+          borderMin(sid) = math.min(borderMin.getOrElse(sid, Long.MaxValue), cl)
         }
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
-        pr.foreach { case (a, b) =>
-          if (coreSet.contains(a) && coreSet.contains(b)) {
-            val ra = find(a); val rb = find(b)
-            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-          }
-        }
-        val borderMin = scala.collection.mutable.LongMap.empty[Long]
-        def noteBorder(sid: Long, nb: Long): Unit =
-          if (!coreSet.contains(sid) && coreSet.contains(nb)) {
-            val cl = find(nb)
-            borderMin(sid) = math.min(borderMin.getOrElse(sid, Long.MaxValue), cl)
-          }
-        pr.foreach { case (a, b) => noteBorder(a, b); noteBorder(b, a) }
-        // §4.2 cardinality filter: distinct users per cluster (core+border)
-        val users = scala.collection.mutable.LongMap.empty[scala.collection.mutable.Set[Long]]
-        def clusterOf(sid: Long): Long =
-          if (coreSet.contains(sid)) find(sid)
-          else borderMin.getOrElse(sid, -1L)
-        sids.foreach { case (sid, u) =>
-          val cl = clusterOf(sid)
-          if (cl >= 0L && (coreSet.contains(sid) || borderMin.contains(sid)))
-            users.getOrElseUpdate(cl, scala.collection.mutable.Set.empty) += u
-        }
-        val keepCl = users.filter(_._2.size >= minUsers).keySet
-        val out = sids.sortBy(_._1).map { case (sid, u) =>
-          if (coreSet.contains(sid) && keepCl.contains(find(sid)))
-            (sid, u, "core", find(sid))
-          else if (!coreSet.contains(sid) && borderMin.contains(sid) &&
-                   keepCl.contains(borderMin(sid)))
-            (sid, u, "border", borderMin(sid))
-          else (sid, u, "noise", -1L)
-        }
-        return spark.createDataset(out.toSeq)
-          .toDF("sid", "user_id", "role", "cluster")
-          .unionAll(transit)
-    }
+      pr.foreach { case (a, b) => noteBorder(a, b); noteBorder(b, a) }
+      // §4.2 cardinality filter: distinct users per cluster (core+border)
+      val users = scala.collection.mutable.LongMap.empty[scala.collection.mutable.Set[Long]]
+      def clusterOf(sid: Long): Long =
+        if (coreSet.contains(sid)) find(sid)
+        else borderMin.getOrElse(sid, -1L)
+      sids.foreach { case (sid, u) =>
+        val cl = clusterOf(sid)
+        if (cl >= 0L && (coreSet.contains(sid) || borderMin.contains(sid)))
+          users.getOrElseUpdate(cl, scala.collection.mutable.Set.empty) += u
+      }
+      val keepCl = users.filter(_._2.size >= minUsers).keySet
+      val out = sids.sortBy(_._1).map { case (sid, u) =>
+        if (coreSet.contains(sid) && keepCl.contains(find(sid)))
+          (sid, u, "core", find(sid))
+        else if (!coreSet.contains(sid) && borderMin.contains(sid) &&
+                 keepCl.contains(borderMin(sid)))
+          (sid, u, "border", borderMin(sid))
+        else (sid, u, "noise", -1L)
+      }
+      spark.createDataset(out.toSeq).toDF("sid", "user_id", "role", "cluster")
+    }).getOrElse {
+      // Density roles over the symmetric neighbor relation (+1 = self).
+      val deg = pairs.select($"sid1".as("sid"))
+        .unionAll(pairs.select($"sid2".as("sid")))
+        .groupBy($"sid").agg((count(lit(1)) + 1L).as("deg"))
+      val core = s.select($"sid").join(deg, Seq("sid"), "left")
+        .filter(coalesce($"deg", lit(1L)) >= minLns)
+        .select($"sid".as("core_sid"))
+        .localCheckpoint(eager = false)
 
-    // Density roles over the symmetric neighbor relation (+1 = self).
-    val deg = pairs.select($"sid1".as("sid"))
-      .unionAll(pairs.select($"sid2".as("sid")))
-      .groupBy($"sid").agg((count(lit(1)) + 1L).as("deg"))
-    val core = s.select($"sid").join(deg, Seq("sid"), "left")
-      .filter(coalesce($"deg", lit(1L)) >= minLns)
-      .select($"sid".as("core_sid"))
-      .localCheckpoint(eager = false)
+      val coreEdges = pairs
+        .join(core, pairs("sid1") === core("core_sid")).drop("core_sid")
+        .join(core, pairs("sid2") === core("core_sid")).drop("core_sid")
+      val cc = ConnectedComponents.run(spark,
+          core.select($"core_sid".as("id")),
+          coreEdges.select($"sid1".as("src"), $"sid2".as("dst")))
+        .withColumnRenamed("comp", "cluster")
+        .localCheckpoint(eager = false)
 
-    val coreEdges = pairs
-      .join(core, pairs("sid1") === core("core_sid")).drop("core_sid")
-      .join(core, pairs("sid2") === core("core_sid")).drop("core_sid")
-    val cc = ConnectedComponents.run(spark,
-        core.select($"core_sid".as("id")),
-        coreEdges.select($"sid1".as("src"), $"sid2".as("dst")))
-      .withColumnRenamed("comp", "cluster")
-      .localCheckpoint(eager = false)
+      val coreRows = cc.select($"id".as("sid"), lit("core").as("role"), $"cluster")
+      val nonCore = s.select($"sid")
+        .join(core.select($"core_sid".as("sid")), Seq("sid"), "left_anti")
+      val borderRows = pairs.select($"sid1".as("sid"), $"sid2".as("nb"))
+        .unionAll(pairs.select($"sid2".as("sid"), $"sid1".as("nb")))
+        .join(nonCore, Seq("sid"))
+        .join(cc.select($"id".as("nb"), $"cluster"), Seq("nb"))
+        .groupBy($"sid").agg(min($"cluster").as("cluster"))
+        .select($"sid", lit("border").as("role"), $"cluster")
+      val assigned = coreRows.unionAll(borderRows)
 
-    val coreRows = cc.select($"id".as("sid"), lit("core").as("role"), $"cluster")
-    val nonCore = s.select($"sid")
-      .join(core.select($"core_sid".as("sid")), Seq("sid"), "left_anti")
-    val borderRows = pairs.select($"sid1".as("sid"), $"sid2".as("nb"))
-      .unionAll(pairs.select($"sid2".as("sid"), $"sid1".as("nb")))
-      .join(nonCore, Seq("sid"))
-      .join(cc.select($"id".as("nb"), $"cluster"), Seq("nb"))
-      .groupBy($"sid").agg(min($"cluster").as("cluster"))
-      .select($"sid", lit("border").as("role"), $"cluster")
-    val assigned = coreRows.unionAll(borderRows)
+      // Trajectory-cardinality filter (§4.2): a cluster supported by too few
+      // distinct users is noise. Per-cluster distinct-user counts are
+      // cluster-sized (tiny) — broadcast back.
+      val keep = assigned.join(s.select($"sid", $"user_id"), Seq("sid"))
+        .groupBy($"cluster").agg(countDistinct($"user_id").as("nu"))
+        .filter($"nu" >= minUsers).select($"cluster")
+      val kept = assigned.join(broadcast(keep), Seq("cluster"))
+        .select($"sid", $"role", $"cluster")
 
-    // Trajectory-cardinality filter (§4.2): a cluster supported by too few
-    // distinct users is noise. Per-cluster distinct-user counts are
-    // cluster-sized (tiny) — broadcast back.
-    val keep = assigned.join(s.select($"sid", $"user_id"), Seq("sid"))
-      .groupBy($"cluster").agg(countDistinct($"user_id").as("nu"))
-      .filter($"nu" >= minUsers).select($"cluster")
-    val kept = assigned.join(broadcast(keep), Seq("cluster"))
-      .select($"sid", $"role", $"cluster")
+      val noise = s.select($"sid")
+        .join(kept.select($"sid"), Seq("sid"), "left_anti")
+        .select($"sid", lit("noise").as("role"), lit(-1L).as("cluster"))
 
-    val noise = s.select($"sid")
-      .join(kept.select($"sid"), Seq("sid"), "left_anti")
-      .select($"sid", lit("noise").as("role"), lit(-1L).as("cluster"))
-
-    s.select($"sid", $"user_id")
-      .join(kept.unionAll(noise), Seq("sid"))
-      .select($"sid", $"user_id", $"role", $"cluster")
-      .unionAll(transit)
+      s.select($"sid", $"user_id")
+        .join(kept.unionAll(noise), Seq("sid"))
+        .select($"sid", $"user_id", $"role", $"cluster")
+    }.unionAll(transit)
   }
 
   /** Representative trajectory per cluster (paper §4.3): the average-

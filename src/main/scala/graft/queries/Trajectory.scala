@@ -155,6 +155,10 @@ object Trajectory extends QueryGroup {
                                                Option[Seq[(Long, Long)]] = (_, _) => None) {
     def side(tr: DataFrame, ab: String, cols: String => Seq[Column]): DataFrame =
       tr.select((col("user_id").as(if (ab == "a") "u1" else "u2") +: cols(ab)): _*)
+    /** The main pass's columns of side `ab`. Its two sides differ only in
+      * their names: `extra("a")` and `extra("b")` are the same expressions
+      * under different names, so side b's rows are side a's
+      * ([[heldSides]]). */
     def main(ab: String): Seq[Column] =
       col("n_fixes").as(s"n_$ab") +: col("track").as(s"t$ab") +: extra(ab)
     def best(c: Column): Column = if (ascending) c.asc else c.desc
@@ -179,17 +183,17 @@ object Trajectory extends QueryGroup {
       .orderBy(col("px"), col("u1"), col("u2")).limit(SeedPairs)
       .select("u1", "u2")
 
-  /** The main pass's two sides over pinned tracks with BIGINT user ids,
-    * each folded once (`ConvertToLocalRelation`, no job) into a
-    * `LocalRelation` of internal rows, which the seed's exact values and
-    * the driver main pass both read; `None` otherwise, and inside
+  /** The main pass's two sides over pinned tracks with BIGINT user ids:
+    * side a folded once (`ConvertToLocalRelation`, no job) into a
+    * `LocalRelation` of internal rows, and side b the same rows under its
+    * own attributes ([[PairMetric.main]]), which the seed's exact values
+    * and the driver main pass both read; `None` otherwise, and inside
     * [[graft.operators.Endgame.distributed]]. */
   private def heldSides(tr: DataFrame, m: PairMetric): Option[(LocalRelation, LocalRelation)] =
     if (tr.schema("user_id").dataType != LongType) None
-    else for {
-      a <- Endgame.held(m.side(tr, "a", m.main), TrackWeight)
-      b <- Endgame.held(m.side(tr, "b", m.main), TrackWeight)
-    } yield (a, b)
+    else Endgame.held(m.side(tr, "a", m.main), TrackWeight).map { a =>
+      (a, a.copy(output = m.side(tr, "b", m.main).queryExecution.analyzed.output))
+    }
 
   /** The seed threshold `thr` of [[topPairs]]: the 10th-best exact value
     * over the seed's winners. With the tracks pinned on the driver
@@ -238,14 +242,13 @@ object Trajectory extends QueryGroup {
   }
 
   /** Each (u1, u2) pair's side-a and side-b rows (keyed by their first
-    * column, the user id) joined positionally into one `LocalRelation`,
-    * in the pairs' order: the pair join's output rows for those pairs. */
+    * column, the user id; both sides hold the same rows, [[heldSides]])
+    * joined positionally into one `LocalRelation`, in the pairs' order:
+    * the pair join's output rows for those pairs. */
   private def joinedSides(a: LocalRelation, b: LocalRelation,
                           pairs: Seq[(Long, Long)]): LocalRelation = {
-    def byUser(l: LocalRelation) =
-      l.data.iterator.filterNot(_.isNullAt(0)).map(r => r.getLong(0) -> r).toMap
-    val (ra, rb) = (byUser(a), byUser(b))
-    LocalRelation(a.output ++ b.output, pairs.map { case (u1, u2) => new JoinedRow(ra(u1), rb(u2)) })
+    val byUser = a.data.iterator.filterNot(_.isNullAt(0)).map(r => r.getLong(0) -> r).toMap
+    LocalRelation(a.output ++ b.output, pairs.map { case (u1, u2) => new JoinedRow(byUser(u1), byUser(u2)) })
   }
 
   /** `exact` over each winner's two sides ([[joinedSides]]), on the

@@ -90,9 +90,14 @@ class BetweennessSpec extends BaseSpec {
         .filter(e => e._1 != e._2).distinct
         .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct
       val verts = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-      // both the driver-local endgame and the distributed rounds
-      for (dist <- bothPaths)
-        assertAgree(run(es, dist = dist), brandes(es, verts))
+      // both the driver-local endgame and the distributed rounds; a
+      // row-permuted copy of the input must give identical scores
+      val permuted = new scala.util.Random(5L).shuffle(es)
+      for (dist <- bothPaths) {
+        val got = run(es, dist = dist)
+        assertAgree(got, brandes(es, verts))
+        assert(run(permuted, dist = dist) == got, s"dist=$dist: row order changed the scores")
+      }
     }
   }
 

@@ -42,6 +42,8 @@ class CcSpec extends BaseSpec {
     val es = Seq.fill(150)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       .filter { case (a, b) => a != b }
     val got = labels(0L until n.toLong, es, dist)
+    // a row-permuted copy of the edges: the identical labelling
+    assert(labels(0L until n.toLong, new scala.util.Random(17L).shuffle(es), dist) == got)
     // union-find reference
     val parent = Array.tabulate(n)(identity)
     def find(x: Int): Int = { if (parent(x) != x) parent(x) = find(parent(x)); parent(x) }

@@ -45,11 +45,13 @@ class CorenessSpec extends BaseSpec {
     // K4 and K3 sharing vertex 4: K4 side 3, K3 side 2, the shared vertex 3
     val shared = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (4L, 5L), (4L, 6L), (5L, 6L))
-    // both the driver-local endgame and the distributed rounds
+    // both the driver-local endgame and the distributed rounds; a
+    // row-permuted copy of the input must give identical core numbers
     for (dist <- bothPaths) {
       val got = runOp(shared, dist)
       assert(got == peel(shared), s"dist=$dist")
       assert(got(4L) == 3L && got(5L) == 2L && got(6L) == 2L, s"dist=$dist")
+      assert(runOp(shared.reverse, dist) == got, s"dist=$dist: row order changed the result")
     }
   }
 

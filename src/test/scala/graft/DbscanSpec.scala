@@ -57,19 +57,27 @@ class DbscanSpec extends BaseSpec {
 
   test("distributed DBSCAN equals in-memory reference exactly") {
     // the default driver-local role tail and the forced fully distributed
-    // tail must both equal the reference exactly
-    for (seed <- Seq(1L, 42L); dist <- bothPaths) {
-      val pts = genPoints(300, seed)
+    // tail must both equal the reference exactly: on generated points, on
+    // a row-permuted copy, and beside points with a NULL coordinate (they
+    // drop out) or a NaN one (within ε of nothing, itself included)
+    def some(pts: Seq[(Long, Double, Double)]) = pts.map { case (i, x, y) => (i, Some(x), Some(y)) }
+    val pts1 = genPoints(300, 1L)
+    val cases: Seq[(String, Seq[(Long, Option[Double], Option[Double])])] =
+      Seq(1L, 42L).map(seed => s"seed=$seed" -> some(genPoints(300, seed))) ++ Seq(
+        "permuted" -> some(new Random(9L).shuffle(pts1)),
+        "NULL/NaN" -> (some(pts1) ++ Seq((1000L, None, Some(1.0)), (1001L, Some(2.0), None),
+          (1002L, Some(Double.NaN), Some(2.0)), (1003L, Some(Double.NaN), Some(Double.NaN)))))
+    for ((name, pts) <- cases; dist <- bothPaths) {
       val df = pts.toDF("id", "x", "y")
       val got = onPath(dist) {
         DBSCAN.run(spark, df, eps = 0.5, minPts = 4)
           .as[(Long, String, Long)].collect()
       }.map(r => r._1 -> (r._2, r._3)).toMap
-      val expected = brute(pts, 0.5, 4)
-      assert(got.size == expected.size)
+      val expected = brute(pts.collect { case (i, Some(x), Some(y)) => (i, x, y) }, 0.5, 4)
+      assert(got.size == expected.size, s"$name dist=$dist")
       val diffs = expected.keys.filter(k => got(k) != expected(k)).take(5)
       assert(diffs.isEmpty,
-        s"seed=$seed dist=$dist mismatches: ${diffs.map(k => s"$k got=${got(k)} exp=${expected(k)}")}")
+        s"$name dist=$dist mismatches: ${diffs.map(k => s"$k got=${got(k)} exp=${expected(k)}")}")
     }
   }
 

@@ -1,8 +1,9 @@
 package graft
 
-import graft.operators.{Endgame, LabelProp}
+import graft.operators.{Betweenness, Coreness, Endgame, KTruss, LabelProp, Louvain, Sssp}
 import graft.queries.Geo
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** The graph-statistics keys (q_graph_triangles, q_graph_clustcoef,
@@ -93,6 +94,23 @@ class GraphStatsSpec extends BaseSpec {
       SparkEntry.queries(k)(spark, sf).collect() // fills the pair and label memos
       val jobs = jobsDuring(SparkEntry.queries(k)(spark, sf).collect())
       assert(jobs == 0, s"$k ran $jobs Spark jobs warm")
+    }
+  }
+
+  test("graph operators over the pinned pair set gate and fetch it with no Spark job") {
+    val pinned = Geo.coTravelerPairs(spark, sf, cellDeg = 20.0, minHours = 2).select($"u1", $"u2")
+    val arcs = pinned.select($"u1".as("src"), $"u2".as("dst"), lit(1.0).as("w"))
+      .unionAll(pinned.select($"u2".as("src"), $"u1".as("dst"), lit(1.0).as("w")))
+    val source = pinned.as[(Long, Long)].collect().map(_._1).min
+    val ops = Seq[(String, () => DataFrame)](
+      "Betweenness" -> (() => Betweenness.run(spark, pinned)),
+      "Coreness" -> (() => Coreness.run(spark, pinned)),
+      "Sssp" -> (() => Sssp.run(spark, arcs, source)),
+      "KTruss" -> (() => KTruss.run(spark, pinned, k = 3)),
+      "Louvain" -> (() => Louvain.runMultiLevel(spark, pinned)))
+    for ((name, op) <- ops) {
+      val jobs = jobsDuring(op())
+      assert(jobs == 0, s"$name ran $jobs Spark jobs over the pinned pair set")
     }
   }
 }

@@ -79,6 +79,9 @@ class KTrussSpec extends BaseSpec {
       val t3 = run(es, 3)
       val t4 = run(es, 4)
       assert(t3 == reference(es, 3))
+      // a row-permuted copy, each edge also repeated reversed: the same truss
+      val permuted = rnd.shuffle(es)
+      assert(run(permuted ++ permuted.map(_.swap), 3) == t3)
       assert(t4 == reference(es, 4))
       assert(t4.subsetOf(t3), "(k+1)-truss must nest inside the k-truss")
       // in-truss support invariant: inside the returned subgraph every

@@ -48,13 +48,16 @@ class KnnJoinSpec extends BaseSpec {
     // thousands of km away, so its certificate needs several doublings
     val right = (1 to 10).map(i => (i.toLong, 0.5 + i * 0.1, 0.5)) ++
       Seq((100L, 70.0, 90.0), (101L, 20.0, 90.0), (102L, 45.0, 140.0))
-    assert(run(left, right, 3) == brute(left, right, 3))
+    val got = run(left, right, 3)
+    assert(got == brute(left, right, 3))
     assert(KnnJoin.lastRingPlans.size >= 2,
       s"isolated left row must grow the ring, got ${KnnJoin.lastRingPlans.size} rounds")
     KnnJoin.lastRingPlans.foreach { p =>
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"ring candidate join degenerated to all-pairs:\n$p")
     }
+    // row-permuted copies of both sides: the identical join
+    assert(run(left.reverse, new scala.util.Random(3L).shuffle(right), 3) == got)
   }
 
   test("antimeridian seam: a neighbour across ±180° is never lost") {

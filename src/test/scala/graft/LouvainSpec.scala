@@ -167,10 +167,14 @@ class LouvainSpec extends BaseSpec {
       yield (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
       .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
       .filter { case (a, b) => a != b }.distinct
-    val df = edges.toDF("u1", "u2")
-    val Seq(viaDriver, viaDist) = bothPaths.map(dist => onPath(dist) {
-      Louvain.runMultiLevel(spark, df).as[(Long, Long)].collect().toMap
-    })
+    val permuted = new scala.util.Random(37).shuffle(edges)
+    val Seq(viaDriver, viaDist) = bothPaths.map { dist =>
+      val Seq(got, fromPermuted) = Seq(edges, permuted).map(es => onPath(dist) {
+        Louvain.runMultiLevel(spark, es.toDF("u1", "u2")).as[(Long, Long)].collect().toMap
+      })
+      assert(fromPermuted == got, s"dist=$dist: row order changed the communities")
+      got
+    }
     assert(viaDriver == viaDist,
       "the driver endgame must reproduce the distributed levels node-wise")
     assert(viaDriver == refLouvainMulti(edges), "and both must match the mirror")

@@ -382,9 +382,11 @@ class MlSpec extends BaseSpec {
     // The round-18 driver-local beam endgame must return the EXACT rows
     // the distributed walk returns (same scorer, same tie rule, same
     // visited-pool semantics under a predicate) as the forced
-    // distributed path.
+    // distributed path, also over row-permuted copies of the graph.
     import graft.operators.AnnNsw
     val (vecs, adjacency, seeds) = AnnNsw.buildGraph(spark, emb, 8, 16)
+    val (permVecs, permAdj) = (vecs.orderBy(xxhash64($"vec_id")),
+      adjacency.orderBy(xxhash64($"src", $"dst")))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long, Double)].collect().toSeq
     val preds: Seq[Option[org.apache.spark.sql.Column]] =
@@ -395,6 +397,9 @@ class MlSpec extends BaseSpec {
       val dist = onPath(true)(AnnNsw.topKFrom(spark, vecs, adjacency, seeds,
         0L until 10L, k = 5, ef = 32, rounds = 4, pred = p))
       assert(rows(loc) == rows(dist), s"pred=${p.isDefined}")
+      val perm = AnnNsw.topKFrom(spark, permVecs, permAdj, seeds,
+        0L until 10L, k = 5, ef = 32, rounds = 4, pred = p)
+      assert(rows(perm) == rows(loc), s"pred=${p.isDefined}: row order changed the result")
     }
   }
 

@@ -68,11 +68,13 @@ class SccSpec extends BaseSpec {
     // bridge must NOT merge them (the mistake an undirected CC would make)
     val bridged = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 10L),
       (10L, 11L), (11L, 12L), (12L, 10L))
-    // both the driver-local bitset closure and the distributed rounds
+    // both the driver-local bitset closure and the distributed rounds; a
+    // row-permuted copy of the input must give the identical partition
     for (dist <- bothPaths) {
-      assert(runScc(bridged, dist) == tarjan(bridged, Set(1L, 2L, 3L, 10L, 11L, 12L)),
-        s"dist=$dist")
-      assert(runScc(bridged, dist).values.toSet.size == 2, s"dist=$dist")
+      val got = runScc(bridged, dist)
+      assert(got == tarjan(bridged, Set(1L, 2L, 3L, 10L, 11L, 12L)), s"dist=$dist")
+      assert(got.values.toSet.size == 2, s"dist=$dist")
+      assert(runScc(bridged.reverse, dist) == got, s"dist=$dist: row order changed the result")
     }
     // a pure DAG: every vertex its own singleton SCC
     val dag = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L))

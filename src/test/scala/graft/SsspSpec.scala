@@ -44,9 +44,13 @@ class SsspSpec extends BaseSpec {
          (rnd.nextInt(9) + 1) / 4.0)
       }.filter { case (a, b, _) => a != b }
       val want = dijkstra(es, 0L)
-      // both the driver-local endgame and the distributed rounds
+      // both the driver-local endgame and the distributed rounds; a
+      // row-permuted copy of the input must give identical distances
+      val permuted = new scala.util.Random(trial.toLong).shuffle(es)
       for (dist <- bothPaths) {
         val got = run(es, 0L, dist = dist)
+        assert(run(permuted, 0L, dist = dist) == got,
+          s"trial $trial dist=$dist: row order changed the distances")
         assert(got.keySet == want.keySet,
           s"trial $trial dist=$dist reachable sets differ: " +
             s"extra=${got.keySet -- want.keySet} " +

@@ -170,14 +170,17 @@ class TraclusSpec extends BaseSpec {
 
     val df = segs.map(s => (s._1, s._2, s._3.toSeq)).toDF("sid", "user_id", "seg")
     // both the driver-local role tail (default) and the forced fully
-    // distributed tail must equal the reference exactly
-    for (dist <- bothPaths) {
+    // distributed tail must equal the reference exactly, also on a
+    // row-permuted copy of the segments
+    val permuted = new scala.util.Random(21L).shuffle(segs)
+      .map(s => (s._1, s._2, s._3.toSeq)).toDF("sid", "user_id", "seg")
+    for (dist <- bothPaths; (input, order) <- Seq(df -> "given", permuted -> "permuted")) {
       val got = onPath(dist) {
-        graft.operators.Traclus.run(spark, df, eps, minLns = 3)
+        graft.operators.Traclus.run(spark, input, eps, minLns = 3)
           .select($"sid", $"role", $"cluster").as[(Long, String, Long)].collect()
       }.map(r => r._1 -> (r._2, r._3)).toMap
       assert(got == want,
-        s"dist=$dist pipeline != reference; diff = ${(got.toSet diff want.toSet).take(5)}")
+        s"dist=$dist $order pipeline != reference; diff = ${(got.toSet diff want.toSet).take(5)}")
     }
   }
 
